@@ -288,7 +288,7 @@ def ktp_raw_doc(i: int):
     # residue gate AND tier-2 candidates), while a second OCR fragment
     # prints the true digits just below the NIK line. The tier-3
     # spatial rescue must find it in the ±60 px window (conf 1.0 ≥
-    # the 0.5 near-gate) and apply_repair's coalesce restores the
+    # the 0.5 near-gate) and the repair stage's coalesce restores the
     # canon — oracle unchanged (document_processor.py:104-135,
     # ktp_extractor.py:539-... _nik_rescue). Composes independently
     # with the i//8-odd N30 Alamat-tail sub-variant.

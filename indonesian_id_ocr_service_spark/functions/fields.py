@@ -1,10 +1,9 @@
-"""Field-level normalizer column expressions (SURVEY §2.5 N25-N37).
-
-Everything here is the JVM-expressible tier: keyword layers, regex
-repairs, enum exact-match tiers. The fuzzy tiers (token_set_ratio
-fallbacks) live in ``pandas_tiers`` and are applied ONLY to rows these
-expressions leave unresolved (anti-join → UDF → union plan shape, SURVEY
-§4 item 2).
+"""Field-level normalizer column expressions (SURVEY §2.5 N26, N28,
+N32) behind the oracle-gated ``__spark_entry__`` queries
+(``rtrw_normalize``, ``status_layers``, ``kabupaten_clean`` in
+queries.py): the JVM-expressible tier — keyword layers and regex
+repairs. The extraction kernel applies the same rules vectorized
+(functions/pandas_ktp.py).
 
 Semantics per /root/reference/ktp_extractor.py:589-743 and
 ocr_corrector.py.
@@ -16,26 +15,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
-    "strip_leading_colon",
     "normalize_rt_rw",
-    "rtrw_bleed",
-    "normalize_jenis_kelamin",
     "status_keyword_layer",
-    "pekerjaan_regex_fixes",
     "clean_kabupaten",
-    "normalize_alamat",
-    "normalize_kecamatan",
-    "clean_short_garbage",
 ]
-
-
-def strip_leading_colon(c: Column) -> Column:
-    """cleanup_data prologue: trim then drop one leading ':'
-    (ktp_extractor.py:600-602)."""
-    t = F.trim(c)
-    return F.when(
-        t.startswith(":"), F.trim(F.substr(t, F.lit(2)))
-    ).otherwise(t)
 
 
 def normalize_rt_rw(c: Column) -> Column:
@@ -51,29 +34,6 @@ def normalize_rt_rw(c: Column) -> Column:
                 F.lpad(F.get(nums, 0), 3, "0"),
                 F.lpad(F.get(nums, 1), 3, "0"),
             ),
-        )
-        .otherwise(c)
-    )
-
-
-def rtrw_bleed(c: Column) -> Column:
-    """N29: true when a Kel/Desa value is actually an RT/RW pattern
-    (ktp_extractor.py:638-644)."""
-    return F.trim(c).rlike(r"^\d{2,3}/\d{2,3}$")
-
-
-def normalize_jenis_kelamin(c: Column) -> Column:
-    """N27 (ktp_extractor.py:647-652)."""
-    v = F.upper(c)
-    return (
-        F.when(
-            v.contains("LAKI") | v.contains("MALE") | v.contains("LK"),
-            F.lit("LAKI-LAKI"),
-        )
-        .when(
-            v.contains("PEREMPUAN") | v.contains("FEMALE")
-            | v.contains("PR"),
-            F.lit("PEREMPUAN"),
         )
         .otherwise(c)
     )
@@ -111,18 +71,6 @@ def status_keyword_layer(c: Column) -> Column:
     )
 
 
-def pekerjaan_regex_fixes(c: Column) -> Column:
-    """N31 step 1 (ktp_extractor.py:698-705): hardcoded regex repairs
-    before the canonical fuzzy tier."""
-    v = F.replace(c, F.lit("BURUHHARIAN"), F.lit("BURUH HARIAN"))
-    v = F.regexp_replace(v, r"(?i)\bDURUH\b", "BURUH")
-    v = F.regexp_replace(v, r"(?i)\bCURLH\b", "BURUH")
-    v = F.regexp_replace(v, r"(?i)\bCURUH\b", "BURUH")
-    v = F.regexp_replace(v, r"HARIANEEPAS", "HARIAN LEPAS")
-    v = F.regexp_replace(v, r"HARIAN\s*[CL]EPAS", "HARIAN LEPAS")
-    return v
-
-
 def clean_kabupaten(c: Column) -> Column:
     """N32 (ktp_extractor.py:131-139,722-728): strip 1-4 leading caps
     before KOTA/KAB/KABUPATEN/JAKARTA; respace DKI JAKARTA."""
@@ -133,22 +81,3 @@ def clean_kabupaten(c: Column) -> Column:
     )
     v = F.trim(v)
     return F.regexp_replace(v, r"(?i)\bDKI\s*JAKARTA\b", "DKI JAKARTA")
-
-
-def normalize_alamat(c: Column) -> Column:
-    """N30 (ktp_extractor.py:692-694): truncate from RT/RW onward."""
-    v = F.trim(F.regexp_replace(c, r"(?i)\s+RT.*", ""))
-    return F.trim(F.regexp_replace(v, r"(?i)\s+RW.*", ""))
-
-
-def normalize_kecamatan(c: Column) -> Column:
-    """N33 (ktp_extractor.py:734-736)."""
-    v = F.trim(F.regexp_replace(c, r"\s{2,}", " "))
-    return F.trim(F.regexp_replace(v, r"[,./\s]+$", ""))
-
-
-def clean_short_garbage(c: Column, min_len: int = 3) -> Column:
-    """Empty out suspiciously short values (ktp_extractor.py:142-146)."""
-    return F.when(
-        c.isNotNull() & (F.length(F.trim(c)) < min_len), F.lit("")
-    ).otherwise(c)

@@ -1,23 +1,26 @@
 """Vectorized (pandas/numpy) date normalization — the Arrow-kernel path.
 
-Third, mutually-independent implementation of the reference's
-five-strategy ``DateNormalizer`` chain
-(/root/reference/date_normalizer.py:71-344), alongside:
-- ``dates.py``       — JVM Column expression tree (verification path),
-- ``oracle/scalars`` — pure-Python per-row oracle (parity tests).
+One of two implementations of the reference's five-strategy
+``DateNormalizer`` chain (reference date_normalizer.py:71-344),
+both checked against the pure-Python per-row oracle (``oracle/scalars``):
+- this one — the extraction kernel and the ``__spark_entry__`` date
+  queries,
+- ``dates.py`` — JVM Column expression tree (the scalar
+  ``__spark_entry__`` queries).
 
 This one is mask-based numpy/pandas over whole Arrow batches: every
 strategy is computed column-wise for all rows, then combined
 first-success-wins — no per-row Python anywhere. It exists because the
-Spark expression forms of this chain hit engine pathologies at scale
-(HOF ``dataType`` recursion in the let-tree; per-operator-boundary costs
-in the staged-projection form, see dates_df.py) while a vectorized
+Spark expression form of this chain hits an engine pathology at scale
+(higher-order functions recompute ``dataType`` recursively and run
+interpreted in the let-tree, ~10 core-ms/row) while a vectorized
 kernel runs the whole chain in ~100 µs per 4k-row batch.
 
 Failure semantics match ``dates.normalize_date`` (null struct → all-None
 row), not the oracle's ``all_strategies_failed`` sentinel dict.
 
-``repair_year`` (N21) uses the same closed form as dates_df.py, in pure
+``repair_year`` (N21) replaces the 40-candidate generate-and-test
+search (date_normalizer.py:238-258) by its closed form, in pure
 integer arithmetic: digit p of year Y (in its zfill(4) decimal form of
 length L) zeroed gives base_p = Y − digit_p·10^(L−p); candidates are
 monotone in the replacement digit, so the first in-range one is

@@ -1,10 +1,10 @@
 """Vectorized (pandas/numpy) KTP scalar post-chain — the Arrow-kernel
 scale path: cleanup → repair → cross-validate → format.
 
-Third, mutually-independent implementation of the reference's
-post-extraction chain, alongside:
-- ``operators/ktp_post.py`` — JVM Column expressions (verification),
-- ``oracle/ktp.py``         — pure-Python per-row oracle (parity tests).
+The pipeline's one implementation of the reference's post-extraction
+chain, checked against the independent pure-Python per-row oracle
+(``oracle/ktp.py``) by tests/test_pandas_ktp_parity.py and the
+span-equality gate.
 
 Reference semantics per stage:
 - cleanup      ktp_extractor.py:589-743 (field normalizers, NIK clean,
@@ -19,9 +19,10 @@ Reference semantics per stage:
 
 Everything row-parallel runs as masked column operations; the fuzzy
 tiers run once per UNIQUE value (OCR vocabularies repeat heavily, so
-the Python tier amortizes to ~zero — same strategy as the JVM path's
-residue UDFs) through the repo's own bit-parallel fuzz scorers
-(functions/fuzzy.py), never through the oracle.
+the Python tier amortizes to ~zero — same strategy as the
+``__spark_entry__`` queries' residue UDFs in pandas_tiers.py) through
+the repo's own bit-parallel fuzz scorers (functions/fuzzy.py), never
+through the oracle.
 
 The NIK candidate engine is fully columnar: candidate families (exact /
 char-sub / longest-run / 120 insertion variants) are generated as
@@ -424,7 +425,8 @@ def _nik_best_vec(raw_full: pd.Series) -> pd.Series:
 
 def _pad_nik_dob_vec(d15: pd.Series, exp: pd.Series) -> pd.Series:
     """DOB-driven 15→16 padding, closed form of the digit-major search
-    (nik_cross_validator.py:271-285; same pruning as ktp_post.py)."""
+    (nik_cross_validator.py:271-285; same pruning as
+    ktp_post._pad_nik_with_dob)."""
     n = len(d15)
     best_val = pd.Series([None] * n, index=d15.index, dtype=object)
     best_prio = np.full(n, 99)

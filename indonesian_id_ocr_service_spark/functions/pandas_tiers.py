@@ -1,12 +1,9 @@
-"""Arrow-batched pandas UDFs for the fuzzy tiers (SURVEY §2.5 [PUDF]).
-
-Plan shape (SURVEY §4 item 2 — "cheap tier first"): the JVM exact tiers
-(broadcast-map / keyword expressions in ``fields.py``) resolve the bulk
-of rows; these UDFs run on the residue only (guarded by when/otherwise,
-so Spark never even transfers resolved rows' values to Python — the
-pandas function receives the column but the result is discarded for
-rows the JVM tier already decided... to avoid even that, callers pass
-the UDF only the residue via ``when``).
+"""Arrow-batched pandas UDFs for the fuzzy tiers (SURVEY §2.5 [PUDF]),
+behind the oracle-gated ``__spark_entry__`` queries ``fuzzy_canonical``
+and ``enum_place_correction`` (queries.py). Callers pass a UDF only the
+residue the JVM exact tiers left unresolved (``when(residue, col)``),
+so resolved rows cross the Arrow boundary as nulls. The extraction
+kernel runs the same tiers in-process (functions/pandas_ktp.py).
 
 Each UDF carries a per-executor dict memo: OCR vocabularies repeat
 heavily within a corpus, so the Python tier amortizes to ~zero.
@@ -17,10 +14,9 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..dictionaries import (
-    CANONICAL_FIELDS,
     FIELD_ENUMS,
     KEWARGANEGARAAN_CANONICAL,
     KNOWN_VALUES,
@@ -36,7 +32,6 @@ __all__ = [
     "correct_enum_udf",
     "correct_place_udf",
     "agama_extract_one_udf",
-    "field_label_partial_ratio",
     "_init_udfs",
 ]
 
@@ -155,29 +150,6 @@ def agama_extract_one_udf():
                 r = choice if (choice is not None and score > 70) else v
                 cache[v] = r
             return r
-
-        return s.map(one)
-
-    return udf
-
-
-def field_label_partial_ratio():
-    """K1/K2 key-detection score: best partial_ratio against the 16
-    canonical field labels (ktp_extractor.py:256-257,290-291)."""
-    labels = tuple(CANONICAL_FIELDS)
-    cache: dict[str, int] = {}
-
-    @F.pandas_udf(IntegerType())
-    def udf(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return 0
-            r = cache.get(v)
-            if r is None:
-                _, r = fuzzy.extract_one(v, labels,
-                                         scorer=fuzzy.partial_ratio)
-                cache[v] = int(r)
-            return cache[v]
 
         return s.map(one)
 

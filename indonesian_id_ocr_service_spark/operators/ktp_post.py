@@ -1,20 +1,17 @@
-"""KTP post-extraction chain as JVM projection stages (SURVEY §2.5/§2.7).
+"""Output-side JVM column expressions shared by the pipeline and the
+oracle-gated ``__spark_entry__`` queries.
 
-Four DataFrame stages over the flat field columns the extraction UDF
-emits — each a ``select``-level projection so the optimizer sees bounded
-expression trees and whole-stage codegen fuses the lot:
+- ``assemble_spans`` — the output span contract (format_to_target_json,
+  ktp_extractor.py:750-805): the extraction kernel's wide frame → one
+  ``out_spans`` array per document. Built once here for every doc type,
+  including the UNKNOWN error span.
+- ``_OUT_COLS`` — output field → flat column of that wide frame (also
+  the metrics sink's field list).
+- ``_pad_nik_with_dob`` — the V5 DOB-padding search as a pruned JVM
+  expression (the ``pad_nik_dob`` query).
 
-1. ``apply_cleanup``   — cleanup_data semantics (ktp_extractor.py:589-743):
-   exact tiers in JVM; fuzzy residue through Arrow-batched pandas UDFs
-   (anti-join → UDF → union tiering at column level via when/otherwise).
-2. ``apply_repair``    — KTPPostProcessor (document_processor.py:96-148):
-   NIK tier-2 candidate engine + tier-3 rescue coalesce, TTL re-normalize.
-3. ``apply_crossval``  — NIKCrossValidator (nik_cross_validator.py:63-265)
-   both directions incl. the 160-candidate DOB-padding search (V5) as an
-   array fan-out with digit-major/position-minor priority.
-4. ``apply_format`` + ``assemble_spans`` — format_to_target_json
-   (ktp_extractor.py:750-805) and the output span contract.
-
+The field values themselves come from the mapInArrow kernel
+(operators/unified_extract.py → functions/pandas_ktp.post_chain).
 Everything here is shuffle-free per-row work.
 """
 
@@ -23,283 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..dictionaries import (
-    KEWARGANEGARAAN_CANONICAL,
-    KNOWN_VALUES,
-    OUTPUT_FIELD_ORDER,
-    PEKERJAAN_CANONICAL,
-    STATUS_PERKAWINAN_CANONICAL,
-)
-from ..functions import fields as FX
-from ..functions import pandas_tiers as PT
-from ..functions.chars import digits_only, sub_to_digit
-from ..functions.core import let, let2
-from ..functions.dates import normalize_date, normalize_date_robust, split_place_date
-from ..functions.nik import best_candidate, clean_nik, nik_decode
-
-_STRIP_PD = r"^[:.,]+|[:.,]+$"       # python .strip(":.,")
-_STRIP_CV = r"^[,.:\- ]+|[,.:\- ]+$"  # python .strip(",.:- ")
-
-
-def _alias_map(canonical_map: dict[str, list[str]]) -> Column:
-    """create_map(alias_upper → canonical), first canonical wins."""
-    pairs: list[Column] = []
-    seen: set[str] = set()
-    for canonical, aliases in canonical_map.items():
-        for a in aliases:
-            au = a.upper()
-            if au in seen:
-                continue
-            seen.add(au)
-            pairs.extend([F.lit(au), F.lit(canonical)])
-    return F.create_map(*pairs)
-
-
-def _prep(c: Column) -> Column:
-    """cleanup prologue: str.strip() then drop one leading ':'."""
-    return F.when(c.isNotNull(), FX.strip_leading_colon(c))
-
-
-def _nullif_empty(c: Column) -> Column:
-    return F.when(c.isNotNull() & (c != ""), c)
-
-
-def apply_cleanup(df: DataFrame, passthrough: tuple = ()) -> DataFrame:
-    """cleanup_data (ktp_extractor.py:589-743) over the raw field cols.
-
-    Three projections: (1) prologue + exact tiers in JVM, (2) fuzzy
-    residue through pandas UDFs — each UDF fed ``when(residue, col)`` so
-    already-resolved rows cross the Arrow boundary as nulls, (3) final
-    combine (pure JVM). Python UDFs must stay top-level columns — Spark
-    rejects them inside higher-order-function lambdas.
-    """
-    PT._init_udfs()
-    agama_udf = PT.agama_extract_one_udf()
-    status_udf = PT.fuzzy_normalize_status
-    pek_udf = PT.fuzzy_normalize_pekerjaan
-    kwn_udf = PT.fuzzy_normalize_kewarganegaraan
-
-    pek_map = _alias_map(PEKERJAAN_CANONICAL)
-    kwn_map = _alias_map(KEWARGANEGARAAN_CANONICAL)
-    pek_canon = list(PEKERJAAN_CANONICAL)
-    kwn_canon = list(KEWARGANEGARAAN_CANONICAL)
-    st_canon = list(STATUS_PERKAWINAN_CANONICAL)
-    agama_upper = [k.upper() for k in KNOWN_VALUES["Agama"]]
-
-    # ---- stage 1: prologue + JVM exact tiers ---------------------------
-    c = {n: _prep(F.col(n)) for n in (
-        "provinsi", "kabupaten", "nik", "nama", "ttl", "jenis_kelamin",
-        "gol_darah", "alamat", "rt_rw", "kel_desa", "kecamatan", "agama",
-        "status_perkawinan", "pekerjaan", "kewarganegaraan",
-        "berlaku_hingga",
-    )}
-    pek_fixed = F.when(c["pekerjaan"].isNotNull(),
-                       FX.pekerjaan_regex_fixes(c["pekerjaan"]))
-    s1 = df.withColumns({
-        "_agama_p": c["agama"],
-        "_status_p": c["status_perkawinan"],
-        "_status_kw": F.when(c["status_perkawinan"].isNotNull(),
-                             FX.status_keyword_layer(c["status_perkawinan"])),
-        "_pek_fixed": pek_fixed,
-        "_pek_exact": F.element_at(pek_map, F.upper(F.trim(pek_fixed))),
-        "_kwn_p": c["kewarganegaraan"],
-        "_kwn_exact": F.element_at(kwn_map,
-                                   F.upper(F.trim(c["kewarganegaraan"]))),
-        "_prov_p": c["provinsi"],
-        "_kab_p": c["kabupaten"],
-        "_nik_p": c["nik"],
-        "_nama_p": c["nama"],
-        "_ttl_p": c["ttl"],
-        "_jk_p": c["jenis_kelamin"],
-        "_goldar_p": c["gol_darah"],
-        "_alamat_p": c["alamat"],
-        "_rt_p": c["rt_rw"],
-        "_keldesa_p": c["kel_desa"],
-        "_kec_p": c["kecamatan"],
-        "_berlaku_p": c["berlaku_hingga"],
-    })
-
-    # ---- stage 2: pandas fuzzy residue tiers ---------------------------
-    s2 = s1.withColumns({
-        "_agama_f": agama_udf(
-            F.when(~F.upper(F.col("_agama_p")).isin(agama_upper),
-                   F.col("_agama_p"))),
-        "_status_f": status_udf(
-            F.when(F.col("_status_kw").isNull(), F.col("_status_p"))),
-        "_pek_f": pek_udf(
-            F.when(F.col("_pek_exact").isNull(), F.col("_pek_fixed"))),
-        "_kwn_f": kwn_udf(
-            F.when(F.col("_kwn_exact").isNull(), F.col("_kwn_p"))),
-    })
-
-    # ---- stage 3: combine (pure JVM) -----------------------------------
-    agama_c = F.when(
-        F.upper(F.col("_agama_p")).isin(agama_upper),
-        F.upper(F.col("_agama_p")),
-    ).otherwise(F.col("_agama_f"))
-
-    status_c = F.when(
-        F.col("_status_p").isNotNull(),
-        F.coalesce(
-            F.col("_status_kw"),
-            F.when(F.col("_status_f").isin(st_canon), F.col("_status_f"))
-            .otherwise(F.col("_status_p")),
-        ),
-    )
-
-    pekerjaan_c = F.coalesce(
-        F.col("_pek_exact"),
-        F.when(F.col("_pek_f").isin(pek_canon), F.col("_pek_f"))
-        .otherwise(F.col("_pek_fixed")),
-    )
-
-    kwn_c = F.when(
-        F.col("_kwn_p").isNotNull(),
-        F.coalesce(
-            F.col("_kwn_exact"),
-            F.when(F.col("_kwn_f").isin(kwn_canon), F.col("_kwn_f"))
-            .otherwise(F.col("_kwn_p")),
-        ),
-    )
-
-    nik_c = let(
-        F.col("_nik_p"),
-        lambda v: let2(
-            F.when(v.isNotNull(), clean_nik(v)),
-            digits_only(sub_to_digit(v)),
-            lambda good, digits: F.when(good.isNotNull(), good).when(
-                F.length(digits) >= 12, digits
-            ),
-        ),
-    )
-
-    rt_norm = let(F.col("_rt_p"),
-                  lambda v: F.when(v.isNotNull(), FX.normalize_rt_rw(v)))
-    bleed = let(F.col("_keldesa_p"),
-                lambda v: v.isNotNull() & FX.rtrw_bleed(v))
-    bleed_val = let(
-        F.col("_keldesa_p"),
-        lambda v: let(
-            F.regexp_extract_all(v, F.lit(r"\d+"), 0),
-            lambda nums: F.when(
-                F.size(nums) >= 2,
-                F.concat_ws("/", F.lpad(F.get(nums, 0), 3, "0"),
-                            F.lpad(F.get(nums, 1), 3, "0")),
-            ),
-        ),
-    )
-    rt_c = F.coalesce(rt_norm, F.when(bleed, bleed_val))
-    keldesa_c = F.when(~bleed, F.col("_keldesa_p"))
-
-    jk_c = let(F.col("_jk_p"),
-               lambda v: F.when(v.isNotNull(),
-                                FX.normalize_jenis_kelamin(v)))
-    alamat_c = let(F.col("_alamat_p"),
-                   lambda v: F.when(v.isNotNull(), FX.normalize_alamat(v)))
-
-    def kabprov(col: Column) -> Column:
-        return let(
-            col,
-            lambda v: F.when(
-                v.isNotNull(),
-                let(FX.clean_kabupaten(v),
-                    lambda x: F.when(F.length(F.trim(x)) >= 3, x)),
-            ),
-        )
-
-    kab_c = kabprov(F.col("_kab_p"))
-    prov_c = kabprov(F.col("_prov_p"))
-    kec_c = let(F.col("_kec_p"),
-                lambda v: F.when(v.isNotNull(), FX.normalize_kecamatan(v)))
-
-    return s2.select(
-        "doc_id",
-        "media_refs",
-        "nik_rescue_value",
-        "nik_rescue_conf",
-        *passthrough,
-        _nullif_empty(prov_c).alias("provinsi"),
-        _nullif_empty(kab_c).alias("kabupaten"),
-        _nullif_empty(nik_c).alias("nik"),
-        _nullif_empty(F.col("_nama_p")).alias("nama"),
-        _nullif_empty(F.col("_ttl_p")).alias("ttl"),
-        _nullif_empty(jk_c).alias("jenis_kelamin"),
-        _nullif_empty(F.col("_goldar_p")).alias("gol_darah"),
-        _nullif_empty(alamat_c).alias("alamat"),
-        _nullif_empty(rt_c).alias("rt_rw"),
-        _nullif_empty(keldesa_c).alias("kel_desa"),
-        _nullif_empty(kec_c).alias("kecamatan"),
-        _nullif_empty(agama_c).alias("agama"),
-        _nullif_empty(status_c).alias("status_perkawinan"),
-        _nullif_empty(pekerjaan_c).alias("pekerjaan"),
-        _nullif_empty(kwn_c).alias("kewarganegaraan"),
-        _nullif_empty(F.col("_berlaku_p")).alias("berlaku_hingga"),
-    )
-
-
-def apply_repair(df: DataFrame) -> DataFrame:
-    """KTPPostProcessor.repair (document_processor.py:96-148)."""
-    nik = F.col("nik")
-    nik16 = nik.isNotNull() & nik.rlike(r"^\d{16}$")
-    nik_r = F.when(nik16, nik).otherwise(
-        F.coalesce(
-            let(best_candidate(nik), lambda b: b["value"]),
-            F.col("nik_rescue_value"),
-            nik,
-        )
-    )
-
-    ttl = F.col("ttl")
-    ttl_r = let(
-        split_place_date(ttl),
-        lambda spd: let(
-            normalize_date(spd["date_raw"]),
-            lambda d: F.when(
-                ttl.isNotNull()
-                & d.isNotNull()
-                & (d["confidence"] > 0.25),
-                F.when(
-                    spd["place"].isNotNull(),
-                    F.concat(spd["place"], F.lit(","), d["normalized"]),
-                ).otherwise(d["normalized"]),
-            ).otherwise(ttl),
-        ),
-    )
-
-    return df.withColumns({"nik": nik_r, "ttl": ttl_r})
-
-
-def _extract_date_token(ttl: Column) -> Column:
-    """First \\bDD-MM-YYYY\\b token, '' if none
-    (nik_cross_validator.py:287-293)."""
-    return F.regexp_extract(ttl, r"\b(\d{2})-(\d{2})-(\d{4})\b", 0)
-
-
-def _extract_place_cv(ttl: Column) -> Column:
-    """Text before the date token, stripped of ',.:- '; null when <2 chars
-    (nik_cross_validator.py:295-304)."""
-    pos = F.regexp_instr(ttl, F.lit(r"\b\d{2}-\d{2}-\d{4}\b"))
-    head = F.regexp_replace(
-        F.trim(F.substring(ttl, F.lit(1), pos - 1)), _STRIP_CV, ""
-    )
-    return F.when((pos > 0) & (F.length(head) >= 2), head)
-
-
-def _norm_gender(c: Column) -> Column:
-    v = F.upper(F.trim(c))
-    return (
-        F.when(
-            v.contains("LAKI") | v.contains("PRIA") | v.contains("MALE")
-            | v.contains("LK"),
-            F.lit("LAKI-LAKI"),
-        )
-        .when(
-            v.contains("PEREMPUAN") | v.contains("WANITA")
-            | v.contains("FEMALE") | v.contains("PR"),
-            F.lit("PEREMPUAN"),
-        )
-        .otherwise(F.lit(None).cast("string"))
-    )
+from ..functions.core import let
 
 
 def _pad_nik_with_dob(digits15: Column, expected: Column) -> Column:
@@ -374,193 +95,7 @@ def _pad_nik_with_dob(digits15: Column, expected: Column) -> Column:
     return best["value"]
 
 
-def apply_crossval(df: DataFrame) -> DataFrame:
-    """NIKCrossValidator.validate_and_repair (nik_cross_validator.py:63-265).
-
-    Direction 1 (16-digit NIK authoritative): overwrite/inject gender and
-    birth-date from the NIK encoding. Direction 2: repair a 15-digit NIK
-    from date+gender via the V5 padding search.
-    """
-    nik, ttl, jk = F.col("nik"), F.col("ttl"), F.col("jenis_kelamin")
-    nik16 = nik.isNotNull() & nik.rlike(r"^\d{16}$")
-
-    def direction1() -> Column:
-        """Returns struct<nik,ttl,jk> after NIK→fields."""
-        return let(
-            nik_decode(nik),
-            lambda dec: let2(
-                _extract_date_token(F.coalesce(ttl, F.lit(""))),
-                _extract_place_cv(F.coalesce(ttl, F.lit(""))),
-                lambda existing, place: let(
-                    F.when(place.isNotNull(),
-                           F.concat(place, F.lit(","), dec["date_str"]))
-                    .otherwise(dec["date_str"]),
-                    lambda rebuild: F.struct(
-                        nik.alias("nik"),
-                        F.when(
-                            ~dec["date_valid"], ttl
-                        )
-                        .when(existing == "", rebuild)
-                        .when(existing == dec["date_str"], ttl)
-                        .when(
-                            # all components match → reformat
-                            (F.substring(existing, 1, 2).cast("int")
-                             == dec["day"])
-                            & (F.substring(existing, 4, 2).cast("int")
-                               == dec["month"])
-                            & (F.substring(existing, 7, 4).cast("int")
-                               % 100 == dec["year"] % 100),
-                            rebuild,
-                        )
-                        .when(
-                            F.substring(existing, 7, 4).cast("int")
-                            % 100 == dec["year"] % 100,
-                            ttl,
-                        )
-                        .otherwise(rebuild)
-                        .alias("ttl"),
-                        F.when(~dec["date_valid"], jk)
-                        .when(_norm_gender(F.coalesce(jk, F.lit("")))
-                              == dec["gender"], jk)
-                        .otherwise(dec["gender"])
-                        .alias("jk"),
-                    ),
-                ),
-            ),
-        )
-
-    def direction2() -> Column:
-        """Returns struct<nik,ttl,jk> after fields→NIK."""
-        existing = _extract_date_token(F.coalesce(ttl, F.lit("")))
-        return let(
-            existing,
-            lambda ex: let(
-                F.format_string(
-                    "%02d%02d%02d",
-                    F.substring(ex, 1, 2).cast("int")
-                    + F.when(
-                        _norm_gender(F.coalesce(jk, F.lit("")))
-                        == "PEREMPUAN",
-                        F.lit(40),
-                    ).otherwise(F.lit(0)),
-                    F.substring(ex, 4, 2).cast("int"),
-                    F.substring(ex, 7, 4).cast("int") % 100,
-                ),
-                lambda expected: let(
-                    digits_only(sub_to_digit(F.coalesce(nik, F.lit("")))),
-                    lambda digits: F.struct(
-                        F.when(ex == "", nik)
-                        .when(
-                            (F.length(digits) == 16)
-                            & (F.substring(digits, 7, 6) == expected)
-                            & (digits != nik),
-                            digits,
-                        )
-                        .when(
-                            F.length(digits) == 15,
-                            F.coalesce(
-                                _pad_nik_with_dob(digits, expected), nik
-                            ),
-                        )
-                        .otherwise(nik)
-                        .alias("nik"),
-                        ttl.alias("ttl"),
-                        jk.alias("jk"),
-                    ),
-                ),
-            ),
-        )
-
-    merged = F.when(nik16, direction1()).otherwise(direction2())
-    return df.withColumn("_cv", merged).withColumns(
-        {
-            "nik": F.col("_cv.nik"),
-            "ttl": F.col("_cv.ttl"),
-            "jenis_kelamin": F.col("_cv.jk"),
-        }
-    ).drop("_cv")
-
-
-def apply_format(df: DataFrame, passthrough: tuple = ()) -> DataFrame:
-    """format_to_target_json (ktp_extractor.py:750-805): TTL split,
-    conservative tempat_lahir place correction (N37), final field cols."""
-    place_udf = PT.correct_place_udf()
-
-    ttl = F.col("ttl")
-    has_comma = ttl.isNotNull() & (F.instr(ttl, ",") > 0)
-    end_pat = r"(\d{1,2}[-./\s]+\d{1,2}[-./\s]+\d{2,4})\s*$"
-
-    place_comma = F.regexp_replace(
-        F.trim(F.substring_index(ttl, ",", 1)), _STRIP_PD, ""
-    )
-    date_comma = normalize_date_robust(
-        F.trim(F.substr(ttl, F.instr(ttl, ",") + 1))
-    )
-
-    end_match = F.regexp_extract(ttl, end_pat, 1)
-    end_pos = F.regexp_instr(ttl, F.lit(end_pat))
-    place_end = F.regexp_replace(
-        F.trim(F.substring(ttl, F.lit(1), end_pos - 1)), _STRIP_PD, ""
-    )
-    date_end = normalize_date_robust(F.trim(end_match))
-    place_plain = F.regexp_replace(F.trim(ttl), _STRIP_PD, "")
-
-    tempat_raw = (
-        F.when(ttl.isNull(), F.lit(None).cast("string"))
-        .when(has_comma, place_comma)
-        .when(end_pos > 0, place_end)
-        .otherwise(place_plain)
-    )
-    tgl = (
-        F.when(ttl.isNull(), F.lit(None).cast("string"))
-        .when(has_comma, date_comma)
-        .when(end_pos > 0, date_end)
-    )
-
-    # N37: conservative fuzzy place fix — conf ≥ 0.88 and changed.
-    # UDF runs as a top-level projection column (not inside a lambda).
-    staged = df.withColumn("_tempat_raw", _nullif_empty(tempat_raw)) \
-               .withColumn("_tempat_corr", place_udf(F.col("_tempat_raw")))
-    tempat = let(
-        F.col("_tempat_raw"),
-        lambda t: F.when(
-            t.isNotNull(),
-            let(
-                F.col("_tempat_corr"),
-                lambda corr: F.when(
-                    (corr["confidence"] >= 0.88)
-                    & (corr["corrected"] != t),
-                    corr["corrected"],
-                ).otherwise(t),
-            ),
-        ),
-    )
-    df = staged
-
-    return df.select(
-        "doc_id",
-        "media_refs",
-        *passthrough,
-        F.lit("KTP").alias("document_type"),
-        F.col("nik").alias("nomor"),
-        F.col("nama").alias("nama"),
-        tempat.alias("tempat_lahir"),
-        _nullif_empty(tgl).alias("tgl_lahir"),
-        F.col("jenis_kelamin"),
-        F.col("agama"),
-        F.col("status_perkawinan"),
-        F.col("pekerjaan"),
-        F.col("kewarganegaraan"),
-        F.col("alamat").alias("alamat_name"),
-        F.col("rt_rw").alias("alamat_rt_rw"),
-        F.col("kel_desa").alias("alamat_kel_desa"),
-        F.col("kecamatan").alias("alamat_kecamatan"),
-        F.col("kabupaten").alias("alamat_kabupaten"),
-        F.col("provinsi").alias("alamat_provinsi"),
-    )
-
-
-#: output-field → flat column produced by apply_format
+#: output-field → flat column of the extraction kernel's wide frame
 _OUT_COLS: dict[str, str] = {
     "document_type": "document_type",
     "nomor": "nomor",
@@ -587,21 +122,23 @@ OUT_SPAN_TYPE = (
 
 def assemble_spans(df: DataFrame) -> DataFrame:
     """Emit the extracted span sequence: non-null ``field:*`` spans in
-    output-JSON order, then pass-through ``media`` spans (FIXTURES.md §1,
-    span contract of the pytest gate)."""
+    output-JSON order — or, when ``document_type`` is null (UNKNOWN),
+    the single ``error`` span — then pass-through ``media`` spans
+    (FIXTURES.md §1, span contract of the pytest gate)."""
+    def span(kind: Column, text: Column) -> Column:
+        return F.struct(kind.alias("kind"), text.alias("text"),
+                        F.lit("").alias("media_ref"),
+                        F.lit(-1).alias("order"))
+
     field_structs = [
-        F.when(
-            F.col(col).isNotNull(),
-            F.struct(
-                F.lit(f"field:{name}").alias("kind"),
-                F.col(col).cast("string").alias("text"),
-                F.lit("").alias("media_ref"),
-                F.lit(-1).alias("order"),
-            ),
-        )
+        F.when(F.col(col).isNotNull(),
+               span(F.lit(f"field:{name}"), F.col(col).cast("string")))
         for name, col in _OUT_COLS.items()
     ]
-    fields_arr = F.array_compact(F.array(*field_structs))
+    fields_arr = F.when(
+        F.col("document_type").isNull(),
+        F.array(span(F.lit("error"), F.lit("Unknown document type"))),
+    ).otherwise(F.array_compact(F.array(*field_structs)))
     out = let(
         fields_arr,
         lambda fa: let(

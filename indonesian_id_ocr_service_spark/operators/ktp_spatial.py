@@ -1,14 +1,12 @@
-"""KTP spatial key/value extraction as a zero-shuffle mapInPandas stage
-(SURVEY §2.4 K1-K11, [GUDF]).
+"""KTP spatial key/value extraction (SURVEY §2.4 K1-K11, [GUDF]), run
+per document inside the extraction kernel (operators/unified_extract.py).
 
 The input table packs each document's spans into one row
 (``doc_id, spans, span_geom``), so per-document extraction needs NO
-groupBy and NO shuffle: one ``mapInPandas`` pass, Arrow-batched. This is
-the stage the reference implements as its greedy geometric matcher
-(/root/reference/ktp_extractor.py:252-586) — inherently sequential per
-document (exclusive value-claiming in key-y order), hence the sanctioned
-pandas-UDF island between the JVM classify stage and the JVM
-normalize/repair stages.
+groupBy and NO shuffle. This is the stage the reference implements as
+its greedy geometric matcher (ktp_extractor.py:252-586)
+— inherently sequential per document (exclusive value-claiming in key-y
+order), hence Python inside the kernel's per-document loop.
 
 This implementation is written matrix-style (score matrix over
 key×value pairs per document, greedy argmin sweep) — independent of the
@@ -31,12 +29,11 @@ import re
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
 
 from ..dictionaries import CANONICAL_FIELDS, KNOWN_VALUES, TRUNCATED_KEY_MAP
 from ..functions import fuzzy
 
-__all__ = ["KTP_EXTRACT_SCHEMA", "extract_ktp_batch", "FIELD_COLS"]
+__all__ = ["FIELD_COLS"]
 
 #: canonical field label → output column name
 FIELD_COLS: dict[str, str] = {
@@ -57,13 +54,6 @@ FIELD_COLS: dict[str, str] = {
     "Kewarganegaraan": "kewarganegaraan",
     "Berlaku Hingga": "berlaku_hingga",
 }
-
-KTP_EXTRACT_SCHEMA = (
-    "doc_id string, media_refs array<string>, "
-    + ", ".join(f"{c} string" for c in FIELD_COLS.values())
-    + ", nik_rescue_value string, nik_rescue_conf double"
-    + ", field_methods map<string,string>"
-)
 
 _LABELS = tuple(CANONICAL_FIELDS)
 _TRUNC = tuple(TRUNCATED_KEY_MAP.items())
@@ -405,43 +395,3 @@ def _nik_rescue(texts: list[str], y0: np.ndarray, y1: np.ndarray,
     if val is not None:
         return val, conf
     return None, None
-
-
-def extract_ktp_batch(batches):
-    """mapInPandas body: (doc_id, spans, span_geom) → flat field columns.
-
-    Expects rows already filtered to doc_type = 'KTP'.
-    """
-    cols = list(FIELD_COLS.values())
-    for pdf in batches:
-        rows = []
-        for doc_id, spans, geom in zip(pdf["doc_id"], pdf["spans"],
-                                       pdf["span_geom"]):
-            texts, g_y0, g_y1, g_x0, g_x1, media = [], [], [], [], [], []
-            for sp, g in zip(spans, geom):
-                if sp["kind"] == "text":
-                    texts.append(sp["text"])
-                    g_y0.append(g["y"])
-                    g_y1.append(g["y"] + g["h"])
-                    g_x0.append(g["x0"])
-                    g_x1.append(g["x1"])
-                elif sp["kind"] == "media":
-                    media.append(sp["media_ref"])
-            y0 = np.asarray(g_y0, dtype=np.float64)
-            y1 = np.asarray(g_y1, dtype=np.float64)
-            x0 = np.asarray(g_x0, dtype=np.float64)
-            x1 = np.asarray(g_x1, dtype=np.float64)
-            methods: dict = {}
-            extracted = _extract_one_doc(texts, y0, y1, x0, x1,
-                                         methods_out=methods)
-            rv, rc = _nik_rescue(texts, y0, y1, extracted.get("NIK"))
-            rows.append(
-                [doc_id, media]
-                + [extracted.get(label) for label in FIELD_COLS]
-                + [rv, rc, methods]
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "media_refs"] + cols
-            + ["nik_rescue_value", "nik_rescue_conf", "field_methods"],
-        )

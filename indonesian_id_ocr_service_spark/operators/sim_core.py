@@ -1,5 +1,5 @@
 """SIM extraction kernel (SURVEY §2.6 M1-M14) — per-document pure
-Python, shared by the Spark mapInPandas stage (``sim_extract``) and the
+Python, shared by the extraction kernel (``unified_extract``) and the
 test oracle (``oracle.sim``).
 
 Unlike the KTP spatial graph (which has an independent matrix-style UDF

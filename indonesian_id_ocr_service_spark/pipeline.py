@@ -1,22 +1,24 @@
 """End-to-end extraction pipeline: span corpus → extracted span table.
 
-Plan shape (SURVEY §7):
+Plan shape (SURVEY §7) — ONE linear narrow chain, no union, no join,
+no Exchange:
 
-    scan (doc_id, spans[, span_geom])
-      → C1 classify (JVM expression over the packed array)
-      → KTP rows:  mapInPandas spatial extraction (zero shuffle — the
-                   input is already one row per document)
-                   → JVM cleanup/repair/cross-validate/format
-                   → span assembly
-      → SIM rows:  SIM extraction path (operators.sim_extract)
-      → UNKNOWN:   error span + media pass-through
-      → unionByName
+    scan (doc_id, spans, span_geom[, span_conf, spans_alt, alt_geom])
+      → _kernel_input: JVM projection; the alternative OCR view is
+        nulled for docs the JVM classifier already reads as KTP (lazy
+        alt view — only the C3 UNKNOWN retry and the C6 SIM second
+        pass consume it)
+      → ONE mapInArrow kernel (operators.unified_extract): per document
+        classify (C1, incl. the C3 retry) → KTP spatial extraction +
+        vectorized post-chain, or the SIM state machines → one wide row
+        of final output fields + per-field provenance
+      → ktp_post.assemble_spans: field/media spans, or the UNKNOWN
+        error span + media pass-through
 
-The only Python stages are the per-document geometric extractors and the
-narrow fuzzy residue tiers; everything else is whole-stage-codegen JVM.
-No joins, no aggregations — the pipeline is embarrassingly parallel over
-documents, so throughput scales linearly with cores (the scaling-
-efficiency criterion in BASELINE.md).
+The only Python stage is that kernel; everything around it is
+whole-stage-codegen JVM. The input already holds one row per document,
+so the chain is embarrassingly parallel and throughput scales linearly
+with cores (the scaling-efficiency criterion in BASELINE.md).
 """
 
 from __future__ import annotations
@@ -25,9 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators import classify, ktp_post
-from .operators.ktp_spatial import KTP_EXTRACT_SCHEMA, extract_ktp_batch
-
-OUT_SCHEMA = ktp_post.OUT_SPAN_TYPE
 
 
 def with_default_geometry(df: DataFrame) -> DataFrame:
@@ -76,196 +75,47 @@ def _kernel_input(src: DataFrame) -> DataFrame:
     return src.select(*cols)
 
 
-def classify_documents(df: DataFrame) -> DataFrame:
-    return df.withColumn("doc_type",
-                         classify.document_type(F.col("spans")))
-
-
-def media_refs_col() -> F.Column:
-    return F.transform(
-        F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("media")),
-        lambda s: s["media_ref"],
-    )
-
-
-def run_ktp_branch(ktp: DataFrame) -> DataFrame:
-    """KTP rows → (doc_id, out_spans, flat output fields)."""
-    extracted = ktp.select("doc_id", "spans", "span_geom").mapInPandas(
-        extract_ktp_batch, schema=KTP_EXTRACT_SCHEMA
-    )
-    pt = ("field_methods",)   # per-field provenance for the lineage sink
-    cleaned = ktp_post.apply_cleanup(extracted, passthrough=pt)
-    repaired = ktp_post.apply_repair(cleaned)
-    validated = ktp_post.apply_crossval(repaired)
-    formatted = ktp_post.apply_format(validated, passthrough=pt)
-    return ktp_post.assemble_spans(formatted)
-
-
-def run_unknown_branch(unk: DataFrame) -> DataFrame:
-    """UNKNOWN rows → single error span + media pass-through."""
-    error_span = F.struct(
-        F.lit("error").alias("kind"),
-        F.lit("Unknown document type").alias("text"),
-        F.lit("").alias("media_ref"),
-        F.lit(0).alias("order"),
-    )
-    out = F.concat(
-        F.array(error_span),
-        F.transform(
-            media_refs_col(),
-            lambda m, i: F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("").alias("text"),
-                m.alias("media_ref"),
-                (i + 1).cast("int").alias("order"),
-            ),
-        ),
-    )
-    return unk.select(
-        "doc_id", out.cast(ktp_post.OUT_SPAN_TYPE).alias("out_spans")
-    )
-
-
-def run_pipeline(df: DataFrame, include_sim: bool = True,
-                 mode: str = "kernel") -> DataFrame:
-    """Full pipeline → (doc_id, out_spans). ONE linear narrow chain — no
-    unions, no shuffles (with three filtered branches the source scan +
-    exchange + classification executed once PER BRANCH; see BENCH.md).
-
-    Two interchangeable configurations, identical outputs:
-
-    - ``mode='kernel'`` (scale default): the complete per-document
-      grammar runs inside a single Arrow batch stage (~1-2 core-ms/doc).
-      Spark's higher-order functions recompute ``dataType`` recursively
-      on every evaluation, so normalizer-chain-sized expression trees
-      cost ~85 core-ms/doc interpreted — measured, not guessed.
-    - ``mode='jvm'`` (verification): unified extraction UDF + the JVM
-      column-expression normalize chain (cleanup/repair/crossval/format)
-      with column-level doc-type gating. Independently implemented and
-      used by the span-equality gate; every operator in it is also
-      DuckDB-oracle-checked via __spark_entry__.
-    """
-    from .queries import ensure_session_conf
-
-    ensure_session_conf(df.sparkSession)
-    _ = include_sim  # both modes route SIM through the unified pass
-    if mode == "kernel":
-        return _run_pipeline_kernel(df)
-    return _run_pipeline_jvm(df)
-
-
-def _run_pipeline_kernel(df: DataFrame) -> DataFrame:
+def _extract(df: DataFrame) -> DataFrame:
+    """The kernel's wide frame: doc_id, doc_type, media_refs, the final
+    output-field columns, field_methods and ``document_type`` (doc_type
+    for KTP/SIM, null for UNKNOWN)."""
     from .operators.unified_extract import (
         FULL_KERNEL_SCHEMA,
         full_kernel_batch_arrow,
     )
+    from .queries import ensure_session_conf
 
-    src = with_default_geometry(df)
+    ensure_session_conf(df.sparkSession)
     # mapInArrow, not mapInPandas: Arrow→pandas conversion of the
     # array<struct> span columns builds a dict per span (~3.4
     # core-ms/doc, allocation-bound → also caps multi-core scaling);
     # the arrow kernel reads flattened child arrays + offsets directly
-    wide = _kernel_input(src).mapInArrow(
+    wide = _kernel_input(with_default_geometry(df)).mapInArrow(
         full_kernel_batch_arrow, schema=FULL_KERNEL_SCHEMA
     )
-    is_ktp = F.col("doc_type") == "KTP"
-    is_sim = F.col("doc_type") == "SIM"
-    coalesced = wide.withColumn(
-        "document_type", F.when(is_ktp | is_sim, F.col("doc_type"))
-    )
-    assembled = ktp_post.assemble_spans(coalesced)
-    return assembled.select(
-        "doc_id",
-        F.when(is_ktp | is_sim, F.col("out_spans"))
-        .otherwise(_error_spans())
-        .alias("out_spans"),
+    doc_type = F.col("doc_type")
+    return wide.withColumn(
+        "document_type", F.when(doc_type.isin("KTP", "SIM"), doc_type)
     )
 
 
-def _error_spans() -> F.Column:
-    return F.concat(
-        F.array(
-            F.struct(
-                F.lit("error").alias("kind"),
-                F.lit("Unknown document type").alias("text"),
-                F.lit("").alias("media_ref"),
-                F.lit(0).alias("order"),
-            )
-        ),
-        F.transform(
-            F.coalesce(F.col("media_refs"),
-                       F.array().cast("array<string>")),
-            lambda m, i: F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("").alias("text"),
-                m.alias("media_ref"),
-                (i + 1).cast("int").alias("order"),
-            ),
-        ),
-    ).cast(ktp_post.OUT_SPAN_TYPE)
+def run_pipeline(df: DataFrame) -> DataFrame:
+    """Full pipeline → (doc_id, out_spans).
 
-
-def _run_pipeline_jvm(df: DataFrame) -> DataFrame:
-    from .operators.unified_extract import (
-        _SIM_COLS,
-        UNIFIED_SCHEMA,
-        unified_extract_batch,
-    )
-
-    src = with_default_geometry(df)
-    wide = _kernel_input(src).mapInPandas(
-        unified_extract_batch, schema=UNIFIED_SCHEMA
-    )
-    pt = ("doc_type", *_SIM_COLS)
-    cleaned = ktp_post.apply_cleanup(wide, passthrough=pt)
-    repaired = ktp_post.apply_repair(cleaned)
-    validated = ktp_post.apply_crossval(repaired)
-    formatted = ktp_post.apply_format(validated, passthrough=pt)
-
-    is_ktp = F.col("doc_type") == "KTP"
-    is_sim = F.col("doc_type") == "SIM"
-    coalesced = formatted.withColumns({
-        **{
-            col: F.when(is_ktp, F.col(col)).when(
-                is_sim, F.col("sim_" + col))
-            for name, col in ktp_post._OUT_COLS.items()
-            if name != "document_type"
-        },
-        "document_type": F.when(is_ktp | is_sim, F.col("doc_type")),
-    })
-    assembled = ktp_post.assemble_spans(coalesced)
-
-    error_spans = F.concat(
-        F.array(
-            F.struct(
-                F.lit("error").alias("kind"),
-                F.lit("Unknown document type").alias("text"),
-                F.lit("").alias("media_ref"),
-                F.lit(0).alias("order"),
-            )
-        ),
-        F.transform(
-            F.coalesce(F.col("media_refs"),
-                       F.array().cast("array<string>")),
-            lambda m, i: F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("").alias("text"),
-                m.alias("media_ref"),
-                (i + 1).cast("int").alias("order"),
-            ),
-        ),
-    ).cast(ktp_post.OUT_SPAN_TYPE)
-
-    return assembled.select(
-        "doc_id",
-        F.when(is_ktp | is_sim, F.col("out_spans"))
-        .otherwise(error_spans)
-        .alias("out_spans"),
-    )
+    The complete per-document grammar runs inside the single Arrow
+    kernel (~1-2 core-ms/doc): Spark's higher-order functions recompute
+    ``dataType`` recursively on every evaluation, so normalizer-chain-
+    sized expression trees cost ~85 core-ms/doc interpreted — measured,
+    not guessed. The span-equality gate checks this path against the
+    pure-Python oracle, and the ``ktp_extraction_e2e`` /
+    ``sim_extraction_e2e`` queries against DuckDB."""
+    return ktp_post.assemble_spans(_extract(df)).select("doc_id",
+                                                        "out_spans")
 
 
 def run_pipeline_fields(df: DataFrame) -> DataFrame:
-    """KTP branch only, returning the flat output-field columns (for the
-    metrics table and SQL-checkable queries)."""
-    src = classify_documents(with_default_geometry(df))
-    return run_ktp_branch(src.filter(F.col("doc_type") == "KTP"))
+    """The flat output-field columns of the KTP documents (for the
+    metrics table): the kernel's own wide frame before span assembly,
+    so a doc is KTP here exactly when ``run_pipeline`` emits it as KTP
+    (including C3 retries resolved through the alternative view)."""
+    return _extract(df).filter(F.col("doc_type") == "KTP").drop("doc_type")

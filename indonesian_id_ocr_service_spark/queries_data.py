@@ -18,7 +18,7 @@ from .operators import similarity as SIM
 
 
 def _docs(spark: SparkSession, sf_dir: str,
-          fanout: bool = True) -> DataFrame:
+          *, fanout: bool) -> DataFrame:
     from .queries import ensure_session_conf, scan_fanout
 
     ensure_session_conf(spark)
@@ -32,7 +32,7 @@ def _docs(spark: SparkSession, sf_dir: str,
 
 
 def _emb(spark: SparkSession, sf_dir: str,
-         fanout: bool = True) -> DataFrame:
+         *, fanout: bool) -> DataFrame:
     from .queries import ensure_session_conf, scan_fanout
 
     ensure_session_conf(spark)
@@ -45,7 +45,7 @@ def _emb(spark: SparkSession, sf_dir: str,
 
 
 def _docs_with_dups(spark: SparkSession, sf_dir: str,
-                    fanout: bool = True) -> DataFrame:
+                    *, fanout: bool) -> DataFrame:
     base = _docs(spark, sf_dir, fanout=fanout).select("doc_id", "text")
     exact = (
         base.filter(F.col("doc_id") % 7 == 0)
@@ -119,8 +119,8 @@ FROM g
 
 
 def q_minhash_lsh(spark, sf_dir):
-    return DD.lsh_candidate_pairs(_docs_with_dups(spark, sf_dir)) \
-        .orderBy("doc_a", "doc_b")
+    docs = _docs_with_dups(spark, sf_dir, fanout=True)
+    return DD.lsh_candidate_pairs(docs).orderBy("doc_a", "doc_b")
 
 
 def _sig_sql(j: int) -> str:
@@ -157,7 +157,7 @@ ORDER BY doc_a, doc_b
 
 
 def q_ngram_jaccard(spark, sf_dir):
-    return DD.ngram_jaccard_pairs(_docs(spark, sf_dir)) \
+    return DD.ngram_jaccard_pairs(_docs(spark, sf_dir, fanout=True)) \
         .orderBy("doc_a")
 
 
@@ -180,7 +180,7 @@ ORDER BY doc_a
 
 
 def q_simhash(spark, sf_dir):
-    df = _docs(spark, sf_dir)
+    df = _docs(spark, sf_dir, fanout=True)
     # Arrow kernel (scale path); the JVM expression form simhash32 is
     # the verification twin (tests/test_properties.py asserts equal
     # bits on the same corpus)
@@ -211,7 +211,7 @@ FROM bits GROUP BY doc_id
 
 
 def q_ann_cosine_topk(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
+    emb = _emb(spark, sf_dir, fanout=True)
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.cosine_topk(emb, queries, k=3).orderBy("query_id", "rn")
 
@@ -252,7 +252,7 @@ WHERE rn <= 3 ORDER BY query_id, rn
 
 
 def q_lang_id(spark, sf_dir):
-    df = _docs(spark, sf_dir)
+    df = _docs(spark, sf_dir, fanout=True)
     return df.select("doc_id", TA.lang_guess(F.col("text")).alias("guess"))
 
 
@@ -275,7 +275,7 @@ FROM t
 
 
 def q_quality_score(spark, sf_dir):
-    df = _docs(spark, sf_dir)
+    df = _docs(spark, sf_dir, fanout=True)
     return df.select("doc_id",
                      TA.quality_score(F.col("text")).alias("quality"))
 
@@ -307,7 +307,7 @@ FROM t
 
 
 def q_token_counts(spark, sf_dir):
-    df = _docs(spark, sf_dir)
+    df = _docs(spark, sf_dir, fanout=True)
     tc = TA.token_counts(F.col("text"))
     return df.select(
         "doc_id",
@@ -325,7 +325,7 @@ FROM documents
 
 
 def q_fingerprint(spark, sf_dir):
-    df = _docs(spark, sf_dir)
+    df = _docs(spark, sf_dir, fanout=True)
     return df.select("doc_id",
                      TA.fingerprint(F.col("text")).alias("fp16"))
 
@@ -350,7 +350,7 @@ FROM documents
 def q_corpus_curation(spark, sf_dir):
     from pyspark.sql.window import Window
 
-    docs = _docs_with_dups(spark, sf_dir)
+    docs = _docs_with_dups(spark, sf_dir, fanout=True)
     # Features (lang/quality/tokens) are computed in the MAP stage,
     # before the fingerprint window: (a) the window then shuffles ~40
     # bytes of metadata per doc instead of the text payload (guide
@@ -964,7 +964,7 @@ FROM documents ORDER BY doc_id
 
 
 def q_ann_lsh_bucket(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
+    emb = _emb(spark, sf_dir, fanout=True)
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.lsh_topk(emb, queries, k=3).orderBy("query_id", "rn")
 
@@ -1124,7 +1124,7 @@ WHERE rn <= 3 ORDER BY query_id, rn
 
 
 def _emb_with_dups(spark, sf_dir):
-    emb = _emb(spark, sf_dir).select(
+    emb = _emb(spark, sf_dir, fanout=True).select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("embedding"))
     dup = emb.filter(F.col("vec_id") < 40).select(
@@ -1190,7 +1190,7 @@ SELECT id_a, id_b, sim FROM v WHERE sim >= 0.9 ORDER BY id_a, id_b
 def q_dedup_verified(spark, sf_dir):
     from .functions.text_analysis import word_shingles
 
-    docs = _docs_with_dups(spark, sf_dir)
+    docs = _docs_with_dups(spark, sf_dir, fanout=True)
     # persist the candidate pairs: they feed THREE consumers (both sides
     # of the id union + the verify join), and without reuse the banding
     # mapInPandas + band self-join — the expensive part at 100 TB —

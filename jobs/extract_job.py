@@ -93,7 +93,6 @@ def parse_args(argv):
                    "lineage.jsonl")
     p.add_argument("--run-id", required=True)
     p.add_argument("--n-buckets", type=int, default=64)
-    p.add_argument("--mode", choices=["kernel", "jvm"], default="kernel")
     p.add_argument("--log-month", default=None,
                    help="YYYY-MM metrics partition (default: current "
                    "UTC month)")
@@ -134,11 +133,8 @@ def main(argv=None) -> int:
     run = ExtractionRun(args.base_dir, args.run_id,
                         n_buckets=args.n_buckets)
     t0 = time.time()
-    res = run.process(
-        spark, src,
-        lambda df: run_pipeline(df, mode=args.mode),
-        metrics_fn=metrics_fn, log_month=args.log_month,
-    )
+    res = run.process(spark, src, run_pipeline, metrics_fn=metrics_fn,
+                      log_month=args.log_month)
     wall = time.time() - t0
     out = {
         "run_id": args.run_id,

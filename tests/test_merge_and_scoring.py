@@ -1,47 +1,8 @@
-"""C6 merge semantics + V6-V11 scoring sanity."""
+"""V6-V11 scoring sanity."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from indonesian_id_ocr_service_spark.operators.merge import (
-    coalesce_merge,
-    gated_second_pass,
-)
-
-
-def test_coalesce_merge_primary_wins(spark):
-    prim = spark.createDataFrame(
-        [("d1", "A", None), ("d2", None, "X")],
-        ["doc_id", "f1", "f2"])
-    fall = spark.createDataFrame(
-        [("d1", "B", "C"), ("d2", "Y", "Z")],
-        ["doc_id", "f1", "f2"])
-    out = {r["doc_id"]: (r["f1"], r["f2"])
-           for r in coalesce_merge(prim, fall, "doc_id",
-                                   ["f1", "f2"]).collect()}
-    assert out["d1"] == ("A", "C")   # primary non-null wins, null filled
-    assert out["d2"] == ("Y", "X")
-
-
-def test_gated_second_pass_only_failures_reprocessed(spark):
-    df = spark.createDataFrame(
-        [("d1", "ok", 5.0), ("d2", None, 1.0)],
-        ["doc_id", "f1", "score"])
-
-    calls = []
-
-    def second(failed):
-        calls.append(1)
-        return failed.select("doc_id", F.lit("recovered").alias("f1"))
-
-    out = {r["doc_id"]: r["f1"]
-           for r in gated_second_pass(
-               df, F.col("score") >= 4.0, second, "doc_id",
-               ["f1"]).collect()}
-    assert out["d1"] == "ok"          # untouched
-    assert out["d2"] == "recovered"   # second pass filled
-    assert calls == [1]
 
 
 def test_grade_thresholds(spark):

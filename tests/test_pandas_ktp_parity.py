@@ -1,8 +1,7 @@
 """Scalar post-chain parity: the vectorized pandas implementation
-(functions/pandas_ktp — the kernel-mode scale path) must match the
-pure-Python oracle chain field-for-field on identical raw inputs.
-This is the de-ported third implementation; the JVM expression chain
-(ktp_post.py) is the second, checked by the span-equality suite."""
+(functions/pandas_ktp — the extraction kernel's post-chain) must match
+the pure-Python oracle chain field-for-field on identical raw inputs.
+The span-equality suite checks the same chain end to end."""
 
 from __future__ import annotations
 

@@ -3,8 +3,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from indonesian_id_ocr_service_spark.plans import audit
 from indonesian_id_ocr_service_spark import queries as Q
 from indonesian_id_ocr_service_spark import queries_data as QD
@@ -13,22 +11,18 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_extraction_path_is_shuffle_free(spark):
-    """classify → extract → cleanup → repair → crossval → format →
-    assemble must contain NO Exchange: one row per doc, narrow all the
-    way (union branches excluded — they are separate narrow chains)."""
-    from indonesian_id_ocr_service_spark.corpus.generator import doc_rows
-    from indonesian_id_ocr_service_spark.pipeline import (
-        classify_documents, run_ktp_branch, with_default_geometry)
-
+    """The production chain — kernel input projection → mapInArrow
+    kernel → span assembly — must contain NO Exchange over a
+    KTP/SIM/UNKNOWN mix: one row per doc, narrow all the way."""
     from indonesian_id_ocr_service_spark.corpus.generator import (
         SPAN_SCHEMA_DDL,
+        doc_rows,
     )
+    from indonesian_id_ocr_service_spark.pipeline import run_pipeline
 
-    rows = list(doc_rows(10, fractions=(1.0, 0, 0)))
+    rows = list(doc_rows(10, fractions=(0.6, 0.3, 0.1)))
     df = spark.createDataFrame(rows, SPAN_SCHEMA_DDL)
-    out = run_ktp_branch(
-        classify_documents(with_default_geometry(df)).filter(
-            F.col("doc_type") == "KTP"))
+    out = run_pipeline(df)
     assert audit.count_exchanges(out) == 0, audit.simple_plan(out)[:2000]
 
 

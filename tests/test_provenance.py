@@ -8,7 +8,13 @@ from indonesian_id_ocr_service_spark.corpus.generator import (
     SPAN_SCHEMA_DDL,
     doc_rows,
 )
-from indonesian_id_ocr_service_spark.pipeline import run_pipeline_fields
+from indonesian_id_ocr_service_spark.operators.classify import (
+    document_type_py,
+)
+from indonesian_id_ocr_service_spark.pipeline import (
+    run_pipeline,
+    run_pipeline_fields,
+)
 from indonesian_id_ocr_service_spark.sinks.lineage import (
     extraction_metrics,
 )
@@ -66,3 +72,24 @@ def test_methods_vocabulary_on_corpus(spark):
         assert set(fm.values()) <= _KNOWN_METHODS
     # the generator's noise mix should exercise several tiers
     assert len(seen) >= 3, seen
+
+
+def test_fields_frame_matches_span_output(spark):
+    """The metrics frame holds exactly the docs the span output emits as
+    KTP — including C3 retries, whose primary view classifies UNKNOWN
+    and whose alternative view resolves to KTP."""
+    rows = list(doc_rows(120, fractions=(0.6, 0.3, 0.1)))
+    c3 = {r[0] for r in rows
+          if document_type_py([s["text"] for s in r[1]
+                               if s["kind"] == "text"]) == "UNKNOWN"}
+    df = spark.createDataFrame(rows, SPAN_SCHEMA_DDL)
+    ktp_spans = {
+        r["doc_id"] for r in run_pipeline(df).collect()
+        if ("field:document_type", "KTP")
+        in {(s["kind"], s["text"]) for s in r["out_spans"]}
+    }
+    assert ktp_spans & c3, "corpus exercises no C3 retry to KTP"
+    fields = {r["doc_id"]
+              for r in run_pipeline_fields(df).select("doc_id").collect()}
+    assert fields == ktp_spans, (sorted(ktp_spans - fields),
+                                 sorted(fields - ktp_spans))
