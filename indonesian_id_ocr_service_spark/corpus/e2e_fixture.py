@@ -465,7 +465,7 @@ def ktp_expected_sql() -> str:
     job = _sql_list(JOB)
     # (name, expr, absent_for_cls4): cls-4 docs lose nama and
     # tempat_lahir (module docstring), so later spans shift up by 2 —
-    # out_spans renumbers after array_compact (ktp_post.assemble_spans)
+    # out_spans numbers only the emitted spans (unified_extract._out_spans)
     fields = [
         ("document_type", "'KTP'", False),
         ("nomor", "nomor", False),

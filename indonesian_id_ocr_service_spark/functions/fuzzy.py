@@ -251,40 +251,6 @@ def _partial_upper_bound(qc: dict, qlen: int, c: str) -> float:
     return 200.0 * c_eff / (s_len + c_eff)
 
 
-def _token_set_ratio_floored(a: str, b: str, floor: int) -> int:
-    """token_set_ratio, exact for results > ``floor``; results ≤ floor
-    may be under-reported (the cheap closed-form component is returned
-    when a char-multiset bound proves the sect↔sect InDel component
-    cannot exceed the floor — LCS ≤ common char multiset)."""
-    ta = set(_sorted_tokens(a))
-    tb = set(_sorted_tokens(b))
-    if not ta and not tb:
-        return 0
-    inter = " ".join(sorted(ta & tb))
-    sect_a = (inter + " " + " ".join(sorted(ta - tb))).strip()
-    sect_b = (inter + " " + " ".join(sorted(tb - ta))).strip()
-    li, la, lb = len(inter), len(sect_a), len(sect_b)
-    best = 0
-    if li:
-        best = max(
-            int(round(200.0 * li / (li + la))),
-            int(round(200.0 * li / (li + lb))),
-        )
-        if best == 100:
-            return 100
-    if best <= floor and la + lb:
-        ca = _char_counts(sect_a)
-        cb = _char_counts(sect_b)
-        common = 0
-        for ch, n in ca.items():
-            m = cb.get(ch)
-            if m:
-                common += n if n < m else m
-        if int(round(200.0 * common / (la + lb))) <= floor:
-            return best
-    return max(best, ratio(sect_a, sect_b))
-
-
 @lru_cache(maxsize=256)
 def _prepped_choices(choices: tuple) -> tuple:
     """(raw, full_process(raw)) per choice — extract_one call sites
@@ -329,7 +295,6 @@ def extract_one(query: str | None, choices, scorer=wratio,
     if not q:
         return None, 0
     prune = scorer is partial_ratio
-    tsr = scorer is token_set_ratio and score_cutoff is not None
     qc = _char_counts(q) if prune else None
     best_choice, best_score = None, -1
     floor0 = -1 if score_cutoff is None else score_cutoff - 1
@@ -345,10 +310,7 @@ def extract_one(query: str | None, choices, scorer=wratio,
         floor = best_score if best_score > floor0 else floor0
         if prune and _partial_upper_bound(qc, len(q), c) <= floor:
             continue
-        if tsr:
-            s = _token_set_ratio_floored(q, c, floor)
-        else:
-            s = scorer(q, c)
+        s = scorer(q, c)
         if s > best_score:
             best_choice, best_score = choice, s
     if best_choice is None:

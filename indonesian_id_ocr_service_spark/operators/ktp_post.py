@@ -1,26 +1,19 @@
-"""Output-side JVM column expressions shared by the pipeline and the
-oracle-gated ``__spark_entry__`` queries.
+"""Output-side JVM column expressions outside the extraction kernel.
 
-- ``assemble_spans`` — the output span contract (format_to_target_json,
-  ktp_extractor.py:750-805): the extraction kernel's wide frame → one
-  ``out_spans`` array per document. Built once here for every doc type,
-  including the UNKNOWN error span.
-- ``_OUT_COLS`` — output field → flat column of that wide frame (also
-  the metrics sink's field list).
+- ``_OUT_COLS`` — output field → flat column of the kernel's wide frame
+  (the metrics sink's field list).
 - ``_pad_nik_with_dob`` — the V5 DOB-padding search as a pruned JVM
   expression (the ``pad_nik_dob`` query).
 
-The field values themselves come from the mapInArrow kernel
-(operators/unified_extract.py → functions/pandas_ktp.post_chain).
-Everything here is shuffle-free per-row work.
+The field values and the output span sequence come from the mapInArrow
+kernel (operators/unified_extract.py → functions/pandas_ktp.post_chain
+and ``_out_spans``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from ..functions.core import let
 
 
 def _pad_nik_with_dob(digits15: Column, expected: Column) -> Column:
@@ -114,56 +107,3 @@ _OUT_COLS: dict[str, str] = {
     "alamat.kabupaten": "alamat_kabupaten",
     "alamat.provinsi": "alamat_provinsi",
 }
-
-OUT_SPAN_TYPE = (
-    "array<struct<kind:string,text:string,media_ref:string,order:int>>"
-)
-
-
-def assemble_spans(df: DataFrame) -> DataFrame:
-    """Emit the extracted span sequence: non-null ``field:*`` spans in
-    output-JSON order — or, when ``document_type`` is null (UNKNOWN),
-    the single ``error`` span — then pass-through ``media`` spans
-    (FIXTURES.md §1, span contract of the pytest gate)."""
-    def span(kind: Column, text: Column) -> Column:
-        return F.struct(kind.alias("kind"), text.alias("text"),
-                        F.lit("").alias("media_ref"),
-                        F.lit(-1).alias("order"))
-
-    field_structs = [
-        F.when(F.col(col).isNotNull(),
-               span(F.lit(f"field:{name}"), F.col(col).cast("string")))
-        for name, col in _OUT_COLS.items()
-    ]
-    fields_arr = F.when(
-        F.col("document_type").isNull(),
-        F.array(span(F.lit("error"), F.lit("Unknown document type"))),
-    ).otherwise(F.array_compact(F.array(*field_structs)))
-    out = let(
-        fields_arr,
-        lambda fa: let(
-            F.size(fa),
-            lambda n_fields: F.concat(
-                F.transform(
-                    fa,
-                    lambda x, i: F.struct(
-                        x["kind"].alias("kind"),
-                        x["text"].alias("text"),
-                        x["media_ref"].alias("media_ref"),
-                        i.cast("int").alias("order"),
-                    ),
-                ),
-                F.transform(
-                    F.coalesce(F.col("media_refs"),
-                               F.array().cast("array<string>")),
-                    lambda m, i: F.struct(
-                        F.lit("media").alias("kind"),
-                        F.lit("").alias("text"),
-                        m.alias("media_ref"),
-                        (n_fields + i).cast("int").alias("order"),
-                    ),
-                ),
-            ),
-        ),
-    )
-    return df.withColumn("out_spans", out.cast(OUT_SPAN_TYPE))

@@ -1,5 +1,6 @@
-"""The extraction kernel: classify + extract every document in ONE
-mapInArrow stage — the pipeline's only Python stage.
+"""The extraction kernel: classify + extract every document and build
+its output spans in ONE mapInArrow stage — the pipeline's only per-row
+work.
 
 Why not union-of-filtered-branches: with three filtered branches over
 the same source, Spark plans three sub-trees — the source scan,
@@ -8,21 +9,22 @@ repartition exchange and classification each execute once per branch
 final union stage multiplies per-row work again. One Arrow pass that
 dispatches per row on the document type keeps the whole pipeline a
 single linear narrow chain: scan → kernel input projection → this
-kernel → span assembly → write, at full parallelism with zero
-duplicated subtrees.
+kernel → write, at full parallelism with zero duplicated subtrees.
 
 Per batch: the genuinely sequential per-document work runs in a Python
 loop (classification, the KTP spatial claiming in ``ktp_spatial``, the
 SIM state machines in ``sim_core``); the KTP cleanup → repair →
 crossval → format chain then runs VECTORIZED over the batch's KTP
-subset (``functions/pandas_ktp.post_chain``). The span-equality gate
-checks the result against the independent pure-Python oracle
-(``oracle/ktp.py``).
+subset (``functions/pandas_ktp.post_chain``), and ``_out_spans``
+lays the batch's output spans out as flat Arrow children. The
+span-equality gate checks the result against the independent
+pure-Python oracle (``oracle/ktp.py``).
 
 Classification here is the same scoring function the JVM expression
 implements (operators/classify.py, oracle-checked as q_doc_type); the
 Python form rides inside the batch loop that already holds the texts,
-costing one string scan per document.
+costing one string scan per document, so no JVM classifier runs ahead
+of the kernel.
 """
 
 from __future__ import annotations
@@ -35,21 +37,70 @@ from . import sim_core
 from .classify import document_type_py as identify_document_type
 from .ktp_spatial import FIELD_COLS, _extract_one_doc, _nik_rescue
 
+#: the extracted span sequence of one document (FIXTURES.md §1)
+OUT_SPAN_TYPE = (
+    "array<struct<kind:string,text:string,media_ref:string,order:int>>"
+)
+
 FULL_KERNEL_SCHEMA = (
     "doc_id string, doc_type string, media_refs array<string>, "
     + ", ".join(
         f"{f.replace('.', '_')} string" for f in OUTPUT_FIELD_ORDER
         if f != "document_type"
     )
-    + ", field_methods map<string,string>"
+    + f", field_methods map<string,string>, out_spans {OUT_SPAN_TYPE}"
 )
 
 _OUT_FIELDS = [f for f in OUTPUT_FIELD_ORDER if f != "document_type"]
+_FIELD_KINDS = [f"field:{f}" for f in _OUT_FIELDS]
+
+
+def _out_spans(doc_types, field_vals, medias):
+    """The output span contract (format_to_target_json,
+    ktp_extractor.py:750-805), columnar: per document the
+    ``field:document_type`` span and every non-null field in output
+    order — or, for UNKNOWN, the single ``error`` span — then its
+    ``media`` spans, ``order`` running from 0. Built as flat
+    kind/text/media_ref/order children plus list offsets, the way the
+    kernel reads its input."""
+    import pyarrow as pa
+
+    kinds: list = []
+    texts: list = []
+    refs: list = []
+    offsets = [0]
+    for i, doc_type in enumerate(doc_types):
+        if doc_type == "UNKNOWN":
+            kinds.append("error")
+            texts.append("Unknown document type")
+        else:
+            kinds.append("field:document_type")
+            texts.append(doc_type)
+            for kind, col in zip(_FIELD_KINDS, field_vals):
+                v = col[i]
+                if v is not None:
+                    kinds.append(kind)
+                    texts.append(v)
+        n_fields = len(kinds) - offsets[-1]
+        refs += [""] * n_fields
+        media = medias[i]
+        kinds += ["media"] * len(media)
+        texts += [""] * len(media)
+        refs += media
+        offsets.append(len(kinds))
+    order = np.arange(len(kinds), dtype=np.int32) - np.repeat(
+        np.asarray(offsets[:-1], dtype=np.int32), np.diff(offsets))
+    spans = pa.StructArray.from_arrays(
+        [pa.array(kinds, pa.string()), pa.array(texts, pa.string()),
+         pa.array(refs, pa.string()), pa.array(order, pa.int32())],
+        names=["kind", "text", "media_ref", "order"])
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), spans)
 
 
 def full_kernel_batch_arrow(batches):
     """(doc_id, spans, span_geom[, spans_alt, alt_geom, span_conf]) →
-    one row of FINAL output fields per document (FULL_KERNEL_SCHEMA).
+    one row of FINAL output fields and output spans per document
+    (FULL_KERNEL_SCHEMA).
 
     The span/geometry columns are consumed as flattened child arrays +
     list offsets, not per-span Python dicts: Arrow→pandas conversion of
@@ -66,7 +117,7 @@ def full_kernel_batch_arrow(batches):
     raw_cols = list(FIELD_COLS.values())
     out_cols = [f.replace(".", "_") for f in _OUT_FIELDS]
     out_names = (["doc_id", "doc_type", "media_refs"] + out_cols
-                 + ["field_methods"])
+                 + ["field_methods", "out_spans"])
     out_type_sim = pa.map_(pa.string(), pa.string())
 
     def list_parts(col):
@@ -231,6 +282,7 @@ def full_kernel_batch_arrow(batches):
              pa.array(doc_types, pa.string()),
              pa.array(medias_out, pa.list_(pa.string()))]
             + [pa.array(v, pa.string()) for v in field_vals]
-            + [pa.array(methods_out, out_type_sim)],
+            + [pa.array(methods_out, out_type_sim),
+               _out_spans(doc_types, field_vals, medias_out)],
             names=out_names,
         )

@@ -4,29 +4,27 @@ Plan shape (SURVEY §7) — ONE linear narrow chain, no union, no join,
 no Exchange:
 
     scan (doc_id, spans, span_geom[, span_conf, spans_alt, alt_geom])
-      → _kernel_input: JVM projection; the alternative OCR view is
-        nulled for docs the JVM classifier already reads as KTP (lazy
-        alt view — only the C3 UNKNOWN retry and the C6 SIM second
-        pass consume it)
+      → _kernel_input: column projection, the alternative OCR view
+        included as stored
       → ONE mapInArrow kernel (operators.unified_extract): per document
         classify (C1, incl. the C3 retry) → KTP spatial extraction +
         vectorized post-chain, or the SIM state machines → one wide row
-        of final output fields + per-field provenance
-      → ktp_post.assemble_spans: field/media spans, or the UNKNOWN
-        error span + media pass-through
+        of final output fields + per-field provenance + the output
+        span sequence (``out_spans``, or the UNKNOWN error span + media
+        pass-through)
 
-The only Python stage is that kernel; everything around it is
-whole-stage-codegen JVM. The input already holds one row per document,
-so the chain is embarrassingly parallel and throughput scales linearly
-with cores (the scaling-efficiency criterion in BASELINE.md).
+The only per-row work is that kernel; around it the plan holds a scan
+and column projections, no JVM expression tree to build or analyse
+(a geometry-free corpus adds ``with_default_geometry``). The input
+already holds one row per document, so the chain is embarrassingly
+parallel and throughput scales linearly with cores (the
+scaling-efficiency criterion in BASELINE.md).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .operators import classify, ktp_post
 
 
 def with_default_geometry(df: DataFrame) -> DataFrame:
@@ -53,32 +51,24 @@ def _kernel_input(src: DataFrame) -> DataFrame:
     plus, when the corpus carries them, the alternative OCR view (C3
     UNKNOWN retry / C6 SmartSIM pass) and per-span confidences (C2).
 
-    The alternative view is shipped LAZILY: only C3 (UNKNOWN retry) and
-    C6 (SIM std↔smart second pass) ever consume it, so the JVM
-    classifier (oracle-checked identical to the kernel's Python
-    classifier) nulls ``spans_alt``/``alt_geom`` for the KTP majority
-    before the Arrow transfer. This is the reference's lazy-recompute
-    shape (SURVEY §4) expressed as a conditional projection — it keeps
-    the pipeline a single zero-shuffle narrow chain, where the
-    flag + filtered-second-pass alternative would add a join (shuffle)
-    and re-execute the main kernel once per union branch (no AQE
-    exchange reuse; see BENCH.md)."""
-    cols = [F.col("doc_id"), F.col("spans"), F.col("span_geom")]
+    The alternative view ships for every document, as stored. The
+    kernel classifies every document in Python and reads the
+    alternative view only for C3 and C6; nulling it for the KTP
+    majority would need a JVM classifier ahead of the kernel, which
+    costs more than the transfer it saves. Measured on 12k docs, warm
+    local[4]: an identity mapInArrow over every alternative view took
+    0.67-0.76 s, against 1.16-1.65 s with that classifier."""
+    cols = ["doc_id", "spans", "span_geom"]
     if "spans_alt" in src.columns and "alt_geom" in src.columns:
-        need_alt = classify.document_type(F.col("spans")) != F.lit("KTP")
-        cols += [
-            F.when(need_alt, F.col("spans_alt")).alias("spans_alt"),
-            F.when(need_alt, F.col("alt_geom")).alias("alt_geom"),
-        ]
+        cols += ["spans_alt", "alt_geom"]
     if "span_conf" in src.columns:
-        cols.append(F.col("span_conf"))
+        cols.append("span_conf")
     return src.select(*cols)
 
 
 def _extract(df: DataFrame) -> DataFrame:
     """The kernel's wide frame: doc_id, doc_type, media_refs, the final
-    output-field columns, field_methods and ``document_type`` (doc_type
-    for KTP/SIM, null for UNKNOWN)."""
+    output-field columns, field_methods and out_spans."""
     from .operators.unified_extract import (
         FULL_KERNEL_SCHEMA,
         full_kernel_batch_arrow,
@@ -90,32 +80,30 @@ def _extract(df: DataFrame) -> DataFrame:
     # array<struct> span columns builds a dict per span (~3.4
     # core-ms/doc, allocation-bound → also caps multi-core scaling);
     # the arrow kernel reads flattened child arrays + offsets directly
-    wide = _kernel_input(with_default_geometry(df)).mapInArrow(
+    return _kernel_input(with_default_geometry(df)).mapInArrow(
         full_kernel_batch_arrow, schema=FULL_KERNEL_SCHEMA
-    )
-    doc_type = F.col("doc_type")
-    return wide.withColumn(
-        "document_type", F.when(doc_type.isin("KTP", "SIM"), doc_type)
     )
 
 
 def run_pipeline(df: DataFrame) -> DataFrame:
     """Full pipeline → (doc_id, out_spans).
 
-    The complete per-document grammar runs inside the single Arrow
-    kernel (~1-2 core-ms/doc): Spark's higher-order functions recompute
-    ``dataType`` recursively on every evaluation, so normalizer-chain-
-    sized expression trees cost ~85 core-ms/doc interpreted — measured,
-    not guessed. The span-equality gate checks this path against the
-    pure-Python oracle, and the ``ktp_extraction_e2e`` /
-    ``sim_extraction_e2e`` queries against DuckDB."""
-    return ktp_post.assemble_spans(_extract(df)).select("doc_id",
-                                                        "out_spans")
+    The complete per-document grammar, span assembly included, runs
+    inside the single Arrow kernel (~1-2 core-ms/doc): Spark's
+    higher-order functions recompute ``dataType`` recursively on every
+    evaluation, so normalizer-chain-sized expression trees cost ~85
+    core-ms/doc interpreted — measured, not guessed. The span-equality
+    gate checks this path against the pure-Python oracle, and the
+    ``ktp_extraction_e2e`` / ``sim_extraction_e2e`` queries against
+    DuckDB."""
+    return _extract(df).select("doc_id", "out_spans")
 
 
 def run_pipeline_fields(df: DataFrame) -> DataFrame:
     """The flat output-field columns of the KTP documents (for the
-    metrics table): the kernel's own wide frame before span assembly,
-    so a doc is KTP here exactly when ``run_pipeline`` emits it as KTP
+    metrics table): the kernel's own wide frame without its spans, so a
+    doc is KTP here exactly when ``run_pipeline`` emits it as KTP
     (including C3 retries resolved through the alternative view)."""
-    return _extract(df).filter(F.col("doc_type") == "KTP").drop("doc_type")
+    return (_extract(df).filter(F.col("doc_type") == "KTP")
+            .withColumn("document_type", F.col("doc_type"))
+            .drop("doc_type", "out_spans"))

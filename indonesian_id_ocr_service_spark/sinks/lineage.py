@@ -23,7 +23,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["ExtractionRun", "extraction_metrics"]
@@ -81,6 +81,17 @@ def extraction_metrics(fields_df: DataFrame) -> DataFrame:
     if "bucket" in fields_df.columns:
         cols.append(F.col("bucket"))
     return fields_df.select(*cols)
+
+
+def _observed(df: DataFrame, metrics: list, write) -> dict:
+    """Run ``write`` on ``df`` with ``metrics`` (aggregate columns)
+    observed on the rows it writes; return their values. The counts
+    come from the write job itself, not from reading its output back.
+    Result-task accumulator updates merge once per partition, so a
+    retried or speculative task does not count twice."""
+    obs = Observation()
+    write(df.observe(obs, *metrics))
+    return obs.get
 
 
 class ExtractionRun:
@@ -149,7 +160,10 @@ class ExtractionRun:
         replaced, committed ones are untouched, and per-bucket lineage
         rows are appended only after the job succeeds — a crashed run
         leaves un-logged partials that the next run simply overwrites
-        (same exactly-once-per-bucket contract as before)."""
+        (same exactly-once-per-bucket contract as before). The
+        per-bucket row counts the lineage rows record are observed on
+        that write (one ``count_if`` per pending bucket), so the commit
+        reads nothing back from ``results/``."""
         done = self.committed_buckets()
         todo = [b for b in range(self.n_buckets) if b not in done]
         skipped = self.n_buckets - len(todo)
@@ -161,8 +175,9 @@ class ExtractionRun:
         # write: dynamic partition overwrite only replaces directories
         # the job actually writes, so a todo bucket that produces 0
         # output rows would otherwise keep partials left by a crashed
-        # (un-logged) earlier run — and the read-back below would count
-        # and commit them as that bucket's rows.
+        # (un-logged) earlier run, and readers of results/ (the metrics
+        # read-back below among them) would take them for that
+        # bucket's rows.
         import shutil
 
         for b in todo:
@@ -173,17 +188,12 @@ class ExtractionRun:
         # recompute the bucket on the OUTPUT (it carries doc_id) so the
         # pipeline itself stays bucket-agnostic
         out = pipeline_fn(part).withColumn("bucket", self.bucket_of())
-        (out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.results_dir))
-        counts = {
-            r["bucket"]: r["n"]
-            for r in spark.read.parquet(self.results_dir)
-            .filter(F.col("bucket").isin(todo))
-            .groupBy("bucket").agg(F.count("*").alias("n"))
-            .collect()
-        }
+        counts = _observed(out, [
+            F.count_if(F.col("bucket") == b).alias(str(b)) for b in todo
+        ], lambda df: (df.write.mode("overwrite")
+                       .option("partitionOverwriteMode", "dynamic")
+                       .partitionBy("bucket")
+                       .parquet(self.results_dir)))
         # Metrics BEFORE the lineage commit rows, so a crash in between
         # is retried (re-run reprocesses the bucket) instead of lost
         # forever (resume would skip it). Replay cannot duplicate
@@ -199,7 +209,7 @@ class ExtractionRun:
             self.write_metrics(metrics_fn(fresh), log_month=log_month)
         total_rows = 0
         for b in todo:
-            rows = int(counts.get(b, 0))
+            rows = int(counts[str(b)])
             self._append_lineage(b, "committed", rows, started)
             total_rows += rows
         return {"buckets_run": len(todo), "buckets_skipped": skipped,
@@ -287,9 +297,10 @@ class StreamingExtractionRun(ExtractionRun):
         out_dir = os.path.join(self.results_dir, f"batch={batch_id}")
         shutil.rmtree(out_dir, ignore_errors=True)   # dead replay's partials
         out = pipeline_fn(batch_df)
-        out.write.mode("overwrite").parquet(out_dir)
+        rows = int(_observed(
+            out, [F.count(F.lit(1)).alias("rows")],
+            lambda df: df.write.mode("overwrite").parquet(out_dir))["rows"])
         spark = batch_df.sparkSession
-        rows = spark.read.parquet(out_dir).count()
         if metrics_fn is not None:
             # tag with the commit unit so write_metrics overwrites the
             # batch's own partition on replay (exactly-once metrics)

@@ -75,9 +75,9 @@ def test_full_mix_span_equality_kernel(spark):
 
 def test_kernel_pipeline_tolerates_v1_schema(spark):
     """A corpus WITHOUT the alternative view / confidence columns
-    (round-1 schema) still runs through the arrow kernel: the lazy-alt
-    projection and the kernel's optional-column handling degrade to
-    single-view extraction."""
+    (round-1 schema) still runs through the arrow kernel: the kernel
+    input projection and the kernel's optional-column handling degrade
+    to single-view extraction."""
     from indonesian_id_ocr_service_spark.corpus.generator import (
         GEOM_STRUCT_DDL, SPAN_STRUCT_DDL)
 
@@ -89,3 +89,76 @@ def test_kernel_pipeline_tolerates_v1_schema(spark):
     assert len(out) == 40
     assert all(r["out_spans"] is not None and len(r["out_spans"]) > 0
                for r in out)
+
+
+def _spans_of(df):
+    return {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"])
+                      for s in r["out_spans"]]
+        for r in run_pipeline(df).collect()
+    }
+
+
+def _assert_contract(doc_id, got, spans, geom, alt=None, alt_geom=None,
+                     conf=None):
+    exp = [(s["kind"], s["text"], s["media_ref"], s["order"])
+           for s in ktp_oracle.process_document(doc_id, spans, geom, alt,
+                                                alt_geom, conf)]
+    assert got == exp, (doc_id, got, exp)
+    assert [s[3] for s in got] == list(range(len(got))), doc_id
+    kinds = [s[0] for s in got]
+    n_media = kinds.count("media")
+    assert kinds[len(kinds) - n_media:] == ["media"] * n_media, doc_id
+
+
+def test_kernel_span_assembly_edge_cases(spark):
+    """Kernel-built out_spans at the edges of span assembly equal the
+    oracle's, with ``order`` contiguous from 0 and media after the
+    field (or error) spans: a doc with no text spans (its alternative
+    view resolves it, C3), a media-only doc, an empty ``spans`` array,
+    a SIM doc whose optional columns are null and whose fields are
+    mostly null, and the same docs in the v1 schema."""
+    from indonesian_id_ocr_service_spark.corpus.generator import (
+        GEOM_STRUCT_DDL, SPAN_STRUCT_DDL)
+
+    ktp = next(iter(doc_rows(1, fractions=(1.0, 0.0, 0.0))))
+    sim = next(iter(doc_rows(1, fractions=(0.0, 1.0, 0.0))))
+    _, k_spans, k_geom, k_conf, _, _ = ktp
+    _, s_spans, s_geom, s_conf, s_alt, s_alt_geom = sim
+    media = [j for j, sp in enumerate(k_spans) if sp["kind"] == "media"]
+    assert media and s_alt
+    sparse = [j for j, sp in enumerate(s_spans)
+              if sp["kind"] == "media"
+              or sp["text"] in ("SURAT IZIN MENGEMUDI",
+                                "BERLAKU SAMPAI 14-04-2029")]
+    s_media = [j for j, sp in enumerate(s_spans) if sp["kind"] == "media"]
+    rows = [
+        ("no-text", [s_spans[j] for j in s_media],
+         [s_geom[j] for j in s_media], [s_conf[j] for j in s_media],
+         s_alt, s_alt_geom),
+        ("media-only", [k_spans[j] for j in media],
+         [k_geom[j] for j in media], [k_conf[j] for j in media], [], []),
+        ("empty", [], [], [], None, None),
+        ("sim-nulls", [s_spans[j] for j in sparse],
+         [s_geom[j] for j in sparse], None, None, None),
+    ]
+    got = _spans_of(spark.createDataFrame(rows, SPAN_SCHEMA_DDL))
+    assert len(got) == len(rows)
+    for doc_id, spans, geom, conf, alt, alt_geom in rows:
+        _assert_contract(doc_id, got[doc_id], spans, geom, alt, alt_geom,
+                         conf)
+    # the cases exercise what they name
+    assert got["no-text"][0] == ("field:document_type", "SIM", "", 0)
+    assert got["media-only"][0][0] == "error"
+    assert got["empty"] == [("error", "Unknown document type", "", 0)]
+    sim_fields = [s for s in got["sim-nulls"] if s[0].startswith("field:")]
+    assert sim_fields[0][1] == "SIM" and len(sim_fields) < 6
+
+    ddl = (f"doc_id string, spans {SPAN_STRUCT_DDL}, "
+           f"span_geom {GEOM_STRUCT_DDL}")
+    v1 = [r[:3] for r in rows] + [("ktp",) + ktp[1:3]]
+    got = _spans_of(spark.createDataFrame(v1, ddl))
+    assert len(got) == len(v1)
+    for doc_id, spans, geom in v1:
+        _assert_contract(doc_id, got[doc_id], spans, geom)
+    assert got["ktp"][0] == ("field:document_type", "KTP", "", 0)

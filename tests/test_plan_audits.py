@@ -11,9 +11,12 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_extraction_path_is_shuffle_free(spark):
-    """The production chain — kernel input projection → mapInArrow
-    kernel → span assembly — must contain NO Exchange over a
-    KTP/SIM/UNKNOWN mix: one row per doc, narrow all the way."""
+    """The production chain — kernel input projection → one mapInArrow
+    kernel that also builds the output spans — must contain NO Exchange
+    over a KTP/SIM/UNKNOWN mix (one row per doc, narrow all the way),
+    exactly one MapInArrow, and no higher-order-function lambda around
+    it: span assembly and classification happen inside the kernel. The
+    corpus carries span_geom, so no default geometry is synthesised."""
     from indonesian_id_ocr_service_spark.corpus.generator import (
         SPAN_SCHEMA_DDL,
         doc_rows,
@@ -23,7 +26,10 @@ def test_extraction_path_is_shuffle_free(spark):
     rows = list(doc_rows(10, fractions=(0.6, 0.3, 0.1)))
     df = spark.createDataFrame(rows, SPAN_SCHEMA_DDL)
     out = run_pipeline(df)
-    assert audit.count_exchanges(out) == 0, audit.simple_plan(out)[:2000]
+    plan = audit.simple_plan(out)
+    assert audit.count_exchanges(out) == 0, plan[:2000]
+    assert plan.count("MapInArrow") == 1, plan[:2000]
+    assert "lambdafunction" not in plan.lower(), plan[:2000]
 
 
 def test_e2e_query_single_intentional_exchange(spark):

@@ -244,3 +244,76 @@ def test_region_line_parity_fuzzed():
     for s in lines:
         u = s.upper()
         assert sim_core._is_region_line(u) == SI._names_region(u), s
+
+
+def _one_char_mutation(rng, s: str) -> str:
+    """Substitute, delete or insert exactly one character."""
+    i = rng.randrange(len(s))
+    c = rng.choice(string.ascii_uppercase + string.digits + " ./-")
+    op = rng.randrange(3)
+    if op == 0:
+        return s[:i] + c + s[i + 1:]
+    if op == 1:
+        return s[:i] + s[i + 1:]
+    return s[:i] + c + s[i:]
+
+
+def _threshold_subsequences(rng) -> list:
+    """Deletion-only variants of every occupation alias whose InDel
+    ratio to it lands on the M3 (80) or normaliser (72) threshold: the
+    inputs whose exact score equals the pruning bound that must admit
+    it."""
+    out = []
+    for alias in sorted({a.upper()
+                         for aliases in sim_core.PEKERJAAN_CANONICAL.values()
+                         for a in aliases}):
+        n = len(alias)
+        for k in range(1, n):
+            if int(round(200.0 * k / (k + n))) in (72, 80):
+                for _ in range(3):
+                    keep = sorted(rng.sample(range(n), k))
+                    out.append("".join(alias[i] for i in keep))
+    return out
+
+
+def test_job_matchers_match_independent():
+    """M3 and the SIM occupation normaliser run on a vocabulary prepared
+    once with exact score bounds; the oracle wraps the same kernel, so
+    only this differential test can catch a bound that skips a term
+    that matches. Inputs: every text span of both views of the SIM
+    corpus, a one-character mutation of each, every occupation alias,
+    and alias subsequences scoring exactly at the thresholds. The naive
+    re-derivations are slow (~4 ms per input), so they run on a small
+    process pool."""
+    from concurrent.futures import ProcessPoolExecutor
+    from multiprocessing import get_context
+
+    from indonesian_id_ocr_service_spark.oracle import scalars as S
+
+    rng = random.Random(46)
+    texts = set()
+    for row in doc_rows(N_DOCS, fractions=(0.0, 1.0, 0.0)):
+        for spans in (row[1], row[4]):
+            texts.update(s["text"] for s in spans or ()
+                         if s["kind"] == "text" and s["text"])
+    inputs = sorted(texts)
+    inputs += [_one_char_mutation(rng, t) for t in inputs]
+    inputs += sorted({a for aliases in sim_core.PEKERJAAN_CANONICAL.values()
+                      for a in aliases})
+    inputs += _threshold_subsequences(rng)
+    assert len(inputs) > 20000
+
+    with ProcessPoolExecutor(4, mp_context=get_context("spawn")) as ex:
+        want_job = list(ex.map(SI._looks_like_job, inputs, chunksize=500))
+        want_norm = list(ex.map(S.normalize_pekerjaan_sim, inputs,
+                                chunksize=500))
+    got_job = [sim_core.is_job(s) for s in inputs]
+    got_norm = [sim_core.normalize_occupation(s) for s in inputs]
+    bad_job = [s for s, a, b in zip(inputs, got_job, want_job) if a != b]
+    bad_norm = [(s, a, b) for s, a, b in zip(inputs, got_norm, want_norm)
+                if a != b]
+    assert not bad_job, bad_job[:5]
+    assert not bad_norm, bad_norm[:5]
+    # both outcomes of both matchers are exercised
+    assert 0 < sum(got_job) < len(inputs)
+    assert any(a != s for s, a in zip(inputs, got_norm))
