@@ -317,10 +317,3 @@ def extract_one(query: str | None, choices, scorer=wratio,
         return None, 0
     return best_choice, best_score
 
-
-@lru_cache(maxsize=65536)
-def cached_extract_one_wratio(query: str, choices: tuple) -> tuple:
-    """Memoized extract_one for hot dictionary loops inside pandas UDFs —
-    OCR vocabularies repeat heavily within a batch, so the cache hit rate
-    is high and keeps the Python tier cheap."""
-    return extract_one(query, choices, scorer=wratio)

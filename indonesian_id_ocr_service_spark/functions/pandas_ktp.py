@@ -7,11 +7,10 @@ chain, checked against the independent pure-Python per-row oracle
 span-equality gate.
 
 Reference semantics per stage:
-- cleanup      ktp_extractor.py:589-743 (field normalizers, NIK clean,
-               RT/RW bleed from Kel/Desa)
-- repair       document_processor.py:96-148 (NIK candidate engine
-               nik_fuzzy.py:108-166 + spatial rescue fallback; TTL
-               re-normalization via the date chain)
+- cleanup      ktp_extractor.py:589-743 (field normalizers, RT/RW
+               bleed from Kel/Desa; NIK clean runs in resolve_nik)
+- repair       document_processor.py:96-148 (TTL re-normalization via
+               the date chain; the NIK tiers run in resolve_nik)
 - crossval     nik_cross_validator.py:63-265 (NIK→fields overwrite,
                fields→NIK 15-digit DOB padding)
 - format       ktp_extractor.py:750-805 (+ the N37 conservative place
@@ -24,14 +23,11 @@ the Python tier amortizes to ~zero — same strategy as the
 the repo's own bit-parallel fuzz scorers (functions/fuzzy.py), never
 through the oracle.
 
-The NIK candidate engine is fully columnar: candidate families (exact /
-char-sub / longest-run / 120 insertion variants) are generated as
-column batches in the oracle's exact generation order, structurally
-scored with slice arithmetic, and the best is a strict-greater scan in
-generation order — equivalent to the oracle's dedup-keep-max + stable
-confidence sort (no later candidate family carries a higher base
-confidence than an earlier duplicate, so first-position ties resolve
-identically).
+The ``nik`` column arrives resolved: the kernel runs NIK cleanup and
+the three repair tiers once per KTP document
+(``ktp_spatial.resolve_nik``) on the per-value candidate engine below
+(``clean_nik_one``/``nik_best_one``). Only ~6% of KTP NIKs need
+repair, too few for a columnar engine to amortise its per-batch cost.
 """
 
 from __future__ import annotations
@@ -60,7 +56,8 @@ from . import fuzzy
 from .pandas_dates import normalize_date_frame
 
 __all__ = ["post_chain", "cleanup_frame", "repair_frame",
-           "crossval_frame", "format_frame", "nik_best_with_conf"]
+           "crossval_frame", "format_frame", "clean_nik_one",
+           "nik_best_one"]
 
 _TO_DIGIT = str.maketrans(TO_DIGIT_SRC, TO_DIGIT_DST)
 _TO_TEXT = str.maketrans(TO_TEXT_SRC, TO_TEXT_DST)
@@ -230,52 +227,14 @@ def _kwn_one(v: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# NIK machinery (columnar)
+# NIK machinery (per value; the kernel calls it once per KTP document
+# through ktp_spatial.resolve_nik)
 # ---------------------------------------------------------------------------
 
 
-def _clean_nik_vec(t: pd.Series) -> pd.Series:
-    """clean_nik (ktp_extractor.py:109-128), columnar."""
-    sub = _sub_digit(t.fillna(""))
-    digits = _digits(sub)
-    over = sub.str.replace(" ", "", regex=False).str.extract(
-        r"(\d{16})", expand=False)
-    out = digits.where(digits.str.len() == 16,
-                       over.where(digits.str.len() > 16, None))
-    return _obj(out.where(t.notna(), None))
-
-
-def _struct_conf(c: pd.Series, base: float) -> np.ndarray:
-    """base · rescoring(nik_structural_score) (nik_fuzzy.py:261-311),
-    NaN where the candidate is null."""
-    mask = c.notna().to_numpy()
-    n = len(c)
-    s = np.full(n, np.nan)
-    if not mask.any():
-        return s
-    v = c.fillna("0" * 16)
-    prov = pd.to_numeric(v.str[0:2]).to_numpy(float)
-    kk = pd.to_numeric(v.str[4:6]).to_numpy(float)
-    day = pd.to_numeric(v.str[6:8]).to_numpy(float)
-    month = pd.to_numeric(v.str[8:10]).to_numpy(float)
-    seq = pd.to_numeric(v.str[12:16]).to_numpy(float)
-    sc = np.ones(n)
-    in_prov = np.isin(prov, list(VALID_PROVINCE_CODES))
-    sc *= np.where(in_prov, 1.0,
-                   np.where((prov < 11) | (prov > 94), 0.40, 0.85))
-    sc *= np.where(kk == 0, 0.70, 1.0)
-    sc *= np.where(day == 0, 0.0,
-                   np.where(((day >= 1) & (day <= 31))
-                            | ((day >= 41) & (day <= 71)), 1.0, 0.10))
-    sc *= np.where((month < 1) | (month > 12), 0.0, 1.0)
-    sc *= np.where(seq == 0, 0.50, 1.0)
-    conf = base * np.where(sc < 0.2, 0.25, 0.5 + 0.5 * sc)
-    s[mask] = conf[mask]
-    return s
-
-
 def _struct_conf_one(v: str, base: float) -> float:
-    """Scalar twin of _struct_conf for a single 16-digit candidate."""
+    """base · rescoring(nik_structural_score) (nik_fuzzy.py:261-311)
+    for one 16-digit candidate."""
     prov = float(v[0:2])
     kk = float(v[4:6])
     day = float(v[6:8])
@@ -298,7 +257,7 @@ def _struct_conf_one(v: str, base: float) -> float:
 
 
 def clean_nik_one(v: str | None) -> str | None:
-    """Scalar twin of _clean_nik_vec (one value, no Series)."""
+    """clean_nik (ktp_extractor.py:109-128)."""
     if v is None:
         return None
     sub = str(v).translate(_TO_DIGIT)
@@ -312,11 +271,13 @@ def clean_nik_one(v: str | None) -> str | None:
 
 
 def nik_best_one(raw) -> Tuple[Optional[str], Optional[float]]:
-    """Scalar twin of nik_best_with_conf: identical family order, base
-    confidences, structural rescoring and strict-greater best scan, for
-    ONE value. Used by the per-document spatial NIK rescue — the
-    columnar engine's pandas overhead (~3 ms per tiny Series) is ~1000×
-    the real work at n=1."""
+    """Best NIK candidate ≥ 0.30 (nik_fuzzy.py:108-166) → (value,
+    confidence), or (None, None). Candidate families (exact / char-sub
+    / longest-run / 120 insertion variants) are generated in the
+    oracle's order and the best is a strict-greater scan in that order
+    — equivalent to the oracle's dedup-keep-max + stable confidence
+    sort (no later family carries a higher base confidence than an
+    earlier duplicate, so first-position ties resolve identically)."""
     if raw is None:
         return None, None
     r = str(raw)
@@ -356,77 +317,10 @@ def nik_best_one(raw) -> Tuple[Optional[str], Optional[float]]:
     return None, None
 
 
-def nik_best_with_conf(raw_full: pd.Series):
-    """Best NIK candidate ≥ 0.30 (nik_fuzzy.py:108-166) →
-    (value Series, confidence Series); None/NaN when no candidate.
-    Candidate families generated columnar in the oracle's order.
-    Compacts to non-null rows first (only the repair subset pays for
-    the ~120 candidate-family columns), and runs the insertion/edge
-    families on the 15-digit sub-subset only."""
-    raw = raw_full.dropna()
-    n = len(raw)
-    if n == 0:
-        empty = pd.Series([None] * len(raw_full), index=raw_full.index,
-                          dtype=object)
-        return empty, pd.Series(np.nan, index=raw_full.index)
-    r = raw.astype(str)
-    exact = _digits(r)
-    sub = _sub_digit(r)
-    subd = _digits(sub)
-
-    # longest digit run of the substituted string
-    runs = sub.str.findall(r"\d+")
-    run = runs.map(lambda L: max(L, key=len) if L else "")
-
-    cands: list = []   # (value Series, base confidence) in gen order
-    cands.append((_nullify_empty(exact.where(exact.str.len() == 16)), 1.0))
-    cands.append((_nullify_empty(subd.where(
-        (subd.str.len() == 16) & (subd != exact))), 0.88))
-    rl = run.str.len()
-    padded = run.str.ljust(16, "0")
-    for ln, base in ((16, 0.93), (15, 0.72), (14, 0.50)):
-        cands.append((_nullify_empty(padded.where(
-            (rl == ln) & (padded != exact) & (padded != subd))), base))
-
-    working = subd.where(subd.str.len() == 15,
-                         exact.where(exact.str.len() == 15))
-    w = working.dropna()
-    if len(w):
-        for pos in NIK_INSERT_POSITIONS:
-            pre, suf = w.str[:pos], w.str[pos:]
-            for d in "0123456789":
-                cands.append((pre + d + suf, 0.62))
-        for d in "0123456789":
-            cands.append((d + w, 0.58))
-            cands.append((w + d, 0.58))
-
-    best_val = pd.Series([None] * n, index=raw.index, dtype=object)
-    best_conf = pd.Series(np.full(n, -1.0), index=raw.index)
-    for series, base in cands:
-        series = series.dropna()
-        if series.empty:
-            continue
-        conf = pd.Series(_struct_conf(series, base), index=series.index)
-        conf = conf.where(conf.notna() & (conf >= 0.30), -2.0)
-        cur = best_conf.loc[series.index]
-        take = conf > cur
-        if take.any():
-            ti = series.index[take]
-            best_val.loc[ti] = series.loc[ti]
-            best_conf.loc[ti] = conf.loc[ti]
-    out = best_val.where(best_conf >= 0.30, None)
-    return (out.reindex(raw_full.index),
-            best_conf.where(best_conf >= 0.30).reindex(raw_full.index))
-
-
-def _nik_best_vec(raw_full: pd.Series) -> pd.Series:
-    return nik_best_with_conf(raw_full)[0]
-
-
 def _pad_nik_dob_vec(d15: pd.Series, exp: pd.Series) -> pd.Series:
     """DOB-driven 15→16 padding, closed form of the digit-major search
     (nik_cross_validator.py:271-285; same pruning as
-    ktp_post._pad_nik_with_dob)."""
+    nik.pad_nik_with_dob)."""
     n = len(d15)
     best_val = pd.Series([None] * n, index=d15.index, dtype=object)
     best_prio = np.full(n, 99)
@@ -474,14 +368,6 @@ def cleanup_frame(raw: pd.DataFrame) -> pd.DataFrame:
     drops the key)."""
     b = {c: _base_clean(_obj(raw[c])) for c in raw.columns}
     out = {}
-
-    nik_good = _clean_nik_vec(b["nik"])
-    nik_digits = _digits(_sub_digit(b["nik"].fillna("")))
-    out["nik"] = nik_good.where(
-        nik_good.notna(),
-        _obj(nik_digits.where(
-            (nik_digits.str.len() >= 12) & b["nik"].notna(), None)),
-    )
 
     out["agama"] = _map_uniques(b["agama"], _agama_one)
 
@@ -545,17 +431,11 @@ def cleanup_frame(raw: pd.DataFrame) -> pd.DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def repair_frame(c: pd.DataFrame,
-                 rescue_value: pd.Series) -> pd.DataFrame:
-    """document_processor.py:96-148: NIK best-candidate (+ the spatial
-    rescue computed per-doc upstream), then TTL re-normalization."""
+def repair_frame(c: pd.DataFrame) -> pd.DataFrame:
+    """document_processor.py:96-148 minus the NIK tiers (the kernel
+    resolves the NIK per document, ktp_spatial.resolve_nik): TTL
+    re-normalization via the date chain."""
     out = c.copy()
-    nik = c["nik"]
-    ok16 = nik.str.match(r"^\d{16}$", na=False)
-    best = _nik_best_vec(nik.where(~ok16))
-    cand = best.where(best.notna(), _obj(rescue_value).where(~ok16))
-    out["nik"] = _obj(nik.where(ok16, cand.where(cand.notna(), nik)))
-
     ttl = c["ttl"]
     place, date_raw = _split_place_date_vec(ttl)
     nd = normalize_date_frame(date_raw.fillna(""))
@@ -763,10 +643,10 @@ def format_frame(v: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def post_chain(raw: pd.DataFrame,
-               rescue_value: pd.Series) -> pd.DataFrame:
-    """cleanup → repair → crossval → format over raw-field columns."""
+def post_chain(raw: pd.DataFrame) -> pd.DataFrame:
+    """cleanup → repair → crossval → format over raw-field columns
+    (the ``nik`` column already resolved)."""
     c = cleanup_frame(raw)
-    r = repair_frame(c, rescue_value)
+    r = repair_frame(c)
     x = crossval_frame(r)
     return format_frame(x)

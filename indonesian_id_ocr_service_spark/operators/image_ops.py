@@ -1672,7 +1672,8 @@ def minimal_ktp(img: np.ndarray) -> np.ndarray:
 
 def smart_sim(img: np.ndarray) -> np.ndarray:
     """P13 enhance chain (image_preprocessor.py:352-380,464-488) minus
-    the P10 perspective warp (composed in media.p13_smart_sim):
+    the P10 perspective warp (the full P13 chain is
+    ``smart_sim(perspective_correct(img))``):
     quality-assess → orient → deskew → adaptive-clip CLAHE → denoise →
     unsharp only when blurry (strength 2.0 very-blurry / 1.5) →
     resize only when wider than 1600 → pad."""

@@ -17,10 +17,13 @@ Fuzzy label scoring is memoized per executor: OCR label vocabulary
 repeats across documents, so the cache converges to the corpus label
 set and the Python tier cost amortizes to ~zero per doc.
 
-Also computes the N12 spatial-rescue NIK tier (nik_fuzzy.py:168-196)
-eagerly — but only for documents whose cleaned NIK will fail tiers 1-2,
-mirroring the reference's lazy tier dispatch
-(document_processor.py:104-135).
+Also resolves each document's NIK (``resolve_nik``, N5-N13): cleanup,
+then the repair tiers in the reference's lazy order
+(document_processor.py:104-135) — the best candidate of the cleaned
+value, and the N12 spatial rescue (nik_fuzzy.py:168-196) only when
+that fails. Each tier runs at most once per document, on the per-value
+candidate engine in functions/pandas_ktp; the batch post-chain receives
+the resolved value.
 """
 
 from __future__ import annotations
@@ -32,8 +35,9 @@ import numpy as np
 
 from ..dictionaries import CANONICAL_FIELDS, KNOWN_VALUES, TRUNCATED_KEY_MAP
 from ..functions import fuzzy
+from ..functions import pandas_ktp as PK
 
-__all__ = ["FIELD_COLS"]
+__all__ = ["FIELD_COLS", "resolve_nik"]
 
 #: canonical field label → output column name
 FIELD_COLS: dict[str, str] = {
@@ -341,32 +345,39 @@ def _extract_one_doc(texts: list[str], y0: np.ndarray, y1: np.ndarray,
     return out
 
 
-def _nik_rescue(texts: list[str], y0: np.ndarray, y1: np.ndarray,
-                raw_nik: str | None):
-    """N12/N13 tier 3 — evaluated only when tiers 1-2 will fail
-    (document_processor.py:104-135). Runs on the columnar candidate
-    engine (functions/pandas_ktp), not the oracle: per-text best then
+def resolve_nik(texts: list[str], y0: np.ndarray, y1: np.ndarray,
+                raw_nik: str | None) -> str | None:
+    """N5-N13: the document's NIK after cleanup and repair
+    (ktp_extractor.py:589-608, document_processor.py:96-135). A
+    clean_nik value is 16 digits and kept as is; otherwise cleanup
+    keeps a residue of ≥ 12 digits, and repair takes its best
+    candidate (tier 2), else the spatial rescue (tier 3), else the
+    residue. Each tier runs at most once per document."""
+    residue = None
+    if raw_nik is not None:
+        v = raw_nik.strip()
+        if v.startswith(":"):
+            v = v[1:].strip()
+        nik = PK.clean_nik_one(v)
+        if nik is not None:
+            return nik
+        digits = re.sub(r"\D", "", v.translate(PK._TO_DIGIT))
+        if len(digits) >= 12:
+            residue = digits
+            best, _c = PK.nik_best_one(residue)
+            if best is not None:
+                return best
+    rescue, _c = _nik_rescue(texts, y0, y1)
+    return rescue if rescue is not None else residue
+
+
+def _nik_rescue(texts: list[str], y0: np.ndarray, y1: np.ndarray):
+    """N12 tier 3, the spatial rescue (nik_fuzzy.py:168-196) → (value,
+    confidence) or (None, None); resolve_nik calls it only when tiers
+    1-2 fail (document_processor.py:104-135). Per-text best then
     max-confidence-first-wins ≡ the reference's global stable sort (the
     global maximum lives in some text, whose per-text best it is; ties
     resolve to the earlier text / earlier generation on both sides)."""
-    from ..functions import pandas_ktp as PK
-
-    # tier 1: cleaned 16-digit NIK (scalar engine — the columnar one
-    # costs ~3 ms of Series overhead per 1-row call)
-    cleaned = PK.clean_nik_one(raw_nik) if raw_nik else None
-    residue = None
-    if raw_nik and cleaned is None:
-        digits = re.sub(r"\D", "", str(raw_nik).translate(PK._TO_DIGIT))
-        residue = digits if len(digits) >= 12 else None
-    effective = cleaned or residue
-    if effective and re.match(r"^\d{16}$", effective):
-        return None, None
-    # tier 2: candidate engine on the cleaned value
-    if effective is not None:
-        v, _c = PK.nik_best_one(effective)
-        if v is not None:
-            return None, None
-    # tier 3: spatial rescue over all spans
     yc = (y0 + y1) / 2.0
     nik_y = None
     for i, t in enumerate(texts):

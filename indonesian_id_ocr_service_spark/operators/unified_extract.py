@@ -13,9 +13,11 @@ kernel → write, at full parallelism with zero duplicated subtrees.
 
 Per batch: the genuinely sequential per-document work runs in a Python
 loop (classification, the KTP spatial claiming in ``ktp_spatial``, the
-SIM state machines in ``sim_core``); the KTP cleanup → repair →
-crossval → format chain then runs VECTORIZED over the batch's KTP
-subset (``functions/pandas_ktp.post_chain``), and ``_out_spans``
+SIM state machines in ``sim_core``, and each KTP document's NIK
+cleanup and repair tiers in ``ktp_spatial.resolve_nik``); the rest of
+the KTP cleanup → repair → crossval → format chain then runs
+VECTORIZED over the batch's KTP subset
+(``functions/pandas_ktp.post_chain``), and ``_out_spans``
 lays the batch's output spans out as flat Arrow children. The
 span-equality gate checks the result against the independent
 pure-Python oracle (``oracle/ktp.py``).
@@ -35,23 +37,27 @@ import pandas as pd
 from ..dictionaries import OUTPUT_FIELD_ORDER
 from . import sim_core
 from .classify import document_type_py as identify_document_type
-from .ktp_spatial import FIELD_COLS, _extract_one_doc, _nik_rescue
+from .ktp_spatial import FIELD_COLS, _extract_one_doc, resolve_nik
 
 #: the extracted span sequence of one document (FIXTURES.md §1)
 OUT_SPAN_TYPE = (
     "array<struct<kind:string,text:string,media_ref:string,order:int>>"
 )
 
+#: output field → flat column of the kernel's wide frame (``.`` → ``_``);
+#: ``document_type`` is the ``doc_type`` column
+OUT_COLS: dict[str, str] = {
+    f: f.replace(".", "_") for f in OUTPUT_FIELD_ORDER
+    if f != "document_type"
+}
+
 FULL_KERNEL_SCHEMA = (
     "doc_id string, doc_type string, media_refs array<string>, "
-    + ", ".join(
-        f"{f.replace('.', '_')} string" for f in OUTPUT_FIELD_ORDER
-        if f != "document_type"
-    )
+    + ", ".join(f"{col} string" for col in OUT_COLS.values())
     + f", field_methods map<string,string>, out_spans {OUT_SPAN_TYPE}"
 )
 
-_OUT_FIELDS = [f for f in OUTPUT_FIELD_ORDER if f != "document_type"]
+_OUT_FIELDS = list(OUT_COLS)
 _FIELD_KINDS = [f"field:{f}" for f in _OUT_FIELDS]
 
 
@@ -115,8 +121,8 @@ def full_kernel_batch_arrow(batches):
 
     ktp_labels = list(FIELD_COLS)
     raw_cols = list(FIELD_COLS.values())
-    out_cols = [f.replace(".", "_") for f in _OUT_FIELDS]
-    out_names = (["doc_id", "doc_type", "media_refs"] + out_cols
+    out_names = (["doc_id", "doc_type", "media_refs"]
+                 + list(OUT_COLS.values())
                  + ["field_methods", "out_spans"])
     out_type_sim = pa.map_(pa.string(), pa.string())
 
@@ -199,7 +205,6 @@ def full_kernel_batch_arrow(batches):
         doc_types: list = []
         medias_out: list = []
         methods_out: list = []
-        rescues: list = []
         raw_rows: list = []            # KTP-subset raw fields
         ktp_pos: list = []             # row index of each raw_rows entry
         sim_cells: dict = {}           # row index -> final SIM values
@@ -245,11 +250,9 @@ def full_kernel_batch_arrow(batches):
                 y1 = y0 + gh[idx]
                 raw = _extract_one_doc(texts, y0, y1, gx0[idx],
                                        gx1[idx], methods_out=methods)
-                rescue, _rc = _nik_rescue(texts, y0, y1,
-                                          raw.get("NIK"))
+                raw["NIK"] = resolve_nik(texts, y0, y1, raw.get("NIK"))
                 ktp_pos.append(i)
                 raw_rows.append([raw.get(lb) for lb in ktp_labels])
-                rescues.append(rescue)
             elif doc_type == "SIM":
                 result = sim_core.process_sim_doc(
                     texts, sim_items(texts, idx, gy, gx0, gh),
@@ -266,7 +269,7 @@ def full_kernel_batch_arrow(batches):
                 field_vals[f_i][i] = v
         if raw_rows:
             raw_df = pd.DataFrame(raw_rows, columns=raw_cols)
-            final = PK.post_chain(raw_df, pd.Series(rescues))
+            final = PK.post_chain(raw_df)
             for f_i, f in enumerate(_OUT_FIELDS):
                 # NaN → None: a batch whose KTP subset has a field
                 # all-missing comes back float64 from pandas, and

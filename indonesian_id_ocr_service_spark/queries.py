@@ -832,8 +832,6 @@ FROM e
 
 
 def q_pad_nik_dob(spark, sf_dir):
-    from .operators.ktp_post import _pad_nik_with_dob
-
     df = _read(spark, sf_dir, "orders", fanout=True)
     nik = _nik_col("o_orderkey")
     nik15 = F.substring(nik, 2, 15)           # drop the leading digit
@@ -841,7 +839,7 @@ def q_pad_nik_dob(spark, sf_dir):
     return df.select(
         nik15.alias("nik15"),
         expected.alias("expected_dob"),
-        _pad_nik_with_dob(nik15, expected).alias("padded"),
+        NK.pad_nik_with_dob(nik15, expected).alias("padded"),
     )
 
 

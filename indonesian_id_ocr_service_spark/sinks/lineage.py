@@ -35,14 +35,14 @@ def extraction_metrics(fields_df: DataFrame) -> DataFrame:
     fields_found, missing-critical flag, weighted completeness (C5
     shape), and a NIK structural bonus (V8)."""
     from ..dictionaries import FIELD_WEIGHTS
-    from ..operators.ktp_post import _OUT_COLS
+    from ..operators.unified_extract import OUT_COLS
 
     present = [
         F.when(F.col(col).isNotNull(), F.lit(1)).otherwise(F.lit(0))
-        for name, col in _OUT_COLS.items() if name != "document_type"
+        for col in OUT_COLS.values()
     ]
     weighted = [
-        F.when(F.col(_OUT_COLS[name]).isNotNull(),
+        F.when(F.col(OUT_COLS[name]).isNotNull(),
                F.lit(w)).otherwise(F.lit(0.0))
         for name, w in FIELD_WEIGHTS.items()
     ]

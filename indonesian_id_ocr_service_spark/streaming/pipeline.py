@@ -9,10 +9,10 @@ the Spark-first replacement for the reference's request-at-a-time HTTP
 loop (app.py:35-51): arrival-driven processing with checkpointed
 exactly-once sinks instead of a web server.
 
-``windowed_quality_metrics`` adds the stateful part: per-window
-extraction-quality aggregates with a watermark for late data — the
-streaming analogue of the reference's monthly prediction logs
-(app.py:56-67).
+``start_extraction_stream_committed`` commits each micro-batch through
+the bucket commit log (sinks/lineage.py), and ``streaming_dedup`` drops
+repeated content under a watermark that bounds its state. The stateful
+span-session assembler is in ``streaming/stateful.py``.
 """
 
 from __future__ import annotations
@@ -52,32 +52,6 @@ def start_extraction_stream(spark: SparkSession, src_path: str,
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def windowed_quality_metrics(out_spans: DataFrame,
-                             event_time_col: str = "ingest_time",
-                             window: str = "1 minute",
-                             watermark: str = "2 minutes") -> DataFrame:
-    """Stateful streaming aggregate: per-window counts of extracted
-    fields and error documents, tolerating late arrivals up to the
-    watermark."""
-    enriched = out_spans.withColumn(
-        "n_fields",
-        F.size(F.filter(F.col("out_spans"),
-                        lambda s: s["kind"].startswith("field:"))),
-    ).withColumn(
-        "is_error",
-        F.exists(F.col("out_spans"), lambda s: s["kind"] == F.lit("error")),
-    )
-    return (
-        enriched.withWatermark(event_time_col, watermark)
-        .groupBy(F.window(F.col(event_time_col), window))
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("n_fields").alias("fields_total"),
-            F.sum(F.col("is_error").cast("int")).alias("errors"),
-        )
-    )
 
 
 def streaming_dedup(docs: DataFrame,

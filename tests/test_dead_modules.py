@@ -1,7 +1,12 @@
-"""Dead-module guard: every module of the package must be imported by
-something — the package itself, the tests, the jobs, the tools, the
-benchmark, ``__spark_entry__.py`` or the bench scripts. A module only
-its own file imports is dead code and fails here."""
+"""Dead-code guards over the package, the tests, the jobs, the tools,
+the benchmark, ``__spark_entry__.py`` and the bench scripts:
+
+- every module of the package must be imported by one of those files;
+  a module only its own file imports is dead code and fails here;
+- every top-level function or class of the package outside ``oracle/``
+  must be referenced by name in one of those files. ``oracle/`` holds
+  the reference implementations and keys the benchmark's cached
+  universe, so it is left out."""
 
 from __future__ import annotations
 
@@ -26,10 +31,8 @@ def _imports(path: str, modules: set[str]) -> set[str]:
     name = _module_name(path)
     package = (name if path.endswith("__init__.py")
                else name.rpartition(".")[0])
-    with open(path, encoding="utf-8") as f:
-        tree = ast.parse(f.read(), path)
     found: set[str] = set()
-    for node in ast.walk(tree):
+    for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             found |= {a.name for a in node.names}
         elif isinstance(node, ast.ImportFrom):
@@ -47,18 +50,65 @@ def _imports(path: str, modules: set[str]) -> set[str]:
     return (out & modules) - {name}
 
 
-def test_every_package_module_is_imported():
-    pkg_files = glob.glob(os.path.join(REPO, PKG, "**", "*.py"),
-                          recursive=True)
-    modules = {_module_name(p) for p in pkg_files}
-    importers = pkg_files + [
+def _package_files() -> list[str]:
+    return glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)
+
+
+def _scanned_files() -> list[str]:
+    return _package_files() + [
         p for pattern in ("tests/**/*.py", "jobs/**/*.py", "tools/**/*.py",
                           "perfbench/**/*.py", "__spark_entry__.py",
                           "bench*.py")
         for p in glob.glob(os.path.join(REPO, pattern), recursive=True)
     ]
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read(), path)
+
+
+def _referenced_names(tree: ast.Module) -> set[str]:
+    """Names a file uses: ``ast.Name`` ids, attribute names, imported
+    names and their aliases, and exact string constants."""
+    found: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            found.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            found.add(node.attr)
+        elif isinstance(node, ast.alias):
+            found.add(node.name.rpartition(".")[2])
+            if node.asname:
+                found.add(node.asname)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            found.add(node.value)
+    return found
+
+
+def test_every_package_module_is_imported():
+    pkg_files = _package_files()
+    modules = {_module_name(p) for p in pkg_files}
     imported: set[str] = set()
-    for path in importers:
+    for path in _scanned_files():
         imported |= _imports(path, modules)
     dead = sorted(modules - imported - {PKG})
     assert not dead, f"modules nothing imports: {dead}"
+
+
+def test_every_package_function_is_referenced():
+    oracle = os.path.join(REPO, PKG, "oracle") + os.sep
+    defined: dict[str, str] = {}
+    for path in _package_files():
+        if path.startswith(oracle):
+            continue
+        for node in _parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                defined[f"{_module_name(path)}.{node.name}"] = node.name
+    referenced: set[str] = set()
+    for path in _scanned_files():
+        referenced |= _referenced_names(_parse(path))
+    dead = sorted(q for q, name in defined.items()
+                  if name not in referenced)
+    assert not dead, f"{len(dead)} functions nothing references: {dead}"

@@ -196,13 +196,15 @@ def test_n29_n30_n33_value_subvariants():
 
 def test_n12_n13_rescue_subvariant():
     """cls-3 i//16-odd docs print junk under the NIK label and the
-    true digits as a stray fragment below it: tiers 1-2 must fail and
-    the tier-3 spatial rescue must return the canon at conf ≥ 0.5."""
+    true digits as a stray fragment below it: tiers 1-2 must fail, the
+    tier-3 spatial rescue must return the canon at conf ≥ 0.5, and the
+    resolved NIK must be that canon."""
     import numpy as np
 
     from indonesian_id_ocr_service_spark.operators.ktp_spatial import (
         _extract_one_doc,
         _nik_rescue,
+        resolve_nik,
     )
 
     checked = 0
@@ -220,7 +222,8 @@ def test_n12_n13_rescue_subvariant():
         y1 = y0 + np.array([r[3] for r in g], float)
         out = _extract_one_doc(texts, y0, y1, x0, x1)
         assert out["NIK"] == "X7Q?4W"
-        v, c = _nik_rescue(texts, y0, y1, out["NIK"])
+        assert resolve_nik(texts, y0, y1, out["NIK"]) == t["nik"], i
+        v, c = _nik_rescue(texts, y0, y1)
         assert v == t["nik"] and c is not None and c >= 0.5, (i, v, c)
         checked += 1
     assert checked >= 8

@@ -9,9 +9,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from indonesian_id_ocr_service_spark.operators.ktp_post import (
-    _pad_nik_with_dob,
-)
+from indonesian_id_ocr_service_spark.functions import nik as NK
 from indonesian_id_ocr_service_spark.oracle.scalars import pad_nik_with_dob
 
 
@@ -47,8 +45,8 @@ def test_pad_pruned_equals_bruteforce(spark):
         (r["d15"], r["expected"]): r["padded"]
         for r in df.select(
             "d15", "expected",
-            _pad_nik_with_dob(F.col("d15"),
-                              F.col("expected")).alias("padded"),
+            NK.pad_nik_with_dob(F.col("d15"),
+                                F.col("expected")).alias("padded"),
         ).collect()
     }
     for d15, expected in cases:

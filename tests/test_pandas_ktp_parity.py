@@ -1,7 +1,8 @@
-"""Scalar post-chain parity: the vectorized pandas implementation
-(functions/pandas_ktp — the extraction kernel's post-chain) must match
-the pure-Python oracle chain field-for-field on identical raw inputs.
-The span-equality suite checks the same chain end to end."""
+"""Scalar post-chain parity: the kernel's post-chain — the per-document
+NIK resolution (ktp_spatial.resolve_nik) feeding the vectorized pandas
+chain (functions/pandas_ktp) — must match the pure-Python oracle chain
+field-for-field on identical raw inputs. The span-equality suite checks
+the same chain end to end."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ from indonesian_id_ocr_service_spark.corpus.generator import generate_doc
 from indonesian_id_ocr_service_spark.functions import pandas_ktp as PK
 from indonesian_id_ocr_service_spark.operators.ktp_spatial import (
     FIELD_COLS,
-    _nik_rescue,
+    resolve_nik,
 )
 from indonesian_id_ocr_service_spark.oracle import ktp as O
 
@@ -20,7 +21,7 @@ N_DOCS = 500
 
 
 def test_post_chain_matches_oracle_chain():
-    rows, expected, rescues = [], [], []
+    rows, expected = [], []
     for i in range(N_DOCS * 2):
         d = generate_doc(i, fractions=(1.0, 0, 0))
         if d.doc_class != "KTP":
@@ -33,18 +34,18 @@ def test_post_chain_matches_oracle_chain():
         raw = O.post_process(O.filter_spatial_outliers(items))
         expected.append(O.format_output(O.cross_validate(
             O.repair(O.cleanup_data(raw), items))))
-        rows.append({col: raw.get(lab) for lab, col in FIELD_COLS.items()})
+        row = {col: raw.get(lab) for lab, col in FIELD_COLS.items()}
         texts = [s["text"] for s in spans if s["kind"] == "text"]
         y0 = np.array([g["y"] for s, g in zip(spans, geom)
                        if s["kind"] == "text"], float)
         y1 = np.array([g["y"] + g["h"] for s, g in zip(spans, geom)
                        if s["kind"] == "text"], float)
-        rv, _ = _nik_rescue(texts, y0, y1, raw.get("NIK"))
-        rescues.append(rv)
+        row["nik"] = resolve_nik(texts, y0, y1, raw.get("NIK"))
+        rows.append(row)
         if len(rows) >= N_DOCS:
             break
 
-    got = PK.post_chain(pd.DataFrame(rows), pd.Series(rescues))
+    got = PK.post_chain(pd.DataFrame(rows))
     bad = []
     for i in range(len(rows)):
         for f in got.columns:
@@ -57,7 +58,8 @@ def test_post_chain_matches_oracle_chain():
 
 
 def test_post_chain_adversarial_values():
-    """Handcrafted nasties through both chains."""
+    """Handcrafted nasties through both chains (no spans, so the
+    tier-3 rescue has nothing to search)."""
     cases = [
         {"nik": ": NIK 3171O4S02900O01x", "ttl": "JAKARTA, 1-1-95"},
         {"nik": "317101450290000",            # 15 digits → DOB pad
@@ -76,11 +78,12 @@ def test_post_chain_adversarial_values():
         raw_l = {label_map[k]: v for k, v in raw.items()}
         expected.append(O.format_output(O.cross_validate(
             O.repair(O.cleanup_data(dict(raw_l)), []))))
-        rows.append({col: raw_l.get(lab)
-                     for lab, col in FIELD_COLS.items()})
+        row = {col: raw_l.get(lab) for lab, col in FIELD_COLS.items()}
+        row["nik"] = resolve_nik([], np.empty(0), np.empty(0),
+                                 raw_l.get("NIK"))
+        rows.append(row)
     _ = labels
-    got = PK.post_chain(pd.DataFrame(rows),
-                        pd.Series([None] * len(rows)))
+    got = PK.post_chain(pd.DataFrame(rows))
     for i in range(len(rows)):
         for f in got.columns:
             ev = expected[i].get(f) or None
