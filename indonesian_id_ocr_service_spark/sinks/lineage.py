@@ -1,15 +1,20 @@
 """Bucket-grain commit log + extraction-quality metrics sink
 (SURVEY §4 item 4 — resumability per the north rule).
 
-The unit of commit is a ``doc_id`` hash bucket. A run processes buckets
-independently; each committed bucket appends (a) its result partition
-and (b) one lineage row ``(run_id, bucket, status, rows, started_at,
-finished_at)``. On restart, the driver anti-joins the bucket list
-against committed lineage rows and re-processes only the missing
-buckets — exactly-once per bucket via the atomic per-bucket directory
-commit (with an Iceberg catalog configured this becomes
-``writeTo(...).append()`` and snapshot atomicity; the directory layout
-below is the catalog-free equivalent used in this sandbox).
+Resume is tracked per ``doc_id`` hash bucket; the unit of commit is the
+job. One ``process`` call runs every pending bucket in one job, which
+writes its output once, unpartitioned, into ``results/commit=<id>/``
+(one parquet file per task, ``bucket`` kept as a data column, ``<id>``
+= ``c`` + uuid4 hex so partition discovery reads it as a string), and
+then appends, in one write, one lineage row ``(run_id, bucket, status,
+rows, commit, started_at, finished_at)`` per bucket it holds, where
+``commit`` names that directory. On restart the driver re-processes
+only the buckets with no committed lineage row. Exactly-once per
+bucket rests on the lineage log being the only source of truth: a
+``results/`` entry that no committed row names is a crashed job's
+partial and is deleted before the next job. (With an Iceberg catalog
+configured a commit becomes one ``writeTo(...).append()`` snapshot;
+the directory layout is the catalog-free equivalent used here.)
 
 Extraction-quality metrics (fields found per doc, per-field presence,
 fuzzy-distance histogram buckets) append to a metrics table partitioned
@@ -21,7 +26,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -108,28 +115,37 @@ class ExtractionRun:
         os.makedirs(self.metrics_dir, exist_ok=True)
 
     # -- lineage -----------------------------------------------------
-    def committed_buckets(self) -> set[int]:
-        done: set[int] = set()
+    def committed_buckets(self) -> dict[int, str]:
+        """Committed bucket → the ``results/`` directory its last
+        committed lineage row names. Rows without a ``commit`` field
+        (logs older than the one-directory-per-job layout) count as
+        not committed, so their buckets run again."""
+        done: dict[int, str] = {}
         if os.path.exists(self.lineage_path):
             with open(self.lineage_path) as f:
                 for line in f:
                     rec = json.loads(line)
-                    if rec["status"] == "committed":
-                        done.add(rec["bucket"])
+                    if rec["status"] == "committed" and "commit" in rec:
+                        done[rec["bucket"]] = rec["commit"]
         return done
 
-    def _append_lineage(self, bucket: int, status: str, rows: int,
-                        started: float) -> None:
-        rec = {
+    def _log_commit(self, commit: str, rows: dict[int, int],
+                    started: float) -> None:
+        """Append one committed lineage row per bucket of ``rows``
+        (bucket → row count), each naming the directory ``commit``,
+        in a single write."""
+        finished = round(time.time(), 3)
+        lines = "".join(json.dumps({
             "run_id": self.run_id,
-            "bucket": bucket,
-            "status": status,
-            "rows": rows,
+            "bucket": b,
+            "status": "committed",
+            "rows": n,
+            "commit": commit,
             "started_at": round(started, 3),
-            "finished_at": round(time.time(), 3),
-        }
+            "finished_at": finished,
+        }) + "\n" for b, n in rows.items())
         with open(self.lineage_path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
+            f.write(lines)
 
     # -- processing ---------------------------------------------------
     def bucket_of(self) -> F.Column:
@@ -148,52 +164,67 @@ class ExtractionRun:
 
         ``metrics_fn``: optional ``output DataFrame → metrics-input
         DataFrame`` hook; when given, per-document extraction-quality
-        metrics for the freshly committed buckets land under the
-        month/run partition (write_metrics) in the same call — the
-        results + lineage + metrics triple the north star requires
-        from one resumable run.
+        metrics for the freshly run buckets land under the month/run
+        partition (write_metrics) in the same call — the results +
+        lineage + metrics triple the north star requires from one
+        resumable run. It reads the new commit directory only.
 
         One source scan regardless of how many buckets are pending (a
         per-bucket loop would be O(n_buckets) full scans — wrong for a
-        cold run at 100 TB). The write is a partitioned
-        dynamic-overwrite: only the pending ``bucket=N`` directories are
-        replaced, committed ones are untouched, and per-bucket lineage
-        rows are appended only after the job succeeds — a crashed run
-        leaves un-logged partials that the next run simply overwrites
-        (same exactly-once-per-bucket contract as before). The
-        per-bucket row counts the lineage rows record are observed on
-        that write (one ``count_if`` per pending bucket), so the commit
-        reads nothing back from ``results/``."""
+        cold run at 100 TB). The job is the commit unit:
+
+        - **Layout.** The output is written once, without
+          ``partitionBy``, into a fresh ``results/commit=<id>/``: one
+          parquet file per task with ``bucket`` as a data column, not
+          one file per task per bucket.
+        - **Purge.** First, every ``results/`` entry that no committed
+          lineage row names is deleted: a job that crashed before its
+          lineage append, or partials of any older layout.
+        - **Carry.** Pending buckets next to committed directories
+          (a lineage append torn by a crash, a lost lineage line) would
+          otherwise leave a pending bucket's old rows beside its re-run
+          ones. So the new commit also takes, from each of those
+          directories, the rows of the buckets whose lineage rows name
+          it (never a pending bucket's, never a bucket a later commit
+          took over), re-points those lineage rows to itself, and
+          deletes the old directories once logged.
+          Only the pending buckets run the pipeline again; every doc
+          stays in ``results/`` exactly once.
+        - **Counts and log.** The per-bucket row counts the lineage
+          rows record are observed on the write (one ``count_if`` per
+          logged bucket), so the commit reads nothing back; the job's
+          lineage rows are appended in one write after it succeeds."""
         done = self.committed_buckets()
+        live = set(done.values())
+        for name in os.listdir(self.results_dir):
+            if name not in live:
+                path = os.path.join(self.results_dir, name)
+                if os.path.isdir(path):
+                    shutil.rmtree(path)
+                else:
+                    os.remove(path)
         todo = [b for b in range(self.n_buckets) if b not in done]
         skipped = self.n_buckets - len(todo)
         if not todo:
             return {"buckets_run": 0, "buckets_skipped": skipped,
                     "rows": 0}
         started = time.time()
-        # Drop any stale partials for the pending buckets BEFORE the
-        # write: dynamic partition overwrite only replaces directories
-        # the job actually writes, so a todo bucket that produces 0
-        # output rows would otherwise keep partials left by a crashed
-        # (un-logged) earlier run, and readers of results/ (the metrics
-        # read-back below among them) would take them for that
-        # bucket's rows.
-        import shutil
-
-        for b in todo:
-            shutil.rmtree(os.path.join(self.results_dir, f"bucket={b}"),
-                          ignore_errors=True)
+        commit = f"commit=c{uuid.uuid4().hex}"
+        commit_dir = os.path.join(self.results_dir, commit)
         src_b = src.withColumn("_bucket", self.bucket_of())
         part = src_b.filter(F.col("_bucket").isin(todo)).drop("_bucket")
         # recompute the bucket on the OUTPUT (it carries doc_id) so the
         # pipeline itself stays bucket-agnostic
         out = pipeline_fn(part).withColumn("bucket", self.bucket_of())
+        for d in sorted(live):
+            own = [b for b, c in done.items() if c == d]
+            out = out.unionByName(
+                spark.read.parquet(os.path.join(self.results_dir, d))
+                .filter(F.col("bucket").isin(own)))
+        logged = sorted(set(todo) | set(done))
         counts = _observed(out, [
-            F.count_if(F.col("bucket") == b).alias(str(b)) for b in todo
-        ], lambda df: (df.write.mode("overwrite")
-                       .option("partitionOverwriteMode", "dynamic")
-                       .partitionBy("bucket")
-                       .parquet(self.results_dir)))
+            F.count_if(F.col("bucket") == b).alias(str(b)) for b in logged
+        ], lambda df: df.write.parquet(commit_dir))
         # Metrics BEFORE the lineage commit rows, so a crash in between
         # is retried (re-run reprocesses the bucket) instead of lost
         # forever (resume would skip it). Replay cannot duplicate
@@ -204,16 +235,15 @@ class ExtractionRun:
         # crash window trades a possible duplicate for the old silent
         # loss.
         if metrics_fn is not None:
-            fresh = (spark.read.parquet(self.results_dir)
+            fresh = (spark.read.parquet(commit_dir)
                      .filter(F.col("bucket").isin(todo)))
             self.write_metrics(metrics_fn(fresh), log_month=log_month)
-        total_rows = 0
-        for b in todo:
-            rows = int(counts[str(b)])
-            self._append_lineage(b, "committed", rows, started)
-            total_rows += rows
+        rows = {b: int(counts[str(b)]) for b in logged}
+        self._log_commit(commit, rows, started)
+        for d in live:
+            shutil.rmtree(os.path.join(self.results_dir, d))
         return {"buckets_run": len(todo), "buckets_skipped": skipped,
-                "rows": total_rows}
+                "rows": sum(rows[b] for b in todo)}
 
     # -- metrics ------------------------------------------------------
     def write_metrics(self, fields_df: DataFrame,
@@ -223,6 +253,11 @@ class ExtractionRun:
         ``ocr_logs/YYYY-MM/`` (app.py:56-67); here the same layout is
         a ``log_month=YYYY-MM`` parquet partition (plus run_id), so a
         month's metrics prune to one directory scan.
+
+        Unlike ``results/``, a frame carrying ``bucket`` keeps its
+        ``bucket=N`` partitions here: a replayed bucket overwrites only
+        its own metrics partition (dynamic overwrite), which is what
+        makes a re-run after a crash before logging not duplicate them.
 
         ``log_month`` defaults to the current UTC month; tests pass it
         explicitly for determinism. Returns the month used.
@@ -266,14 +301,17 @@ class StreamingExtractionRun(ExtractionRun):
     whose commit row exists is skipped, a replayed batch_id whose
     write died before the commit row overwrites its own ``batch=N``
     directory, and a replayed batch's metrics overwrite their own
-    batch partition instead of appending duplicates.
+    batch partition instead of appending duplicates. Each batch is
+    one commit: its own unpartitioned ``batch=N`` directory and one
+    lineage row naming it, logged by the same ``_log_commit`` as
+    ``process``.
 
     The stream's commit log, results and metrics live under their own
     ``stream/`` namespace inside the run dir: a stream batch id and a
     batch-mode doc bucket are DIFFERENT keyspaces, and sharing the
     lineage file/results dir let a committed stream batch N silently
-    mark doc bucket N done for ``process`` (and mixed ``bucket=N`` /
-    ``batch=N`` partition names broke reading the results dir). A
+    mark doc bucket N done for ``process`` (and mixed ``commit=`` /
+    ``batch=N`` directory names break reading the results dir). A
     consumer reads each mode's own results dir; one run dir may serve
     both modes without the logs interfering."""
 
@@ -292,9 +330,8 @@ class StreamingExtractionRun(ExtractionRun):
         if batch_id in self.committed_buckets():
             return {"batch_id": batch_id, "skipped": True, "rows": 0}
         started = time.time()
-        import shutil
-
-        out_dir = os.path.join(self.results_dir, f"batch={batch_id}")
+        commit = f"batch={batch_id}"
+        out_dir = os.path.join(self.results_dir, commit)
         shutil.rmtree(out_dir, ignore_errors=True)   # dead replay's partials
         out = pipeline_fn(batch_df)
         rows = int(_observed(
@@ -308,7 +345,7 @@ class StreamingExtractionRun(ExtractionRun):
                 metrics_fn(spark.read.parquet(out_dir))
                 .withColumn("bucket", F.lit(batch_id)),
                 log_month=log_month)
-        self._append_lineage(batch_id, "committed", rows, started)
+        self._log_commit(commit, {batch_id: rows}, started)
         return {"batch_id": batch_id, "skipped": False, "rows": rows}
 
     def foreach_batch(self, pipeline_fn, metrics_fn=None,

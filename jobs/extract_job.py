@@ -20,7 +20,9 @@ session.py for why ParallelGC matters on this kernel); this script only
 applies session-level SQL confs and runs the resumable
 ``ExtractionRun`` over the input. Re-submitting the identical command
 after a crash resumes from the bucket commit log: already-committed
-buckets are skipped, partials are overwritten (sinks/lineage.py).
+buckets are skipped, and a crashed job's un-logged
+``results/commit=<id>/`` directory is deleted before the re-run
+(sinks/lineage.py).
 
 Prints exactly one JSON result line on stdout:
 ``{"run_id", "buckets_run", "buckets_skipped", "rows", "wall_s",
@@ -89,8 +91,8 @@ def parse_args(argv):
     p.add_argument("--seed", type=int, default=42,
                    help="corpus seed for --synth")
     p.add_argument("--base-dir", required=True,
-                   help="run output root: results/ metrics/ "
-                   "lineage.jsonl")
+                   help="run output root: results/commit=<id>/ "
+                   "(one directory per job), metrics/, lineage.jsonl")
     p.add_argument("--run-id", required=True)
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--log-month", default=None,

@@ -124,6 +124,121 @@ def test_lineage_resume(spark, tmp_path):
     # the recovered bucket's rows are intact alongside committed ones
     total = spark.read.parquet(run.results_dir).count()
     assert total == 40
+    # the re-run's commit carried the committed buckets' rows and
+    # replaced the old directory: every doc once, one directory left
+    import json
+    import os
+
+    ids = [r.doc_id for r in spark.read.parquet(run.results_dir).collect()]
+    last = json.loads(open(run.lineage_path).read().splitlines()[-1])
+    assert (len(ids) == len(set(ids)) == 40
+            and os.listdir(run.results_dir) == [last["commit"]])
+
+
+def _commit_dirs(run):
+    import os
+
+    return [d for d in os.listdir(run.results_dir)
+            if d.startswith("commit=")]
+
+
+def test_process_writes_one_file_per_task(spark, tmp_path):
+    """A job commits one unpartitioned results directory: one parquet
+    file per write task, not one per task per bucket; ``bucket`` is a
+    data column, and every lineage row names that directory."""
+    import glob
+    import json
+    import os
+
+    from indonesian_id_ocr_service_spark.corpus.generator import (
+        SPAN_SCHEMA_DDL, doc_rows)
+
+    k = 3
+    df = spark.createDataFrame(list(doc_rows(120, fractions=(1.0, 0, 0))),
+                               SPAN_SCHEMA_DDL).repartition(k)
+    run = ExtractionRun(str(tmp_path / "run1f"), run_id="r1f",
+                        n_buckets=64)
+    res = run.process(spark, df, lambda part: part.select("doc_id"))
+    assert res["buckets_run"] == 64 and res["rows"] == 120
+
+    [commit] = _commit_dirs(run)
+    assert os.listdir(run.results_dir) == [commit]
+    commit_dir = os.path.join(run.results_dir, commit)
+    assert 1 <= len(glob.glob(os.path.join(commit_dir, "*.parquet"))) <= k
+    out = spark.read.parquet(commit_dir)
+    assert out.count() == 120
+    assert out.filter(F.col("bucket") != run.bucket_of()).count() == 0
+    with open(run.lineage_path) as f:
+        recs = [json.loads(line) for line in f]
+    assert sorted(r["bucket"] for r in recs) == list(range(64))
+    assert {r["commit"] for r in recs} == {commit}
+
+
+def test_process_purges_unlogged_commit(spark, tmp_path):
+    """A job that crashed after its write and before its lineage append
+    leaves a full, un-logged commit directory; the next process() must
+    delete it, so no doc is counted or kept twice."""
+    import os
+
+    from indonesian_id_ocr_service_spark.corpus.generator import (
+        SPAN_SCHEMA_DDL, doc_rows)
+
+    df = spark.createDataFrame(list(doc_rows(40, fractions=(1.0, 0, 0))),
+                               SPAN_SCHEMA_DDL)
+    run = ExtractionRun(str(tmp_path / "runp"), run_id="rp", n_buckets=4)
+    # the crashed job's output: every doc, written, never logged
+    stale = f"commit=c{uuid.uuid4().hex}"
+    (df.select("doc_id").withColumn("bucket", run.bucket_of())
+     .write.parquet(os.path.join(run.results_dir, stale)))
+
+    res = run.process(spark, df, lambda part: part.select("doc_id"))
+    assert res["buckets_run"] == 4 and res["rows"] == 40
+    assert stale not in os.listdir(run.results_dir)
+    assert len(_commit_dirs(run)) == 1
+    ids = [r.doc_id for r in spark.read.parquet(run.results_dir).collect()]
+    assert len(ids) == len(set(ids)) == 40
+
+
+def test_process_carries_each_bucket_from_its_own_commit(spark, tmp_path):
+    """A torn lineage append can leave committed buckets named by two
+    commit directories that each hold every bucket's rows. The carry
+    must take each bucket's rows from the directory its lineage row
+    names, and only from there."""
+    import os
+    import shutil
+
+    from indonesian_id_ocr_service_spark.corpus.generator import (
+        SPAN_SCHEMA_DDL, doc_rows)
+
+    df = spark.createDataFrame(list(doc_rows(40, fractions=(1.0, 0, 0))),
+                               SPAN_SCHEMA_DDL)
+    run = ExtractionRun(str(tmp_path / "runc"), run_id="rc", n_buckets=4)
+
+    def pipe(part):
+        return part.select("doc_id")
+
+    def drop_last_lines(n):
+        lines = open(run.lineage_path).read().splitlines()
+        with open(run.lineage_path, "w") as f:
+            f.write("\n".join(lines[:-n]) + "\n")
+
+    run.process(spark, df, pipe)                 # first commit, buckets 0-3
+    [first] = _commit_dirs(run)
+    drop_last_lines(1)                           # bucket 3's line lost
+    kept = str(tmp_path / "kept")
+    shutil.copytree(os.path.join(run.results_dir, first), kept)
+    run.process(spark, df, pipe)                 # second commit carries 0-2
+    # ...but its append tore after buckets 0 and 1, before it deleted
+    # the first directory: 0-1 name the second, 2 the first, 3 pending
+    shutil.copytree(kept, os.path.join(run.results_dir, first))
+    drop_last_lines(2)
+    assert len(_commit_dirs(run)) == 2
+
+    res = run.process(spark, df, pipe)
+    assert res["buckets_run"] == 1
+    assert len(_commit_dirs(run)) == 1
+    ids = [r.doc_id for r in spark.read.parquet(run.results_dir).collect()]
+    assert len(ids) == len(set(ids)) == 40
 
 
 def test_extraction_metrics(spark):
