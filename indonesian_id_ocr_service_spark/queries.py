@@ -47,19 +47,13 @@ def ensure_session_conf(spark: SparkSession) -> None:
             pass
 
 
-#: parquet footer metadata memo: (path, bound) -> (n_rows, n_row_groups).
+#: parquet footer metadata memo: (path) -> (n_rows, n_row_groups).
 #: Metadata only (never results) — re-read per process, cheap (~ms).
-_FOOTER_META: dict[tuple[str, int | None], tuple[int, int]] = {}
+_FOOTER_META: dict[str, tuple[int, int]] = {}
 
 
-def _footer_meta(path: str, bound: int | None = None) -> tuple[int, int]:
-    """(rows, row groups) summed over the parquet footers of ``path``.
-    With ``bound``, footers stop being opened once the row-group count
-    reaches it: past that point the counts are partial, but
-    ``rgs >= bound`` is already decided, and a warehouse-size table
-    costs ``bound`` footer reads instead of one per file."""
-    key = (path, bound)
-    meta = _FOOTER_META.get(key)
+def _footer_meta(path: str) -> tuple[int, int]:
+    meta = _FOOTER_META.get(path)
     if meta is None:
         import glob as _glob
         import os as _os
@@ -74,15 +68,13 @@ def _footer_meta(path: str, bound: int | None = None) -> tuple[int, int]:
                 m = _pq.ParquetFile(f).metadata
                 rows += m.num_rows
                 rgs += m.num_row_groups
-                if bound is not None and rgs >= bound:
-                    break
             if not files:
                 rgs = 1 << 30
         except Exception:
             # unknown layout -> assume well-split, never fan out
             rows, rgs = 0, 1 << 30
         meta = (rows, rgs)
-        _FOOTER_META[key] = meta
+        _FOOTER_META[path] = meta
     return meta
 
 
@@ -101,8 +93,8 @@ def scan_fanout(df: DataFrame, path: str, min_rows: int = 4096) -> DataFrame:
     row groups >> cores, the gate never fires, and the plan is
     unchanged — this is a data-layout probe, not a local[N] constant.
     """
+    rows, rgs = _footer_meta(path)
     sc = df.sparkSession.sparkContext
-    rows, rgs = _footer_meta(path, sc.defaultParallelism)
     if rgs < sc.defaultParallelism and rows >= min_rows:
         return df.repartition(sc.defaultParallelism * 2)
     return df

@@ -119,12 +119,19 @@ class ExtractionRun:
         """Committed bucket → the ``results/`` directory its last
         committed lineage row names. Rows without a ``commit`` field
         (logs older than the one-directory-per-job layout) count as
-        not committed, so their buckets run again."""
+        not committed, so their buckets run again. So does a line an
+        append torn by a crash left behind: one that does not parse,
+        or a last line with no trailing newline."""
         done: dict[int, str] = {}
         if os.path.exists(self.lineage_path):
             with open(self.lineage_path) as f:
                 for line in f:
-                    rec = json.loads(line)
+                    if not line.endswith("\n"):
+                        continue
+                    try:
+                        rec = json.loads(line)
+                    except ValueError:
+                        continue
                     if rec["status"] == "committed" and "commit" in rec:
                         done[rec["bucket"]] = rec["commit"]
         return done
@@ -133,7 +140,10 @@ class ExtractionRun:
                     started: float) -> None:
         """Append one committed lineage row per bucket of ``rows``
         (bucket → row count), each naming the directory ``commit``,
-        in a single write."""
+        in a single write. If a torn append left the log without a
+        trailing newline, the write starts on a fresh line, so the
+        fragment stays a line of its own that ``committed_buckets``
+        skips."""
         finished = round(time.time(), 3)
         lines = "".join(json.dumps({
             "run_id": self.run_id,
@@ -144,8 +154,12 @@ class ExtractionRun:
             "started_at": round(started, 3),
             "finished_at": finished,
         }) + "\n" for b, n in rows.items())
-        with open(self.lineage_path, "a") as f:
-            f.write(lines)
+        with open(self.lineage_path, "ab+") as f:
+            if f.tell():
+                f.seek(-1, os.SEEK_END)
+                if f.read(1) != b"\n":
+                    lines = "\n" + lines
+            f.write(lines.encode())
 
     # -- processing ---------------------------------------------------
     def bucket_of(self) -> F.Column:
@@ -181,7 +195,8 @@ class ExtractionRun:
           lineage row names is deleted: a job that crashed before its
           lineage append, or partials of any older layout.
         - **Carry.** Pending buckets next to committed directories
-          (a lineage append torn by a crash, a lost lineage line) would
+          (a lineage append torn by a crash, which may leave half a
+          line that then counts as not committed; a lost line) would
           otherwise leave a pending bucket's old rows beside its re-run
           ones. So the new commit also takes, from each of those
           directories, the rows of the buckets whose lineage rows name
@@ -189,7 +204,12 @@ class ExtractionRun:
           took over), re-points those lineage rows to itself, and
           deletes the old directories once logged.
           Only the pending buckets run the pipeline again; every doc
-          stays in ``results/`` exactly once.
+          stays in ``results/`` exactly once. The pipeline cost of a
+          recovery is the pending buckets', but its write cost is
+          O(total committed output): after the first job one directory
+          holds every bucket, so one lost line makes the next job read
+          and rewrite all of it (the bucketed layout rewrote one
+          bucket's partition).
         - **Counts and log.** The per-bucket row counts the lineage
           rows record are observed on the write (one ``count_if`` per
           logged bucket), so the commit reads nothing back; the job's

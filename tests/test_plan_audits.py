@@ -126,55 +126,3 @@ def test_ann_ivf_ids_only_candidate_shuffle(spark):
     import re
     m = re.findall(r"MapInPandas.*", plan)
     assert m and all("embedding" not in s for s in m), m[:2]
-
-
-def test_footer_meta_reads_only_the_footers_it_needs(
-        spark, tmp_path, monkeypatch):
-    """``_footer_meta`` stops opening parquet footers once the row-group
-    count reaches its bound (a warehouse-size table must not cost one
-    driver-side footer read per file), memoises per (path, bound), and
-    leaves every ``scan_fanout`` decision on the sf0.01 tables as the
-    full footer scan makes it."""
-    import glob
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    table_dir = tmp_path / "many_files"
-    table_dir.mkdir()
-    for i in range(10):
-        pq.write_table(pa.table({"k": list(range(100))}),
-                       str(table_dir / f"part-{i:02d}.parquet"))
-    opened = []
-    real = pq.ParquetFile
-
-    def counting(path, *args, **kwargs):
-        opened.append(path)
-        return real(path, *args, **kwargs)
-
-    monkeypatch.setattr(pq, "ParquetFile", counting)
-    path = str(table_dir)
-    assert Q._footer_meta(path, 4)[1] == 4
-    assert len(opened) == 4
-    Q._footer_meta(path, 4)
-    assert len(opened) == 4                  # memoised per (path, bound)
-    assert Q._footer_meta(path) == (1000, 10)
-    assert len(opened) == 14                 # unbounded: every footer
-    monkeypatch.undo()
-
-    dp = spark.sparkContext.defaultParallelism
-    for table in sorted(glob.glob("/root/testdata/sf0.01/*.parquet")):
-        files = ([table] if os.path.isfile(table)
-                 else glob.glob(os.path.join(table, "*.parquet")))
-        metas = [pq.ParquetFile(f).metadata for f in files]
-        rows = sum(m.num_rows for m in metas)
-        rgs = sum(m.num_row_groups for m in metas)
-        df = spark.read.parquet(table)
-        fans_out = Q.scan_fanout(df, table) is not df
-        assert fans_out == (rgs < dp and rows >= 4096), table
-        for bound in (1, 2, 4, 8, 32, 64):
-            b_rows, b_rgs = Q._footer_meta(table, bound)
-            assert (b_rgs >= bound) == (rgs >= bound), (table, bound)
-            if rgs < bound:
-                assert (b_rows, b_rgs) == (rows, rgs), (table, bound)

@@ -240,6 +240,20 @@ def test_process_carries_each_bucket_from_its_own_commit(spark, tmp_path):
     ids = [r.doc_id for r in spark.read.parquet(run.results_dir).collect()]
     assert len(ids) == len(set(ids)) == 40
 
+    # an append torn mid-line: the last line is cut in half, with no
+    # trailing newline. Its bucket counts as not committed and re-runs
+    # alone; the next append starts on a fresh line, so it stays whole.
+    text = open(run.lineage_path).read()
+    start = text.rstrip("\n").rfind("\n") + 1
+    with open(run.lineage_path, "w") as f:
+        f.write(text[:start + (len(text) - start) // 2])
+    assert run.process(spark, df, pipe)["buckets_run"] == 1
+    assert run.process(spark, df, pipe)["buckets_run"] == 0
+    assert set(run.committed_buckets().values()) == set(_commit_dirs(run))
+    assert len(_commit_dirs(run)) == 1
+    ids = [r.doc_id for r in spark.read.parquet(run.results_dir).collect()]
+    assert len(ids) == len(set(ids)) == 40
+
 
 def test_extraction_metrics(spark):
     from indonesian_id_ocr_service_spark.sinks.lineage import (
