@@ -14,11 +14,15 @@ module provides a self-contained implementation of the same scorer family:
 - token variants apply thefuzz's ``full_process`` (lowercase, strip
   non-alphanumeric) before comparing.
 
-These functions run *inside* Arrow-batched pandas UDFs only — never as
-row-at-a-time Spark UDFs — and only on the minority tier of rows that the
-exact (JVM broadcast-join) tiers could not resolve.  At 100 TB scale the
-exact tiers resolve the bulk of rows JVM-side; this Python fallback sees a
-small residue per batch.
+Production code matches a query against a fixed vocabulary only through
+``Vocabulary.best`` (and ``AliasMap``, the canonical-value tier built on
+it): the extraction kernel's KTP labels, K8 keywords, SIM job and region
+lists, and the agama/place/enum/alias tiers of the KTP post-chain and of
+the driver queries' pandas UDFs. Each vocabulary is prepared once per
+process when its module is imported, and two exact score bounds skip the
+choices that cannot win. ``extract_one`` is thefuzz's plain loop, with no
+bound and no cache; the oracle calls it, so the oracle checks those
+bounds against an independent reference.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from __future__ import annotations
 import re
 from difflib import SequenceMatcher
 from functools import lru_cache
+from typing import NamedTuple
 
 __all__ = [
     "full_process",
@@ -36,6 +41,8 @@ __all__ = [
     "token_set_ratio",
     "wratio",
     "extract_one",
+    "Vocabulary",
+    "AliasMap",
 ]
 
 _NON_ALNUM = re.compile(r"(?ui)\W")
@@ -136,8 +143,8 @@ def partial_ratio(a: str | None, b: str | None) -> int:
 
 @lru_cache(maxsize=65536)
 def _sorted_tokens(s: str) -> tuple[str, ...]:
-    """Memoized: extract_one re-tokenizes the SAME query once per
-    choice (56× for the job vocabulary) without this."""
+    """Memoized: the plain extract_one loop tokenizes its query once
+    per choice, and wratio tokenizes each side up to three times."""
     return tuple(sorted(full_process(s).split()))
 
 
@@ -217,98 +224,24 @@ def wratio(a: str | None, b: str | None) -> int:
     return int(round(max(base, pr, ptsr, ptse)))
 
 
-def _char_counts(s: str) -> dict:
-    out: dict = {}
-    for ch in s:
-        out[ch] = out.get(ch, 0) + 1
-    return out
-
-
-def _partial_upper_bound(qc: dict, qlen: int, c: str) -> float:
-    """Upper bound on partial_ratio(q, c).
-
-    For any window w of the longer string, LCS(shorter, w) ≤ C (the
-    common character multiset of shorter and the FULL longer) and
-    LCS ≤ len(w), so ratio = 200·LCS/(len(s)+len(w)) is maximized at
-    len(w) = min(C, len(s)):  bound = 200·C'/(len(s)+C'),
-    C' = min(C, len(s)). Holds for truncated edge windows too."""
-    cc = _choice_char_counts(c)
-    common = 0
-    if len(qc) <= len(cc):
-        for ch, n in qc.items():
-            m = cc.get(ch)
-            if m:
-                common += n if n < m else m
-    else:
-        for ch, n in cc.items():
-            m = qc.get(ch)
-            if m:
-                common += n if n < m else m
-    s_len = qlen if qlen <= len(c) else len(c)
-    if s_len == 0 or common == 0:
-        return 0.0
-    c_eff = common if common < s_len else s_len
-    return 200.0 * c_eff / (s_len + c_eff)
-
-
-@lru_cache(maxsize=256)
-def _prepped_choices(choices: tuple) -> tuple:
-    """(raw, full_process(raw)) per choice — extract_one call sites
-    loop fixed vocabularies (labels, canonical field values), so the
-    per-call re-processing of every choice (one regex sub each) is
-    pure repeat work. Only consulted for tuples of length ≥ 4: tiny
-    ad-hoc tuples (e.g. single-span probes) are unique per call and
-    would churn the cache."""
-    return tuple((ch, full_process(ch)) for ch in choices)
-
-
-@lru_cache(maxsize=65536)
-def _choice_char_counts(c: str) -> dict:
-    """Choice-side char multiset for the partial_ratio upper bound —
-    choices repeat across calls; treat the returned dict as
-    read-only."""
-    return _char_counts(c)
-
-
-def extract_one(query: str | None, choices, scorer=wratio,
-                process_inputs=True, score_cutoff: int | None = None):
+def extract_one(query: str | None, choices, scorer=wratio):
     """thefuzz's ``process.extractOne``: best (choice, score) by scorer.
 
-    Applies ``full_process`` to both sides by default (as thefuzz does even
-    when a custom scorer is passed).  Ties keep the earliest choice.
-    Returns (None, 0) for an empty/unprocessable query or empty choices.
-
-    For the partial_ratio scorer, choices whose character-multiset upper
-    bound cannot beat the current best are skipped — strictly
-    result-preserving (the bound dominates the score and ties keep the
-    earlier choice).
-
-    ``score_cutoff``: when set, scores BELOW the cutoff are not
-    distinguished — choices whose upper bound is < cutoff may be
-    skipped entirely, so the returned (choice, score) is exact only
-    when score ≥ cutoff. For callers that threshold the result at
-    ≥ cutoff this is result-preserving and much cheaper.
+    Applies ``full_process`` to both sides (as thefuzz does even when a
+    custom scorer is passed) and scores every choice. Ties keep the
+    earliest choice. Returns (None, 0) for an empty/unprocessable query
+    or empty choices. This plain loop is the reference the oracle runs;
+    the kernel matches its fixed vocabularies with ``Vocabulary.best``.
     """
     if query is None:
         return None, 0
-    q = full_process(query) if process_inputs else str(query)
+    q = full_process(query)
     if not q:
         return None, 0
-    prune = scorer is partial_ratio
-    qc = _char_counts(q) if prune else None
     best_choice, best_score = None, -1
-    floor0 = -1 if score_cutoff is None else score_cutoff - 1
-    if process_inputs and isinstance(choices, tuple) and len(choices) >= 4:
-        pairs = _prepped_choices(choices)
-    else:
-        pairs = (
-            (ch, full_process(ch) if process_inputs else str(ch))
-            for ch in choices)
-    for choice, c in pairs:
+    for choice in choices:
+        c = full_process(choice)
         if not c:
-            continue
-        floor = best_score if best_score > floor0 else floor0
-        if prune and _partial_upper_bound(qc, len(q), c) <= floor:
             continue
         s = scorer(q, c)
         if s > best_score:
@@ -317,3 +250,167 @@ def extract_one(query: str | None, choices, scorer=wratio,
         return None, 0
     return best_choice, best_score
 
+
+def _char_counts(s: str) -> dict:
+    out: dict = {}
+    for ch in s:
+        out[ch] = out.get(ch, 0) + 1
+    return out
+
+
+def _common(a: dict, b: dict) -> int:
+    """Size of the intersection of two char multisets."""
+    if len(a) > len(b):
+        a, b = b, a
+    common = 0
+    for ch, n in a.items():
+        m = b.get(ch)
+        if m:
+            common += n if n < m else m
+    return common
+
+
+class _Entry(NamedTuple):
+    """A choice (or a query) prepared for the two bounds: its
+    full_process ``text`` and that string's char multiset
+    (partial_ratio); its token set, the sorted tokens space-joined (the
+    token_set_ratio sect string when no token is shared) and that
+    string's char multiset (token_set_ratio)."""
+
+    choice: str
+    text: str
+    counts: dict
+    tokens: frozenset
+    joined: str
+    joined_counts: dict
+
+
+def _prepare(choice: str, text: str) -> _Entry:
+    tokens = frozenset(text.split())
+    joined = " ".join(sorted(tokens))
+    return _Entry(choice, text, _char_counts(text), tokens, joined,
+                  _char_counts(joined))
+
+
+def _partial_bound(qc: dict, ql: int, c: _Entry) -> float:
+    """Upper bound on partial_ratio(q, c.text) for a query q of length
+    ``ql`` and char multiset ``qc``.
+
+    For any window w of the longer string, LCS(shorter, w) ≤ C (the
+    common character multiset of shorter and the FULL longer) and
+    LCS ≤ len(w), so ratio = 200·LCS/(len(s)+len(w)) is maximized at
+    len(w) = min(C, len(s)):  bound = 200·C'/(len(s)+C'),
+    C' = min(C, len(s)). Holds for truncated edge windows too."""
+    common = _common(qc, c.counts)
+    lc = len(c.text)
+    s_len = ql if ql < lc else lc
+    c_eff = common if common < s_len else s_len
+    return 200.0 * c_eff / (s_len + c_eff)
+
+
+def _token_set_at_least(q: _Entry, c: _Entry, need: int) -> int:
+    """token_set_ratio(q.text, c.text) when it is ≥ ``need``, else -1.
+
+    Exact: the sect strings hold every token of their side, so their
+    lengths and char multisets are those of ``joined``, and the InDel
+    component 200·LCS/(la+lb) is bounded by LCS ≤ min(la, lb, common
+    chars). Only a choice whose bound reaches ``need`` and beats the
+    closed-form intersection component pays for the bit-parallel LCS."""
+    la, lb = len(q.joined), len(c.joined)
+    shared = q.tokens & c.tokens
+    inter = ""
+    closed = 0
+    if shared:
+        inter = " ".join(sorted(shared))
+        li = len(inter)
+        closed = max(int(round(200.0 * li / (li + la))),
+                     int(round(200.0 * li / (li + lb))))
+        if closed == 100:
+            return 100
+    total = la + lb
+    m = la if la < lb else lb
+    bound = int(round(200.0 * m / total))
+    if bound >= need and bound > closed:
+        common = _common(q.joined_counts, c.joined_counts)
+        if common < m:
+            bound = int(round(200.0 * common / total))
+    if bound < need or bound <= closed:
+        return closed if closed >= need else -1
+    if shared:
+        sect_a = (inter + " " + " ".join(sorted(q.tokens - shared))).strip()
+        sect_b = (inter + " " + " ".join(sorted(c.tokens - shared))).strip()
+    else:
+        sect_a, sect_b = q.joined, c.joined
+    score = max(closed, ratio(sect_a, sect_b))
+    return score if score >= need else -1
+
+
+class Vocabulary:
+    """A fixed choice list, prepared once when the module that owns it
+    is imported (per executor process, not per call)."""
+
+    def __init__(self, choices):
+        self._entries = tuple(_prepare(ch, text) for ch in choices
+                              if (text := full_process(ch)))
+
+    def best(self, query: str | None, scorer, score_cutoff: int):
+        """``extract_one(query, choices, scorer)`` when its score is
+        ≥ ``score_cutoff``, else (None, 0); ties keep the earliest
+        choice.
+
+        Choices that cannot beat the running best (cutoff − 1 at the
+        start) are skipped on an exact upper bound: the char-multiset
+        bound for partial_ratio, the length/multiset bound for
+        token_set_ratio. Any other scorer scores every choice."""
+        q = full_process(query)
+        if not q:
+            return None, 0
+        best_choice, best = None, score_cutoff - 1
+        if scorer is token_set_ratio:
+            qe = _prepare(query, q)
+            for c in self._entries:
+                s = _token_set_at_least(qe, c, best + 1)
+                if s > best:
+                    best_choice, best = c.choice, s
+        else:
+            qc = _char_counts(q) if scorer is partial_ratio else None
+            for c in self._entries:
+                if qc is not None and _partial_bound(qc, len(q), c) <= best:
+                    continue
+                s = scorer(q, c.text)
+                if s > best:
+                    best_choice, best = c.choice, s
+        if best_choice is None:
+            return None, 0
+        return best_choice, best
+
+
+class AliasMap:
+    """The canonical-value tier over one alias map (N25: KTP
+    ktp_extractor.py:68-102, SIM sim_extractor.py:156-179), prepared
+    once. ``normalize`` equals ``oracle.scalars.fuzzy_normalize_field``
+    at this map's threshold."""
+
+    def __init__(self, canonical_map: dict, threshold: int):
+        #: alias → the first canonical listing it, in map order
+        self._canonical: dict = {}
+        for canonical, aliases in canonical_map.items():
+            for alias in aliases:
+                self._canonical.setdefault(alias.upper(), canonical)
+        # a repeated alias scores as its first listing, which ties win
+        self._aliases = Vocabulary(self._canonical)
+        self._threshold = threshold
+
+    def normalize(self, value: str) -> str:
+        """The canonical of ``value``'s exact alias, else of its best
+        token_set_ratio alias ≥ threshold (the first in map order on
+        ties), else ``value`` unchanged."""
+        if not value:
+            return value
+        v = value.upper().strip()
+        canonical = self._canonical.get(v)
+        if canonical is None:
+            alias, _ = self._aliases.best(v, token_set_ratio,
+                                          self._threshold)
+            canonical = value if alias is None else self._canonical[alias]
+        return canonical

@@ -17,11 +17,10 @@ Reference semantics per stage:
                fix, ocr_corrector.py:423-477)
 
 Everything row-parallel runs as masked column operations; the fuzzy
-tiers run once per UNIQUE value (OCR vocabularies repeat heavily, so
-the Python tier amortizes to ~zero — same strategy as the
-``__spark_entry__`` queries' residue UDFs in pandas_tiers.py) through
-the repo's own bit-parallel fuzz scorers (functions/fuzzy.py), never
-through the oracle.
+tiers run once per UNIQUE value of a batch (the same strategy as the
+``__spark_entry__`` queries' residue UDFs in pandas_tiers.py, which
+call these tiers) against vocabularies prepared once per process
+(functions/fuzzy.py), never through the oracle.
 
 The ``nik`` column arrives resolved: the kernel runs NIK cleanup and
 the three repair tiers once per KTP document
@@ -32,8 +31,9 @@ repair, too few for a columnar engine to amortise its per-batch cost.
 
 from __future__ import annotations
 
+import math
 import re
-from typing import Dict, Optional, Tuple
+from typing import Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -95,32 +95,26 @@ def _sub_text_one(v: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# fuzzy tiers (fresh implementations of the reference tier logic over
-# the repo's bit-parallel scorers; one call per unique value)
+# fuzzy tiers (the reference tier logic over vocabularies prepared once
+# per process, functions/fuzzy.py; one call per unique value)
 # ---------------------------------------------------------------------------
 
-
-def _fuzzy_normalize_one(v: str, canonical_map: Dict[str, list],
-                         threshold: int) -> str:
-    """Exact alias tier → token_set_ratio tier
-    (ktp_extractor.py:68-102)."""
-    u = v.upper().strip()
-    for canonical, aliases in canonical_map.items():
-        if u in [a.upper() for a in aliases]:
-            return canonical
-    best_canonical, best = v, 0
-    for canonical, aliases in canonical_map.items():
-        for alias in aliases:
-            sc = fuzzy.token_set_ratio(u, alias.upper())
-            if sc > best:
-                best, best_canonical = sc, canonical
-    return best_canonical if best >= threshold else v
+#: the canonical-value tiers (N25); OCCUPATION is also the SIM
+#: occupation normaliser (sim_extractor.py:156-179)
+OCCUPATION = fuzzy.AliasMap(PEKERJAAN_CANONICAL, 72)
+MARITAL_STATUS = fuzzy.AliasMap(STATUS_PERKAWINAN_CANONICAL, 65)
+CITIZENSHIP = fuzzy.AliasMap(KEWARGANEGARAAN_CANONICAL, 80)
+_AGAMA = fuzzy.Vocabulary(KNOWN_VALUES["Agama"])
+_PLACES = fuzzy.Vocabulary(INDONESIAN_PLACES)
+_PLACE_NAMES = frozenset(INDONESIAN_PLACES)
+_ENUMS = {key: fuzzy.Vocabulary(cfg["values"])
+          for key, cfg in FIELD_ENUMS.items()}
 
 
 def _agama_one(v: str) -> Optional[str]:
     """WRatio extract_one > 70 (ktp_extractor.py:623-627)."""
-    choice, score = fuzzy.extract_one(v.upper(), KNOWN_VALUES["Agama"])
-    return choice if (choice is not None and score > 70) else v
+    choice, _ = _AGAMA.best(v.upper(), fuzzy.wratio, 71)
+    return v if choice is None else choice
 
 
 def _j_i_variants(text: str) -> list:
@@ -139,27 +133,25 @@ def _correct_place_one(raw: str,
     if not raw or len(raw.strip()) < 2:
         return raw, 0.0
     v = raw.upper().strip()
-    db = INDONESIAN_PLACES
-    db_set = set(db)
-    if v in db_set:
+    if v in _PLACE_NAMES:
         return v, 1.0
     sub = _sub_text_one(v)
-    if sub in db_set:
+    if sub in _PLACE_NAMES:
         return sub, 0.95
     for variant in _j_i_variants(v):
-        if variant in db_set:
+        if variant in _PLACE_NAMES:
             return variant, 0.90
     for variant in _j_i_variants(sub):
-        if variant in db_set:
+        if variant in _PLACE_NAMES:
             return variant, 0.87
     cands = list({v, sub} | set(_j_i_variants(v)) | set(_j_i_variants(sub)))
+    cutoff = math.ceil(min_confidence * 100)
     best_score, best_match = 0, None
     for cand in cands:
-        choice, score = fuzzy.extract_one(cand, db,
-                                          scorer=fuzzy.token_set_ratio)
+        choice, score = _PLACES.best(cand, fuzzy.token_set_ratio, cutoff)
         if choice is not None and score > best_score:
             best_score, best_match = score, choice
-    if best_match and best_score >= min_confidence * 100:
+    if best_match is not None:
         return best_match, best_score / 100.0
     return (sub if sub != v else v), 0.35
 
@@ -181,9 +173,9 @@ def _correct_enum_one(field_key: str, value: str):
     if sub in vocab:
         return sub, 0.93
     for cand in (v, sub):
-        choice, score = fuzzy.extract_one(cand, vocab,
-                                          scorer=fuzzy.token_set_ratio)
-        if choice is not None and score >= thr:
+        choice, score = _ENUMS[field_key].best(cand, fuzzy.token_set_ratio,
+                                               thr)
+        if choice is not None:
             return choice, score / 100.0
     return None
 
@@ -205,7 +197,7 @@ def _status_one(v: str) -> str:
         return "CERAI"
     if u.startswith("BELU") and u.endswith("AWIN"):
         return "BELUM KAWIN"
-    norm = _fuzzy_normalize_one(v, STATUS_PERKAWINAN_CANONICAL, 65)
+    norm = MARITAL_STATUS.normalize(v)
     return norm if norm in STATUS_PERKAWINAN_CANONICAL else v
 
 
@@ -217,12 +209,12 @@ def _pekerjaan_one(v: str) -> str:
     u = re.sub(r"\bCURUH\b", "BURUH", u, flags=re.IGNORECASE)
     u = re.sub(r"HARIANEEPAS", "HARIAN LEPAS", u)
     u = re.sub(r"HARIAN\s*[CL]EPAS", "HARIAN LEPAS", u)
-    norm = _fuzzy_normalize_one(u, PEKERJAAN_CANONICAL, 72)
+    norm = OCCUPATION.normalize(u)
     return norm if norm in PEKERJAAN_CANONICAL else u
 
 
 def _kwn_one(v: str) -> str:
-    norm = _fuzzy_normalize_one(v, KEWARGANEGARAAN_CANONICAL, 80)
+    norm = CITIZENSHIP.normalize(v)
     return norm if norm in KEWARGANEGARAAN_CANONICAL else v
 
 

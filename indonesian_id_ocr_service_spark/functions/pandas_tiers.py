@@ -1,13 +1,13 @@
 """Arrow-batched pandas UDFs for the fuzzy tiers (SURVEY §2.5 [PUDF]),
 behind the oracle-gated ``__spark_entry__`` queries ``fuzzy_canonical``
-and ``enum_place_correction`` (queries.py). Callers pass a UDF only the
-residue the JVM exact tiers left unresolved (``when(residue, col)``),
-so resolved rows cross the Arrow boundary as nulls. The extraction
-kernel runs the same tiers in-process (functions/pandas_ktp.py).
+and ``enum_place_correction`` (queries.py). Callers pass a UDF only its
+own field's rows (``when(field == key, raw)``), so other rows cross the
+Arrow boundary as nulls.
 
-Each UDF carries a per-executor dict memo: OCR vocabularies repeat
-heavily within a corpus, so the Python tier amortizes to ~zero.
-Dictionaries ship inside the closure (every vocabulary here is ≪100 KB).
+Each UDF carries a per-executor dict memo of the values it has seen,
+and calls the extraction kernel's own tier in functions/pandas_ktp.py,
+whose vocabularies are prepared once per process. The canonical-map
+UDFs ship their prepared alias map inside the closure (each is ≪100 KB).
 """
 
 from __future__ import annotations
@@ -16,14 +16,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from ..dictionaries import (
-    FIELD_ENUMS,
-    KEWARGANEGARAAN_CANONICAL,
-    KNOWN_VALUES,
-    PEKERJAAN_CANONICAL,
-    STATUS_PERKAWINAN_CANONICAL,
-)
-from . import fuzzy
+from ..dictionaries import FIELD_ENUMS
+from . import pandas_ktp as PK
 
 __all__ = [
     "fuzzy_normalize_pekerjaan",
@@ -41,21 +35,20 @@ _CORRECTION_TYPE = StructType([
 ])
 
 
-def _canonical_map_udf(canonical_map: dict[str, list[str]], threshold: int):
-    """Batched UDF for the N25 fuzzy tier over one alias map
-    (ktp_extractor.py:68-102 semantics via oracle.scalars)."""
+def _canonical_map_udf(alias_map):
+    """Batched UDF for the N25 fuzzy tier over one prepared alias map
+    (``fuzzy.AliasMap``, ktp_extractor.py:68-102; the kernel's KTP and
+    SIM tiers run the same maps)."""
     cache: dict[str, str] = {}
 
     @F.pandas_udf(StringType())
     def udf(s: pd.Series) -> pd.Series:
-        from . import pandas_ktp as _pk
-
         def one(v):
             if v is None:
                 return None
             r = cache.get(v)
             if r is None:
-                r = _pk._fuzzy_normalize_one(v, canonical_map, threshold)
+                r = alias_map.normalize(v)
                 cache[v] = r
             return r
 
@@ -75,11 +68,9 @@ def _init_udfs() -> None:
     global fuzzy_normalize_pekerjaan, fuzzy_normalize_status
     global fuzzy_normalize_kewarganegaraan
     if fuzzy_normalize_pekerjaan is None:
-        fuzzy_normalize_pekerjaan = _canonical_map_udf(PEKERJAAN_CANONICAL, 72)
-        fuzzy_normalize_status = _canonical_map_udf(
-            STATUS_PERKAWINAN_CANONICAL, 65)
-        fuzzy_normalize_kewarganegaraan = _canonical_map_udf(
-            KEWARGANEGARAAN_CANONICAL, 80)
+        fuzzy_normalize_pekerjaan = _canonical_map_udf(PK.OCCUPATION)
+        fuzzy_normalize_status = _canonical_map_udf(PK.MARITAL_STATUS)
+        fuzzy_normalize_kewarganegaraan = _canonical_map_udf(PK.CITIZENSHIP)
 
 
 def correct_enum_udf(field_key: str):
@@ -91,14 +82,12 @@ def correct_enum_udf(field_key: str):
 
     @F.pandas_udf(_CORRECTION_TYPE)
     def udf(s: pd.Series) -> pd.DataFrame:
-        from . import pandas_ktp as _pk
-
         def one(v):
             if v is None:
                 return (None, None)
             r = cache.get(v)
             if r is None:
-                res = _pk._correct_enum_one(field_key, v)
+                res = PK._correct_enum_one(field_key, v)
                 r = res if res else (None, None)
                 cache[v] = r
             return r
@@ -116,14 +105,12 @@ def correct_place_udf(min_confidence: float = 0.82):
 
     @F.pandas_udf(_CORRECTION_TYPE)
     def udf(s: pd.Series) -> pd.DataFrame:
-        from . import pandas_ktp as _pk
-
         def one(v):
             if v is None:
                 return (None, 0.0)
             r = cache.get(v)
             if r is None:
-                r = _pk._correct_place_one(v, min_confidence)
+                r = PK._correct_place_one(v, min_confidence)
                 cache[v] = r
             return r
 
@@ -136,7 +123,6 @@ def correct_place_udf(min_confidence: float = 0.82):
 def agama_extract_one_udf():
     """cleanup_data's Agama tier: thefuzz ``process.extractOne`` with the
     default WRatio scorer, accept > 70 (ktp_extractor.py:623-627)."""
-    vocab = tuple(KNOWN_VALUES["Agama"])
     cache: dict[str, str] = {}
 
     @F.pandas_udf(StringType())
@@ -146,8 +132,7 @@ def agama_extract_one_udf():
                 return None
             r = cache.get(v)
             if r is None:
-                choice, score = fuzzy.extract_one(v.upper(), vocab)
-                r = choice if (choice is not None and score > 70) else v
+                r = PK._agama_one(v)
                 cache[v] = r
             return r
 

@@ -13,9 +13,11 @@ key×value pairs per document, greedy argmin sweep) — independent of the
 pure-Python oracle in ``oracle/ktp.py`` which follows the reference's
 item-loop shape; the pytest gate asserts they agree on every corpus doc.
 
-Fuzzy label scoring is memoized per executor: OCR label vocabulary
-repeats across documents, so the cache converges to the corpus label
-set and the Python tier cost amortizes to ~zero per doc.
+Label scoring (K1/K2) and keyword recovery (K8) match span texts
+against vocabularies prepared once per executor (``fuzzy.Vocabulary``).
+Label scores are also memoized per span text, which only pays for texts
+that repeat: most span texts of an unseen document are new, so label
+matching stays a large share of the kernel's per-document cost.
 
 Also resolves each document's NIK (``resolve_nik``, N5-N13): cleanup,
 then the repair tiers in the reference's lazy order
@@ -59,7 +61,9 @@ FIELD_COLS: dict[str, str] = {
     "Berlaku Hingga": "berlaku_hingga",
 }
 
-_LABELS = tuple(CANONICAL_FIELDS)
+_LABELS = fuzzy.Vocabulary(CANONICAL_FIELDS)
+_KEYWORDS = {field: fuzzy.Vocabulary(values)
+             for field, values in KNOWN_VALUES.items()}
 _TRUNC = tuple(TRUNCATED_KEY_MAP.items())
 _PUNCT_ONLY = re.compile(r"^[:\-\.\s]+$")
 _LEAD_PUNCT = re.compile(r"^[:\-\.\s]+")
@@ -67,15 +71,12 @@ _LEAD_PUNCT = re.compile(r"^[:\-\.\s]+")
 
 @lru_cache(maxsize=262144)
 def _label_match(text: str) -> tuple[str, int]:
-    """Best (canonical_label, partial_ratio) for a raw span text.
-
-    Exact only for scores ≥ 81 (score_cutoff pruning): the two
-    consumers threshold at > 80 and > 85, so sub-cutoff scores don't
-    need to be distinguished."""
-    best, score = fuzzy.extract_one(text, _LABELS,
-                                    scorer=fuzzy.partial_ratio,
-                                    score_cutoff=81)
-    return best or "", int(score)
+    """Best (canonical_label, partial_ratio) for a raw span text when
+    the score is ≥ 81, else ("", 0): the two consumers threshold at
+    > 80 and > 85, so sub-cutoff scores don't need to be
+    distinguished."""
+    best, score = _LABELS.best(text, fuzzy.partial_ratio, 81)
+    return best or "", score
 
 
 @lru_cache(maxsize=262144)
@@ -179,8 +180,8 @@ def _extract_one_doc(texts: list[str], y0: np.ndarray, y1: np.ndarray,
         # still need the probe.
         part_score = role_scores[ki]
         if part_score < 0:
-            _, part_score = fuzzy.extract_one(
-                field, (text,), scorer=fuzzy.partial_ratio)
+            part_score = fuzzy.partial_ratio(fuzzy.full_process(field),
+                                             fuzzy.full_process(text))
         inline = ""
         if part_score > 70:
             pieces = re.split(r"[:]", text, maxsplit=1)
@@ -264,10 +265,9 @@ def _extract_one_doc(texts: list[str], y0: np.ndarray, y1: np.ndarray,
                 claimed.add(pick)
 
     # ---- K8: keyword recovery ------------------------------------------
-    for field, keywords in KNOWN_VALUES.items():
+    for field, keywords in _KEYWORDS.items():
         if field in out:
             continue
-        kw = tuple(keywords)
         for vi in val_idx:
             if vi in claimed:
                 continue
@@ -282,9 +282,8 @@ def _extract_one_doc(texts: list[str], y0: np.ndarray, y1: np.ndarray,
                 meth[field] = "regex_kawin_recovery"
                 claimed.add(vi)
                 break
-            choice, score = fuzzy.extract_one(
-                tu, kw, scorer=fuzzy.token_set_ratio)
-            if choice is not None and score > 85:
+            choice, _ = keywords.best(tu, fuzzy.token_set_ratio, 86)
+            if choice is not None:
                 out[field] = texts[vi]
                 meth[field] = "value_keyword_recovery"
                 claimed.add(vi)

@@ -7,8 +7,12 @@ implementation checked against an item-loop oracle), the SIM path is
 dominated by sequential state machines — row clustering with a running
 mean (M1), the legacy section machine with inferred advancement (M8),
 bounded anchor lookahead (M9), and the two-state address-block parser
-(M12). These are one kernel exercised by golden unit tests
-(tests/test_sim_kernel.py) and by the end-to-end span-equality gate.
+(M12). These are one kernel, checked against the independent
+re-derivation in ``oracle/sim_independent.py`` by tests/test_sim_parity.py
+and by the end-to-end span-equality gate. Its fuzzy tiers (M3, M13 and
+the occupation normaliser) match through prepared vocabularies in
+functions/fuzzy.py; the occupation tier is the KTP one
+(``pandas_ktp.OCCUPATION``).
 
 Semantics per /root/reference/sim_extractor.py (cited per function).
 """
@@ -18,13 +22,13 @@ from __future__ import annotations
 import re
 from difflib import SequenceMatcher
 from functools import lru_cache
-from typing import NamedTuple
 
 from ..dictionaries import PEKERJAAN_CANONICAL
 from ..dictionaries import SIM_ANCHORS as ANCHORS
 from ..dictionaries import SIM_FAST_CITIES as FAST_CITIES
 from ..dictionaries import SIM_REGIONS as INDONESIAN_REGIONS
 from ..functions import fuzzy
+from ..functions.pandas_ktp import OCCUPATION
 from ..oracle import scalars as S
 
 #: flat alias list, longest-first (sim_extractor.py:45-48)
@@ -33,83 +37,9 @@ ALL_PEKERJAAN_TERMS: list[str] = sorted(
     key=len, reverse=True,
 )
 
-
-class _Term(NamedTuple):
-    """An occupation alias (or a query), prepared for
-    fuzz.token_set_ratio: its full_process token set, the sorted tokens
-    space-joined (the ratio's sect string when no token is shared), that
-    string's char multiset and length."""
-
-    alias: str
-    canonical: str
-    tokens: frozenset
-    joined: str
-    counts: dict
-    length: int
-
-
-def _prepare(text: str, canonical: str = "") -> _Term:
-    tokens = frozenset(fuzzy.full_process(text).split())
-    joined = " ".join(sorted(tokens))
-    return _Term(text, canonical, tokens, joined,
-                 fuzzy._char_counts(joined), len(joined))
-
-
-def _token_set_at_least(q: _Term, t: _Term, need: int) -> int:
-    """fuzz.token_set_ratio(q, t) when it is ≥ ``need``, else -1.
-
-    Exact: the sect strings hold every token of their side, so their
-    lengths and char multisets are fixed per string, and the InDel
-    component 200·LCS/(la+lb) is bounded by LCS ≤ min(la, lb, common
-    chars). Only a term whose bound reaches ``need`` and beats the
-    closed-form intersection component pays for the bit-parallel LCS."""
-    la, lb = q.length, t.length
-    shared = q.tokens & t.tokens
-    inter = ""
-    best = 0
-    if shared:
-        inter = " ".join(sorted(shared))
-        li = len(inter)
-        best = max(int(round(200.0 * li / (li + la))),
-                   int(round(200.0 * li / (li + lb))))
-        if best == 100:
-            return 100
-    total = la + lb
-    m = la if la < lb else lb
-    bound = int(round(200.0 * m / total)) if total else 0
-    if bound >= need and bound > best:
-        small, big = ((q.counts, t.counts) if len(q.counts) <= len(t.counts)
-                      else (t.counts, q.counts))
-        common = 0
-        for ch, n in small.items():
-            k = big.get(ch)
-            if k:
-                common += n if n < k else k
-        if common < m:
-            bound = int(round(200.0 * common / total))
-    if bound < need or bound <= best:
-        return best if best >= need else -1
-    if shared:
-        sect_a = (inter + " " + " ".join(sorted(q.tokens - shared))).strip()
-        sect_b = (inter + " " + " ".join(sorted(t.tokens - shared))).strip()
-    else:
-        sect_a, sect_b = q.joined, t.joined
-    score = max(best, fuzzy.ratio(sect_a, sect_b))
-    return score if score >= need else -1
-
-
-#: the job vocabulary, prepared once per process: every alias in
-#: PEKERJAAN_CANONICAL order (the normaliser's tie order) ...
-_OCCUPATION_TERMS: tuple = tuple(
-    _prepare(a.upper(), canonical)
-    for canonical, aliases in PEKERJAAN_CANONICAL.items()
-    for a in aliases)
-#: ... the exact-alias tier (reversed: the first canonical listing an
-#: alias wins) ...
-_ALIAS_CANONICAL: dict = {t.alias: t.canonical
-                          for t in reversed(_OCCUPATION_TERMS)}
-#: ... and the distinct aliases M3 tests, longest first
-_JOB_TERMS: tuple = tuple(_prepare(a) for a in ALL_PEKERJAAN_TERMS)
+#: M3's and M13's vocabularies, prepared once per process
+_JOBS = fuzzy.Vocabulary(ALL_PEKERJAAN_TERMS)
+_REGIONS = fuzzy.Vocabulary(INDONESIAN_REGIONS)
 
 _PENERBIT_KEYWORDS = ("POLDA", "POLRES", "SATPAS", "METROJAYA",
                       "METRO JAYA", "KORLANTAS")
@@ -222,37 +152,12 @@ def is_job(text: str) -> bool:
     if not text:
         return False
     tu = text.upper()
-    for term in _JOB_TERMS:
-        if term.alias in tu:
+    for term in ALL_PEKERJAAN_TERMS:
+        if term in tu:
             return True
     if len(tu) < 4:
         return False
-    q = fuzzy.full_process(tu)
-    if not q:
-        return False
-    qt = _prepare(q)
-    return any(_token_set_at_least(qt, t, 80) >= 0 for t in _JOB_TERMS)
-
-
-def normalize_occupation(value: str) -> str:
-    """SIM occupation normalisation (sim_extractor.py:156-179): exact
-    alias tier, then the best token_set_ratio ≥ 72 over all aliases,
-    the first alias winning ties. Equals
-    ``oracle.scalars.normalize_pekerjaan_sim`` on the prepared
-    vocabulary."""
-    if not value:
-        return value
-    v = value.upper().strip()
-    canonical = _ALIAS_CANONICAL.get(v)
-    if canonical is not None:
-        return canonical
-    qt = _prepare(v)
-    best, best_canonical = 0, value
-    for t in _OCCUPATION_TERMS:
-        score = _token_set_at_least(qt, t, max(72, best + 1))
-        if score > best:
-            best, best_canonical = score, t.canonical
-    return best_canonical if best >= 72 else value
+    return _JOBS.best(tu, fuzzy.token_set_ratio, 80)[0] is not None
 
 
 def is_garbage(text: str) -> bool:
@@ -568,9 +473,7 @@ def _is_region_line(line_u: str) -> bool:
         return True
     if any(c in line_u for c in FAST_CITIES):
         return True
-    _, score = fuzzy.extract_one(line_u, INDONESIAN_REGIONS,
-                                 scorer=fuzzy.partial_ratio)
-    return score >= 82
+    return _REGIONS.best(line_u, fuzzy.partial_ratio, 82)[0] is not None
 
 
 _RT_PIVOT = re.compile(r"(?:RT|RW|R\.T|R\.W)[\s\.\:]*(\d{1,4})",
@@ -759,7 +662,7 @@ def cleanup_common(out: dict) -> dict:
             out["Jenis Kelamin"] = "PEREMPUAN"
     out.pop("Gol. Darah - Kelamin", None)
     if out.get("Pekerjaan"):
-        out["Pekerjaan"] = normalize_occupation(out["Pekerjaan"])
+        out["Pekerjaan"] = OCCUPATION.normalize(out["Pekerjaan"])
     addr = out.get("alamat")
     if isinstance(addr, dict) and addr.get("kabupaten"):
         addr["kabupaten"] = clean_sim_kabupaten(addr["kabupaten"])

@@ -39,7 +39,8 @@ def _emb(spark: SparkSession, sf_dir: str,
     path = f"{sf_dir}/embeddings.parquet"
     # 64-dim dot products / hyperplane projections per row dominate
     # most consumers; IVF (already shuffle-bound by its cell joins)
-    # opts out — measured slower with the extra exchange at both sizes
+    # opts out — the extra exchange measured slower at 10x (2.40 vs
+    # 2.01 s) and tied at 1x (0.97 on vs 1.04 off; OPTIMIZATION_r06.md)
     df = spark.read.parquet(path)
     return scan_fanout(df, path) if fanout else df
 
@@ -1040,7 +1041,7 @@ WHERE rn <= 3 ORDER BY query_id, rn
 def q_ann_ivf(spark, sf_dir):
     # fanout=False: IVF is bounded by its cell-assignment shuffle and
     # probe joins, not the per-row kernel; the extra exchange measured
-    # slower at 1x and 10x
+    # slower at 10x (2.40 vs 2.01 s) and tied at 1x (0.97 on vs 1.04 off)
     emb = _emb(spark, sf_dir, fanout=False)
     queries = emb.filter(F.col("vec_id") < 5)
     # n_probe=8 of 16 cells: the testdata embeddings are deliberately

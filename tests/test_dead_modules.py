@@ -112,3 +112,19 @@ def test_every_package_function_is_referenced():
     dead = sorted(q for q, name in defined.items()
                   if name not in referenced)
     assert not dead, f"{len(dead)} functions nothing references: {dead}"
+
+
+def test_only_the_oracle_names_the_plain_extract_one():
+    """Production code matches fixed vocabularies through
+    ``fuzzy.Vocabulary``/``fuzzy.AliasMap``. The plain
+    ``fuzzy.extract_one`` loop is the oracle's independent reference:
+    a package module outside ``oracle/`` that names it brings a second
+    matcher back, and the oracle would then check it against itself."""
+    oracle = os.path.join(REPO, PKG, "oracle") + os.sep
+    named = sorted(
+        _module_name(path) for path in _package_files()
+        if not path.startswith(oracle) and any(
+            (isinstance(node, ast.Attribute) and node.attr == "extract_one")
+            or (isinstance(node, ast.alias) and node.name == "extract_one")
+            for node in ast.walk(_parse(path))))
+    assert not named, f"modules outside oracle/ naming extract_one: {named}"

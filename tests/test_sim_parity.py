@@ -8,7 +8,7 @@ M11, M13, kabupaten cleaner, and the fuzzy scorers themselves), so the
 two implementations share only dictionaries and the separately
 parity-gated date chain. The fuzzed per-block tests below double as a
 correctness check of the optimized fuzzy kernels (bit-parallel LCS,
-closed-form token_set components, extract_one pruning) against naive
+closed-form token_set components, prepared-vocabulary bounds) against naive
 re-derivations.
 
 Pure-Python test — no SparkSession needed.
@@ -288,6 +288,9 @@ def test_job_matchers_match_independent():
     from concurrent.futures import ProcessPoolExecutor
     from multiprocessing import get_context
 
+    from indonesian_id_ocr_service_spark.functions.pandas_ktp import (
+        OCCUPATION,
+    )
     from indonesian_id_ocr_service_spark.oracle import scalars as S
 
     rng = random.Random(46)
@@ -308,7 +311,7 @@ def test_job_matchers_match_independent():
         want_norm = list(ex.map(S.normalize_pekerjaan_sim, inputs,
                                 chunksize=500))
     got_job = [sim_core.is_job(s) for s in inputs]
-    got_norm = [sim_core.normalize_occupation(s) for s in inputs]
+    got_norm = [OCCUPATION.normalize(s) for s in inputs]
     bad_job = [s for s, a, b in zip(inputs, got_job, want_job) if a != b]
     bad_norm = [(s, a, b) for s, a, b in zip(inputs, got_norm, want_norm)
                 if a != b]
