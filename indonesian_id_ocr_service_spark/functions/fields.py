@@ -2,7 +2,7 @@
 N32) behind the oracle-gated ``__spark_entry__`` queries
 (``rtrw_normalize``, ``status_layers``, ``kabupaten_clean`` in
 queries.py): the JVM-expressible tier — keyword layers and regex
-repairs. The extraction kernel applies the same rules vectorized
+repairs. The extraction kernel applies the same rules per document
 (functions/pandas_ktp.py).
 
 Semantics per /root/reference/ktp_extractor.py:589-743 and

@@ -1,12 +1,14 @@
-"""Vectorized (pandas/numpy) date normalization — the Arrow-kernel path.
+"""Vectorized (pandas/numpy) date normalization — the date queries'
+Arrow path.
 
-One of two implementations of the reference's five-strategy
-``DateNormalizer`` chain (reference date_normalizer.py:71-344),
-both checked against the pure-Python per-row oracle (``oracle/scalars``):
-- this one — the extraction kernel and the ``__spark_entry__`` date
-  queries,
+One of three implementations of the reference's five-strategy
+``DateNormalizer`` chain (reference date_normalizer.py:71-344); the
+first two are checked against the third:
+- this one — the ``__spark_entry__`` date queries' residue UDF,
 - ``dates.py`` — JVM Column expression tree (the scalar
-  ``__spark_entry__`` queries).
+  ``__spark_entry__`` queries),
+- ``pandas_ktp.normalize_date`` — the scalar per-row chain the
+  extraction kernel runs and the oracle re-imports.
 
 This one is mask-based numpy/pandas over whole Arrow batches: every
 strategy is computed column-wise for all rows, then combined

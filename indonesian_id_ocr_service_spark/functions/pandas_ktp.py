@@ -1,10 +1,13 @@
-"""Vectorized (pandas/numpy) KTP scalar post-chain — the Arrow-kernel
-scale path: cleanup → repair → cross-validate → format.
+"""Per-document KTP finish — the extraction kernel's last KTP step:
+cleanup → TTL repair → NIK↔field cross-validation → format, run once
+per KTP document inside the kernel's per-document loop
+(operators/unified_extract.py), as ``sim_core.process_sim_doc`` does
+for SIM.
 
-The pipeline's one implementation of the reference's post-extraction
-chain, checked against the independent pure-Python per-row oracle
-(``oracle/ktp.py``) by tests/test_pandas_ktp_parity.py and the
-span-equality gate.
+``finish_ktp`` is the pipeline's one implementation of the reference's
+post-extraction chain, checked against the independent pure-Python
+oracle chain (``oracle/ktp.py``) by tests/test_pandas_ktp_parity.py
+and the span-equality gate.
 
 Reference semantics per stage:
 - cleanup      ktp_extractor.py:589-743 (field normalizers, RT/RW
@@ -16,35 +19,44 @@ Reference semantics per stage:
 - format       ktp_extractor.py:750-805 (+ the N37 conservative place
                fix, ocr_corrector.py:423-477)
 
-Everything row-parallel runs as masked column operations; the fuzzy
-tiers run once per UNIQUE value of a batch (the same strategy as the
-``__spark_entry__`` queries' residue UDFs in pandas_tiers.py, which
-call these tiers) against vocabularies prepared once per process
-(functions/fuzzy.py), never through the oracle.
+The fuzzy tiers match against vocabularies prepared once per process
+(functions/fuzzy.py), never through the oracle, and are memoized per
+value: the generator repeats tier values heavily (0.2-0.7% of a
+batch's agama, status, pekerjaan and kewarganegaraan values are
+distinct). The ``__spark_entry__`` queries' residue UDFs
+(pandas_tiers.py) call the same tiers.
 
-The ``nik`` column arrives resolved: the kernel runs NIK cleanup and
+The date chain (N14-N24, date_normalizer.py) lives here too; the
+oracle re-imports it, and it is checked against two independent
+implementations: the vectorized ``pandas_dates.normalize_date_frame``
+(tests/test_property_chain_parity.py) and the JVM expressions in
+``dates.py`` (tests/test_scalar_parity.py).
+
+The ``NIK`` field arrives resolved: the kernel runs NIK cleanup and
 the three repair tiers once per KTP document
 (``ktp_spatial.resolve_nik``) on the per-value candidate engine below
-(``clean_nik_one``/``nik_best_one``). Only ~6% of KTP NIKs need
-repair, too few for a columnar engine to amortise its per-batch cost.
+(``clean_nik_one``/``nik_best_one``).
 """
 
 from __future__ import annotations
 
-import math
 import re
+from datetime import date as _date
+from functools import lru_cache
 from typing import Optional, Tuple
 
-import numpy as np
-import pandas as pd
-
 from ..dictionaries import (
+    DATE_KEEP,
+    DATE_TO_DIGIT,
     FIELD_ENUMS,
     INDONESIAN_PLACES,
     KEWARGANEGARAAN_CANONICAL,
     KNOWN_VALUES,
+    MAX_BIRTH_YEAR,
+    MIN_BIRTH_YEAR,
     NIK_INSERT_POSITIONS,
     PEKERJAAN_CANONICAL,
+    REFERENCE_YEAR,
     STATUS_PERKAWINAN_CANONICAL,
     TO_DIGIT_DST,
     TO_DIGIT_SRC,
@@ -53,41 +65,13 @@ from ..dictionaries import (
     VALID_PROVINCE_CODES,
 )
 from . import fuzzy
-from .pandas_dates import normalize_date_frame
 
-__all__ = ["post_chain", "cleanup_frame", "repair_frame",
-           "crossval_frame", "format_frame", "clean_nik_one",
-           "nik_best_one"]
+__all__ = ["finish_ktp", "clean_nik_one", "nik_best_one",
+           "normalize_date", "normalize_date_robust", "split_place_date",
+           "normalize_place_date"]
 
 _TO_DIGIT = str.maketrans(TO_DIGIT_SRC, TO_DIGIT_DST)
 _TO_TEXT = str.maketrans(TO_TEXT_SRC, TO_TEXT_DST)
-
-# ---------------------------------------------------------------------------
-# small helpers
-# ---------------------------------------------------------------------------
-
-
-def _obj(s: pd.Series) -> pd.Series:
-    return s.astype(object).where(pd.notna(s), None)
-
-
-def _nullify_empty(s: pd.Series) -> pd.Series:
-    return s.where(s.notna() & (s != ""), None)
-
-
-def _map_uniques(s: pd.Series, fn) -> pd.Series:
-    """fn once per unique non-null value, broadcast back."""
-    uniq = s.dropna().unique()
-    table = {u: fn(u) for u in uniq}
-    return s.map(table)
-
-
-def _digits(s: pd.Series) -> pd.Series:
-    return s.str.replace(r"\D", "", regex=True)
-
-
-def _sub_digit(s: pd.Series) -> pd.Series:
-    return s.str.translate(_TO_DIGIT)
 
 
 def _sub_text_one(v: str) -> str:
@@ -96,7 +80,7 @@ def _sub_text_one(v: str) -> str:
 
 # ---------------------------------------------------------------------------
 # fuzzy tiers (the reference tier logic over vocabularies prepared once
-# per process, functions/fuzzy.py; one call per unique value)
+# per process, functions/fuzzy.py; memoized per value)
 # ---------------------------------------------------------------------------
 
 #: the canonical-value tiers (N25); OCCUPATION is also the SIM
@@ -111,6 +95,7 @@ _ENUMS = {key: fuzzy.Vocabulary(cfg["values"])
           for key, cfg in FIELD_ENUMS.items()}
 
 
+@lru_cache(maxsize=262144)
 def _agama_one(v: str) -> Optional[str]:
     """WRatio extract_one > 70 (ktp_extractor.py:623-627)."""
     choice, _ = _AGAMA.best(v.upper(), fuzzy.wratio, 71)
@@ -127,9 +112,10 @@ def _j_i_variants(text: str) -> list:
     return []
 
 
-def _correct_place_one(raw: str,
-                       min_confidence: float = 0.82) -> Tuple[str, float]:
-    """Place-name correction tiers (ocr_corrector.py:423-477)."""
+@lru_cache(maxsize=262144)
+def _correct_place_one(raw: str) -> Tuple[str, float]:
+    """Place-name correction tiers (ocr_corrector.py:423-477), fuzzy
+    cutoff 82 (the reference's min_confidence 0.82)."""
     if not raw or len(raw.strip()) < 2:
         return raw, 0.0
     v = raw.upper().strip()
@@ -145,10 +131,9 @@ def _correct_place_one(raw: str,
         if variant in _PLACE_NAMES:
             return variant, 0.87
     cands = list({v, sub} | set(_j_i_variants(v)) | set(_j_i_variants(sub)))
-    cutoff = math.ceil(min_confidence * 100)
     best_score, best_match = 0, None
     for cand in cands:
-        choice, score = _PLACES.best(cand, fuzzy.token_set_ratio, cutoff)
+        choice, score = _PLACES.best(cand, fuzzy.token_set_ratio, 82)
         if choice is not None and score > best_score:
             best_score, best_match = score, choice
     if best_match is not None:
@@ -180,6 +165,7 @@ def _correct_enum_one(field_key: str, value: str):
     return None
 
 
+@lru_cache(maxsize=262144)
 def _status_one(v: str) -> str:
     """Three-layer status normalization (ktp_extractor.py:655-689)."""
     u = v.upper()
@@ -201,6 +187,7 @@ def _status_one(v: str) -> str:
     return norm if norm in STATUS_PERKAWINAN_CANONICAL else v
 
 
+@lru_cache(maxsize=262144)
 def _pekerjaan_one(v: str) -> str:
     """Regex fixes then canonical tier (ktp_extractor.py:697-711)."""
     u = v.replace("BURUHHARIAN", "BURUH HARIAN")
@@ -213,6 +200,7 @@ def _pekerjaan_one(v: str) -> str:
     return norm if norm in PEKERJAAN_CANONICAL else u
 
 
+@lru_cache(maxsize=262144)
 def _kwn_one(v: str) -> str:
     norm = CITIZENSHIP.normalize(v)
     return norm if norm in KEWARGANEGARAAN_CANONICAL else v
@@ -309,336 +297,415 @@ def nik_best_one(raw) -> Tuple[Optional[str], Optional[float]]:
     return None, None
 
 
-def _pad_nik_dob_vec(d15: pd.Series, exp: pd.Series) -> pd.Series:
-    """DOB-driven 15→16 padding, closed form of the digit-major search
-    (nik_cross_validator.py:271-285; same pruning as
-    nik.pad_nik_with_dob)."""
-    n = len(d15)
-    best_val = pd.Series([None] * n, index=d15.index, dtype=object)
-    best_prio = np.full(n, 99)
-    d = d15.fillna("")
-    e = exp.fillna("")
-
-    def consider(cond: np.ndarray, value: pd.Series, prio: np.ndarray):
-        nonlocal best_val, best_prio
-        take = cond & (prio < best_prio)
-        if take.any():
-            tk = pd.Series(take, index=d15.index)
-            best_val = best_val.where(~tk, value)
-            best_prio = np.where(take, prio, best_prio)
-
-    sig1 = (d.str[5:11] == e).to_numpy()
-    consider(sig1, "0" + d, np.full(n, 0))
+def _pad_nik_dob_one(d15: str, expected: str) -> Optional[str]:
+    """DOB-driven 15→16 padding (nik_cross_validator.py:271-285): the
+    first candidate of the digit-major, position-minor insertion search
+    whose chars 6-11 equal ``expected``, in closed form. An insertion
+    at position ≤ 5 shifts chars 5-10 into 6-11 whatever the digit, so
+    digit 0 at position 0 covers them all (priority 0); one at
+    position ≥ 12 leaves chars 6-11 as they are (digit 0 at 12,
+    priority 12); one at position p in 6-11 must insert
+    ``expected[p - 6]`` (priority digit·16 + p)."""
+    if d15[5:11] == expected:
+        return "0" + d15
+    best, best_prio = None, None
     for p in range(6, 12):
-        d_req = e.str[p - 6:p - 6 + 1]
-        prefix_ok = d.str[6:p] == e.str[:p - 6]
-        suffix_ok = d.str[p:11] == e.str[p - 5:11]
-        ok = (prefix_ok & suffix_ok & (d_req != "")).to_numpy()
-        prio = pd.to_numeric(d_req.where(d_req != "", "9"),
-                             errors="coerce").to_numpy(float) * 16 + p
-        consider(ok, d.str[:p] + d_req + d.str[p:], prio.astype(int))
-    sig2 = (d.str[6:12] == e).to_numpy()
-    consider(sig2, d.str[:12] + "0" + d.str[12:], np.full(n, 12))
-    return best_val
+        req = expected[p - 6:p - 5]
+        if req and d15[6:p] == expected[:p - 6] \
+                and d15[p:11] == expected[p - 5:11]:
+            prio = int(req) * 16 + p
+            if best_prio is None or prio < best_prio:
+                best, best_prio = d15[:p] + req + d15[p:], prio
+    if d15[6:12] == expected and (best_prio is None or 12 < best_prio):
+        return d15[:12] + "0" + d15[12:]
+    return best
 
 
 # ---------------------------------------------------------------------------
-# stage 1: cleanup
+# Date normalization (N14-N24) — date_normalizer.py semantics
 # ---------------------------------------------------------------------------
 
 
-def _base_clean(col: pd.Series) -> pd.Series:
-    t = col.str.strip()
-    t = t.mask(t.str.startswith(":", na=False),
-               t.str.slice(1).str.strip())
-    return t
+def sub_date_chars(text: str) -> str:
+    """Date-context substitution: keep digits and ``-./ ,``
+    (date_normalizer.py:335-344)."""
+    out = []
+    for ch in text:
+        if ch.isdigit() or ch in DATE_KEEP:
+            out.append(ch)
+        else:
+            out.append(DATE_TO_DIGIT.get(ch, ch))
+    return "".join(out)
 
 
-def cleanup_frame(raw: pd.DataFrame) -> pd.DataFrame:
-    """ktp_extractor.py:589-743 over raw-field columns (FIELD_COLS
-    names: nik, nama, ttl, …). Empty results become None (the oracle
+def _repair_year(yr: int) -> int | None:
+    """First single-digit replacement (position asc, digit asc) landing in
+    [MIN_BIRTH_YEAR, REFERENCE_YEAR] (date_normalizer.py:238-258)."""
+    s = str(yr).zfill(4)
+    for pos in range(4):
+        for repl in "0123456789":
+            if repl == s[pos]:
+                continue
+            cand = int(s[:pos] + repl + s[pos + 1:])
+            if MIN_BIRTH_YEAR <= cand <= REFERENCE_YEAR:
+                return cand
+    return None
+
+
+def _build_date(d_s: str, mo_s: str, yr_s: str, conf: float, method: str):
+    """Validate components → dict or None (date_normalizer.py:264-329)."""
+    try:
+        d, mo, yr = int(d_s.strip()), int(mo_s.strip()), int(yr_s.strip())
+    except ValueError:
+        return None
+    if d < 1 or d > 31:
+        if 1 <= mo <= 31 and 1 <= d <= 12:
+            d, mo = mo, d
+            conf *= 0.80
+        else:
+            return None
+    if mo < 1 or mo > 12:
+        return None
+    if yr < 100:
+        yr = (1900 + yr) if yr > 25 else (2000 + yr)
+        conf *= 0.85
+    if not (MIN_BIRTH_YEAR <= yr <= REFERENCE_YEAR):
+        rep = _repair_year(yr)
+        if rep is not None:
+            yr = rep
+            method = "year_repair_" + method
+            conf *= 0.80
+        elif REFERENCE_YEAR < yr <= MAX_BIRTH_YEAR:
+            conf *= 0.75
+        else:
+            conf *= 0.15
+    try:
+        _date(yr, mo, d)
+    except ValueError:
+        return None
+    return {
+        "normalized": f"{d:02d}-{mo:02d}-{yr:04d}",
+        "day": d, "month": mo, "year": yr,
+        "confidence": float(conf), "method": method,
+    }
+
+
+def _collapse_seps(text: str) -> str:
+    clean = re.sub(r"[-/. ]{2,}", "-", text)
+    return re.sub(r"[-/. ]", "-", clean)
+
+
+def _strategy_standard(text: str):
+    clean = _collapse_seps(text)
+    m = re.match(r"^(\d{1,2})-(\d{1,2})-(\d{4})$", clean.strip())
+    if m:
+        return _build_date(m.group(1), m.group(2), m.group(3), 0.97,
+                           "strict_dd_mm_yyyy")
+    m = re.search(r"\b(\d{1,2})-(\d{1,2})-(\d{4})\b", clean)
+    if m:
+        return _build_date(m.group(1), m.group(2), m.group(3), 0.90,
+                           "embedded_dd_mm_yyyy")
+    return None
+
+
+def _strategy_charsub(text: str):
+    sub = sub_date_chars(text)
+    if sub == text:
+        return None
+    r = _strategy_standard(sub)
+    if r:
+        r["confidence"] *= 0.88
+        r["method"] = "char_sub_" + r["method"]
+    return r
+
+
+def _strategy_3digit_year(text: str):
+    clean = _collapse_seps(sub_date_chars(text))
+    m = re.search(r"(\d{1,2})-(\d{1,2})-(\d{3})$", clean.strip())
+    if not m:
+        return None
+    d_s, mo_s, y3 = m.group(1), m.group(2), m.group(3)
+    yi = int(y3)
+    if 900 <= yi <= 999:
+        yf, conf = "1" + y3, 0.75
+    elif 0 <= yi <= 25:
+        yf, conf = "20" + y3, 0.70
+    elif 26 <= yi <= 99:
+        yf, conf = "19" + y3, 0.65
+    elif 100 <= yi <= 199:
+        yf, conf = "1" + y3 + "0", 0.50
+    else:
+        return None
+    return _build_date(d_s, mo_s, yf, conf, "3digit_year_recon")
+
+
+def _strategy_7digit(text: str):
+    digits = re.sub(r"\D", "", sub_date_chars(text))
+    if len(digits) != 7:
+        return None
+    r = _strategy_3digit_year(f"{digits[0:2]}-{digits[2:4]}-{digits[4:7]}")
+    if r and r["confidence"] > 0:
+        r["confidence"] *= 0.82
+        r["method"] = "7digit_" + r["method"]
+        return r
+    r2 = _build_date("0" + digits[0], digits[1:3], digits[3:7], 0.45,
+                     "7digit_alt_interp")
+    return r2 if (r2 and r2["confidence"] > 0) else None
+
+
+def _strategy_permissive(text: str):
+    sub = sub_date_chars(text)
+    m = re.search(r"(\d{1,2})\s*[-/.]\s*(\d{1,2})\s*[-/.]\s*(\d{2,4})", sub)
+    if not m:
+        return None
+    d_s, mo_s, y_s = m.group(1), m.group(2), m.group(3)
+    if len(y_s) == 2:
+        y_s = ("19" + y_s) if int(y_s) > 25 else ("20" + y_s)
+    return _build_date(d_s, mo_s, y_s, 0.55, "permissive_scan")
+
+
+_STRATEGIES = (
+    _strategy_standard,
+    _strategy_charsub,
+    _strategy_3digit_year,
+    _strategy_7digit,
+    _strategy_permissive,
+)
+
+
+def normalize_date(raw: str):
+    """Full strategy chain (date_normalizer.py:71-92). Returns dict with
+    confidence 0.0 when all strategies fail."""
+    if not raw or not raw.strip():
+        return {"normalized": None, "day": None, "month": None, "year": None,
+                "confidence": 0.0, "method": "empty_input"}
+    text = raw.strip()
+    for strat in _STRATEGIES:
+        r = strat(text)
+        if r and r["confidence"] > 0.0:
+            return r
+    return {"normalized": None, "day": None, "month": None, "year": None,
+            "confidence": 0.0, "method": "all_strategies_failed"}
+
+
+def normalize_date_robust(raw: str) -> str:
+    """Facade: normalized iff conf > 0.25, else the original raw
+    (date_normalizer.py:354-377)."""
+    if not raw:
+        return raw
+    r = normalize_date(raw)
+    if r["normalized"] and r["confidence"] > 0.25:
+        return r["normalized"]
+    return raw
+
+
+def split_place_date(raw: str):
+    """(place, date_raw) split of a Tempat/Tgl-Lahir string
+    (date_normalizer.py:94-120)."""
+    if not raw:
+        return None, ""
+    if "," in raw:
+        head, tail = raw.split(",", 1)
+        return (head.strip().strip(".:- ") or None), tail.strip()
+    m = re.search(r"(\d{1,2}[\s\./\-]+\d{1,2}[\s\./\-]+\d{2,4})", raw)
+    if m:
+        return (raw[: m.start()].strip().strip(".:- ") or None), m.group(1)
+    return None, raw
+
+
+def normalize_place_date(raw: str):
+    place, date_raw = split_place_date(raw)
+    return place, normalize_date(date_raw)
+
+
+
+
+# ---------------------------------------------------------------------------
+# per-document finish: cleanup → repair → crossval → format
+# ---------------------------------------------------------------------------
+
+_KTP_LABELS = ("PROVINSI", "KABUPATEN", "NIK", "Nama", "Tempat/Tgl Lahir",
+               "Jenis Kelamin", "Alamat", "RT/RW", "Kel/Desa", "Kecamatan",
+               "Agama", "Status Perkawinan", "Pekerjaan", "Kewarganegaraan")
+_DIGIT = re.compile(r"\d")
+_DIGITS = re.compile(r"\d+")
+_NON_DIGIT = re.compile(r"\D")
+_RT_RW_BLEED = re.compile(r"^\d{2,3}/\d{2,3}$")
+_ALAMAT_RT = re.compile(r"\s+RT.*", re.IGNORECASE)
+_ALAMAT_RW = re.compile(r"\s+RW.*", re.IGNORECASE)
+_REGION_PREFIX = re.compile(
+    r"^[A-Z]{1,4}\s+(?=KOTA\b|KAB\b|KABUPATEN\b|JAKARTA\b)")
+_DKI = re.compile(r"\bDKI\s*JAKARTA\b", re.IGNORECASE)
+_MULTI_SPACE = re.compile(r"\s{2,}")
+_TRAIL_PUNCT = re.compile(r"[,./\s]+$")
+_NIK16 = re.compile(r"^\d{16}$")
+_DATE_TOKEN = re.compile(r"\b(\d{2})-(\d{2})-(\d{4})\b")
+_TTL_END_DATE = re.compile(r"(\d{1,2}[-./\s]+\d{1,2}[-./\s]+\d{2,4})\s*$")
+
+
+def _zfill_pair(nums: list) -> str:
+    return f"{nums[0].zfill(3)}/{nums[1].zfill(3)}"
+
+
+def _cleanup(raw: dict) -> dict:
+    """ktp_extractor.py:589-743 over one document's raw fields (the
+    ``NIK`` already resolved). Empty results become None (the oracle
     drops the key)."""
-    b = {c: _base_clean(_obj(raw[c])) for c in raw.columns}
-    out = {}
+    c: dict = {}
+    for label in _KTP_LABELS:
+        v = raw.get(label)
+        if v is not None:
+            v = v.strip()
+            if v.startswith(":"):
+                v = v[1:].strip()
+        c[label] = v
 
-    out["agama"] = _map_uniques(b["agama"], _agama_one)
-
-    has_digit = b["rt_rw"].str.contains(r"\d", regex=True, na=False)
-    nums = b["rt_rw"].str.findall(r"\d+")
-    two = nums.map(lambda L: len(L) >= 2 if isinstance(L, list) else False)
-    z = nums.map(lambda L: f"{L[0].zfill(3)}/{L[1].zfill(3)}"
-                 if isinstance(L, list) and len(L) >= 2 else None)
-    rt = b["rt_rw"].where(has_digit, None)
-    out["rt_rw"] = _obj(z.where(two, rt))
-
-    bleed = b["kel_desa"].str.match(r"^\d{2,3}/\d{2,3}$", na=False)
-    knum = b["kel_desa"].str.findall(r"\d+")
-    kz = knum.map(lambda L: f"{L[0].zfill(3)}/{L[1].zfill(3)}"
-                  if isinstance(L, list) and len(L) >= 2 else None)
-    out["kel_desa"] = _obj(b["kel_desa"].where(~bleed, None))
-    out["rt_rw"] = out["rt_rw"].where(
-        out["rt_rw"].notna(), _obj(kz.where(bleed, None)))
-
-    jku = b["jenis_kelamin"].str.upper()
-    male = (jku.str.contains("LAKI", na=False) | jku.str.contains("MALE", na=False)
-            | jku.str.contains("LK", na=False))
-    female = (jku.str.contains("PEREMPUAN", na=False) | jku.str.contains("FEMALE", na=False)
-              | jku.str.contains("PR", na=False))
-    out["jenis_kelamin"] = _obj(
-        b["jenis_kelamin"].mask(male, "LAKI-LAKI")
-        .mask(~male & female, "PEREMPUAN"))
-
-    out["status_perkawinan"] = _map_uniques(
-        b["status_perkawinan"], _status_one)
-    out["pekerjaan"] = _map_uniques(b["pekerjaan"], _pekerjaan_one)
-    out["kewarganegaraan"] = _map_uniques(b["kewarganegaraan"], _kwn_one)
-
-    out["alamat"] = (
-        b["alamat"]
-        .str.replace(r"\s+RT.*", "", regex=True, case=False).str.strip()
-        .str.replace(r"\s+RW.*", "", regex=True, case=False).str.strip()
-    )
-
-    for col in ("kabupaten", "provinsi"):
-        v = (b[col].str.strip().str.replace(
-            r"^[A-Z]{1,4}\s+(?=KOTA\b|KAB\b|KABUPATEN\b|JAKARTA\b)",
-            "", regex=True).str.strip())
-        v = v.str.replace(r"\bDKI\s*JAKARTA\b", "DKI JAKARTA",
-                          regex=True, case=False)
-        out[col] = _obj(v.where(v.str.strip().str.len() >= 3, None))
-
-    out["kecamatan"] = (
-        b["kecamatan"].str.replace(r"\s{2,}", " ", regex=True).str.strip()
-        .str.replace(r"[,./\s]+$", "", regex=True).str.strip())
-
-    for col in raw.columns:
-        if col not in out:
-            out[col] = b[col]
-        out[col] = _nullify_empty(_obj(out[col]))
-    return pd.DataFrame(out, index=raw.index)
+    for label, tier in (("Agama", _agama_one),
+                        ("Status Perkawinan", _status_one),
+                        ("Pekerjaan", _pekerjaan_one),
+                        ("Kewarganegaraan", _kwn_one)):
+        if c[label] is not None:
+            c[label] = tier(c[label])
+    rt_rw = c["RT/RW"]
+    if rt_rw is not None:
+        nums = _DIGITS.findall(rt_rw)
+        rt_rw = (_zfill_pair(nums) if len(nums) >= 2
+                 else rt_rw if _DIGIT.search(rt_rw) else None)
+    kel = c["Kel/Desa"]
+    if kel is not None and _RT_RW_BLEED.match(kel):
+        c["Kel/Desa"] = None
+        if rt_rw is None:
+            rt_rw = _zfill_pair(_DIGITS.findall(kel))
+    c["RT/RW"] = rt_rw
+    jk = c["Jenis Kelamin"]
+    if jk is not None:
+        u = jk.upper()
+        if "LAKI" in u or "MALE" in u or "LK" in u:
+            c["Jenis Kelamin"] = "LAKI-LAKI"
+        elif "PEREMPUAN" in u or "FEMALE" in u or "PR" in u:
+            c["Jenis Kelamin"] = "PEREMPUAN"
+    if c["Alamat"] is not None:
+        c["Alamat"] = _ALAMAT_RW.sub(
+            "", _ALAMAT_RT.sub("", c["Alamat"]).strip()).strip()
+    for label in ("KABUPATEN", "PROVINSI"):
+        if c[label] is not None:
+            v = _DKI.sub("DKI JAKARTA",
+                         _REGION_PREFIX.sub("", c[label].strip()).strip())
+            c[label] = v if len(v.strip()) >= 3 else None
+    if c["Kecamatan"] is not None:
+        c["Kecamatan"] = _TRAIL_PUNCT.sub(
+            "", _MULTI_SPACE.sub(" ", c["Kecamatan"]).strip()).strip()
+    return {k: (v or None) for k, v in c.items()}
 
 
-# ---------------------------------------------------------------------------
-# stage 2: repair
-# ---------------------------------------------------------------------------
-
-
-def repair_frame(c: pd.DataFrame) -> pd.DataFrame:
+def _repair_ttl(ttl: Optional[str]) -> Optional[str]:
     """document_processor.py:96-148 minus the NIK tiers (the kernel
     resolves the NIK per document, ktp_spatial.resolve_nik): TTL
     re-normalization via the date chain."""
-    out = c.copy()
-    ttl = c["ttl"]
-    place, date_raw = _split_place_date_vec(ttl)
-    nd = normalize_date_frame(date_raw.fillna(""))
-    good = (ttl.notna() & (ttl != "") & nd["normalized"].notna()
-            & (nd["confidence"] > 0.25))
-    joined = np.where(place.notna(),
-                      place.fillna("") + "," + nd["normalized"].fillna(""),
-                      nd["normalized"])
-    out["ttl"] = _obj(ttl.where(~good, pd.Series(joined, index=ttl.index)))
-    return out
+    if not ttl:
+        return ttl
+    place, dres = normalize_place_date(ttl)
+    if dres["normalized"] and dres["confidence"] > 0.25:
+        return f"{place},{dres['normalized']}" if place else dres["normalized"]
+    return ttl
 
 
-def _split_place_date_vec(raw: pd.Series
-                          ) -> Tuple[pd.Series, pd.Series]:
-    """split_place_date (date_normalizer.py:94-120), columnar."""
-    s = raw.fillna("")
-    has_comma = s.str.contains(",", regex=False)
-    parts = s.str.split(",", n=1)
-    head = parts.str[0].str.strip().str.strip(".:- ")
-    tail = parts.map(
-        lambda L: L[1].strip() if isinstance(L, list) and len(L) > 1
-        else "")
-    pat = r"(\d{1,2}[\s\./\-]+\d{1,2}[\s\./\-]+\d{2,4})"
-    m = s.str.extract(pat, expand=False)
-    before = s.str.split(pat, n=1, regex=True).str[0] \
-        .str.strip().str.strip(".:- ")
-    place = head.where(has_comma, before.where(m.notna(), None))
-    place = _nullify_empty(_obj(place))
-    date_raw = tail.where(has_comma, m.where(m.notna(), s))
-    return place, _obj(date_raw)
+def _crossval(x: dict) -> None:
+    """nik_cross_validator.py:63-265, in place: a 16-digit NIK
+    overwrites gender and date of birth; otherwise the date of birth
+    and gender repair a 15/16-digit NIK."""
+    nik = x["NIK"] or ""
+    ttl = x["Tempat/Tgl Lahir"] or ""
+    m = _DATE_TOKEN.search(ttl)
+    if _NIK16.match(nik):
+        day_raw, month, year2 = int(nik[6:8]), int(nik[8:10]), int(nik[10:12])
+        female = day_raw > 40
+        day = day_raw - 40 if female else day_raw
+        year = 2000 + year2 if year2 <= 26 else 1900 + year2
+        if not (1 <= day <= 31 and 1 <= month <= 12
+                and 1920 <= year <= 2026):
+            return
+        x["Jenis Kelamin"] = "PEREMPUAN" if female else "LAKI-LAKI"
+        nik_date = f"{day:02d}-{month:02d}-{year:04d}"
+        if m is not None:
+            if m.group(0) == nik_date:
+                return
+            # keep when only the two-digit year matches
+            if int(m.group(3)) % 100 == year2 and not (
+                    int(m.group(2)) == month and int(m.group(1)) == day):
+                return
+        place = ttl[:m.start()].strip().strip(",.:- ") if m else ""
+        x["Tempat/Tgl Lahir"] = (f"{place},{nik_date}" if len(place) >= 2
+                                 else nik_date)
+        return
+    if m is None or not nik:
+        return
+    female = _gender(x["Jenis Kelamin"]) == "PEREMPUAN"
+    enc_day = int(m.group(1)) + (40 if female else 0)
+    expected = f"{enc_day:02d}{int(m.group(2)):02d}{int(m.group(3)) % 100:02d}"
+    digits = _NON_DIGIT.sub("", nik.translate(_TO_DIGIT))
+    if len(digits) == 16:
+        if digits[6:12] == expected and digits != nik:
+            x["NIK"] = digits
+    elif len(digits) == 15:
+        padded = _pad_nik_dob_one(digits, expected)
+        if padded is not None:
+            x["NIK"] = padded
 
 
-# ---------------------------------------------------------------------------
-# stage 3: cross-validation
-# ---------------------------------------------------------------------------
-
-_DATE_TOKEN = r"\b(\d{2})-(\d{2})-(\d{4})\b"
-
-
-def _extract_date_vec(ttl: pd.Series) -> pd.Series:
-    return _obj(ttl.fillna("").str.extract(
-        r"\b(\d{2}-\d{2}-\d{4})\b", expand=False))
+def _gender(v: Optional[str]) -> Optional[str]:
+    u = (v or "").upper().strip()
+    if "LAKI" in u or "PRIA" in u or "MALE" in u or "LK" in u:
+        return "LAKI-LAKI"
+    if "PEREMPUAN" in u or "WANITA" in u or "FEMALE" in u or "PR" in u:
+        return "PEREMPUAN"
+    return None
 
 
-def _extract_place_cv_vec(ttl: pd.Series) -> pd.Series:
-    s = ttl.fillna("")
-    m = s.str.extract(r"\b(\d{2}-\d{2}-\d{4})\b", expand=False)
-    before = s.str.split(r"\b\d{2}-\d{2}-\d{4}\b", n=1, regex=True) \
-        .str[0].str.strip().str.strip(",.:- ")
-    place = before.where(m.notna() & (before.str.len() >= 2), None)
-    return _obj(place)
+def finish_ktp(raw: dict) -> dict:
+    """cleanup → repair → crossval → format for one KTP document's raw
+    fields ({canonical_label: value}, the ``NIK`` already resolved) →
+    the flat output-field dict (ktp_extractor.py:750-805 + the N37
+    place fix), None for a missing field."""
+    x = _cleanup(raw)
+    x["Tempat/Tgl Lahir"] = _repair_ttl(x["Tempat/Tgl Lahir"])
+    _crossval(x)
 
-
-def _norm_gender_vec(jk: pd.Series) -> pd.Series:
-    u = jk.fillna("").str.upper().str.strip()
-    male = (u.str.contains("LAKI") | u.str.contains("PRIA")
-            | u.str.contains("MALE") | u.str.contains("LK"))
-    female = (u.str.contains("PEREMPUAN") | u.str.contains("WANITA")
-              | u.str.contains("FEMALE") | u.str.contains("PR"))
-    out = pd.Series([None] * len(jk), index=jk.index, dtype=object)
-    out = out.mask(female, "PEREMPUAN").mask(male, "LAKI-LAKI")
-    return out
-
-
-def crossval_frame(r: pd.DataFrame) -> pd.DataFrame:
-    """nik_cross_validator.py:63-265, columnar."""
-    out = r.copy()
-    nik = r["nik"].fillna("")
-    is16 = nik.str.match(r"^\d{16}$", na=False).to_numpy()
-
-    # --- direction 1: 16-digit NIK is authoritative -------------------
-    day_raw = pd.to_numeric(nik.str[6:8], errors="coerce").to_numpy(float)
-    month = pd.to_numeric(nik.str[8:10], errors="coerce").to_numpy(float)
-    year2 = pd.to_numeric(nik.str[10:12], errors="coerce").to_numpy(float)
-    femal = day_raw > 40
-    day = np.where(femal, day_raw - 40, day_raw)
-    year = np.where(year2 <= 26, 2000 + year2, 1900 + year2)
-    date_valid = ((day >= 1) & (day <= 31) & (month >= 1) & (month <= 12)
-                  & (year >= 1920) & (year <= 2026))
-    act1 = is16 & date_valid
-    gender_nik = pd.Series(np.where(femal, "PEREMPUAN", "LAKI-LAKI"),
-                           index=r.index)
-    nik_date = pd.Series(
-        ["" if not a else f"{int(d):02d}-{int(m):02d}-{int(y):04d}"
-         for a, d, m, y in zip(act1, day, month, year)],
-        index=r.index)
-
-    a1 = pd.Series(act1, index=r.index)
-    out["jenis_kelamin"] = _obj(
-        r["jenis_kelamin"].where(~a1, gender_nik))
-
-    existing = _extract_date_vec(r["ttl"])
-    place_cv = _extract_place_cv_vec(r["ttl"])
-    replaced = np.where(place_cv.notna(),
-                        place_cv.fillna("") + "," + nik_date,
-                        nik_date)
-    e_yr = pd.to_numeric(existing.str[6:10], errors="coerce") \
-        .to_numpy(float)
-    e_mon = pd.to_numeric(existing.str[3:5], errors="coerce") \
-        .to_numpy(float)
-    e_day = pd.to_numeric(existing.str[0:2], errors="coerce") \
-        .to_numpy(float)
-    match_yr = (e_yr % 100) == year2
-    match_mon = e_mon == month
-    match_day = e_day == day
-    same = (existing == nik_date).fillna(False).astype(bool).to_numpy()
-    enone = existing.isna().to_numpy()
-    # replace when: no date; or full d/m/y2 match but formatting differs;
-    # or year2 mismatch. Keep when only the year matches (match_yr).
-    repl = act1 & (enone
-                   | (~same & match_yr & match_mon & match_day)
-                   | (~same & ~match_yr))
-    rp = pd.Series(repl, index=r.index)
-    out["ttl"] = _obj(r["ttl"].where(
-        ~rp, pd.Series(replaced, index=r.index)))
-
-    # --- direction 2: repair a 15-digit NIK from date + gender --------
-    act2 = ~is16
-    ex2 = _extract_date_vec(r["ttl"])
-    d2 = pd.to_numeric(ex2.str[0:2], errors="coerce").to_numpy(float)
-    m2 = pd.to_numeric(ex2.str[3:5], errors="coerce").to_numpy(float)
-    y2f = pd.to_numeric(ex2.str[6:10], errors="coerce").to_numpy(float)
-    fem2 = (_norm_gender_vec(r["jenis_kelamin"]) == "PEREMPUAN") \
-        .to_numpy()
-    enc_day = np.where(fem2, d2 + 40, d2)
-    expected = pd.Series(
-        ["" if (np.isnan(ed) or np.isnan(mm) or np.isnan(yy))
-         else f"{int(ed):02d}{int(mm):02d}{int(yy) % 100:02d}"
-         for ed, mm, yy in zip(enc_day, m2, y2f)],
-        index=r.index)
-    have = act2 & ex2.notna().to_numpy() & (nik != "").to_numpy()
-    digits = _digits(_sub_digit(nik))
-    d16 = have & (digits.str.len() == 16).to_numpy()
-    fix16 = d16 & (digits.str[6:12] == expected).to_numpy() \
-        & (digits != nik).to_numpy()
-    d15 = have & (digits.str.len() == 15).to_numpy()
-    padded = _pad_nik_dob_vec(digits.where(pd.Series(d15, index=r.index)),
-                              expected)
-    f16 = pd.Series(fix16, index=r.index)
-    p15 = pd.Series(d15, index=r.index) & padded.notna()
-    out["nik"] = _obj(
-        out["nik"].where(~f16, digits).where(~p15, padded))
-    return out
-
-
-# ---------------------------------------------------------------------------
-# stage 4: format
-# ---------------------------------------------------------------------------
-
-
-def _robust_date_vec(s: pd.Series) -> pd.Series:
-    """normalize_date_robust (date_normalizer.py:354-377): normalized
-    iff confidence > 0.25, else the raw input."""
-    nd = normalize_date_frame(s.fillna(""))
-    good = nd["normalized"].notna() & (nd["confidence"] > 0.25)
-    return _obj(nd["normalized"].where(good, s))
-
-
-def format_frame(v: pd.DataFrame) -> pd.DataFrame:
-    """ktp_extractor.py:750-805 + N37 place fix → flat output columns."""
-    ttl = v["ttl"]
-    s = ttl.fillna("")
-    has_comma = s.str.contains(",", regex=False)
-    parts = s.str.split(",", n=1)
-    head = parts.str[0].str.strip().str.strip(":.,")
-    tail = parts.map(
-        lambda L: L[1].strip() if isinstance(L, list) and len(L) > 1
-        else "")
-    endpat = r"(\d{1,2}[-./\s]+\d{1,2}[-./\s]+\d{2,4})\s*$"
-    m = s.str.extract(endpat, expand=False)
-    before = s.str.replace(endpat, "", regex=True) \
-        .str.strip().str.strip(":.,")
-    whole = s.str.strip().str.strip(":.,")
-
-    tempat = head.where(has_comma, before.where(m.notna(), whole))
-    tempat = _nullify_empty(_obj(tempat.where(s != "", None)))
-    date_part = tail.where(has_comma, m.str.strip())
-    tgl = _robust_date_vec(_obj(date_part))
-    tgl = _obj(tgl.where(date_part.notna() & (s != ""), None))
-
+    tempat = tgl = None
+    ttl = x["Tempat/Tgl Lahir"]
+    if ttl:
+        if "," in ttl:
+            head, tail = ttl.split(",", 1)
+            tempat = head.strip().strip(":.,")
+            tgl = normalize_date_robust(tail.strip())
+        else:
+            m = _TTL_END_DATE.search(ttl)
+            if m:
+                tempat = ttl[:m.start()].strip().strip(":.,")
+                tgl = normalize_date_robust(m.group(1).strip())
+            else:
+                tempat = ttl.strip().strip(":.,")
     # N37: conservative place fix — apply when conf ≥ 0.88 AND changed
-    def place_fix(val: str):
-        corr, conf = _correct_place_one(val)
-        return corr if (conf >= 0.88 and corr != val) else val
+    if tempat:
+        corr, conf = _correct_place_one(tempat)
+        if conf >= 0.88:
+            tempat = corr
 
-    tempat = _map_uniques(tempat, place_fix)
-
-    out = pd.DataFrame(index=v.index)
-    out["document_type"] = "KTP"
-    out["nomor"] = v["nik"]
-    out["nama"] = v["nama"]
-    out["tempat_lahir"] = _nullify_empty(tempat)
-    out["tgl_lahir"] = _nullify_empty(tgl)
-    out["jenis_kelamin"] = v["jenis_kelamin"]
-    out["agama"] = v["agama"]
-    out["status_perkawinan"] = v["status_perkawinan"]
-    out["pekerjaan"] = v["pekerjaan"]
-    out["kewarganegaraan"] = v["kewarganegaraan"]
-    out["alamat.name"] = v["alamat"]
-    out["alamat.rt_rw"] = v["rt_rw"]
-    out["alamat.kel_desa"] = v["kel_desa"]
-    out["alamat.kecamatan"] = v["kecamatan"]
-    out["alamat.kabupaten"] = v["kabupaten"]
-    out["alamat.provinsi"] = v["provinsi"]
-    return out
-
-
-def post_chain(raw: pd.DataFrame) -> pd.DataFrame:
-    """cleanup → repair → crossval → format over raw-field columns
-    (the ``nik`` column already resolved)."""
-    c = cleanup_frame(raw)
-    r = repair_frame(c)
-    x = crossval_frame(r)
-    return format_frame(x)
+    return {
+        "document_type": "KTP",
+        "nomor": x["NIK"],
+        "nama": x["Nama"],
+        "tempat_lahir": tempat or None,
+        "tgl_lahir": tgl or None,
+        "jenis_kelamin": x["Jenis Kelamin"],
+        "agama": x["Agama"],
+        "status_perkawinan": x["Status Perkawinan"],
+        "pekerjaan": x["Pekerjaan"],
+        "kewarganegaraan": x["Kewarganegaraan"],
+        "alamat.name": x["Alamat"],
+        "alamat.rt_rw": x["RT/RW"],
+        "alamat.kel_desa": x["Kel/Desa"],
+        "alamat.kecamatan": x["Kecamatan"],
+        "alamat.kabupaten": x["KABUPATEN"],
+        "alamat.provinsi": x["PROVINSI"],
+    }

@@ -4,10 +4,12 @@ and ``enum_place_correction`` (queries.py). Callers pass a UDF only its
 own field's rows (``when(field == key, raw)``), so other rows cross the
 Arrow boundary as nulls.
 
-Each UDF carries a per-executor dict memo of the values it has seen,
-and calls the extraction kernel's own tier in functions/pandas_ktp.py,
-whose vocabularies are prepared once per process. The canonical-map
-UDFs ship their prepared alias map inside the closure (each is ≪100 KB).
+Each UDF calls the extraction kernel's own tier in
+functions/pandas_ktp.py, whose vocabularies are prepared once per
+process. The place and agama tiers are memoized there; the other UDFs
+carry a per-executor dict memo of the values they have seen. The
+canonical-map UDFs ship their prepared alias map inside the closure
+(each is ≪100 KB).
 """
 
 from __future__ import annotations
@@ -98,23 +100,14 @@ def correct_enum_udf(field_key: str):
     return udf
 
 
-def correct_place_udf(min_confidence: float = 0.82):
+def correct_place_udf():
     """N35 place-name correction (all tiers) — struct<corrected,
-    confidence> (ocr_corrector.py:423-477)."""
-    cache: dict[str, tuple] = {}
+    confidence> (ocr_corrector.py:423-477, min_confidence 0.82)."""
 
     @F.pandas_udf(_CORRECTION_TYPE)
     def udf(s: pd.Series) -> pd.DataFrame:
-        def one(v):
-            if v is None:
-                return (None, 0.0)
-            r = cache.get(v)
-            if r is None:
-                r = PK._correct_place_one(v, min_confidence)
-                cache[v] = r
-            return r
-
-        pairs = [one(v) for v in s]
+        pairs = [(None, 0.0) if v is None else PK._correct_place_one(v)
+                 for v in s]
         return pd.DataFrame(pairs, columns=["corrected", "confidence"])
 
     return udf
@@ -123,19 +116,9 @@ def correct_place_udf(min_confidence: float = 0.82):
 def agama_extract_one_udf():
     """cleanup_data's Agama tier: thefuzz ``process.extractOne`` with the
     default WRatio scorer, accept > 70 (ktp_extractor.py:623-627)."""
-    cache: dict[str, str] = {}
 
     @F.pandas_udf(StringType())
     def udf(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            r = cache.get(v)
-            if r is None:
-                r = PK._agama_one(v)
-                cache[v] = r
-            return r
-
-        return s.map(one)
+        return s.map(lambda v: None if v is None else PK._agama_one(v))
 
     return udf

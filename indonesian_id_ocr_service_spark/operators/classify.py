@@ -1,13 +1,17 @@
-"""C1/C2: document-type detection and OCR-confidence aggregation as pure
-JVM expressions over the packed spans array (SURVEY §2.3).
+"""C1: document-type detection as a JVM expression over the packed
+spans array (SURVEY §2.3), plus its Python twin.
 
-Semantics per /root/reference/document_processor.py:32-71. Runs before
-any Python stage so type routing prunes work: only KTP rows reach the
-KTP extraction UDF, only SIM rows the SIM one — a filter the optimizer
-pushes into the scan-side projection.
+Semantics per /root/reference/document_processor.py:32-64: additive
+keyword and regex scoring, one table of terms for both forms. The
+extraction kernel classifies every document with the Python twin
+inside its per-document loop (operators/unified_extract.py); the JVM
+form serves the ``doc_type`` driver query (queries.py).
 """
 
 from __future__ import annotations
+
+import re
+from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -16,6 +20,7 @@ from ..functions.core import let2
 
 __all__ = ["joined_text", "document_type", "document_type_py"]
 
+#: C1 keyword terms (keyword, points), scored on the upper-cased text
 _SIM_CONTAINS = (("SURAT IZIN MENGEMUDI", 6), ("DRIVING LICENSE", 6),
                  ("BERLAKU SAMPAI", 4), ("KORLANTAS", 3), ("SATPAS", 2),
                  ("NOMOR SIM", 2), ("NO. SIM", 2), ("NO SIM", 2),
@@ -26,32 +31,32 @@ _KTP_CONTAINS = (("KARTU TANDA PENDUDUK", 6), ("KEWARGANEGARAAN", 4),
                  ("PROVINSI", 2), ("KABUPATEN", 2), ("KECAMATAN", 2),
                  ("KEL/DESA", 1), ("KEL./DESA", 1), ("RT/RW", 1),
                  ("GOL. DARAH", 1))
+#: C1 regex terms (pattern, points, scored on the whitespace-free text?)
+_SIM_MATCHES = ((r"\d{4}[-\s]\d{4}[-\s]\d{5,6}", 4, False),
+                (r"\b[1-6]\.\s+[A-Z]", 2, False))
+_KTP_MATCHES = ((r"\b\d{16}\b", 5, True), (r"\bNIK\b", 3, False))
+#: a 16-digit run in the whitespace-free text makes an unscored doc KTP
+_KTP_FALLBACK = r"\d{16}"
+_SCORING = ((_SIM_CONTAINS, _SIM_MATCHES), (_KTP_CONTAINS, _KTP_MATCHES))
 
 
 def document_type_py(texts) -> str:
     """Python twin of the ``document_type`` Column expression (same C1
-    additive scoring), for the Arrow kernel's in-batch dispatch — the
-    kernel must not depend on oracle/*. Parity with both the JVM form
-    and the oracle is asserted in tests/test_scalar_parity.py."""
-    import re as _re
-
+    terms), for the Arrow kernel's in-batch dispatch — the kernel must
+    not depend on oracle/*. Parity with both the JVM form and the
+    oracle is asserted in tests/test_scalar_parity.py."""
     full = " ".join(texts).upper()
-    compact = _re.sub(r"\s+", "", full)
-    sim = sum(p for kw, p in _SIM_CONTAINS if kw in full)
-    if _re.search(r"\d{4}[-\s]\d{4}[-\s]\d{5,6}", full):
-        sim += 4
-    if _re.search(r"\b[1-6]\.\s+[A-Z]", full):
-        sim += 2
-    ktp = sum(p for kw, p in _KTP_CONTAINS if kw in full)
-    if _re.search(r"\b\d{16}\b", compact):
-        ktp += 5
-    if _re.search(r"\bNIK\b", full):
-        ktp += 3
+    compact = re.sub(r"\s+", "", full)
+    sim, ktp = (
+        sum(p for kw, p in contains if kw in full)
+        + sum(p for pat, p, on_compact in matches
+              if re.search(pat, compact if on_compact else full))
+        for contains, matches in _SCORING)
     if sim > ktp and sim >= 2:
         return "SIM"
     if ktp >= 2:
         return "KTP"
-    if _re.search(r"\d{16}", compact):
+    if re.search(_KTP_FALLBACK, compact):
         return "KTP"
     return "UNKNOWN"
 
@@ -71,50 +76,20 @@ def document_type(spans: Column) -> Column:
     """C1 additive keyword scoring (document_processor.py:32-64)."""
 
     def score(full: Column, compact: Column) -> Column:
-        def has(c: Column, kw: str, pts: int) -> Column:
-            return F.when(c.contains(kw), F.lit(pts)).otherwise(F.lit(0))
+        def points(contains, matches) -> Column:
+            terms = [F.when(full.contains(kw), F.lit(p)).otherwise(F.lit(0))
+                     for kw, p in contains]
+            terms += [F.when((compact if on_compact else full).rlike(pat),
+                             F.lit(p)).otherwise(F.lit(0))
+                      for pat, p, on_compact in matches]
+            return reduce(Column.__add__, terms)
 
-        def rx(c: Column, pat: str, pts: int) -> Column:
-            return F.when(c.rlike(pat), F.lit(pts)).otherwise(F.lit(0))
-
-        sim = (
-            has(full, "SURAT IZIN MENGEMUDI", 6)
-            + has(full, "DRIVING LICENSE", 6)
-            + has(full, "BERLAKU SAMPAI", 4)
-            + has(full, "KORLANTAS", 3)
-            + rx(full, r"\d{4}[-\s]\d{4}[-\s]\d{5,6}", 4)
-            + has(full, "SATPAS", 2)
-            + has(full, "NOMOR SIM", 2)
-            + has(full, "NO. SIM", 2)
-            + has(full, "NO SIM", 2)
-            + has(full, "POLDA", 1)
-            + has(full, "POLRES", 1)
-            + has(full, "METRO JAYA", 1)
-            + has(full, "METROJAYA", 1)
-            + rx(full, r"\b[1-6]\.\s+[A-Z]", 2)
-        )
-        ktp = (
-            has(full, "KARTU TANDA PENDUDUK", 6)
-            + has(full, "KEWARGANEGARAAN", 4)
-            + has(full, "STATUS PERKAWINAN", 4)
-            + has(full, "BERLAKU HINGGA", 3)
-            + rx(compact, r"\b\d{16}\b", 5)
-            + has(full, "PROVINSI", 2)
-            + has(full, "KABUPATEN", 2)
-            + has(full, "KECAMATAN", 2)
-            + rx(full, r"\bNIK\b", 3)
-            + has(full, "KEL/DESA", 1)
-            + has(full, "KEL./DESA", 1)
-            + has(full, "RT/RW", 1)
-            + has(full, "GOL. DARAH", 1)
-        )
         return let2(
-            sim,
-            ktp,
+            *(points(contains, matches) for contains, matches in _SCORING),
             lambda s, k: (
                 F.when((s > k) & (s >= 2), F.lit("SIM"))
                 .when(k >= 2, F.lit("KTP"))
-                .when(compact.rlike(r"\d{16}"), F.lit("KTP"))
+                .when(compact.rlike(_KTP_FALLBACK), F.lit("KTP"))
                 .otherwise(F.lit("UNKNOWN"))
             ),
         )

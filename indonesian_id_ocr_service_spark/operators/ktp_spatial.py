@@ -24,8 +24,8 @@ then the repair tiers in the reference's lazy order
 (document_processor.py:104-135) — the best candidate of the cleaned
 value, and the N12 spatial rescue (nik_fuzzy.py:168-196) only when
 that fails. Each tier runs at most once per document, on the per-value
-candidate engine in functions/pandas_ktp; the batch post-chain receives
-the resolved value.
+candidate engine in functions/pandas_ktp; the per-document finish
+(``pandas_ktp.finish_ktp``) receives the resolved value.
 """
 
 from __future__ import annotations
@@ -99,9 +99,8 @@ def _classify_span(text_raw: str) -> tuple[str, int] | None:
 def _extract_one_doc(texts: list[str], y0: np.ndarray, y1: np.ndarray,
                      x0: np.ndarray, x1: np.ndarray,
                      methods_out: dict | None = None) -> dict:
-    """K1-K11 over one document's text spans. Returns
-    {canonical_label: value} plus '_rescue' when the NIK needs tier 3.
-    When ``methods_out`` is a dict it is filled with the per-field
+    """K1-K11 over one document's text spans → {canonical_label:
+    value}. When ``methods_out`` is a dict it is filled with the per-field
     extraction-method label — the reference's trace vocabulary
     (ktp_extractor.py:344-347, debug_ktp.py:127-133)."""
     meth = methods_out if methods_out is not None else {}

@@ -28,8 +28,7 @@ from ..dictionaries import SIM_ANCHORS as ANCHORS
 from ..dictionaries import SIM_FAST_CITIES as FAST_CITIES
 from ..dictionaries import SIM_REGIONS as INDONESIAN_REGIONS
 from ..functions import fuzzy
-from ..functions.pandas_ktp import OCCUPATION
-from ..oracle import scalars as S
+from ..functions.pandas_ktp import OCCUPATION, normalize_date_robust
 
 #: flat alias list, longest-first (sim_extractor.py:45-48)
 ALL_PEKERJAAN_TERMS: list[str] = sorted(
@@ -228,7 +227,7 @@ def _parse_ttl(text: str, data: dict) -> None:
     m = re.search(r"(\d{1,2})[\s\-./]+(\d{1,2})[\s\-./]+(\d{2,4})", text)
     if m:
         d, mo, y = m.groups()
-        normalized = S.normalize_date_robust(
+        normalized = normalize_date_robust(
             f"{d.zfill(2)}-{mo.zfill(2)}-{y}")
         if normalized and re.match(r"^\d{2}-\d{2}-\d{4}$", normalized):
             data["Tanggal Lahir"] = normalized
@@ -243,7 +242,7 @@ def _parse_ttl(text: str, data: dict) -> None:
         parts = text.split(",", 1)
         data["Tempat Lahir"] = parts[0].strip()
         if len(parts) > 1:
-            data["Tanggal Lahir"] = S.normalize_date_robust(parts[1].strip())
+            data["Tanggal Lahir"] = normalize_date_robust(parts[1].strip())
     else:
         place = re.sub(r"\s+\d.*$", "", text).strip()
         data["Tempat Lahir"] = place if len(place) >= 2 else text
@@ -597,7 +596,7 @@ def post_process_common(out: dict) -> dict:
         m = re.search(r"(\d{1,2})[\s\-./]+(\d{1,2})[\s\-./]+(\d{2,4})", val)
         if m:
             d, mo, y = m.groups()
-            normalized = S.normalize_date_robust(
+            normalized = normalize_date_robust(
                 f"{d.zfill(2)}-{mo.zfill(2)}-{y}")
             if normalized and re.match(r"^\d{2}-\d{2}-\d{4}$", normalized):
                 out["Tanggal Lahir"] = normalized
@@ -609,7 +608,7 @@ def post_process_common(out: dict) -> dict:
                 parts = val.split(",", 1)
                 out["Tempat Lahir"] = parts[0].strip()
                 if len(parts) > 1:
-                    out["Tanggal Lahir"] = S.normalize_date_robust(
+                    out["Tanggal Lahir"] = normalize_date_robust(
                         parts[1].strip())
             else:
                 out["Tempat Lahir"] = val
@@ -617,14 +616,14 @@ def post_process_common(out: dict) -> dict:
             parts = val.split(",", 1)
             out["Tempat Lahir"] = parts[0].strip()
             if len(parts) > 1:
-                out["Tanggal Lahir"] = S.normalize_date_robust(
+                out["Tanggal Lahir"] = normalize_date_robust(
                     parts[1].strip())
         else:
             out["Tempat Lahir"] = val
         del out["Tempat & Tgl. Lahir"]
 
     if out.get("Tanggal Lahir"):
-        out["Tanggal Lahir"] = S.normalize_date_robust(out["Tanggal Lahir"])
+        out["Tanggal Lahir"] = normalize_date_robust(out["Tanggal Lahir"])
 
     if out.get("Tempat Lahir"):
         tl = out["Tempat Lahir"]
@@ -745,7 +744,7 @@ def _flatten_sim(out: dict) -> dict:
         "nomor": out.get("Nomor SIM"),
         "nama": out.get("Nama"),
         "tempat_lahir": out.get("Tempat Lahir"),
-        "tgl_lahir": S.normalize_date_robust(tgl) if tgl else None,
+        "tgl_lahir": normalize_date_robust(tgl) if tgl else None,
         "jenis_kelamin": out.get("Jenis Kelamin"),
         "pekerjaan": out.get("Pekerjaan"),
         "alamat.name": addr.get("name"),

@@ -11,13 +11,12 @@ dispatches per row on the document type keeps the whole pipeline a
 single linear narrow chain: scan → kernel input projection → this
 kernel → write, at full parallelism with zero duplicated subtrees.
 
-Per batch: the genuinely sequential per-document work runs in a Python
-loop (classification, the KTP spatial claiming in ``ktp_spatial``, the
-SIM state machines in ``sim_core``, and each KTP document's NIK
-cleanup and repair tiers in ``ktp_spatial.resolve_nik``); the rest of
-the KTP cleanup → repair → crossval → format chain then runs
-VECTORIZED over the batch's KTP subset
-(``functions/pandas_ktp.post_chain``), and ``_out_spans``
+Per batch, one Python loop takes each document from spans to final
+output fields: classification, then for KTP the spatial claiming
+(``ktp_spatial``), the NIK cleanup and repair tiers
+(``ktp_spatial.resolve_nik``) and the cleanup → repair → crossval →
+format finish (``functions/pandas_ktp.finish_ktp``), for SIM the
+state machines (``sim_core.process_sim_doc``). ``_out_spans`` then
 lays the batch's output spans out as flat Arrow children. The
 span-equality gate checks the result against the independent
 pure-Python oracle (``oracle/ktp.py``).
@@ -32,12 +31,12 @@ of the kernel.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from ..dictionaries import OUTPUT_FIELD_ORDER
+from ..functions.pandas_ktp import finish_ktp
 from . import sim_core
 from .classify import document_type_py as identify_document_type
-from .ktp_spatial import FIELD_COLS, _extract_one_doc, resolve_nik
+from .ktp_spatial import _extract_one_doc, resolve_nik
 
 #: the extracted span sequence of one document (FIXTURES.md §1)
 OUT_SPAN_TYPE = (
@@ -117,10 +116,6 @@ def full_kernel_batch_arrow(batches):
     objects are the text strings the state machines need anyway."""
     import pyarrow as pa
 
-    from ..functions import pandas_ktp as PK
-
-    ktp_labels = list(FIELD_COLS)
-    raw_cols = list(FIELD_COLS.values())
     out_names = (["doc_id", "doc_type", "media_refs"]
                  + list(OUT_COLS.values())
                  + ["field_methods", "out_spans"])
@@ -205,9 +200,7 @@ def full_kernel_batch_arrow(batches):
         doc_types: list = []
         medias_out: list = []
         methods_out: list = []
-        raw_rows: list = []            # KTP-subset raw fields
-        ktp_pos: list = []             # row index of each raw_rows entry
-        sim_cells: dict = {}           # row index -> final SIM values
+        field_vals = [[None] * n for _ in _OUT_FIELDS]
 
         for i in range(n):
             texts, idx, media, span_a, txt_js = prim_view(i)
@@ -245,40 +238,24 @@ def full_kernel_batch_arrow(batches):
                     return at, sim_items(at, ai, a_y, a_x0, a_h)
 
             methods: dict = {}
+            result = None
             if doc_type == "KTP":
                 y0 = gy[idx]
                 y1 = y0 + gh[idx]
                 raw = _extract_one_doc(texts, y0, y1, gx0[idx],
                                        gx1[idx], methods_out=methods)
                 raw["NIK"] = resolve_nik(texts, y0, y1, raw.get("NIK"))
-                ktp_pos.append(i)
-                raw_rows.append([raw.get(lb) for lb in ktp_labels])
+                result = finish_ktp(raw)
             elif doc_type == "SIM":
                 result = sim_core.process_sim_doc(
                     texts, sim_items(texts, idx, gy, gx0, gh),
                     ocr_conf=ocr_conf, alt_supplier=alt_supplier)
-                sim_cells[i] = [result.get(f) for f in _OUT_FIELDS]
+            if result:
+                for col, f in zip(field_vals, _OUT_FIELDS):
+                    col[i] = result.get(f)
             doc_types.append(doc_type)
             medias_out.append(media)
             methods_out.append(methods)
-
-        # vectorized KTP post-chain over the batch's KTP subset
-        field_vals = [[None] * n for _ in _OUT_FIELDS]
-        for i, vals in sim_cells.items():
-            for f_i, v in enumerate(vals):
-                field_vals[f_i][i] = v
-        if raw_rows:
-            raw_df = pd.DataFrame(raw_rows, columns=raw_cols)
-            final = PK.post_chain(raw_df)
-            for f_i, f in enumerate(_OUT_FIELDS):
-                # NaN → None: a batch whose KTP subset has a field
-                # all-missing comes back float64 from pandas, and
-                # pa.array(..., pa.string()) rejects numpy.float64
-                col = [None if v is None
-                       or (isinstance(v, float) and v != v)
-                       else v for v in final[f].values]
-                for p, v in zip(ktp_pos, col):
-                    field_vals[f_i][p] = v
 
         yield pa.RecordBatch.from_arrays(
             [pa.array(doc_ids, pa.string()),

@@ -11,10 +11,13 @@ pipeline would process one image's OCR items:
 plus C1 document-type detection for routing. Citations are file:line
 into /root/reference/.
 
-The Spark pipeline implements the same semantics distributed (grouped
-pandas UDF for the geometric stage, JVM expressions elsewhere); the
-pytest gate asserts per-document span-sequence equality
-(kind, text, media_ref, order) between the two.
+The Spark pipeline implements the same semantics inside one mapInArrow
+kernel (operators/unified_extract.py: ``ktp_spatial`` for the
+geometric stage and the NIK tiers, ``pandas_ktp.finish_ktp`` for the
+rest), written independently of this module except for the shared
+date chain (``pandas_ktp.normalize_date``, re-imported by
+``scalars``); the pytest gate asserts per-document span-sequence
+equality (kind, text, media_ref, order) between the two.
 """
 
 from __future__ import annotations

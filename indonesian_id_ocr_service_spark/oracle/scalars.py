@@ -1,36 +1,43 @@
-"""Scalar-level oracle: date normalization, NIK repair, field correction.
+"""Scalar-level oracle: NIK repair, field correction, and the date
+normalization chain.
 
 Implements the *semantics* of the reference's scalar modules
-(/root/reference/date_normalizer.py, nik_fuzzy.py, ocr_corrector.py,
-ktp_extractor.py cleanup helpers) as compact pure functions. The Spark
-engine implements the same semantics as JVM column expressions /
-pandas UDFs; the pytest suite asserts equality between the two on golden
-pairs and on the synthetic corpus. Citations are file:line into
+(/root/reference/nik_fuzzy.py, ocr_corrector.py, ktp_extractor.py
+cleanup helpers) as compact pure functions. The Spark engine implements
+the same semantics as JVM column expressions, pandas UDFs and the
+extraction kernel's per-document tiers; the pytest suite asserts
+equality between them on golden pairs and on the synthetic corpus. The
+date chain (date_normalizer.py) is the kernel's own scalar chain,
+re-imported from functions/pandas_ktp.py and checked against two
+independent implementations instead. Citations are file:line into
 /root/reference/.
 """
 
 from __future__ import annotations
 
 import re
-from datetime import date as _date
 
 from ..dictionaries import (
-    DATE_KEEP,
-    DATE_TO_DIGIT,
     FIELD_ENUMS,
     INDONESIAN_PLACES,
     KEWARGANEGARAAN_CANONICAL,
-    MIN_BIRTH_YEAR,
-    MAX_BIRTH_YEAR,
     NIK_INSERT_POSITIONS,
     PEKERJAAN_CANONICAL,
-    REFERENCE_YEAR,
     STATUS_PERKAWINAN_CANONICAL,
     TO_DIGIT,
     TO_TEXT,
     VALID_PROVINCE_CODES,
 )
 from ..functions import fuzzy
+
+# date normalization (N14-N24): the kernel's chain, see above
+from ..functions.pandas_ktp import (  # noqa: F401
+    normalize_date,
+    normalize_date_robust,
+    normalize_place_date,
+    split_place_date,
+    sub_date_chars,
+)
 
 # ---------------------------------------------------------------------------
 # Character substitution (N1-N4)
@@ -46,18 +53,6 @@ def sub_to_text(text: str) -> str:
     """Digits→letters after upper-casing, TEXT context
     (ocr_corrector.py:276-283)."""
     return "".join(TO_TEXT.get(c, c) for c in text.upper())
-
-
-def sub_date_chars(text: str) -> str:
-    """Date-context substitution: keep digits and ``-./ ,``
-    (date_normalizer.py:335-344)."""
-    out = []
-    for ch in text:
-        if ch.isdigit() or ch in DATE_KEEP:
-            out.append(ch)
-        else:
-            out.append(DATE_TO_DIGIT.get(ch, ch))
-    return "".join(out)
 
 
 def sub_context_aware(text: str) -> str:
@@ -76,191 +71,6 @@ def sub_context_aware(text: str) -> str:
         else:
             out.append(token.upper())
     return "".join(out)
-
-
-# ---------------------------------------------------------------------------
-# Date normalization (N14-N24) — date_normalizer.py semantics
-# ---------------------------------------------------------------------------
-
-
-def _repair_year(yr: int) -> int | None:
-    """First single-digit replacement (position asc, digit asc) landing in
-    [MIN_BIRTH_YEAR, REFERENCE_YEAR] (date_normalizer.py:238-258)."""
-    s = str(yr).zfill(4)
-    for pos in range(4):
-        for repl in "0123456789":
-            if repl == s[pos]:
-                continue
-            cand = int(s[:pos] + repl + s[pos + 1:])
-            if MIN_BIRTH_YEAR <= cand <= REFERENCE_YEAR:
-                return cand
-    return None
-
-
-def _build_date(d_s: str, mo_s: str, yr_s: str, conf: float, method: str):
-    """Validate components → dict or None (date_normalizer.py:264-329)."""
-    try:
-        d, mo, yr = int(d_s.strip()), int(mo_s.strip()), int(yr_s.strip())
-    except ValueError:
-        return None
-    if d < 1 or d > 31:
-        if 1 <= mo <= 31 and 1 <= d <= 12:
-            d, mo = mo, d
-            conf *= 0.80
-        else:
-            return None
-    if mo < 1 or mo > 12:
-        return None
-    if yr < 100:
-        yr = (1900 + yr) if yr > 25 else (2000 + yr)
-        conf *= 0.85
-    if not (MIN_BIRTH_YEAR <= yr <= REFERENCE_YEAR):
-        rep = _repair_year(yr)
-        if rep is not None:
-            yr = rep
-            method = "year_repair_" + method
-            conf *= 0.80
-        elif REFERENCE_YEAR < yr <= MAX_BIRTH_YEAR:
-            conf *= 0.75
-        else:
-            conf *= 0.15
-    try:
-        _date(yr, mo, d)
-    except ValueError:
-        return None
-    return {
-        "normalized": f"{d:02d}-{mo:02d}-{yr:04d}",
-        "day": d, "month": mo, "year": yr,
-        "confidence": float(conf), "method": method,
-    }
-
-
-def _collapse_seps(text: str) -> str:
-    clean = re.sub(r"[-/. ]{2,}", "-", text)
-    return re.sub(r"[-/. ]", "-", clean)
-
-
-def _strategy_standard(text: str):
-    clean = _collapse_seps(text)
-    m = re.match(r"^(\d{1,2})-(\d{1,2})-(\d{4})$", clean.strip())
-    if m:
-        return _build_date(m.group(1), m.group(2), m.group(3), 0.97,
-                           "strict_dd_mm_yyyy")
-    m = re.search(r"\b(\d{1,2})-(\d{1,2})-(\d{4})\b", clean)
-    if m:
-        return _build_date(m.group(1), m.group(2), m.group(3), 0.90,
-                           "embedded_dd_mm_yyyy")
-    return None
-
-
-def _strategy_charsub(text: str):
-    sub = sub_date_chars(text)
-    if sub == text:
-        return None
-    r = _strategy_standard(sub)
-    if r:
-        r["confidence"] *= 0.88
-        r["method"] = "char_sub_" + r["method"]
-    return r
-
-
-def _strategy_3digit_year(text: str):
-    clean = _collapse_seps(sub_date_chars(text))
-    m = re.search(r"(\d{1,2})-(\d{1,2})-(\d{3})$", clean.strip())
-    if not m:
-        return None
-    d_s, mo_s, y3 = m.group(1), m.group(2), m.group(3)
-    yi = int(y3)
-    if 900 <= yi <= 999:
-        yf, conf = "1" + y3, 0.75
-    elif 0 <= yi <= 25:
-        yf, conf = "20" + y3, 0.70
-    elif 26 <= yi <= 99:
-        yf, conf = "19" + y3, 0.65
-    elif 100 <= yi <= 199:
-        yf, conf = "1" + y3 + "0", 0.50
-    else:
-        return None
-    return _build_date(d_s, mo_s, yf, conf, "3digit_year_recon")
-
-
-def _strategy_7digit(text: str):
-    digits = re.sub(r"\D", "", sub_date_chars(text))
-    if len(digits) != 7:
-        return None
-    r = _strategy_3digit_year(f"{digits[0:2]}-{digits[2:4]}-{digits[4:7]}")
-    if r and r["confidence"] > 0:
-        r["confidence"] *= 0.82
-        r["method"] = "7digit_" + r["method"]
-        return r
-    r2 = _build_date("0" + digits[0], digits[1:3], digits[3:7], 0.45,
-                     "7digit_alt_interp")
-    return r2 if (r2 and r2["confidence"] > 0) else None
-
-
-def _strategy_permissive(text: str):
-    sub = sub_date_chars(text)
-    m = re.search(r"(\d{1,2})\s*[-/.]\s*(\d{1,2})\s*[-/.]\s*(\d{2,4})", sub)
-    if not m:
-        return None
-    d_s, mo_s, y_s = m.group(1), m.group(2), m.group(3)
-    if len(y_s) == 2:
-        y_s = ("19" + y_s) if int(y_s) > 25 else ("20" + y_s)
-    return _build_date(d_s, mo_s, y_s, 0.55, "permissive_scan")
-
-
-_STRATEGIES = (
-    _strategy_standard,
-    _strategy_charsub,
-    _strategy_3digit_year,
-    _strategy_7digit,
-    _strategy_permissive,
-)
-
-
-def normalize_date(raw: str):
-    """Full strategy chain (date_normalizer.py:71-92). Returns dict with
-    confidence 0.0 when all strategies fail."""
-    if not raw or not raw.strip():
-        return {"normalized": None, "day": None, "month": None, "year": None,
-                "confidence": 0.0, "method": "empty_input"}
-    text = raw.strip()
-    for strat in _STRATEGIES:
-        r = strat(text)
-        if r and r["confidence"] > 0.0:
-            return r
-    return {"normalized": None, "day": None, "month": None, "year": None,
-            "confidence": 0.0, "method": "all_strategies_failed"}
-
-
-def normalize_date_robust(raw: str) -> str:
-    """Facade: normalized iff conf > 0.25, else the original raw
-    (date_normalizer.py:354-377)."""
-    if not raw:
-        return raw
-    r = normalize_date(raw)
-    if r["normalized"] and r["confidence"] > 0.25:
-        return r["normalized"]
-    return raw
-
-
-def split_place_date(raw: str):
-    """(place, date_raw) split of a Tempat/Tgl-Lahir string
-    (date_normalizer.py:94-120)."""
-    if not raw:
-        return None, ""
-    if "," in raw:
-        head, tail = raw.split(",", 1)
-        return (head.strip().strip(".:- ") or None), tail.strip()
-    m = re.search(r"(\d{1,2}[\s\./\-]+\d{1,2}[\s\./\-]+\d{2,4})", raw)
-    if m:
-        return (raw[: m.start()].strip().strip(".:- ") or None), m.group(1)
-    return None, raw
-
-
-def normalize_place_date(raw: str):
-    place, date_raw = split_place_date(raw)
-    return place, normalize_date(date_raw)
 
 
 # ---------------------------------------------------------------------------

@@ -3,9 +3,10 @@
 
 The SIM path is dominated by sequential state machines (SURVEY §2.6);
 the kernel is one implementation exercised by golden unit tests and by
-the end-to-end span-equality gate (the Spark branch drives the same
-kernel through mapInPandas — the gate validates classification routing,
-geometry plumbing, Arrow transfer and span assembly).
+the end-to-end span-equality gate (the mapInArrow extraction kernel
+calls the same ``sim_core.process_sim_doc`` — the gate validates
+classification routing, geometry plumbing, Arrow transfer and span
+assembly).
 """
 
 from __future__ import annotations

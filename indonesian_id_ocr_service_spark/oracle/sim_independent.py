@@ -13,17 +13,18 @@ Written directly from the reference text (sim_extractor.py:106-153,
 with the production kernel are pure data (``dictionaries.SIM_ANCHORS``
 / ``SIM_REGIONS`` / ``SIM_FAST_CITIES`` / ``PEKERJAAN_CANONICAL`` —
 vocabularies the engine must reproduce exactly) and
-``normalize_date_robust`` (the date chain, which carries its own
-three-way parity gate: JVM expressions vs Arrow kernel vs the pure
-oracle, tests/test_date_parity.py).
+``normalize_date_robust`` (the scalar date chain in
+``functions/pandas_ktp.py``, which carries its own parity gates: the
+vectorized ``pandas_dates`` chain, tests/test_property_chain_parity.py,
+and the JVM expressions, tests/test_scalar_parity.py).
 
 Purpose: ``oracle/sim.py`` wraps the same ``sim_core`` kernel the Spark
 branch drives, so span-equality alone validated routing/geometry/Arrow
 plumbing but not extraction semantics. ``tests/test_sim_parity.py``
 asserts 0 mismatches between the two implementations — end-to-end over
 an adversarial generated corpus and per building block over fuzzed
-inputs — the same de-port pattern as ``functions/pandas_ktp.py`` for
-the KTP chain.
+inputs — the same de-port pattern as ``oracle/ktp.py`` for the KTP
+chain.
 """
 
 from __future__ import annotations

@@ -8,7 +8,7 @@ no Exchange:
         included as stored
       → ONE mapInArrow kernel (operators.unified_extract): per document
         classify (C1, incl. the C3 retry) → KTP spatial extraction +
-        vectorized post-chain, or the SIM state machines → one wide row
+        the per-document finish, or the SIM state machines → one wide row
         of final output fields + per-field provenance + the output
         span sequence (``out_spans``, or the UNKNOWN error span + media
         pass-through)

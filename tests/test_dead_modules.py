@@ -6,7 +6,8 @@ the benchmark, ``__spark_entry__.py`` and the bench scripts:
 - every top-level function or class of the package outside ``oracle/``
   must be referenced by name in one of those files. ``oracle/`` holds
   the reference implementations and keys the benchmark's cached
-  universe, so it is left out."""
+  universe, so it is left out;
+- no package module outside ``oracle/`` may import ``oracle/``."""
 
 from __future__ import annotations
 
@@ -128,3 +129,18 @@ def test_only_the_oracle_names_the_plain_extract_one():
             or (isinstance(node, ast.alias) and node.name == "extract_one")
             for node in ast.walk(_parse(path))))
     assert not named, f"modules outside oracle/ naming extract_one: {named}"
+
+
+def test_only_the_oracle_imports_the_oracle():
+    """``oracle/`` is the tests' independent reference and never runs on
+    executors: a package module outside it that imports any of it
+    makes the oracle check code it is part of."""
+    oracle = os.path.join(REPO, PKG, "oracle") + os.sep
+    pkg_files = _package_files()
+    modules = {_module_name(p) for p in pkg_files}
+    importers = sorted(
+        _module_name(path) for path in pkg_files
+        if not path.startswith(oracle) and any(
+            m == f"{PKG}.oracle" or m.startswith(f"{PKG}.oracle.")
+            for m in _imports(path, modules)))
+    assert not importers, f"modules outside oracle/ importing it: {importers}"

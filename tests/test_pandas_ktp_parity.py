@@ -1,13 +1,12 @@
-"""Scalar post-chain parity: the kernel's post-chain — the per-document
-NIK resolution (ktp_spatial.resolve_nik) feeding the vectorized pandas
-chain (functions/pandas_ktp) — must match the pure-Python oracle chain
-field-for-field on identical raw inputs. The span-equality suite checks
-the same chain end to end."""
+"""Scalar post-chain parity: the kernel's KTP finish — the per-document
+NIK resolution (ktp_spatial.resolve_nik) feeding the per-document
+cleanup → repair → crossval → format (``pandas_ktp.finish_ktp``) — must
+match the pure-Python oracle chain field-for-field on identical raw
+inputs. The span-equality suite checks the same chain end to end."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from indonesian_id_ocr_service_spark.corpus.generator import generate_doc
 from indonesian_id_ocr_service_spark.functions import pandas_ktp as PK
@@ -34,24 +33,23 @@ def test_post_chain_matches_oracle_chain():
         raw = O.post_process(O.filter_spatial_outliers(items))
         expected.append(O.format_output(O.cross_validate(
             O.repair(O.cleanup_data(raw), items))))
-        row = {col: raw.get(lab) for lab, col in FIELD_COLS.items()}
+        row = {lab: raw.get(lab) for lab in FIELD_COLS}
         texts = [s["text"] for s in spans if s["kind"] == "text"]
         y0 = np.array([g["y"] for s, g in zip(spans, geom)
                        if s["kind"] == "text"], float)
         y1 = np.array([g["y"] + g["h"] for s, g in zip(spans, geom)
                        if s["kind"] == "text"], float)
-        row["nik"] = resolve_nik(texts, y0, y1, raw.get("NIK"))
+        row["NIK"] = resolve_nik(texts, y0, y1, raw.get("NIK"))
         rows.append(row)
         if len(rows) >= N_DOCS:
             break
 
-    got = PK.post_chain(pd.DataFrame(rows))
     bad = []
     for i in range(len(rows)):
-        for f in got.columns:
+        got = PK.finish_ktp(rows[i])
+        for f in got:
             ev = expected[i].get(f) or None
-            gv = got.iloc[i][f]
-            gv = gv if gv is not None else None
+            gv = got[f]
             if ev != gv:
                 bad.append((i, f, ev, gv))
     assert not bad, f"{len(bad)} field mismatches, first: {bad[:5]}"
@@ -78,15 +76,15 @@ def test_post_chain_adversarial_values():
         raw_l = {label_map[k]: v for k, v in raw.items()}
         expected.append(O.format_output(O.cross_validate(
             O.repair(O.cleanup_data(dict(raw_l)), []))))
-        row = {col: raw_l.get(lab) for lab, col in FIELD_COLS.items()}
-        row["nik"] = resolve_nik([], np.empty(0), np.empty(0),
+        row = {lab: raw_l.get(lab) for lab in FIELD_COLS}
+        row["NIK"] = resolve_nik([], np.empty(0), np.empty(0),
                                  raw_l.get("NIK"))
         rows.append(row)
     _ = labels
-    got = PK.post_chain(pd.DataFrame(rows))
     for i in range(len(rows)):
-        for f in got.columns:
+        got = PK.finish_ktp(rows[i])
+        for f in got:
             ev = expected[i].get(f) or None
-            gv = got.iloc[i][f]
-            assert ev == (gv if gv is not None else None), (
-                f"case {i} field {f}: oracle={ev!r} pandas={gv!r}")
+            gv = got[f]
+            assert ev == gv, (
+                f"case {i} field {f}: oracle={ev!r} kernel={gv!r}")

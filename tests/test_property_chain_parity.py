@@ -1,7 +1,7 @@
 """Property-based parity (hypothesis): the kernel's implementations —
-the vectorized pandas stages and the per-value NIK candidate engine —
-must match the pure-Python oracle on arbitrary noisy inputs — not just
-the generator's noise distribution."""
+the vectorized date chain, the per-value NIK candidate engine and the
+DOB padding — must match the pure-Python oracle on arbitrary noisy
+inputs — not just the generator's noise distribution."""
 
 from __future__ import annotations
 
@@ -54,19 +54,25 @@ def test_nik_candidate_engine_matches_oracle(raw):
         assert abs(c - exp["confidence"]) < 1e-12, raw
 
 
+_DIGITS = "0123456789"
+#: a random 15-digit string and DOB segment (mostly no candidate), or a
+#: 16-digit NIK with one digit dropped and its own DOB segment (the
+#: case the padding exists for)
+_PAD_CASES = st.one_of(
+    st.tuples(st.text(alphabet=_DIGITS, min_size=15, max_size=15),
+              st.text(alphabet=_DIGITS, min_size=6, max_size=6)),
+    st.builds(lambda nik, pos: (nik[:pos] + nik[pos + 1:], nik[6:12]),
+              st.text(alphabet=_DIGITS, min_size=16, max_size=16),
+              st.integers(0, 15)),
+)
+
+
 @settings(max_examples=200, deadline=None)
-@given(st.text(alphabet="0123456789", min_size=15, max_size=15),
-       st.text(alphabet="0123456789", min_size=6, max_size=6))
-def test_pad_nik_dob_matches_oracle(d15, exp_dob):
-    got = PK._pad_nik_dob_vec(pd.Series([d15], dtype=object),
-                              pd.Series([exp_dob], dtype=object)).iloc[0]
+@given(_PAD_CASES)
+# repairs that insert a digit ≥ 6 inside the DOB segment (positions 6-11)
+@example(("073662585171286", "585178"))
+@example(("622519961839145", "961983"))
+def test_pad_nik_dob_matches_oracle(case):
+    d15, exp_dob = case
+    got = PK._pad_nik_dob_one(d15, exp_dob)
     assert got == O.pad_nik_with_dob(d15, exp_dob), (d15, exp_dob)
-
-
-@settings(max_examples=200, deadline=None)
-@given(_OCRISH)
-def test_split_place_date_matches_oracle(raw):
-    p, d = PK._split_place_date_vec(pd.Series([raw], dtype=object))
-    ep, ed = O.split_place_date(raw)
-    assert (p.iloc[0] or None) == (ep or None), raw
-    assert (d.iloc[0] or "") == (ed or ""), raw
