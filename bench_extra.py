@@ -10,6 +10,11 @@ Usage:
 
 With --noop, uses df.write.format("noop") instead of the xxhash sum
 (guide §1.4) to time computation without the collect.
+
+The session follows the host as perfbench sizes it: local[N] with N =
+SPARK_GRAFT_CPUS, else the cores this process may run on, and a driver
+heap of a quarter of RAM, 1-8 GB (SPARK_GRAFT_DRIVER_MEM overrides it).
+--sf defaults to SPARK_GRAFT_SF_DIR, else the sf0.1 testdata, as in bench.py.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from indonesian_id_ocr_service_spark.session import build_session  # noqa: E402
+from perfbench.common import cores, driver_mem  # noqa: E402
 
 
 def _force(df) -> None:
@@ -39,7 +45,7 @@ def _noop(df) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--explain", default=None,
                     help="dir to write <query>.txt explain output")
@@ -47,8 +53,8 @@ def main() -> None:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    cpus = cores()
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", driver_mem())
     spark = build_session(
         app_name="bench_extra",
         master=f"local[{cpus}]",

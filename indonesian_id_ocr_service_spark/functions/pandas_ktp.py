@@ -26,11 +26,13 @@ batch's agama, status, pekerjaan and kewarganegaraan values are
 distinct). The ``__spark_entry__`` queries' residue UDFs
 (pandas_tiers.py) call the same tiers.
 
-The date chain (N14-N24, date_normalizer.py) lives here too; the
-oracle re-imports it, and it is checked against two independent
-implementations: the vectorized ``pandas_dates.normalize_date_frame``
-(tests/test_property_chain_parity.py) and the JVM expressions in
-``dates.py`` (tests/test_scalar_parity.py).
+The date chain (N14-N24, date_normalizer.py) lives here too. It is
+the one Python date chain: the kernel's TTL repair, SIM's
+``normalize_date_robust`` and the ``__spark_entry__`` date queries'
+residue rows (``queries._date_query``) run it, and the oracle
+re-imports it. It is checked against the independent JVM expressions
+in ``dates.py`` on golden and seeded random inputs
+(tests/test_scalar_parity.py).
 
 The ``NIK`` field arrives resolved: the kernel runs NIK cleanup and
 the three repair tiers once per KTP document

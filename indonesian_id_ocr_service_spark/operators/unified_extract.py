@@ -122,8 +122,10 @@ def full_kernel_batch_arrow(batches):
     out_type_sim = pa.map_(pa.string(), pa.string())
 
     def list_parts(col):
+        # a zero-copy slice's child array spans its whole parent table:
+        # keep only this batch's elements and rebase the offsets on them
         off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        return off, col.values
+        return off - off[0], col.values.slice(off[0], off[-1] - off[0])
 
     for rb in batches:
         n = rb.num_rows

@@ -14,9 +14,9 @@ with the production kernel are pure data (``dictionaries.SIM_ANCHORS``
 / ``SIM_REGIONS`` / ``SIM_FAST_CITIES`` / ``PEKERJAAN_CANONICAL`` —
 vocabularies the engine must reproduce exactly) and
 ``normalize_date_robust`` (the scalar date chain in
-``functions/pandas_ktp.py``, which carries its own parity gates: the
-vectorized ``pandas_dates`` chain, tests/test_property_chain_parity.py,
-and the JVM expressions, tests/test_scalar_parity.py).
+``functions/pandas_ktp.py``, which carries its own parity gate against
+the independent JVM expressions in ``functions/dates.py``,
+tests/test_scalar_parity.py).
 
 Purpose: ``oracle/sim.py`` wraps the same ``sim_core`` kernel the Spark
 branch drives, so span-equality alone validated routing/geometry/Arrow

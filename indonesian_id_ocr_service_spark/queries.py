@@ -240,17 +240,14 @@ _STRICT_SEP = r"^(\d{1,2})[-/. ](\d{1,2})[-/. ](\d{4})$"
 
 
 def _date_query(df: DataFrame, raw: F.Column,
-                with_method: bool = True,
-                n_rows: int | None = None) -> DataFrame:
-    """normalize_date over a raw column via the vectorized Arrow kernel
-    (functions/pandas_dates.py — the pipeline's scale path; the JVM
-    let-tree in dates.py is the parity-tested expression form, and its
-    higher-order functions run interpreted at ~10 core-ms/row here).
+                with_method: bool = True) -> DataFrame:
+    """normalize_date over a raw column: JVM fast branches, and the
+    extraction kernel's scalar chain (``pandas_ktp.normalize_date``)
+    for the residue rows only. (The JVM let-tree in dates.py is the
+    parity-tested expression form, but its higher-order functions run
+    interpreted at ~10 core-ms/row here.)
 
-    JVM fast paths, with only true residue crossing into Python (the
-    earlier form shipped EVERY row through the Arrow boundary and
-    handled the split inside the kernel — at 1.5M rows the transfer
-    dominated even when the kernel had nothing to do):
+    JVM fast branches, computed per row before the Python stage:
 
     - strict branch: trimmed single-separator dd-mm-yyyy, calendar-
       valid, in-range year → conf 0.97, method strict_dd_mm_yyyy
@@ -259,14 +256,20 @@ def _date_query(df: DataFrame, raw: F.Column,
       of range but closed-form repairable — digit p of y zeroed gives
       base_p, candidates are monotone in the replacement digit, so the
       first in-range one is d = max(0, ceil((MIN−base)/10^(4−p))),
-      priority p asc (the kernel's _repair_year_vec, as expressions).
+      priority p asc (the scalar chain's generate-and-test
+      _repair_year, in closed form).
       Repaired year must itself be calendar-valid or the row stays
       residue. conf 0.97·0.80, method year_repair_strict_dd_mm_yyyy.
+    - null branch: a strict 10-char dd-mm-yyyy whose month slot is
+      outside 1..12 fails every strategy → the all-null row.
 
-    Rows failing both branches (three-digit years, embedded dates,
-    char-subbed text, swaps, unrepairable years, nulls) run the full
-    five-strategy kernel unchanged — they are identified in the JVM
-    and only they pay for it inside the kernel.
+    One ``mapInPandas`` carries every row with its fast results as
+    extra columns; rows no branch handled (three-digit years, embedded
+    dates, char-subbed text, swaps, unrepairable years, nulls) run the
+    five-strategy chain one row at a time. A failed row
+    (``empty_input``/``all_strategies_failed``) is the all-null
+    (normalized, confidence, method) of ``dates.normalize_date``'s null
+    struct.
 
     Plan shape note: the branch split deliberately does NOT use
     filter+union — PushDownPredicate substitutes aliases without a
@@ -276,45 +279,29 @@ def _date_query(df: DataFrame, raw: F.Column,
     201 s for the count alone). Instead the regex extraction is its
     own projection (CollapseProject keeps a non-cheap alias referenced
     more than once un-inlined, so each regex runs once per row) and
-    the fast results ride the Arrow batch as extra columns."""
+    the fast results ride the Arrow batch."""
     from .dictionaries import MIN_BIRTH_YEAR, REFERENCE_YEAR
 
     def gen(batches):
         import pandas as pd
 
-        from .functions.pandas_dates import normalize_date_frame
+        from .functions.pandas_ktp import normalize_date
 
         for pdf in batches:
-            res = normalize_date_frame(pdf["raw"])
-            yield pd.DataFrame({
-                "raw": pdf["raw"],
-                "normalized": res["normalized"],
-                "confidence": res["confidence"],
-                "method": res["method"],
-            })
-
-    def gen_mixed(batches):
-        import pandas as pd
-
-        from .functions.pandas_dates import normalize_date_frame
-
-        for pdf in batches:
-            fast = pdf["fast_done"].astype(bool)
-            norm = pdf["fast_norm"].astype(object).where(fast, None)
-            conf = pdf["fast_conf"].astype(float)
-            meth = pdf["fast_meth"].astype(object).where(fast, None)
-            rest = ~fast
-            if rest.any():
-                res = normalize_date_frame(pdf.loc[rest, "raw"])
-                norm.loc[rest] = res["normalized"]
-                conf.loc[rest] = res["confidence"]
-                meth.loc[rest] = res["method"]
-            yield pd.DataFrame({
-                "raw": pdf["raw"],
-                "normalized": norm,
-                "confidence": conf,
-                "method": meth,
-            })
+            raws = pdf["raw"].tolist()
+            norm = pdf["fast_norm"].tolist()
+            conf = pdf["fast_conf"].tolist()
+            meth = pdf["fast_meth"].tolist()
+            for i, done in enumerate(pdf["fast_done"].tolist()):
+                if done:
+                    continue
+                r = normalize_date(raws[i])
+                if r["normalized"] is not None:
+                    norm[i] = r["normalized"]
+                    conf[i] = r["confidence"]
+                    meth[i] = r["method"]
+            yield pd.DataFrame({"raw": raws, "normalized": norm,
+                                "confidence": conf, "method": meth})
 
     pre = df.select(raw.alias("raw"))
     rtrim = F.trim(F.col("raw"))
@@ -360,7 +347,7 @@ def _date_query(df: DataFrame, raw: F.Column,
     # whose month slot is outside 1..12 fails strategy 1's hard month
     # gate and every later strategy the same way (the swap rescue needs
     # day_bad AND day<=12, i.e. day<1 — unreachable for \d{1,2});
-    # the kernel provably returns the all-null row, so emit it in the
+    # the chain provably returns the all-null row, so emit it in the
     # JVM instead of paying the five-strategy chain per row.
     null_ok = (
         strict
@@ -387,35 +374,8 @@ def _date_query(df: DataFrame, raw: F.Column,
         .when(f2, F.lit("year_repair_strict_dd_mm_yyyy"))
         .alias("fast_meth"),
     )
-    schema = ("raw string, normalized string, confidence double, "
-              "method string")
-    if n_rows is not None and n_rows < 400_000:
-        # small inputs: the persist-split's fixed costs (cache
-        # materialization + three plan branches) outweigh the Arrow
-        # transfer it saves — ship the fast-result columns with the
-        # batch and let the kernel fill only the residue rows.
-        # Size comes from the parquet FOOTER, so the switch is
-        # data-adaptive, not a local[N] constant.
-        out = p2.mapInPandas(gen_mixed, schema)
-    else:
-        p2 = p2.persist()
-        # The persist is the pushdown barrier that makes a filter+union
-        # split safe: branch filters read the STORED fast_done column
-        # from the cached batches, so fast rows never enter the Python
-        # stage at all (only residue pays the Arrow roundtrip), and
-        # PushDownPredicate cannot re-inline the branch conditions below
-        # the fan-out exchange (the measured 100x blowup documented
-        # above). Same in-query persist pattern as dedup_verified; the
-        # bench clears the cache per sample.
-        fast_rows = p2.filter(F.col("fast_done")).select(
-            F.col("raw"),
-            F.col("fast_norm").alias("normalized"),
-            F.col("fast_conf").alias("confidence"),
-            F.col("fast_meth").alias("method"),
-        )
-        residue = (p2.filter(~F.col("fast_done")).select("raw")
-                   .mapInPandas(gen, schema))
-        out = fast_rows.unionByName(residue)
+    out = p2.mapInPandas(gen, "raw string, normalized string, "
+                         "confidence double, method string")
     cols = [
         F.col("raw"),
         F.col("normalized"),
@@ -429,8 +389,7 @@ def _date_query(df: DataFrame, raw: F.Column,
 def q_date_standard(spark, sf_dir):
     df = _read(spark, sf_dir, "orders", fanout=True)
     raw = F.replace(_date_str(), F.lit("-"), F.lit(" "))
-    return _date_query(df, raw,
-                       n_rows=_footer_meta(f"{sf_dir}/orders.parquet")[0])
+    return _date_query(df, raw)
 
 
 SQL_DATE_STANDARD = """
@@ -472,8 +431,7 @@ def q_date_3digit_year(spark, sf_dir):
         F.year("o_orderdate") < 1999)
     raw = F.concat(F.substring(_date_str(), 1, 6),
                    F.substring(_date_str(), 8, 3))
-    return _date_query(df, raw,
-                       n_rows=_footer_meta(f"{sf_dir}/orders.parquet")[0])
+    return _date_query(df, raw)
 
 
 SQL_DATE_3DIGIT = """
@@ -514,8 +472,7 @@ def q_year_repair(spark, sf_dir):
     df = _read(spark, sf_dir, "orders", fanout=True).filter(
         F.year("o_orderdate") < 1999)
     raw = F.replace(_date_str(), F.lit("-19"), F.lit("-13"))
-    return _date_query(df, raw,
-                       n_rows=_footer_meta(f"{sf_dir}/orders.parquet")[0])
+    return _date_query(df, raw)
 
 
 SQL_YEAR_REPAIR = """
@@ -562,8 +519,7 @@ def q_date_month_validation(spark, sf_dir):
     d ≤ 12 simultaneously — so the month gate is what decides here.)"""
     df = _read(spark, sf_dir, "orders", fanout=True)
     raw = F.date_format(F.col("o_orderdate"), "MM-dd-yyyy")
-    return _date_query(df, raw, with_method=False,
-                       n_rows=_footer_meta(f"{sf_dir}/orders.parquet")[0])
+    return _date_query(df, raw, with_method=False)
 
 
 SQL_DATE_MONTH_VALIDATION = """

@@ -3,7 +3,9 @@ document's ``out_spans`` equals the pure-Python oracle's, and is the
 same whether the kernel sees it alone, among 7 documents or in one
 batch of all of them — including a batch with no KTP document and a
 KTP document whose only field is its NIK (every other output field of
-that batch's KTP documents is missing)."""
+that batch's KTP documents is missing) — and whether its batch is a
+fresh array or a zero-copy slice of a larger table, which the kernel
+reads only within the slice."""
 
 from __future__ import annotations
 
@@ -48,6 +50,23 @@ def _batch(rows):
                "span_conf"])
 
 
+def _poison_batch():
+    """A one-document batch whose span text is not UTF-8, so converting
+    it to Python raises."""
+    text = pa.array([b"\xff"], pa.binary()).view(pa.string())
+    span = pa.StructArray.from_arrays(
+        [pa.array(["text"]), text, pa.array([""]),
+         pa.array([0], pa.int32())],
+        fields=list(_SPAN.value_type))
+    one = _batch([("doc-poison", [], [{"y": 0, "x0": 0, "x1": 9, "h": 9}],
+                   [0.9], [], [])])
+    return pa.RecordBatch.from_arrays(
+        [one.column(0),
+         pa.ListArray.from_arrays(pa.array([0, 1], pa.int32()), span),
+         *one.columns[2:]],
+        names=one.schema.names)
+
+
 def _run(batches):
     out = {}
     for rb in full_kernel_batch_arrow(batches):
@@ -79,3 +98,15 @@ def test_kernel_output_is_batch_independent():
     assert all(got[r[0]] == expected[r[0]] for r in no_ktp)
     assert _run([_batch([_nik_only_doc()])]) == {
         "doc-nik-only": expected["doc-nik-only"]}
+
+    # zero-copy slices of one table with an unreadable document at each
+    # end: a kernel that converted the whole parent's spans would raise
+    poison = _poison_batch()
+    table = pa.Table.from_batches(
+        [poison, _batch(rows), poison]).combine_chunks()
+    whole = table.to_batches()[0]
+    n = len(rows)
+    assert whole.num_rows == n + 2
+    sliced = _run([whole.slice(1 + i, min(64, n - i))
+                   for i in range(0, n, 64)])
+    assert sliced == expected

@@ -1,42 +1,21 @@
-"""Property-based parity (hypothesis): the kernel's implementations —
-the vectorized date chain, the per-value NIK candidate engine and the
-DOB padding — must match the pure-Python oracle on arbitrary noisy
-inputs — not just the generator's noise distribution."""
+"""Property-based parity (hypothesis): the kernel's per-value NIK
+candidate engine and the DOB padding must match the pure-Python oracle
+on arbitrary noisy inputs — not just the generator's noise
+distribution. (The date chain's random-input check is
+tests/test_scalar_parity.py::test_date_normalize_random_parity.)"""
 
 from __future__ import annotations
 
-import math
-
-import pandas as pd
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from indonesian_id_ocr_service_spark.functions import pandas_ktp as PK
-from indonesian_id_ocr_service_spark.functions.pandas_dates import (
-    normalize_date_frame,
-)
 from indonesian_id_ocr_service_spark.oracle import scalars as O
 
 _OCRISH = st.text(
     alphabet="0123456789OoIl!SsBZEGTAQ -./:,ABCDEFGHIJKLMNOPQRSTUVWXYZ",
     min_size=0, max_size=40,
 )
-
-
-@settings(max_examples=300, deadline=None)
-@given(st.lists(_OCRISH, min_size=1, max_size=16))
-def test_date_kernel_matches_oracle(raws):
-    got = normalize_date_frame(pd.Series(raws, dtype=object))
-    for i, raw in enumerate(raws):
-        exp = O.normalize_date(raw)
-        g = got.iloc[i]
-        if exp["normalized"] is None:
-            assert g["normalized"] is None, (raw, g["normalized"])
-        else:
-            assert g["normalized"] == exp["normalized"], raw
-            assert g["method"] == exp["method"], raw
-            assert not math.isnan(g["confidence"])
-            assert g["confidence"] == exp["confidence"], raw
 
 
 @settings(max_examples=300, deadline=None)

@@ -2,10 +2,18 @@
 normalizers (dates N14-N24, NIK N5-N13, char subs N1-N4).
 
 Inputs include every golden pair documented in the reference plus a
-grid of OCR-noise shapes (FIXTURES.md §3).
+grid of OCR-noise shapes (FIXTURES.md §3). The date chain is also
+checked on a seeded, generated set of date-shaped inputs: the JVM
+let-tree (``dates.normalize_date``) is written independently of the
+scalar chain the extraction kernel and the date queries run
+(``pandas_ktp.normalize_date``, which the oracle re-imports), so the
+two agreeing on every strategy, confidence band and noise shape is
+the date chain's random-input check.
 """
 
 from __future__ import annotations
+
+import random
 
 from pyspark.sql import functions as F
 
@@ -99,9 +107,8 @@ def test_char_subs_parity(spark):
         assert got[s] == S.sub_context_aware(s), s
 
 
-def test_date_normalize_parity(spark):
-    got = _collect(spark, DATE_INPUTS, D.normalize_date)
-    for s in DATE_INPUTS:
+def _assert_date_parity(got, inputs):
+    for s in inputs:
         exp = S.normalize_date(s)
         g = got[s]
         if exp["confidence"] == 0.0:
@@ -114,6 +121,104 @@ def test_date_normalize_parity(spark):
             assert g["method"] == exp["method"], (s, g, exp)
             assert (g["day"], g["month"], g["year"]) == (
                 exp["day"], exp["month"], exp["year"]), (s, g, exp)
+
+
+def test_date_normalize_parity(spark):
+    _assert_date_parity(_collect(spark, DATE_INPUTS, D.normalize_date),
+                        DATE_INPUTS)
+
+
+_SEPS = ["-", "/", ".", " ", "--", " / ", ". "]
+_OCR_DIGIT = {"0": "OoQ", "1": "Il!iL", "2": "Z", "3": "E", "4": "A",
+              "5": "Ss", "6": "G", "7": "T", "8": "B"}
+_OCRISH = "0123456789OoIl!SsBZEGTAQ -./:,ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+
+
+def _date_shapes(rng: random.Random) -> list:
+    """Date-shaped strings covering every strategy of the chain."""
+
+    def dd(lo=1, hi=31):
+        v = rng.randint(lo, hi)
+        return str(v) if rng.random() < 0.3 else f"{v:02d}"
+
+    def day():
+        return dd(0, 35) if rng.random() < 0.15 else dd()
+
+    def month():
+        return dd(0, 15) if rng.random() < 0.15 else dd(1, 12)
+
+    def sep():
+        return rng.choice(_SEPS)
+
+    def ocr(text, p):
+        return "".join(rng.choice(_OCR_DIGIT[c])
+                       if c in _OCR_DIGIT and rng.random() < p else c
+                       for c in text)
+
+    def wrap(text):
+        r = rng.random()
+        if r < 0.2:
+            return f"{rng.choice(['JAKARTA, ', 'TGL ', 'lahir: '])}{text}"
+        if r < 0.3:
+            return f"{text} {rng.choice(['X', 'WIB', 'ok'])}"
+        return text
+
+    out = []
+    for _ in range(300):   # standard and embedded, years in/out of range
+        yr = rng.choice([rng.randint(1920, 2026), rng.randint(1000, 3999),
+                         rng.randint(0, 99)])
+        out.append(wrap(f"{day()}{sep()}{month()}{sep()}{yr:04d}"))
+    for lo, hi in ((900, 999), (0, 25), (26, 99), (100, 199), (200, 899)):
+        for _ in range(80):   # each three-digit-year band
+            out.append(wrap(f"{day()}-{month()}-{rng.randint(lo, hi):03d}"))
+    for _ in range(150):   # month-first dates: swap rescue, month gate
+        out.append(f"{dd(1, 12)}-{dd(13, 31)}-{rng.randint(1920, 2026)}")
+    for _ in range(150):   # two-digit years
+        out.append(wrap(f"{dd()}{rng.choice('-/.')}{dd(1, 12)}"
+                        f"{rng.choice('-/.')}{rng.randint(0, 99):02d}"))
+    for _ in range(250):   # char-sub of each shape
+        yr = rng.choice([f"{rng.randint(1920, 2026)}",
+                         f"{rng.randint(900, 999)}",
+                         f"{rng.randint(0, 99):02d}"])
+        out.append(ocr(f"{day()}{sep()}{month()}{sep()}{yr}", 0.3))
+    for _ in range(200):   # seven digits, some char-subbed
+        out.append(ocr("".join(rng.choice("0123456789") for _ in range(7)),
+                       0.1))
+    for _ in range(150):   # permissive: spaced separators inside words
+        out.append(f"{rng.choice(['born ', 'tgl', ''])}{dd()} "
+                   f"{rng.choice('-/.')} {dd(1, 12)}{rng.choice('-/.')} "
+                   f"{rng.randint(0, 2026) % rng.choice([100, 10000])}"
+                   f"{rng.choice([' maybe', ''])}")
+    for _ in range(300):   # OCR-ish noise
+        out.append("".join(rng.choice(_OCRISH)
+                           for _ in range(rng.randint(0, 24))))
+    return out
+
+
+def test_date_normalize_random_parity(spark):
+    inputs = _date_shapes(random.Random(20261018))
+    _assert_date_parity(_collect(spark, inputs, D.normalize_date), inputs)
+
+
+def test_date_query_matches_scalar_chain(spark):
+    """The date queries' plan (JVM fast branches + the scalar chain on
+    residue rows) gives every row the scalar chain's result, and a
+    failed or null row the all-null (normalized, confidence, method)."""
+    from indonesian_id_ocr_service_spark.queries import _date_query
+
+    inputs = DATE_INPUTS + [None]
+    df = spark.createDataFrame([(s,) for s in inputs], "raw string")
+    got = {r["raw"]: r for r in _date_query(df, F.col("raw")).collect()}
+    assert len(got) == len(inputs)
+    for s in inputs:
+        exp = S.normalize_date(s)
+        row = (got[s]["normalized"], got[s]["confidence"],
+               got[s]["method"])
+        if exp["normalized"] is None:
+            assert row == (None, None, None), (s, row)
+        else:
+            assert row == (exp["normalized"], round(exp["confidence"], 6),
+                           exp["method"]), (s, row, exp)
 
 
 def test_date_robust_parity(spark):
