@@ -102,18 +102,67 @@ def _out_spans(doc_types, field_vals, medias):
     return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), spans)
 
 
+def _list_parts(col):
+    """A list column's offsets (rebased to 0) and its child elements.
+    A zero-copy slice's child array spans its whole parent table, so
+    only this batch's elements are kept."""
+    off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    return off - off[0], col.values.slice(off[0], off[-1] - off[0])
+
+
+class _View:
+    """One OCR view of a batch — a (spans, geometry) column pair, the
+    primary ``spans``/``span_geom`` or the alternative
+    ``spans_alt``/``alt_geom`` — read once as flattened child arrays
+    plus list offsets."""
+
+    def __init__(self, spans, geom):
+        self.valid = np.asarray(spans.is_valid())
+        self.off, sv = _list_parts(spans)
+        self.kind = sv.field("kind").to_pylist()
+        self.text = sv.field("text").to_pylist()
+        self.media = sv.field("media_ref").to_pylist()
+        self.g_off, gv = _list_parts(geom)
+        self.y, self.x0, self.x1, self.h = (
+            gv.field(c).to_numpy(zero_copy_only=False).astype(np.float64)
+            for c in ("y", "x0", "x1", "h"))
+
+    def has_spans(self, i) -> bool:
+        return bool(self.valid[i]) and self.off[i + 1] > self.off[i]
+
+    def doc(self, i):
+        """Document ``i``: its text-span texts, their geometry row
+        indexes, its media refs and the text spans' positions."""
+        a, b = self.off[i], self.off[i + 1]
+        kinds = self.kind[a:b]
+        txt = [j for j in range(b - a) if kinds[j] == "text"]
+        texts = [self.text[a + j] for j in txt]
+        idx = self.g_off[i] + np.asarray(txt, dtype=np.int64)
+        media = [self.media[a + j] for j in range(b - a)
+                 if kinds[j] == "media"]
+        return texts, idx, media, txt
+
+    def sim_items(self, texts, idx):
+        return [
+            {"text": t, "x0": float(self.x0[j]), "h": float(self.h[j]),
+             "y_center": float(2 * self.y[j] + self.h[j]) / 2}
+            for t, j in zip(texts, idx)
+        ]
+
+
 def full_kernel_batch_arrow(batches):
     """(doc_id, spans, span_geom[, spans_alt, alt_geom, span_conf]) →
     one row of FINAL output fields and output spans per document
     (FULL_KERNEL_SCHEMA).
 
     The span/geometry columns are consumed as flattened child arrays +
-    list offsets, not per-span Python dicts: Arrow→pandas conversion of
-    `array<struct>` columns builds one dict per span — measured ~3.4
-    core-ms/doc of pure conversion at 100k docs, more than the
-    extraction itself (1.8), and the allocation storm is memory-bound
-    so it also caps multi-core scaling. Here the only per-span Python
-    objects are the text strings the state machines need anyway."""
+    list offsets (``_View``), not per-span Python dicts: Arrow→pandas
+    conversion of `array<struct>` columns builds one dict per span —
+    measured ~3.4 core-ms/doc of pure conversion at 100k docs, more
+    than the extraction itself (1.8), and the allocation storm is
+    memory-bound so it also caps multi-core scaling. Here the only
+    per-span Python objects are the text strings the state machines
+    need anyway."""
     import pyarrow as pa
 
     out_names = (["doc_id", "doc_type", "media_refs"]
@@ -121,83 +170,22 @@ def full_kernel_batch_arrow(batches):
                  + ["field_methods", "out_spans"])
     out_type_sim = pa.map_(pa.string(), pa.string())
 
-    def list_parts(col):
-        # a zero-copy slice's child array spans its whole parent table:
-        # keep only this batch's elements and rebase the offsets on them
-        off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        return off - off[0], col.values.slice(off[0], off[-1] - off[0])
-
     for rb in batches:
         n = rb.num_rows
         names = rb.schema.names
         doc_ids = rb.column("doc_id").to_pylist()
-
-        sp_off, spv = list_parts(rb.column("spans"))
-        sp_kind = spv.field("kind").to_pylist()
-        sp_text = spv.field("text").to_pylist()
-        sp_media = spv.field("media_ref").to_pylist()
-        sg_off, sgv = list_parts(rb.column("span_geom"))
-        g_y = sgv.field("y").to_numpy(zero_copy_only=False).astype(
-            np.float64)
-        g_x0 = sgv.field("x0").to_numpy(zero_copy_only=False).astype(
-            np.float64)
-        g_x1 = sgv.field("x1").to_numpy(zero_copy_only=False).astype(
-            np.float64)
-        g_h = sgv.field("h").to_numpy(zero_copy_only=False).astype(
-            np.float64)
-
-        has_alt = "spans_alt" in names and "alt_geom" in names
-        if has_alt:
-            sa_col = rb.column("spans_alt")
-            sa_valid = np.asarray(sa_col.is_valid())
-            sa_off, sav = list_parts(sa_col)
-            sa_kind = sav.field("kind").to_pylist()
-            sa_text = sav.field("text").to_pylist()
-            sa_media = sav.field("media_ref").to_pylist()
-            ag_off, agv = list_parts(rb.column("alt_geom"))
-            a_y = agv.field("y").to_numpy(zero_copy_only=False).astype(
-                np.float64)
-            a_x0 = agv.field("x0").to_numpy(
-                zero_copy_only=False).astype(np.float64)
-            a_x1 = agv.field("x1").to_numpy(
-                zero_copy_only=False).astype(np.float64)
-            a_h = agv.field("h").to_numpy(zero_copy_only=False).astype(
-                np.float64)
+        prim = _View(rb.column("spans"), rb.column("span_geom"))
+        alt = None
+        if "spans_alt" in names and "alt_geom" in names:
+            alt = _View(rb.column("spans_alt"), rb.column("alt_geom"))
 
         has_conf = "span_conf" in names
         if has_conf:
             cf_col = rb.column("span_conf")
             cf_valid = np.asarray(cf_col.is_valid())
-            cf_off, cfv = list_parts(cf_col)
+            cf_off, cfv = _list_parts(cf_col)
             cf_vals = cfv.to_numpy(zero_copy_only=False).astype(
                 np.float64)
-
-        def prim_view(i):
-            a, b = sp_off[i], sp_off[i + 1]
-            kinds = sp_kind[a:b]
-            txt = [j for j in range(b - a) if kinds[j] == "text"]
-            texts = [sp_text[a + j] for j in txt]
-            idx = sg_off[i] + np.asarray(txt, dtype=np.int64)
-            media = [sp_media[a + j] for j in range(b - a)
-                     if kinds[j] == "media"]
-            return texts, idx, media, a, txt
-
-        def alt_view(i):
-            a, b = sa_off[i], sa_off[i + 1]
-            kinds = sa_kind[a:b]
-            txt = [j for j in range(b - a) if kinds[j] == "text"]
-            texts = [sa_text[a + j] for j in txt]
-            idx = ag_off[i] + np.asarray(txt, dtype=np.int64)
-            media = [sa_media[a + j] for j in range(b - a)
-                     if kinds[j] == "media"]
-            return texts, idx, media
-
-        def sim_items(texts, idx, gy, gx0, gh):
-            return [
-                {"text": t, "x0": float(gx0[j]), "h": float(gh[j]),
-                 "y_center": float(2 * gy[j] + gh[j]) / 2}
-                for t, j in zip(texts, idx)
-            ]
 
         doc_types: list = []
         medias_out: list = []
@@ -205,8 +193,8 @@ def full_kernel_batch_arrow(batches):
         field_vals = [[None] * n for _ in _OUT_FIELDS]
 
         for i in range(n):
-            texts, idx, media, span_a, txt_js = prim_view(i)
-            gy, gx0, gx1, gh = g_y, g_x0, g_x1, g_h
+            view = prim
+            texts, idx, media, txt_js = prim.doc(i)
             doc_type = identify_document_type(texts)
 
             ocr_conf = None
@@ -222,35 +210,34 @@ def full_kernel_batch_arrow(batches):
             # C2/C3 (document_processor.py:67-71,279-287): an UNKNOWN
             # primary view is reclassified on the alternative view and,
             # if that resolves, processed instead of the primary view
-            alt_ok = (has_alt and sa_valid[i]
-                      and sa_off[i + 1] > sa_off[i])
+            alt_ok = alt is not None and alt.has_spans(i)
             if doc_type == "UNKNOWN" and alt_ok:
-                a_texts, a_idx, a_media = alt_view(i)
+                a_texts, a_idx, a_media, _ = alt.doc(i)
                 alt_type = identify_document_type(a_texts)
                 if alt_type != "UNKNOWN":
                     doc_type = alt_type
                     texts, idx, media = a_texts, a_idx, a_media
-                    gy, gx0, gx1, gh = a_y, a_x0, a_x1, a_h
+                    view = alt
                     alt_ok = False
 
             alt_supplier = None
             if alt_ok and doc_type == "SIM":
                 def alt_supplier(i=i):
-                    at, ai, _m = alt_view(i)
-                    return at, sim_items(at, ai, a_y, a_x0, a_h)
+                    at, ai, _m, _ = alt.doc(i)
+                    return at, alt.sim_items(at, ai)
 
             methods: dict = {}
             result = None
             if doc_type == "KTP":
-                y0 = gy[idx]
-                y1 = y0 + gh[idx]
-                raw = _extract_one_doc(texts, y0, y1, gx0[idx],
-                                       gx1[idx], methods_out=methods)
+                y0 = view.y[idx]
+                y1 = y0 + view.h[idx]
+                raw = _extract_one_doc(texts, y0, y1, view.x0[idx],
+                                       view.x1[idx], methods_out=methods)
                 raw["NIK"] = resolve_nik(texts, y0, y1, raw.get("NIK"))
                 result = finish_ktp(raw)
             elif doc_type == "SIM":
                 result = sim_core.process_sim_doc(
-                    texts, sim_items(texts, idx, gy, gx0, gh),
+                    texts, view.sim_items(texts, idx),
                     ocr_conf=ocr_conf, alt_supplier=alt_supplier)
             if result:
                 for col, f in zip(field_vals, _OUT_FIELDS):

@@ -24,6 +24,7 @@ from .functions import dates as DT
 from .functions import fields as FX
 from .functions import nik as NK
 from .operators import classify
+from .session import SQL_CONF
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -36,13 +37,11 @@ def ensure_session_conf(spark: SparkSession) -> None:
     never-raise contract — and avoid Spark 4's ICU case-mapping
     static-init stall. Applied defensively for sessions not built by
     ``session.build_session`` (e.g. the driver's own)."""
-    for k, v in (
-        ("spark.sql.ansi.enabled", "false"),
-        ("spark.sql.icu.caseMappings.enabled", "false"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
+    for k in ("spark.sql.ansi.enabled",
+              "spark.sql.icu.caseMappings.enabled",
+              "spark.sql.session.timeZone"):
         try:
-            spark.conf.set(k, v)
+            spark.conf.set(k, SQL_CONF[k])
         except Exception:
             pass
 

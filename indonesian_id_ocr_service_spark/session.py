@@ -19,6 +19,39 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the engine's SQL/Arrow confs, applied by every session builder
+#: (``build_session`` here, ``jobs/extract_job.py`` under spark-submit);
+#: ``queries.ensure_session_conf`` re-applies the runtime-settable ones
+SQL_CONF: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.ansi.enabled": "false",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+    # Per-document work is compute-heavy (pandas UDF extraction), so
+    # input splits must target CORES, not IO: the defaults
+    # (128 MB splits, 4 MB file-open cost) bin-pack a small corpus
+    # into 2-3 partitions and starve the executors. At warehouse
+    # scale the natural 128 MB splits already exceed core count;
+    # these knobs only matter for small/medium inputs.
+    "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
+    "spark.sql.files.openCostInBytes": str(128 * 1024),
+    # Spark 4's ICU-backed case mapping pays a multi-minute
+    # single-threaded CollationAwareUTF8String static init on the
+    # first upper()/lower() — it serialized the whole cluster on
+    # first touch (observed: 32 executor threads blocked ~340 s on
+    # the class-init monitor). JVM case mapping is correct for this
+    # ASCII corpus and matches Python str.upper() in the oracle.
+    "spark.sql.icu.caseMappings.enabled": "false",
+}
+
+#: the directory holding this package: local Python workers import the
+#: kernel from it wherever the driver process was started
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(
     app_name: str = "indonesian-id-ocr-spark",
@@ -32,45 +65,24 @@ def build_session(
         shuffle_partitions = int(cpus) if cpus else 32
 
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
+    conf = {
         # Pin the heap and use the throughput collector: under the
         # normalizer chains' allocation rate, G1's region
         # uncommit/recommit had this kernel zero-filling pages from GC
         # worker threads — observed ~28 of 32 cores in system time with
         # executor threads idle; ParallelGC + Xms=Xmx runs the same job
         # at 100% user CPU.
-        .config("spark.driver.extraJavaOptions",
-                f"-Xms{driver_mem} -XX:+UseParallelGC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", driver_mem)
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # Per-document work is compute-heavy (pandas UDF extraction), so
-        # input splits must target CORES, not IO: the defaults
-        # (128 MB splits, 4 MB file-open cost) bin-pack a small corpus
-        # into 2-3 partitions and starve the executors. At warehouse
-        # scale the natural 128 MB splits already exceed core count;
-        # these knobs only matter for small/medium inputs.
-        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-        .config("spark.sql.files.openCostInBytes", str(128 * 1024))
-        # Spark 4's ICU-backed case mapping pays a multi-minute
-        # single-threaded CollationAwareUTF8String static init on the
-        # first upper()/lower() — it serialized the whole cluster on
-        # first touch (observed: 32 executor threads blocked ~340 s on
-        # the class-init monitor). JVM case mapping is correct for this
-        # ASCII corpus and matches Python str.upper() in the oracle.
-        .config("spark.sql.icu.caseMappings.enabled", "false")
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.driver.extraJavaOptions":
+            f"-Xms{driver_mem} -XX:+UseParallelGC",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        **SQL_CONF,
+        "spark.driver.memory": driver_mem,
+        "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
+        "spark.ui.enabled": "false",
+        **(extra_conf or {}),
+    }
+    b = SparkSession.builder.appName(app_name).master(master)
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

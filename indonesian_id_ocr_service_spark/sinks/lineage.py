@@ -1,25 +1,31 @@
-"""Bucket-grain commit log + extraction-quality metrics sink
-(SURVEY §4 item 4 — resumability per the north rule).
+"""Commit log + extraction-quality metrics sink (SURVEY §4 item 4 —
+resumability per the north rule).
 
-Resume is tracked per ``doc_id`` hash bucket; the unit of commit is the
-job. One ``process`` call runs every pending bucket in one job, which
-writes its output once, unpartitioned, into ``results/commit=<id>/``
-(one parquet file per task, ``bucket`` kept as a data column, ``<id>``
+Resume is tracked per commit unit (a ``doc_id`` hash bucket for
+``ExtractionRun.process``, the micro-batch id for a stream batch); the
+unit of commit is the job. Each commit writes its output once,
+unpartitioned, into a fresh ``results/commit=<id>/`` (one parquet file
+per task, ``bucket`` = the commit unit kept as a data column, ``<id>``
 = ``c`` + uuid4 hex so partition discovery reads it as a string), and
-then appends, in one write, one lineage row ``(run_id, bucket, status,
-rows, commit, started_at, finished_at)`` per bucket it holds, where
-``commit`` names that directory. On restart the driver re-processes
-only the buckets with no committed lineage row. Exactly-once per
-bucket rests on the lineage log being the only source of truth: a
-``results/`` entry that no committed row names is a crashed job's
-partial and is deleted before the next job. (With an Iceberg catalog
-configured a commit becomes one ``writeTo(...).append()`` snapshot;
-the directory layout is the catalog-free equivalent used here.)
+then appends ONE lineage line ``{run_id, commit, rows: {bucket: n},
+started_at, finished_at}`` naming that directory and every unit it
+holds. On restart only the units no line names run again. The log is
+the only source of truth: a ``results/`` entry that no line names is a
+crashed job's partial and is deleted before the next commit, and a
+committed directory is never read back or rewritten. (With an Iceberg
+catalog configured a commit becomes one ``writeTo(...).append()``
+snapshot; the directory layout is the catalog-free equivalent used
+here.)
+
+The trade: a lost or torn line re-runs its whole commit's units, not
+one bucket. A torn line needs a crash inside one small append after the
+job has finished; a crash during the job re-runs every pending unit
+either way.
 
 Extraction-quality metrics (fields found per doc, per-field presence,
-fuzzy-distance histogram buckets) append to a metrics table partitioned
-by run_id — the Spark re-expression of the reference's per-request
-prediction log (app.py:56-67).
+fuzzy-distance histogram buckets) land in a metrics table partitioned
+by month, run_id and commit unit — the Spark re-expression of the
+reference's per-request prediction log (app.py:56-67).
 """
 
 from __future__ import annotations
@@ -82,9 +88,8 @@ def extraction_metrics(fields_df: DataFrame) -> DataFrame:
     # extractor stage carried it through
     if "field_methods" in fields_df.columns:
         cols.append(F.col("field_methods"))
-    # commit-unit tag: when the caller's frame carries the bucket it
-    # came from, keep it — write_metrics uses it to make the metrics
-    # write idempotent per bucket (overwrite instead of append)
+    # commit-unit tag: write_metrics overwrites the unit's own
+    # partition with it, so a replayed commit does not duplicate rows
     if "bucket" in fields_df.columns:
         cols.append(F.col("bucket"))
     return fields_df.select(*cols)
@@ -116,12 +121,11 @@ class ExtractionRun:
 
     # -- lineage -----------------------------------------------------
     def committed_buckets(self) -> dict[int, str]:
-        """Committed bucket → the ``results/`` directory its last
-        committed lineage row names. Rows without a ``commit`` field
-        (logs older than the one-directory-per-job layout) count as
-        not committed, so their buckets run again. So does a line an
-        append torn by a crash left behind: one that does not parse,
-        or a last line with no trailing newline."""
+        """Committed unit → the ``results/`` directory whose lineage
+        line names it. A line commits nothing when it does not parse,
+        lacks a trailing newline (an append torn by a crash) or has no
+        ``rows`` map (logs of the older one-row-per-bucket layout), so
+        its units run again."""
         done: dict[int, str] = {}
         if os.path.exists(self.lineage_path):
             with open(self.lineage_path) as f:
@@ -132,34 +136,66 @@ class ExtractionRun:
                         rec = json.loads(line)
                     except ValueError:
                         continue
-                    if rec["status"] == "committed" and "commit" in rec:
-                        done[rec["bucket"]] = rec["commit"]
+                    if isinstance(rec.get("rows"), dict):
+                        done.update((int(b), rec["commit"])
+                                    for b in rec["rows"])
         return done
 
     def _log_commit(self, commit: str, rows: dict[int, int],
                     started: float) -> None:
-        """Append one committed lineage row per bucket of ``rows``
-        (bucket → row count), each naming the directory ``commit``,
-        in a single write. If a torn append left the log without a
+        """Append the one lineage line of ``commit``: its directory and
+        its row count per unit. If a torn append left the log without a
         trailing newline, the write starts on a fresh line, so the
         fragment stays a line of its own that ``committed_buckets``
         skips."""
-        finished = round(time.time(), 3)
-        lines = "".join(json.dumps({
+        line = json.dumps({
             "run_id": self.run_id,
-            "bucket": b,
-            "status": "committed",
-            "rows": n,
             "commit": commit,
+            "rows": rows,
             "started_at": round(started, 3),
-            "finished_at": finished,
-        }) + "\n" for b, n in rows.items())
+            "finished_at": round(time.time(), 3),
+        }) + "\n"
         with open(self.lineage_path, "ab+") as f:
             if f.tell():
                 f.seek(-1, os.SEEK_END)
                 if f.read(1) != b"\n":
-                    lines = "\n" + lines
-            f.write(lines.encode())
+                    line = "\n" + line
+            f.write(line.encode())
+
+    def _commit(self, out: DataFrame, unit: F.Column, units: list[int],
+                metrics_fn, log_month: str | None) -> dict[int, int]:
+        """Commit ``out`` as one commit, for batch and stream alike:
+        purge every ``results/`` entry no lineage line names (a
+        crashed job's partial), write ``out`` into a fresh
+        ``results/commit=<id>/`` with ``bucket`` = ``unit``, observing
+        its row count per unit of ``units`` on the write itself, write
+        the metrics of the rows just written (tagged with ``unit`` when
+        the frame lacks it), then append the one lineage line. Metrics
+        go BEFORE the line, so a crash in between re-runs the commit
+        instead of losing its metrics; the re-run overwrites the same
+        ``bucket`` partitions. Returns unit → rows."""
+        live = set(self.committed_buckets().values())
+        for name in os.listdir(self.results_dir):
+            if name not in live:
+                path = os.path.join(self.results_dir, name)
+                if os.path.isdir(path):
+                    shutil.rmtree(path)
+                else:
+                    os.remove(path)
+        started = time.time()
+        commit = f"commit=c{uuid.uuid4().hex}"
+        commit_dir = os.path.join(self.results_dir, commit)
+        counts = _observed(out.withColumn("bucket", unit), [
+            F.count_if(F.col("bucket") == u).alias(str(u)) for u in units
+        ], lambda df: df.write.parquet(commit_dir))
+        if metrics_fn is not None:
+            mets = metrics_fn(out.sparkSession.read.parquet(commit_dir))
+            if "bucket" not in mets.columns:
+                mets = mets.withColumn("bucket", unit)
+            self.write_metrics(mets, log_month=log_month)
+        rows = {u: int(counts[str(u)]) for u in units}
+        self._log_commit(commit, rows, started)
+        return rows
 
     # -- processing ---------------------------------------------------
     def bucket_of(self) -> F.Column:
@@ -172,9 +208,10 @@ class ExtractionRun:
     def process(self, spark: SparkSession, src: DataFrame,
                 pipeline_fn, metrics_fn=None,
                 log_month: str | None = None) -> dict:
-        """Run pipeline_fn over ALL uncommitted buckets in ONE job,
-        skipping committed ones. Returns
-        {buckets_run, buckets_skipped, rows}.
+        """Run pipeline_fn over ALL uncommitted buckets in ONE job and
+        commit its output as one ``results/commit=<id>/`` directory
+        and one lineage line (``_commit``), skipping committed buckets.
+        Returns {buckets_run, buckets_skipped, rows}.
 
         ``metrics_fn``: optional ``output DataFrame → metrics-input
         DataFrame`` hook; when given, per-document extraction-quality
@@ -185,99 +222,34 @@ class ExtractionRun:
 
         One source scan regardless of how many buckets are pending (a
         per-bucket loop would be O(n_buckets) full scans — wrong for a
-        cold run at 100 TB). The job is the commit unit:
-
-        - **Layout.** The output is written once, without
-          ``partitionBy``, into a fresh ``results/commit=<id>/``: one
-          parquet file per task with ``bucket`` as a data column, not
-          one file per task per bucket.
-        - **Purge.** First, every ``results/`` entry that no committed
-          lineage row names is deleted: a job that crashed before its
-          lineage append, or partials of any older layout.
-        - **Carry.** Pending buckets next to committed directories
-          (a lineage append torn by a crash, which may leave half a
-          line that then counts as not committed; a lost line) would
-          otherwise leave a pending bucket's old rows beside its re-run
-          ones. So the new commit also takes, from each of those
-          directories, the rows of the buckets whose lineage rows name
-          it (never a pending bucket's, never a bucket a later commit
-          took over), re-points those lineage rows to itself, and
-          deletes the old directories once logged.
-          Only the pending buckets run the pipeline again; every doc
-          stays in ``results/`` exactly once. The pipeline cost of a
-          recovery is the pending buckets', but its write cost is
-          O(total committed output): after the first job one directory
-          holds every bucket, so one lost line makes the next job read
-          and rewrite all of it (the bucketed layout rewrote one
-          bucket's partition).
-        - **Counts and log.** The per-bucket row counts the lineage
-          rows record are observed on the write (one ``count_if`` per
-          logged bucket), so the commit reads nothing back; the job's
-          lineage rows are appended in one write after it succeeds."""
-        done = self.committed_buckets()
-        live = set(done.values())
-        for name in os.listdir(self.results_dir):
-            if name not in live:
-                path = os.path.join(self.results_dir, name)
-                if os.path.isdir(path):
-                    shutil.rmtree(path)
-                else:
-                    os.remove(path)
-        todo = [b for b in range(self.n_buckets) if b not in done]
+        cold run at 100 TB). The bucket is recomputed on the output
+        (it carries doc_id), so the pipeline itself stays
+        bucket-agnostic."""
+        todo = [b for b in range(self.n_buckets)
+                if b not in self.committed_buckets()]
         skipped = self.n_buckets - len(todo)
         if not todo:
             return {"buckets_run": 0, "buckets_skipped": skipped,
                     "rows": 0}
-        started = time.time()
-        commit = f"commit=c{uuid.uuid4().hex}"
-        commit_dir = os.path.join(self.results_dir, commit)
-        src_b = src.withColumn("_bucket", self.bucket_of())
-        part = src_b.filter(F.col("_bucket").isin(todo)).drop("_bucket")
-        # recompute the bucket on the OUTPUT (it carries doc_id) so the
-        # pipeline itself stays bucket-agnostic
-        out = pipeline_fn(part).withColumn("bucket", self.bucket_of())
-        for d in sorted(live):
-            own = [b for b, c in done.items() if c == d]
-            out = out.unionByName(
-                spark.read.parquet(os.path.join(self.results_dir, d))
-                .filter(F.col("bucket").isin(own)))
-        logged = sorted(set(todo) | set(done))
-        counts = _observed(out, [
-            F.count_if(F.col("bucket") == b).alias(str(b)) for b in logged
-        ], lambda df: df.write.parquet(commit_dir))
-        # Metrics BEFORE the lineage commit rows, so a crash in between
-        # is retried (re-run reprocesses the bucket) instead of lost
-        # forever (resume would skip it). Replay cannot duplicate
-        # metrics when the frame carries its bucket: write_metrics then
-        # partitions on it and dynamically OVERWRITES the same bucket
-        # partitions. Metric frames without a bucket column (e.g. a
-        # custom metrics_fn that drops it) still append — for those the
-        # crash window trades a possible duplicate for the old silent
-        # loss.
-        if metrics_fn is not None:
-            fresh = (spark.read.parquet(commit_dir)
-                     .filter(F.col("bucket").isin(todo)))
-            self.write_metrics(metrics_fn(fresh), log_month=log_month)
-        rows = {b: int(counts[str(b)]) for b in logged}
-        self._log_commit(commit, rows, started)
-        for d in live:
-            shutil.rmtree(os.path.join(self.results_dir, d))
+        part = src.filter(self.bucket_of().isin(todo))
+        rows = self._commit(pipeline_fn(part), self.bucket_of(), todo,
+                            metrics_fn, log_month)
         return {"buckets_run": len(todo), "buckets_skipped": skipped,
-                "rows": sum(rows[b] for b in todo)}
+                "rows": sum(rows.values())}
 
     # -- metrics ------------------------------------------------------
     def write_metrics(self, fields_df: DataFrame,
                       log_month: str | None = None) -> str:
-        """Append per-document extraction-quality metrics under a
-        month partition — the reference logs each prediction to
+        """Write per-document extraction-quality metrics under a month
+        partition — the reference logs each prediction to
         ``ocr_logs/YYYY-MM/`` (app.py:56-67); here the same layout is
         a ``log_month=YYYY-MM`` parquet partition (plus run_id), so a
         month's metrics prune to one directory scan.
 
-        Unlike ``results/``, a frame carrying ``bucket`` keeps its
-        ``bucket=N`` partitions here: a replayed bucket overwrites only
-        its own metrics partition (dynamic overwrite), which is what
-        makes a re-run after a crash before logging not duplicate them.
+        The frame must carry its commit unit as ``bucket``: each
+        ``bucket=N`` partition is dynamically overwritten, so a
+        replayed commit rewrites its own metrics instead of appending
+        duplicates.
 
         ``log_month`` defaults to the current UTC month; tests pass it
         explicitly for determinism. Returns the month used.
@@ -291,49 +263,37 @@ class ExtractionRun:
             log_month = time.strftime("%Y-%m", time.gmtime())
         if "nomor" in fields_df.columns:
             fields_df = extraction_metrics(fields_df)
-        w = (fields_df
-             .withColumn("run_id", F.lit(self.run_id))
-             .withColumn("log_month", F.lit(log_month))
-             .write)
-        if "bucket" in fields_df.columns:
-            # idempotent per commit unit: a replayed bucket overwrites
-            # its own metrics partition instead of appending duplicates
-            (w.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("log_month", "run_id", "bucket")
-             .parquet(self.metrics_dir))
-        else:
-            (w.mode("append")
-             .partitionBy("log_month", "run_id")
-             .parquet(self.metrics_dir))
+        (fields_df
+         .withColumn("run_id", F.lit(self.run_id))
+         .withColumn("log_month", F.lit(log_month))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("log_month", "run_id", "bucket")
+         .parquet(self.metrics_dir))
         return log_month
 
 
 class StreamingExtractionRun(ExtractionRun):
-    """The bucket commit-log contract lifted onto Structured Streaming
-    (VERDICT r4 task #7): the commit unit is the MICRO-BATCH id instead
-    of the doc bucket, because a doc bucket is never 'complete' while
-    files keep arriving.
+    """The commit-log contract lifted onto Structured Streaming (VERDICT
+    r4 task #7): the commit unit is the MICRO-BATCH id instead of the
+    doc bucket, because a doc bucket is never 'complete' while files
+    keep arriving. Each batch commits through the same ``_commit`` as
+    ``process``: one ``results/commit=<id>/`` directory whose
+    ``bucket`` column is the batch id, and one lineage line.
 
     ``foreachBatch`` re-delivers a batch after a crash (its own sink
-    commit is not transactional with the checkpoint); idempotency
-    comes from the same lineage-log contract — a replayed batch_id
-    whose commit row exists is skipped, a replayed batch_id whose
-    write died before the commit row overwrites its own ``batch=N``
-    directory, and a replayed batch's metrics overwrite their own
-    batch partition instead of appending duplicates. Each batch is
-    one commit: its own unpartitioned ``batch=N`` directory and one
-    lineage row naming it, logged by the same ``_log_commit`` as
-    ``process``.
+    commit is not transactional with the checkpoint); idempotency comes
+    from the lineage log — a replayed batch id that a line names is
+    skipped, and one whose job died before its line runs again after
+    the purge deletes the dead job's directory, its metrics
+    overwriting their own ``bucket`` partition.
 
     The stream's commit log, results and metrics live under their own
     ``stream/`` namespace inside the run dir: a stream batch id and a
     batch-mode doc bucket are DIFFERENT keyspaces, and sharing the
-    lineage file/results dir let a committed stream batch N silently
-    mark doc bucket N done for ``process`` (and mixed ``commit=`` /
-    ``batch=N`` directory names break reading the results dir). A
-    consumer reads each mode's own results dir; one run dir may serve
-    both modes without the logs interfering."""
+    lineage file let a committed stream batch N silently mark doc
+    bucket N done for ``process``. One run dir may serve both modes
+    without the logs interfering."""
 
     def __init__(self, base_dir: str, run_id: str, n_buckets: int = 64):
         super().__init__(base_dir, run_id, n_buckets)
@@ -349,24 +309,10 @@ class StreamingExtractionRun(ExtractionRun):
                              log_month: str | None = None) -> dict:
         if batch_id in self.committed_buckets():
             return {"batch_id": batch_id, "skipped": True, "rows": 0}
-        started = time.time()
-        commit = f"batch={batch_id}"
-        out_dir = os.path.join(self.results_dir, commit)
-        shutil.rmtree(out_dir, ignore_errors=True)   # dead replay's partials
-        out = pipeline_fn(batch_df)
-        rows = int(_observed(
-            out, [F.count(F.lit(1)).alias("rows")],
-            lambda df: df.write.mode("overwrite").parquet(out_dir))["rows"])
-        spark = batch_df.sparkSession
-        if metrics_fn is not None:
-            # tag with the commit unit so write_metrics overwrites the
-            # batch's own partition on replay (exactly-once metrics)
-            self.write_metrics(
-                metrics_fn(spark.read.parquet(out_dir))
-                .withColumn("bucket", F.lit(batch_id)),
-                log_month=log_month)
-        self._log_commit(commit, {batch_id: rows}, started)
-        return {"batch_id": batch_id, "skipped": False, "rows": rows}
+        rows = self._commit(pipeline_fn(batch_df), F.lit(batch_id),
+                            [batch_id], metrics_fn, log_month)
+        return {"batch_id": batch_id, "skipped": False,
+                "rows": rows[batch_id]}
 
     def foreach_batch(self, pipeline_fn, metrics_fn=None,
                       log_month: str | None = None):

@@ -10,7 +10,7 @@ loop (app.py:35-51): arrival-driven processing with checkpointed
 exactly-once sinks instead of a web server.
 
 ``start_extraction_stream_committed`` commits each micro-batch through
-the bucket commit log (sinks/lineage.py), and ``streaming_dedup`` drops
+the lineage commit log (sinks/lineage.py), and ``streaming_dedup`` drops
 repeated content under a watermark that bounds its state. The stateful
 span-session assembler is in ``streaming/stateful.py``.
 """
@@ -84,7 +84,7 @@ def start_extraction_stream_committed(spark: SparkSession, src_path: str,
                                       log_month: str | None = None,
                                       available_now: bool = True,
                                       max_files_per_trigger: int = 8):
-    """Streaming extraction through the bucket commit-log contract
+    """Streaming extraction through the commit-log contract
     (sinks.lineage.StreamingExtractionRun): each micro-batch commits
     results (+ optional metrics) exactly once via the lineage log, so
     the stream inherits the batch path's resume semantics instead of

@@ -17,11 +17,12 @@ by ``tools/make_pyfiles.py``:
 Everything master/deploy-mode/JVM-sizing belongs to the submit command
 line (a driver JVM cannot re-set its own -Xmx/GC after launch — see
 session.py for why ParallelGC matters on this kernel); this script only
-applies session-level SQL confs and runs the resumable
-``ExtractionRun`` over the input. Re-submitting the identical command
-after a crash resumes from the bucket commit log: already-committed
-buckets are skipped, and a crashed job's un-logged
-``results/commit=<id>/`` directory is deleted before the re-run
+applies the engine's SQL confs (``session.SQL_CONF``) and runs the
+resumable ``ExtractionRun`` over the input. Each job commits one
+``results/commit=<id>/`` directory and appends one lineage line naming
+it and every bucket it ran. Re-submitting the identical command after a
+crash resumes from that log: buckets a line names are skipped, and a
+crashed job's un-logged directory is deleted before the re-run
 (sinks/lineage.py).
 
 Prints exactly one JSON result line on stdout:
@@ -46,22 +47,14 @@ import time
 def _build_submitted_session(app_name: str, shuffle_partitions: int | None):
     """SparkSession for a spark-submit launch: NO ``.master()`` — the
     submit command owns master/deploy-mode — only the engine's SQL/
-    Arrow confs (the same set session.build_session applies locally)."""
+    Arrow confs (``session.SQL_CONF``, the table session.build_session
+    applies locally)."""
     from pyspark.sql import SparkSession
 
+    from indonesian_id_ocr_service_spark.session import SQL_CONF
+
     b = SparkSession.builder.appName(app_name)
-    confs = {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.ansi.enabled": "false",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.icu.caseMappings.enabled": "false",
-        "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
-        "spark.sql.files.openCostInBytes": str(128 * 1024),
-    }
+    confs = dict(SQL_CONF)
     if shuffle_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     for k, v in confs.items():
@@ -92,7 +85,8 @@ def parse_args(argv):
                    help="corpus seed for --synth")
     p.add_argument("--base-dir", required=True,
                    help="run output root: results/commit=<id>/ "
-                   "(one directory per job), metrics/, lineage.jsonl")
+                   "(one directory per job), metrics/, lineage.jsonl "
+                   "(one line per job)")
     p.add_argument("--run-id", required=True)
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--log-month", default=None,
@@ -111,9 +105,8 @@ def main(argv=None) -> int:
     spark = _build_submitted_session(args.app_name,
                                      args.shuffle_partitions)
 
-    # Package imports AFTER the session exists: under spark-submit the
-    # zip from --py-files is already on sys.path for the driver and is
-    # shipped to executors automatically.
+    # Under spark-submit the zip from --py-files is on the driver's
+    # sys.path from launch and is shipped to executors automatically.
     from indonesian_id_ocr_service_spark.pipeline import run_pipeline
     from indonesian_id_ocr_service_spark.queries import ensure_session_conf
     from indonesian_id_ocr_service_spark.sinks.lineage import ExtractionRun

@@ -86,6 +86,9 @@ def test_sim_address_block_rtrw_pivot():
 
 
 def test_lineage_resume(spark, tmp_path):
+    import json
+    import os
+
     from indonesian_id_ocr_service_spark.corpus.generator import doc_rows
 
     from indonesian_id_ocr_service_spark.corpus.generator import (
@@ -114,25 +117,21 @@ def test_lineage_resume(spark, tmp_path):
     assert r2["buckets_run"] == 0 and r2["buckets_skipped"] == 4
     assert len(calls) == 1
 
-    # simulate a lost bucket: drop one lineage line
-    lines = open(run.lineage_path).read().strip().splitlines()
-    with open(run.lineage_path, "w") as f:
-        f.write("\n".join(lines[:-1]) + "\n")
+    # simulate a lost commit: drop its lineage line. The line named
+    # every bucket the job ran, so all 4 re-run in one new commit
+    first = os.listdir(run.results_dir)
+    with open(run.lineage_path, "w"):
+        pass
     r3 = run.process(spark, df, fake_pipeline)
-    assert r3["buckets_run"] == 1
+    assert r3["buckets_run"] == 4 and r3["rows"] == 40
     assert len(calls) == 2
-    # the recovered bucket's rows are intact alongside committed ones
-    total = spark.read.parquet(run.results_dir).count()
-    assert total == 40
-    # the re-run's commit carried the committed buckets' rows and
-    # replaced the old directory: every doc once, one directory left
-    import json
-    import os
-
+    # the un-logged directory was deleted, not read back: every doc
+    # once, one directory left, the one the new line names
     ids = [r.doc_id for r in spark.read.parquet(run.results_dir).collect()]
-    last = json.loads(open(run.lineage_path).read().splitlines()[-1])
-    assert (len(ids) == len(set(ids)) == 40
-            and os.listdir(run.results_dir) == [last["commit"]])
+    [rec] = [json.loads(ln) for ln in open(run.lineage_path)]
+    assert len(ids) == len(set(ids)) == 40
+    assert os.listdir(run.results_dir) == [rec["commit"]]
+    assert rec["commit"] not in first
 
 
 def _commit_dirs(run):
@@ -145,7 +144,8 @@ def _commit_dirs(run):
 def test_process_writes_one_file_per_task(spark, tmp_path):
     """A job commits one unpartitioned results directory: one parquet
     file per write task, not one per task per bucket; ``bucket`` is a
-    data column, and every lineage row names that directory."""
+    data column, and the job's one lineage line names that directory
+    and every bucket's row count."""
     import glob
     import json
     import os
@@ -169,9 +169,10 @@ def test_process_writes_one_file_per_task(spark, tmp_path):
     assert out.count() == 120
     assert out.filter(F.col("bucket") != run.bucket_of()).count() == 0
     with open(run.lineage_path) as f:
-        recs = [json.loads(line) for line in f]
-    assert sorted(r["bucket"] for r in recs) == list(range(64))
-    assert {r["commit"] for r in recs} == {commit}
+        [rec] = [json.loads(line) for line in f]
+    assert sorted(int(b) for b in rec["rows"]) == list(range(64))
+    assert sum(rec["rows"].values()) == 120
+    assert rec["commit"] == commit
 
 
 def test_process_purges_unlogged_commit(spark, tmp_path):
@@ -199,58 +200,39 @@ def test_process_purges_unlogged_commit(spark, tmp_path):
     assert len(ids) == len(set(ids)) == 40
 
 
-def test_process_carries_each_bucket_from_its_own_commit(spark, tmp_path):
-    """A torn lineage append can leave committed buckets named by two
-    commit directories that each hold every bucket's rows. The carry
-    must take each bucket's rows from the directory its lineage row
-    names, and only from there."""
+def test_torn_line_uncommits_its_whole_commit(spark, tmp_path):
+    """An append torn mid-line leaves half a line with no trailing
+    newline: the whole commit it was logging counts as not committed.
+    The next run deletes that directory unread and re-runs all of its
+    buckets, starting its own line on a fresh line; the run after
+    skips everything, and every doc is in ``results/`` once."""
     import os
-    import shutil
 
     from indonesian_id_ocr_service_spark.corpus.generator import (
         SPAN_SCHEMA_DDL, doc_rows)
 
     df = spark.createDataFrame(list(doc_rows(40, fractions=(1.0, 0, 0))),
                                SPAN_SCHEMA_DDL)
-    run = ExtractionRun(str(tmp_path / "runc"), run_id="rc", n_buckets=4)
+    run = ExtractionRun(str(tmp_path / "runt"), run_id="rt", n_buckets=4)
 
     def pipe(part):
         return part.select("doc_id")
 
-    def drop_last_lines(n):
-        lines = open(run.lineage_path).read().splitlines()
-        with open(run.lineage_path, "w") as f:
-            f.write("\n".join(lines[:-n]) + "\n")
-
-    run.process(spark, df, pipe)                 # first commit, buckets 0-3
-    [first] = _commit_dirs(run)
-    drop_last_lines(1)                           # bucket 3's line lost
-    kept = str(tmp_path / "kept")
-    shutil.copytree(os.path.join(run.results_dir, first), kept)
-    run.process(spark, df, pipe)                 # second commit carries 0-2
-    # ...but its append tore after buckets 0 and 1, before it deleted
-    # the first directory: 0-1 name the second, 2 the first, 3 pending
-    shutil.copytree(kept, os.path.join(run.results_dir, first))
-    drop_last_lines(2)
-    assert len(_commit_dirs(run)) == 2
+    run.process(spark, df, pipe)
+    [torn] = _commit_dirs(run)
+    text = open(run.lineage_path).read()
+    with open(run.lineage_path, "w") as f:
+        f.write(text[:len(text) // 2])
+    assert run.committed_buckets() == {}
 
     res = run.process(spark, df, pipe)
-    assert res["buckets_run"] == 1
-    assert len(_commit_dirs(run)) == 1
-    ids = [r.doc_id for r in spark.read.parquet(run.results_dir).collect()]
-    assert len(ids) == len(set(ids)) == 40
-
-    # an append torn mid-line: the last line is cut in half, with no
-    # trailing newline. Its bucket counts as not committed and re-runs
-    # alone; the next append starts on a fresh line, so it stays whole.
-    text = open(run.lineage_path).read()
-    start = text.rstrip("\n").rfind("\n") + 1
-    with open(run.lineage_path, "w") as f:
-        f.write(text[:start + (len(text) - start) // 2])
-    assert run.process(spark, df, pipe)["buckets_run"] == 1
+    assert res["buckets_run"] == 4 and res["rows"] == 40
+    assert torn not in os.listdir(run.results_dir)
     assert run.process(spark, df, pipe)["buckets_run"] == 0
-    assert set(run.committed_buckets().values()) == set(_commit_dirs(run))
-    assert len(_commit_dirs(run)) == 1
+    [live] = _commit_dirs(run)
+    assert os.listdir(run.results_dir) == [live]
+    assert run.committed_buckets() == {b: live for b in range(4)}
+    assert len(open(run.lineage_path).read().splitlines()) == 2
     ids = [r.doc_id for r in spark.read.parquet(run.results_dir).collect()]
     assert len(ids) == len(set(ids)) == 40
 
@@ -322,20 +304,22 @@ def test_lineage_stale_partials_dropped(spark, tmp_path):
     out_ids = {r["doc_id"]
                for r in spark.read.parquet(run.results_dir).collect()}
     assert "STALE-DOC" not in out_ids
-    # bucket 2 committed with rows=0 in lineage
-    committed = {}
+    # bucket 2 committed with rows=0 in the job's one lineage line
+    import json
+
     with open(run.lineage_path) as f:
-        import json as _json
-        for line in f:
-            rec = _json.loads(line)
-            committed[rec["bucket"]] = rec["rows"]
-    assert committed[2] == 0
+        [rec] = [json.loads(line) for line in f]
+    assert sorted(rec["rows"]) == ["0", "1", "2", "3"]
+    assert rec["rows"]["2"] == 0
+    assert sum(rec["rows"].values()) == res["rows"]
+    assert os.listdir(run.results_dir) == [rec["commit"]]
 
 
 def test_metrics_month_partition(spark, tmp_path):
     """Metrics land under a log_month=YYYY-MM partition (the Spark
     re-expression of the reference's ocr_logs/YYYY-MM layout,
-    app.py:56-67) and month reads prune to one directory."""
+    app.py:56-67) and month reads prune to one directory. A metrics
+    frame carries its commit unit as ``bucket``."""
     import os
 
     run = ExtractionRun(str(tmp_path / "runm"), run_id="r-1",
@@ -349,12 +333,13 @@ def test_metrics_month_partition(spark, tmp_path):
          "tgl_lahir", "jenis_kelamin", "agama", "status_perkawinan",
          "pekerjaan", "kewarganegaraan", "alamat_name", "alamat_rt_rw",
          "alamat_kel_desa", "alamat_kecamatan", "alamat_kabupaten",
-         "alamat_provinsi"])
+         "alamat_provinsi"]).withColumn("bucket", F.lit(0))
     m1 = run.write_metrics(fields, log_month="2026-07")
     m2 = run.write_metrics(fields, log_month="2026-08")
     assert (m1, m2) == ("2026-07", "2026-08")
     assert os.path.isdir(
-        os.path.join(run.metrics_dir, "log_month=2026-07", "run_id=r-1"))
+        os.path.join(run.metrics_dir, "log_month=2026-07", "run_id=r-1",
+                     "bucket=0"))
     back = spark.read.parquet(run.metrics_dir)
     assert back.count() == 2
     july = back.filter(back.log_month == "2026-07")

@@ -138,6 +138,40 @@ def test_media_metrics_branch_in_extraction_run(spark, tmp_path):
     assert spark.read.parquet(run.metrics_dir).count() == len(rows)
 
 
+def test_media_metrics_not_duplicated_on_replay(spark, tmp_path):
+    """A crash after the metrics write and before the lineage append
+    makes the next process() run the same buckets again. The media
+    metrics frame has no ``bucket`` column, so the commit tags it with
+    the doc's bucket and the replay overwrites those partitions: every
+    doc keeps one metrics row instead of one per run."""
+    import os
+
+    from indonesian_id_ocr_service_spark.corpus.generator import corpus_df
+    from indonesian_id_ocr_service_spark.operators.media_metrics import (
+        media_quality_metrics,
+    )
+    from indonesian_id_ocr_service_spark.pipeline import run_pipeline
+    from indonesian_id_ocr_service_spark.sinks.lineage import ExtractionRun
+
+    src = corpus_df(spark, 60).cache()
+    run = ExtractionRun(str(tmp_path / "run"), "r1", n_buckets=4)
+
+    def process():
+        return run.process(
+            spark, src, run_pipeline,
+            metrics_fn=lambda out: media_quality_metrics(out, chunk=2),
+            log_month="2026-08")
+
+    process()
+    first = spark.read.parquet(run.metrics_dir).count()
+    assert first > 0
+    os.remove(run.lineage_path)          # the append never happened
+    assert process()["buckets_run"] == 4
+    ids = [r.doc_id for r in
+           spark.read.parquet(run.metrics_dir).select("doc_id").collect()]
+    assert len(ids) == len(set(ids)) == first
+
+
 def test_media_metrics_plan_salt_exchange(spark):
     """Plan audit: the decode stage is fed by the explicit (doc_id,
     salt) repartition — ids + refs only, payloads never shuffle — and

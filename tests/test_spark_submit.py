@@ -99,9 +99,10 @@ def test_submit_commits_all_buckets(submitted_run):
     assert first["rows"] == N_DOCS
     lineage = os.path.join(base_dir, "lineage.jsonl")
     with open(lineage) as f:
-        recs = [json.loads(ln) for ln in f]
-    assert sorted(r["bucket"] for r in recs) == list(range(N_BUCKETS))
-    assert all(r["status"] == "committed" for r in recs)
+        [rec] = [json.loads(ln) for ln in f]
+    assert sorted(int(b) for b in rec["rows"]) == list(range(N_BUCKETS))
+    assert sum(rec["rows"].values()) == N_DOCS
+    assert os.listdir(os.path.join(base_dir, "results")) == [rec["commit"]]
 
 
 def test_submit_output_matches_in_process_pipeline(spark, submitted_run):

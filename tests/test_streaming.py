@@ -200,10 +200,10 @@ def test_streaming_dedup_evicts_state(spark, tmp_path):
 
 
 def test_streaming_exactly_once_commit_log(spark, tmp_path):
-    """Streaming extraction through the bucket commit-log contract
-    (StreamingExtractionRun): survivors identical to the batch
-    pipeline, replays idempotent, crashed partials overwritten,
-    checkpoint restart a no-op."""
+    """Streaming extraction through the commit-log contract
+    (StreamingExtractionRun): one commit directory and one lineage line
+    per batch, survivors identical to the batch pipeline, replays
+    idempotent, crashed partials purged, checkpoint restart a no-op."""
     from indonesian_id_ocr_service_spark.corpus.generator import corpus_df
     from indonesian_id_ocr_service_spark.pipeline import run_pipeline
     from indonesian_id_ocr_service_spark.sinks.lineage import (
@@ -223,48 +223,64 @@ def test_streaming_exactly_once_commit_log(spark, tmp_path):
                                           max_files_per_trigger=1)
     q.awaitTermination(600)
 
-    import glob
     import json
+    import os
 
-    batch_dirs = sorted(glob.glob(run.results_dir + "/batch=*"))
-    assert len(batch_dirs) >= 2          # 3 files, 1 file per trigger
-    with open(run.lineage_path) as f:
-        recs = [json.loads(ln) for ln in f]
-    committed = {r["bucket"] for r in recs if r["status"] == "committed"}
-    assert len(committed) == len(batch_dirs)
+    def commit_dirs():
+        return sorted(os.listdir(run.results_dir))
+
+    def lines():
+        with open(run.lineage_path) as f:
+            return [json.loads(ln) for ln in f]
+
+    # one commit directory and one lineage line per batch, naming it
+    recs = lines()
+    assert len(recs) >= 2                # 3 files, 1 file per trigger
+    assert sorted(r["commit"] for r in recs) == commit_dirs()
+    assert all(len(r["rows"]) == 1 for r in recs)
+    committed = {int(b) for r in recs for b in r["rows"]}
+    assert len(committed) == len(recs)
+    assert set(run.committed_buckets()) == committed
 
     def spans_by_doc(df):
         return {r["doc_id"]: [tuple(s) for s in r["out_spans"]]
                 for r in df.collect()}
 
-    got = spans_by_doc(spark.read.parquet(run.results_dir + "/batch=*"))
+    results = spark.read.parquet(run.results_dir)
+    got = spans_by_doc(results)
     want = spans_by_doc(run_pipeline(corpus))
     assert got == want                   # batch/stream span equality
+    # each batch's rows carry its batch id as the commit unit
+    by_commit = {r["commit"]: int(b) for r in recs for b in r["rows"]}
+    assert {("commit=" + r["commit"], r["bucket"])
+            for r in results.select("commit", "bucket").distinct()
+            .collect()} == set(by_commit.items())
 
     # replay of a committed batch id is skipped (foreachBatch redelivery)
     replay_id = min(committed)
     stats = run.process_stream_batch(corpus.limit(5), replay_id,
                                      run_pipeline)
     assert stats["skipped"] is True
-    assert spans_by_doc(
-        spark.read.parquet(run.results_dir + "/batch=*")) == want
+    assert spans_by_doc(spark.read.parquet(run.results_dir)) == want
 
-    # crashed write (partials, no commit row) → replay overwrites
-    import os
-    crash_dir = os.path.join(run.results_dir, "batch=99")
+    # crashed write (partials, no lineage line) → the replay purges it
+    crash_dir = os.path.join(run.results_dir, "commit=cdead")
     os.makedirs(crash_dir, exist_ok=True)
     with open(os.path.join(crash_dir, "junk.parquet"), "w") as f:
         f.write("partial")
     extra = corpus.limit(3)
     stats = run.process_stream_batch(extra, 99, run_pipeline)
     assert stats["skipped"] is False and stats["rows"] == 3
+    assert "commit=cdead" not in commit_dirs()
     stats = run.process_stream_batch(extra, 99, run_pipeline)
     assert stats["skipped"] is True      # now committed
+    assert sorted(r["commit"] for r in lines()) == commit_dirs()
+    assert spark.read.parquet(run.results_dir).filter(
+        "bucket = 99").count() == 3
 
     # checkpoint restart: no files left to process, outputs unchanged
-    n_before = spark.read.parquet(run.results_dir + "/batch=*").count()
+    n_before = spark.read.parquet(run.results_dir).count()
     q2 = start_extraction_stream_committed(spark, src, run, ckpt,
                                            max_files_per_trigger=1)
     q2.awaitTermination(600)
-    assert spark.read.parquet(
-        run.results_dir + "/batch=*").count() == n_before
+    assert spark.read.parquet(run.results_dir).count() == n_before
