@@ -31,6 +31,14 @@ of the kernel.
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..dictionaries import OUTPUT_FIELD_ORDER
 from ..functions.pandas_ktp import finish_ktp
@@ -38,10 +46,14 @@ from . import sim_core
 from .classify import document_type_py as identify_document_type
 from .ktp_spatial import _extract_one_doc, resolve_nik
 
-#: the extracted span sequence of one document (FIXTURES.md §1)
-OUT_SPAN_TYPE = (
-    "array<struct<kind:string,text:string,media_ref:string,order:int>>"
-)
+#: the extracted span sequence of one document (FIXTURES.md §1):
+#: array<struct<kind:string,text:string,media_ref:string,order:int>>
+OUT_SPAN_TYPE = ArrayType(StructType([
+    StructField("kind", StringType()),
+    StructField("text", StringType()),
+    StructField("media_ref", StringType()),
+    StructField("order", IntegerType()),
+]))
 
 #: output field → flat column of the kernel's wide frame (``.`` → ``_``);
 #: ``document_type`` is the ``doc_type`` column
@@ -50,10 +62,15 @@ OUT_COLS: dict[str, str] = {
     if f != "document_type"
 }
 
-FULL_KERNEL_SCHEMA = (
-    "doc_id string, doc_type string, media_refs array<string>, "
-    + ", ".join(f"{col} string" for col in OUT_COLS.values())
-    + f", field_methods map<string,string>, out_spans {OUT_SPAN_TYPE}"
+#: the kernel's output schema, built as types rather than a DDL string
+#: so that planning the kernel starts no SQL parser on the driver
+FULL_KERNEL_SCHEMA = StructType(
+    [StructField("doc_id", StringType()),
+     StructField("doc_type", StringType()),
+     StructField("media_refs", ArrayType(StringType()))]
+    + [StructField(col, StringType()) for col in OUT_COLS.values()]
+    + [StructField("field_methods", MapType(StringType(), StringType())),
+       StructField("out_spans", OUT_SPAN_TYPE)]
 )
 
 _OUT_FIELDS = list(OUT_COLS)

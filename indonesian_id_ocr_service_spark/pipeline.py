@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 
 def with_default_geometry(df: DataFrame) -> DataFrame:
@@ -36,11 +37,11 @@ def with_default_geometry(df: DataFrame) -> DataFrame:
     geom = F.transform(
         F.col("spans"),
         lambda s: F.struct(
-            (s["offset"] * 30).cast("int").alias("y"),
-            F.lit(0).cast("int").alias("x0"),
+            (s["offset"] * 30).cast(IntegerType()).alias("y"),
+            F.lit(0).cast(IntegerType()).alias("x0"),
             (F.length(F.coalesce(s["text"], F.lit(""))) * 9)
-            .cast("int").alias("x1"),
-            F.lit(22).cast("int").alias("h"),
+            .cast(IntegerType()).alias("x1"),
+            F.lit(22).cast(IntegerType()).alias("h"),
         ),
     )
     return df.withColumn("span_geom", geom)

@@ -265,7 +265,10 @@ def _date_query(df: DataFrame, raw: F.Column,
     One ``mapInPandas`` carries every row with its fast results as
     extra columns; rows no branch handled (three-digit years, embedded
     dates, char-subbed text, swaps, unrepairable years, nulls) run the
-    five-strategy chain one row at a time. A failed row
+    five-strategy chain through a bounded memo local to the UDF: the
+    date queries repeat raw values heavily (``date_3digit_year`` at
+    sf0.1 sends 91,420 residue rows holding 1,461 distinct raws), and
+    the chain is a pure function of its input. A failed row
     (``empty_input``/``all_strategies_failed``) is the all-null
     (normalized, confidence, method) of ``dates.normalize_date``'s null
     struct.
@@ -282,10 +285,13 @@ def _date_query(df: DataFrame, raw: F.Column,
     from .dictionaries import MIN_BIRTH_YEAR, REFERENCE_YEAR
 
     def gen(batches):
+        from functools import lru_cache
+
         import pandas as pd
 
         from .functions.pandas_ktp import normalize_date
 
+        chain = lru_cache(maxsize=1 << 16)(normalize_date)
         for pdf in batches:
             raws = pdf["raw"].tolist()
             norm = pdf["fast_norm"].tolist()
@@ -294,7 +300,7 @@ def _date_query(df: DataFrame, raw: F.Column,
             for i, done in enumerate(pdf["fast_done"].tolist()):
                 if done:
                     continue
-                r = normalize_date(raws[i])
+                r = chain(raws[i])
                 if r["normalized"] is not None:
                     norm[i] = r["normalized"]
                     conf[i] = r["confidence"]

@@ -11,6 +11,12 @@ local[N] here):
 - ANSI off: OCR data is noisy by design — the pipeline uses permissive
   try-cast semantics everywhere (mirrors the reference's never-raise
   contract, e.g. /root/reference/date_normalizer.py:71-77).
+- DataFrame debugging off: PySpark otherwise walks the Python stack on
+  every Column/DataFrame call to record its call site (about three
+  extra driver↔JVM round trips per call, and an IPython import on the
+  first). The trade: an analysis or runtime error's DataFrame query
+  context no longer names the Python file:line that built the failing
+  expression; the error itself is unchanged.
 """
 
 from __future__ import annotations
@@ -46,6 +52,11 @@ SQL_CONF: dict[str, str] = {
     # the class-init monitor). JVM case mapping is correct for this
     # ASCII corpus and matches Python str.upper() in the oracle.
     "spark.sql.icu.caseMappings.enabled": "false",
+    # No per-call call-site capture on the driver (module docstring):
+    # error messages lose the Python file:line fragment of the
+    # DataFrame query context, and planning loses ~3 py4j round trips
+    # per Column call.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 #: the directory holding this package: local Python workers import the

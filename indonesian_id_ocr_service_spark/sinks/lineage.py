@@ -7,15 +7,17 @@ unit of commit is the job. Each commit writes its output once,
 unpartitioned, into a fresh ``results/commit=<id>/`` (one parquet file
 per task, ``bucket`` = the commit unit kept as a data column, ``<id>``
 = ``c`` + uuid4 hex so partition discovery reads it as a string), and
-then appends ONE lineage line ``{run_id, commit, rows: {bucket: n},
-started_at, finished_at}`` naming that directory and every unit it
-holds. On restart only the units no line names run again. The log is
-the only source of truth: a ``results/`` entry that no line names is a
-crashed job's partial and is deleted before the next commit, and a
-committed directory is never read back or rewritten. (With an Iceberg
-catalog configured a commit becomes one ``writeTo(...).append()``
-snapshot; the directory layout is the catalog-free equivalent used
-here.)
+then appends ONE lineage line ``{run_id, commit, buckets: [...], rows:
+n, started_at, finished_at}`` naming that directory, every unit it
+holds and its total row count: one aggregate observed on the write,
+whatever the number of units (the directory's ``bucket`` column holds
+the per-unit split). On restart only the units no line names run
+again. The log is the only source of truth: a ``results/`` entry that
+no line names is a crashed job's partial and is deleted before the
+next commit, and a committed directory is never read back or
+rewritten. (With an Iceberg catalog configured a commit becomes one
+``writeTo(...).append()`` snapshot; the directory layout is the
+catalog-free equivalent used here.)
 
 The trade: a lost or torn line re-runs its whole commit's units, not
 one bucket. A torn line needs a crash inside one small append after the
@@ -38,6 +40,7 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType
 
 __all__ = ["ExtractionRun", "extraction_metrics"]
 
@@ -60,10 +63,12 @@ def extraction_metrics(fields_df: DataFrame) -> DataFrame:
         for name, w in FIELD_WEIGHTS.items()
     ]
     nik = F.col("nomor")
-    prov = F.substring(nik, 1, 2).cast("int")
-    day = F.substring(nik, 7, 2).cast("int")
-    month = F.substring(nik, 9, 2).cast("int")
-    seq = F.substring(nik, 13, 4).cast("int")
+    # DataType casts: a type string would start the SQL parser on the
+    # driver for each one
+    prov = F.substring(nik, 1, 2).cast(IntegerType())
+    day = F.substring(nik, 7, 2).cast(IntegerType())
+    month = F.substring(nik, 9, 2).cast(IntegerType())
+    seq = F.substring(nik, 13, 4).cast(IntegerType())
     nik16 = nik.isNotNull() & nik.rlike(r"^\d{16}$")
     bonus = (
         F.when((prov >= 11) & (prov <= 94), 0.03).otherwise(-0.05)
@@ -89,21 +94,24 @@ def extraction_metrics(fields_df: DataFrame) -> DataFrame:
     if "field_methods" in fields_df.columns:
         cols.append(F.col("field_methods"))
     # commit-unit tag: write_metrics overwrites the unit's own
-    # partition with it, so a replayed commit does not duplicate rows
+    # partition with it, so a replayed commit does not duplicate rows.
+    # The lineage line holds the commit's total only; the per-unit
+    # split is this column (and the results' ``bucket`` column)
     if "bucket" in fields_df.columns:
         cols.append(F.col("bucket"))
     return fields_df.select(*cols)
 
 
-def _observed(df: DataFrame, metrics: list, write) -> dict:
-    """Run ``write`` on ``df`` with ``metrics`` (aggregate columns)
-    observed on the rows it writes; return their values. The counts
-    come from the write job itself, not from reading its output back.
-    Result-task accumulator updates merge once per partition, so a
-    retried or speculative task does not count twice."""
+def _observed(df: DataFrame, write) -> int:
+    """Run ``write`` on ``df`` and return the number of rows it wrote,
+    one ``count`` observed on the write itself, not read back from its
+    output: one aggregate, so the observation costs the driver the same
+    whatever the number of commit units. Result-task accumulator
+    updates merge once per partition, so a retried or speculative task
+    does not count twice."""
     obs = Observation()
-    write(df.observe(obs, *metrics))
-    return obs.get
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    return int(obs.get["rows"])
 
 
 class ExtractionRun:
@@ -122,10 +130,11 @@ class ExtractionRun:
     # -- lineage -----------------------------------------------------
     def committed_buckets(self) -> dict[int, str]:
         """Committed unit → the ``results/`` directory whose lineage
-        line names it. A line commits nothing when it does not parse,
-        lacks a trailing newline (an append torn by a crash) or has no
-        ``rows`` map (logs of the older one-row-per-bucket layout), so
-        its units run again."""
+        line names in its ``buckets`` list. A line commits nothing when
+        it does not parse, lacks a trailing newline (an append torn by a
+        crash) or has no ``buckets`` list (logs of the older layouts:
+        one row per bucket, or a ``rows`` map per commit), so its units
+        run again."""
         done: dict[int, str] = {}
         if os.path.exists(self.lineage_path):
             with open(self.lineage_path) as f:
@@ -136,21 +145,22 @@ class ExtractionRun:
                         rec = json.loads(line)
                     except ValueError:
                         continue
-                    if isinstance(rec.get("rows"), dict):
+                    if isinstance(rec.get("buckets"), list):
                         done.update((int(b), rec["commit"])
-                                    for b in rec["rows"])
+                                    for b in rec["buckets"])
         return done
 
-    def _log_commit(self, commit: str, rows: dict[int, int],
+    def _log_commit(self, commit: str, units: list[int], rows: int,
                     started: float) -> None:
-        """Append the one lineage line of ``commit``: its directory and
-        its row count per unit. If a torn append left the log without a
-        trailing newline, the write starts on a fresh line, so the
-        fragment stays a line of its own that ``committed_buckets``
-        skips."""
+        """Append the one lineage line of ``commit``: its directory,
+        the units it holds and its total row count. If a torn append
+        left the log without a trailing newline, the write starts on a
+        fresh line, so the fragment stays a line of its own that
+        ``committed_buckets`` skips."""
         line = json.dumps({
             "run_id": self.run_id,
             "commit": commit,
+            "buckets": units,
             "rows": rows,
             "started_at": round(started, 3),
             "finished_at": round(time.time(), 3),
@@ -163,17 +173,17 @@ class ExtractionRun:
             f.write(line.encode())
 
     def _commit(self, out: DataFrame, unit: F.Column, units: list[int],
-                metrics_fn, log_month: str | None) -> dict[int, int]:
+                metrics_fn, log_month: str | None) -> int:
         """Commit ``out`` as one commit, for batch and stream alike:
         purge every ``results/`` entry no lineage line names (a
         crashed job's partial), write ``out`` into a fresh
         ``results/commit=<id>/`` with ``bucket`` = ``unit``, observing
-        its row count per unit of ``units`` on the write itself, write
+        its total row count on the write itself (``_observed``), write
         the metrics of the rows just written (tagged with ``unit`` when
         the frame lacks it), then append the one lineage line. Metrics
         go BEFORE the line, so a crash in between re-runs the commit
         instead of losing its metrics; the re-run overwrites the same
-        ``bucket`` partitions. Returns unit → rows."""
+        ``bucket`` partitions. Returns the rows written."""
         live = set(self.committed_buckets().values())
         for name in os.listdir(self.results_dir):
             if name not in live:
@@ -185,16 +195,14 @@ class ExtractionRun:
         started = time.time()
         commit = f"commit=c{uuid.uuid4().hex}"
         commit_dir = os.path.join(self.results_dir, commit)
-        counts = _observed(out.withColumn("bucket", unit), [
-            F.count_if(F.col("bucket") == u).alias(str(u)) for u in units
-        ], lambda df: df.write.parquet(commit_dir))
+        rows = _observed(out.withColumn("bucket", unit),
+                         lambda df: df.write.parquet(commit_dir))
         if metrics_fn is not None:
             mets = metrics_fn(out.sparkSession.read.parquet(commit_dir))
             if "bucket" not in mets.columns:
                 mets = mets.withColumn("bucket", unit)
             self.write_metrics(mets, log_month=log_month)
-        rows = {u: int(counts[str(u)]) for u in units}
-        self._log_commit(commit, rows, started)
+        self._log_commit(commit, units, rows, started)
         return rows
 
     # -- processing ---------------------------------------------------
@@ -202,8 +210,8 @@ class ExtractionRun:
         """Uniform doc bucket: md5-based (portable, skew-free)."""
         return (
             F.conv(F.substring(F.md5(F.col("doc_id")), 1, 6), 16, 10)
-            .cast("long") % self.n_buckets
-        ).cast("int")
+            .cast(LongType()) % self.n_buckets
+        ).cast(IntegerType())
 
     def process(self, spark: SparkSession, src: DataFrame,
                 pipeline_fn, metrics_fn=None,
@@ -235,7 +243,7 @@ class ExtractionRun:
         rows = self._commit(pipeline_fn(part), self.bucket_of(), todo,
                             metrics_fn, log_month)
         return {"buckets_run": len(todo), "buckets_skipped": skipped,
-                "rows": sum(rows.values())}
+                "rows": rows}
 
     # -- metrics ------------------------------------------------------
     def write_metrics(self, fields_df: DataFrame,
@@ -311,8 +319,7 @@ class StreamingExtractionRun(ExtractionRun):
             return {"batch_id": batch_id, "skipped": True, "rows": 0}
         rows = self._commit(pipeline_fn(batch_df), F.lit(batch_id),
                             [batch_id], metrics_fn, log_month)
-        return {"batch_id": batch_id, "skipped": False,
-                "rows": rows[batch_id]}
+        return {"batch_id": batch_id, "skipped": False, "rows": rows}
 
     def foreach_batch(self, pipeline_fn, metrics_fn=None,
                       log_month: str | None = None):

@@ -19,11 +19,13 @@ line (a driver JVM cannot re-set its own -Xmx/GC after launch — see
 session.py for why ParallelGC matters on this kernel); this script only
 applies the engine's SQL confs (``session.SQL_CONF``) and runs the
 resumable ``ExtractionRun`` over the input. Each job commits one
-``results/commit=<id>/`` directory and appends one lineage line naming
-it and every bucket it ran. Re-submitting the identical command after a
-crash resumes from that log: buckets a line names are skipped, and a
-crashed job's un-logged directory is deleted before the re-run
-(sinks/lineage.py).
+``results/commit=<id>/`` directory and appends one lineage line
+``{run_id, commit, buckets: [...], rows: n, started_at, finished_at}``
+naming it, every bucket it ran and the one row total observed on the
+write (the directory's ``bucket`` column holds the per-bucket split).
+Re-submitting the identical command after a crash resumes from that
+log: buckets a line names are skipped, and a crashed job's un-logged
+directory is deleted before the re-run (sinks/lineage.py).
 
 Prints exactly one JSON result line on stdout:
 ``{"run_id", "buckets_run", "buckets_skipped", "rows", "wall_s",
@@ -64,19 +66,20 @@ def _build_submitted_session(app_name: str, shuffle_partitions: int | None):
     return spark
 
 
+def _positive_int(v: str) -> int:
+    """argparse type: an integer >= 1 (argparse names the flag)."""
+    n = int(v)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"needs an integer >= 1, got {n}")
+    return n
+
+
 def parse_args(argv):
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     src = p.add_mutually_exclusive_group(required=True)
     src.add_argument("--input", help="parquet dir of the span corpus "
                      "(doc_id, spans, span_geom, span_conf, spans_alt, "
                      "alt_geom)")
-    def _positive_int(v: str) -> int:
-        n = int(v)
-        if n < 1:
-            raise argparse.ArgumentTypeError(
-                f"--synth needs N >= 1, got {n}")
-        return n
-
     src.add_argument("--synth", type=_positive_int, metavar="N",
                      help="generate an N-doc deterministic corpus on "
                      "the executors instead of reading parquet "
@@ -88,7 +91,9 @@ def parse_args(argv):
                    "(one directory per job), metrics/, lineage.jsonl "
                    "(one line per job)")
     p.add_argument("--run-id", required=True)
-    p.add_argument("--n-buckets", type=int, default=64)
+    p.add_argument("--n-buckets", type=_positive_int, default=64,
+                   help="doc_id hash buckets, the unit of resume "
+                   "(default 64)")
     p.add_argument("--log-month", default=None,
                    help="YYYY-MM metrics partition (default: current "
                    "UTC month)")

@@ -203,17 +203,27 @@ def test_date_normalize_random_parity(spark):
 def test_date_query_matches_scalar_chain(spark):
     """The date queries' plan (JVM fast branches + the scalar chain on
     residue rows) gives every row the scalar chain's result, and a
-    failed or null row the all-null (normalized, confidence, method)."""
+    failed or null row the all-null (normalized, confidence, method).
+    Residue raws, a failing raw and a null repeat, interleaved with
+    other rows, so the residue UDF's per-value memo serves repeats: each
+    repeat must still get its own row with the chain's result."""
+    from collections import Counter
+
     from indonesian_id_ocr_service_spark.queries import _date_query
 
+    repeated = ["12-03-988", "O5-O7-199O", "2310983", "no date here",
+                None]
     inputs = DATE_INPUTS + [None]
+    for k in range(4):
+        inputs += repeated + DATE_INPUTS[k::5]
     df = spark.createDataFrame([(s,) for s in inputs], "raw string")
-    got = {r["raw"]: r for r in _date_query(df, F.col("raw")).collect()}
-    assert len(got) == len(inputs)
-    for s in inputs:
+    rows = _date_query(df, F.col("raw")).collect()
+    assert Counter(r["raw"] for r in rows) == Counter(inputs)
+    assert all(Counter(inputs)[s] >= 5 for s in repeated)
+    for r in rows:
+        s = r["raw"]
         exp = S.normalize_date(s)
-        row = (got[s]["normalized"], got[s]["confidence"],
-               got[s]["method"])
+        row = (r["normalized"], r["confidence"], r["method"])
         if exp["normalized"] is None:
             assert row == (None, None, None), (s, row)
         else:

@@ -144,8 +144,8 @@ def _commit_dirs(run):
 def test_process_writes_one_file_per_task(spark, tmp_path):
     """A job commits one unpartitioned results directory: one parquet
     file per write task, not one per task per bucket; ``bucket`` is a
-    data column, and the job's one lineage line names that directory
-    and every bucket's row count."""
+    data column, and the job's one lineage line names that directory,
+    every bucket once and the row total."""
     import glob
     import json
     import os
@@ -170,8 +170,8 @@ def test_process_writes_one_file_per_task(spark, tmp_path):
     assert out.filter(F.col("bucket") != run.bucket_of()).count() == 0
     with open(run.lineage_path) as f:
         [rec] = [json.loads(line) for line in f]
-    assert sorted(int(b) for b in rec["rows"]) == list(range(64))
-    assert sum(rec["rows"].values()) == 120
+    assert sorted(rec["buckets"]) == list(range(64))
+    assert rec["rows"] == 120
     assert rec["commit"] == commit
 
 
@@ -304,14 +304,15 @@ def test_lineage_stale_partials_dropped(spark, tmp_path):
     out_ids = {r["doc_id"]
                for r in spark.read.parquet(run.results_dir).collect()}
     assert "STALE-DOC" not in out_ids
-    # bucket 2 committed with rows=0 in the job's one lineage line
+    # bucket 2 committed, with no rows, in the job's one lineage line:
+    # listed once, and the total is short by its input docs
     import json
 
     with open(run.lineage_path) as f:
         [rec] = [json.loads(line) for line in f]
-    assert sorted(rec["rows"]) == ["0", "1", "2", "3"]
-    assert rec["rows"]["2"] == 0
-    assert sum(rec["rows"].values()) == res["rows"]
+    assert sorted(rec["buckets"]) == [0, 1, 2, 3]
+    assert rec["rows"] == res["rows"] == 40 - n_b2
+    assert run.committed_buckets() == {b: rec["commit"] for b in range(4)}
     assert os.listdir(run.results_dir) == [rec["commit"]]
 
 

@@ -100,8 +100,8 @@ def test_submit_commits_all_buckets(submitted_run):
     lineage = os.path.join(base_dir, "lineage.jsonl")
     with open(lineage) as f:
         [rec] = [json.loads(ln) for ln in f]
-    assert sorted(int(b) for b in rec["rows"]) == list(range(N_BUCKETS))
-    assert sum(rec["rows"].values()) == N_DOCS
+    assert sorted(rec["buckets"]) == list(range(N_BUCKETS))
+    assert rec["rows"] == N_DOCS
     assert os.listdir(os.path.join(base_dir, "results")) == [rec["commit"]]
 
 
@@ -125,6 +125,26 @@ def test_submit_output_matches_in_process_pipeline(spark, submitted_run):
         .select("doc_id", "out_spans"))
     assert len(got) == N_DOCS
     assert got == expected
+
+
+@pytest.mark.parametrize("flag", ["--n-buckets", "--synth"])
+@pytest.mark.parametrize("value", ["0", "-1"])
+def test_parse_args_rejects_non_positive_counts(flag, value, capsys):
+    """``--n-buckets 0`` would run no bucket and exit 0 with nothing
+    extracted; it is refused at the command line, as ``--synth 0`` is."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "extract_job", os.path.join(REPO, "jobs", "extract_job.py"))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    argv = ["--synth", "10", "--base-dir", "out", "--run-id", "r"]
+    assert job.parse_args(argv + [flag, "3"]).__dict__[
+        flag[2:].replace("-", "_")] == 3
+    with pytest.raises(SystemExit) as exc:
+        job.parse_args(argv + [flag, value])
+    assert exc.value.code == 2
+    assert flag in capsys.readouterr().err
 
 
 def test_resubmit_resumes_from_lineage(submitted_run):

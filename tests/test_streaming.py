@@ -237,8 +237,8 @@ def test_streaming_exactly_once_commit_log(spark, tmp_path):
     recs = lines()
     assert len(recs) >= 2                # 3 files, 1 file per trigger
     assert sorted(r["commit"] for r in recs) == commit_dirs()
-    assert all(len(r["rows"]) == 1 for r in recs)
-    committed = {int(b) for r in recs for b in r["rows"]}
+    assert all(len(r["buckets"]) == 1 for r in recs)
+    committed = {b for r in recs for b in r["buckets"]}
     assert len(committed) == len(recs)
     assert set(run.committed_buckets()) == committed
 
@@ -251,10 +251,15 @@ def test_streaming_exactly_once_commit_log(spark, tmp_path):
     want = spans_by_doc(run_pipeline(corpus))
     assert got == want                   # batch/stream span equality
     # each batch's rows carry its batch id as the commit unit
-    by_commit = {r["commit"]: int(b) for r in recs for b in r["rows"]}
+    by_commit = {r["commit"]: b for r in recs for b in r["buckets"]}
     assert {("commit=" + r["commit"], r["bucket"])
             for r in results.select("commit", "bucket").distinct()
             .collect()} == set(by_commit.items())
+    # each line's row total is what its commit directory holds
+    assert {"commit=" + r["commit"]: r["count"]
+            for r in results.groupBy("commit").count().collect()} == {
+                r["commit"]: r["rows"] for r in recs}
+    assert sum(r["rows"] for r in recs) == 40
 
     # replay of a committed batch id is skipped (foreachBatch redelivery)
     replay_id = min(committed)
