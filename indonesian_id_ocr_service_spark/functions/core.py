@@ -17,7 +17,7 @@ from typing import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["let", "let2", "let3"]
+__all__ = ["let", "let2"]
 
 
 def let(binding: Column, body: Callable[[Column], Column]) -> Column:
@@ -31,12 +31,4 @@ def let2(b1: Column, b2: Column,
     return let(
         F.struct(b1.alias("_1"), b2.alias("_2")),
         lambda t: body(t["_1"], t["_2"]),
-    )
-
-
-def let3(b1: Column, b2: Column, b3: Column,
-         body: Callable[[Column, Column, Column], Column]) -> Column:
-    return let(
-        F.struct(b1.alias("_1"), b2.alias("_2"), b3.alias("_3")),
-        lambda t: body(t["_1"], t["_2"], t["_3"]),
     )

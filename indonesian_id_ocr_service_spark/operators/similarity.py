@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 
 from ..functions.core import let, let2
 
-__all__ = ["dot", "norm", "cosine", "cosine_topk", "hyperplane_bucket",
-           "lsh_topk", "ivf_centroids", "ivf_assign", "ivf_topk"]
+__all__ = ["dot", "norm", "cosine", "cosine_topk", "lsh_topk",
+           "ivf_centroids", "ivf_assign", "ivf_topk"]
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -79,44 +79,10 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     )
 
 
-def hyperplane_bucket(vec: Column, n_planes: int = 4, dim: int = 64,
-                      table: int = 0) -> Column:
-    """One random-hyperplane LSH bucket key: bit_j = sign(v · h_j)
-    where h_j[i] ∈ {−1, +1} is derived from md5(table:j:i) —
-    deterministic, engine-portable, no stored plane matrix. The
-    projection folds left in array order, matching DuckDB list_reduce
-    bit-for-bit."""
-    def plane_sign(j: int, i: Column) -> Column:
-        return F.when(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{table}:{j}:"),
-                               i.cast("string"))), 1, 1
-            ).isin("8", "9", "a", "b", "c", "d", "e", "f"),
-            F.lit(1.0),
-        ).otherwise(F.lit(-1.0))
-
-    bits = []
-    for j in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec.cast("array<double>"),
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(dim - 1)),
-                    lambda i: plane_sign(j, i),
-                ),
-                lambda x, s: x * s,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj > 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def _plane_signs(n_tables: int, n_planes: int, dim: int):
     """The md5-derived ±1 plane matrix, shape (dim, n_tables·n_planes) —
     sign(t, j, i) = +1 iff md5(f"{t}:{j}:{i}")[0] ∈ [8-f], identical to
-    hyperplane_bucket and the DuckDB oracle."""
+    the DuckDB oracle's planes."""
     import hashlib
 
     s = np.empty((dim, n_tables * n_planes), dtype=np.float64)

@@ -15,20 +15,10 @@ so the salt must be explicit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["salt_column", "salted_explode_media", "media_counts_salted"]
-
-
-def salt_column(key: Column, weight: Column, unit: Column | int,
-                n_max: int = 64) -> Column:
-    """Deterministic salt 0..min(ceil(weight/unit), n_max)-1 derived
-    from the key hash — heavy keys fan out over more salts, light keys
-    keep salt 0 (no shuffle blow-up for the long tail)."""
-    n = F.least(F.greatest(F.ceil(weight / unit), F.lit(1)),
-                F.lit(n_max))
-    return F.pmod(F.xxhash64(key), n).cast("int")
+__all__ = ["salted_explode_media", "media_counts_salted"]
 
 
 def salted_explode_media(docs: DataFrame, spans_col: str = "spans",

@@ -1,32 +1,31 @@
 """Commit log + extraction-quality metrics sink (SURVEY §4 item 4 —
 resumability per the north rule).
 
-Resume is tracked per commit unit (a ``doc_id`` hash bucket for
-``ExtractionRun.process``, the micro-batch id for a stream batch); the
-unit of commit is the job. Each commit writes its output once,
-unpartitioned, into a fresh ``results/commit=<id>/`` (one parquet file
-per task, ``bucket`` = the commit unit kept as a data column, ``<id>``
-= ``c`` + uuid4 hex so partition discovery reads it as a string), and
+Resume is tracked per ``doc_id`` hash bucket; the unit of commit is the
+job. ``ExtractionRun.process`` runs every bucket in one job, writes its
+output once, unpartitioned, into a fresh ``results/commit=<id>/`` (one
+parquet file per task, ``bucket`` kept as a data column, ``<id>`` =
+``c`` + uuid4 hex so partition discovery reads it as a string), and
 then appends ONE lineage line ``{run_id, commit, buckets: [...], rows:
-n, started_at, finished_at}`` naming that directory, every unit it
+n, started_at, finished_at}`` naming that directory, every bucket it
 holds and its total row count: one aggregate observed on the write,
-whatever the number of units (the directory's ``bucket`` column holds
-the per-unit split). On restart only the units no line names run
-again. The log is the only source of truth: a ``results/`` entry that
-no line names is a crashed job's partial and is deleted before the
-next commit, and a committed directory is never read back or
-rewritten. (With an Iceberg catalog configured a commit becomes one
-``writeTo(...).append()`` snapshot; the directory layout is the
-catalog-free equivalent used here.)
+whatever the number of buckets (the directory's ``bucket`` column holds
+the per-bucket split). A run dir is therefore either committed whole or
+not at all, and a restart either skips or runs the whole job. The log
+is the only source of truth: a ``results/`` entry that no line names is
+a crashed job's partial and is deleted before the next commit, and a
+committed directory is never read back or rewritten. (With an Iceberg
+catalog configured a commit becomes one ``writeTo(...).append()``
+snapshot; the directory layout is the catalog-free equivalent used
+here.)
 
-The trade: a lost or torn line re-runs its whole commit's units, not
-one bucket. A torn line needs a crash inside one small append after the
-job has finished; a crash during the job re-runs every pending unit
-either way.
+The trade: a lost or torn line re-runs its whole commit, not one
+bucket. A torn line needs a crash inside one small append after the job
+has finished; a crash during the job re-runs every bucket either way.
 
 Extraction-quality metrics (fields found per doc, per-field presence,
 fuzzy-distance histogram buckets) land in a metrics table partitioned
-by month, run_id and commit unit — the Spark re-expression of the
+by month, run_id and bucket — the Spark re-expression of the
 reference's per-request prediction log (app.py:56-67).
 """
 
@@ -93,10 +92,10 @@ def extraction_metrics(fields_df: DataFrame) -> DataFrame:
     # extractor stage carried it through
     if "field_methods" in fields_df.columns:
         cols.append(F.col("field_methods"))
-    # commit-unit tag: write_metrics overwrites the unit's own
-    # partition with it, so a replayed commit does not duplicate rows.
-    # The lineage line holds the commit's total only; the per-unit
-    # split is this column (and the results' ``bucket`` column)
+    # bucket tag: write_metrics overwrites the bucket's own partition
+    # with it, so a replayed commit does not duplicate rows. The
+    # lineage line holds the commit's total only; the per-bucket split
+    # is this column (and the results' ``bucket`` column)
     if "bucket" in fields_df.columns:
         cols.append(F.col("bucket"))
     return fields_df.select(*cols)
@@ -106,7 +105,7 @@ def _observed(df: DataFrame, write) -> int:
     """Run ``write`` on ``df`` and return the number of rows it wrote,
     one ``count`` observed on the write itself, not read back from its
     output: one aggregate, so the observation costs the driver the same
-    whatever the number of commit units. Result-task accumulator
+    whatever the number of buckets. Result-task accumulator
     updates merge once per partition, so a retried or speculative task
     does not count twice."""
     obs = Observation()
@@ -129,12 +128,12 @@ class ExtractionRun:
 
     # -- lineage -----------------------------------------------------
     def committed_buckets(self) -> dict[int, str]:
-        """Committed unit → the ``results/`` directory whose lineage
-        line names in its ``buckets`` list. A line commits nothing when
-        it does not parse, lacks a trailing newline (an append torn by a
-        crash) or has no ``buckets`` list (logs of the older layouts:
-        one row per bucket, or a ``rows`` map per commit), so its units
-        run again."""
+        """Committed bucket → the ``results/`` directory whose lineage
+        line names it in its ``buckets`` list. A line commits nothing
+        when it does not parse, lacks a trailing newline (an append torn
+        by a crash) or has no ``buckets`` list (logs of the older
+        layouts: one row per bucket, or a ``rows`` map per commit), so
+        its buckets run again."""
         done: dict[int, str] = {}
         if os.path.exists(self.lineage_path):
             with open(self.lineage_path) as f:
@@ -150,17 +149,17 @@ class ExtractionRun:
                                     for b in rec["buckets"])
         return done
 
-    def _log_commit(self, commit: str, units: list[int], rows: int,
+    def _log_commit(self, commit: str, buckets: list[int], rows: int,
                     started: float) -> None:
         """Append the one lineage line of ``commit``: its directory,
-        the units it holds and its total row count. If a torn append
+        the buckets it holds and its total row count. If a torn append
         left the log without a trailing newline, the write starts on a
         fresh line, so the fragment stays a line of its own that
         ``committed_buckets`` skips."""
         line = json.dumps({
             "run_id": self.run_id,
             "commit": commit,
-            "buckets": units,
+            "buckets": buckets,
             "rows": rows,
             "started_at": round(started, 3),
             "finished_at": round(time.time(), 3),
@@ -171,39 +170,6 @@ class ExtractionRun:
                 if f.read(1) != b"\n":
                     line = "\n" + line
             f.write(line.encode())
-
-    def _commit(self, out: DataFrame, unit: F.Column, units: list[int],
-                metrics_fn, log_month: str | None) -> int:
-        """Commit ``out`` as one commit, for batch and stream alike:
-        purge every ``results/`` entry no lineage line names (a
-        crashed job's partial), write ``out`` into a fresh
-        ``results/commit=<id>/`` with ``bucket`` = ``unit``, observing
-        its total row count on the write itself (``_observed``), write
-        the metrics of the rows just written (tagged with ``unit`` when
-        the frame lacks it), then append the one lineage line. Metrics
-        go BEFORE the line, so a crash in between re-runs the commit
-        instead of losing its metrics; the re-run overwrites the same
-        ``bucket`` partitions. Returns the rows written."""
-        live = set(self.committed_buckets().values())
-        for name in os.listdir(self.results_dir):
-            if name not in live:
-                path = os.path.join(self.results_dir, name)
-                if os.path.isdir(path):
-                    shutil.rmtree(path)
-                else:
-                    os.remove(path)
-        started = time.time()
-        commit = f"commit=c{uuid.uuid4().hex}"
-        commit_dir = os.path.join(self.results_dir, commit)
-        rows = _observed(out.withColumn("bucket", unit),
-                         lambda df: df.write.parquet(commit_dir))
-        if metrics_fn is not None:
-            mets = metrics_fn(out.sparkSession.read.parquet(commit_dir))
-            if "bucket" not in mets.columns:
-                mets = mets.withColumn("bucket", unit)
-            self.write_metrics(mets, log_month=log_month)
-        self._log_commit(commit, units, rows, started)
-        return rows
 
     # -- processing ---------------------------------------------------
     def bucket_of(self) -> F.Column:
@@ -216,33 +182,63 @@ class ExtractionRun:
     def process(self, spark: SparkSession, src: DataFrame,
                 pipeline_fn, metrics_fn=None,
                 log_month: str | None = None) -> dict:
-        """Run pipeline_fn over ALL uncommitted buckets in ONE job and
-        commit its output as one ``results/commit=<id>/`` directory
-        and one lineage line (``_commit``), skipping committed buckets.
-        Returns {buckets_run, buckets_skipped, rows}.
+        """Run pipeline_fn over ``src`` in ONE job and commit its output
+        as one ``results/commit=<id>/`` directory and one lineage line,
+        unless the run dir is already committed. Returns {buckets_run,
+        buckets_skipped, rows}.
 
         ``metrics_fn``: optional ``output DataFrame → metrics-input
         DataFrame`` hook; when given, per-document extraction-quality
-        metrics for the freshly run buckets land under the month/run
-        partition (write_metrics) in the same call — the results +
-        lineage + metrics triple the north star requires from one
-        resumable run. It reads the new commit directory only.
+        metrics land under the month/run partition (write_metrics) in
+        the same call — the results + lineage + metrics triple the
+        north star requires from one resumable run. It reads the new
+        commit directory only.
 
-        One source scan regardless of how many buckets are pending (a
-        per-bucket loop would be O(n_buckets) full scans — wrong for a
-        cold run at 100 TB). The bucket is recomputed on the output
-        (it carries doc_id), so the pipeline itself stays
-        bucket-agnostic."""
-        todo = [b for b in range(self.n_buckets)
-                if b not in self.committed_buckets()]
-        skipped = self.n_buckets - len(todo)
-        if not todo:
-            return {"buckets_run": 0, "buckets_skipped": skipped,
+        A commit holds every bucket, so ``src`` goes to the pipeline
+        unfiltered: one source scan, and no bucket predicate to plan.
+        The bucket is computed on the output (it carries doc_id), so
+        the pipeline itself stays bucket-agnostic. Committed buckets
+        other than exactly ``range(n_buckets)`` mean the run dir was
+        committed under another bucket count; resuming it would run
+        documents twice, so it raises ``ValueError``.
+
+        The commit: purge every ``results/`` entry (with nothing
+        committed, each is a crashed job's partial), write the output
+        into a fresh commit directory with its ``bucket`` column,
+        observing its total row count on the write (``_observed``),
+        write the metrics of the rows just written (tagged with their
+        ``bucket`` when the frame lacks it), then append the one
+        lineage line. Metrics go BEFORE the line, so a crash in between
+        re-runs the commit instead of losing its metrics; the re-run
+        overwrites the same ``bucket`` partitions."""
+        done = self.committed_buckets()
+        if done:
+            if sorted(done) != list(range(self.n_buckets)):
+                raise ValueError(
+                    f"{self.base} was committed with {len(done)} "
+                    f"buckets, not n_buckets={self.n_buckets}")
+            return {"buckets_run": 0, "buckets_skipped": self.n_buckets,
                     "rows": 0}
-        part = src.filter(self.bucket_of().isin(todo))
-        rows = self._commit(pipeline_fn(part), self.bucket_of(), todo,
-                            metrics_fn, log_month)
-        return {"buckets_run": len(todo), "buckets_skipped": skipped,
+        for name in os.listdir(self.results_dir):
+            path = os.path.join(self.results_dir, name)
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            else:
+                os.remove(path)
+        started = time.time()
+        commit = f"commit=c{uuid.uuid4().hex}"
+        commit_dir = os.path.join(self.results_dir, commit)
+        rows = _observed(
+            pipeline_fn(src).withColumn("bucket", self.bucket_of()),
+            lambda df: df.write.parquet(commit_dir))
+        if metrics_fn is not None:
+            mets = metrics_fn(spark.read.parquet(commit_dir))
+            if "bucket" not in mets.columns:
+                mets = mets.withColumn("bucket", self.bucket_of())
+            self.write_metrics(mets, log_month=log_month)
+        self._log_commit(commit, list(range(self.n_buckets)), rows,
+                         started)
+        return {"buckets_run": self.n_buckets, "buckets_skipped": 0,
                 "rows": rows}
 
     # -- metrics ------------------------------------------------------
@@ -254,7 +250,7 @@ class ExtractionRun:
         a ``log_month=YYYY-MM`` parquet partition (plus run_id), so a
         month's metrics prune to one directory scan.
 
-        The frame must carry its commit unit as ``bucket``: each
+        The frame must carry its ``bucket`` column: each
         ``bucket=N`` partition is dynamically overwritten, so a
         replayed commit rewrites its own metrics instead of appending
         duplicates.
@@ -279,53 +275,3 @@ class ExtractionRun:
          .partitionBy("log_month", "run_id", "bucket")
          .parquet(self.metrics_dir))
         return log_month
-
-
-class StreamingExtractionRun(ExtractionRun):
-    """The commit-log contract lifted onto Structured Streaming (VERDICT
-    r4 task #7): the commit unit is the MICRO-BATCH id instead of the
-    doc bucket, because a doc bucket is never 'complete' while files
-    keep arriving. Each batch commits through the same ``_commit`` as
-    ``process``: one ``results/commit=<id>/`` directory whose
-    ``bucket`` column is the batch id, and one lineage line.
-
-    ``foreachBatch`` re-delivers a batch after a crash (its own sink
-    commit is not transactional with the checkpoint); idempotency comes
-    from the lineage log — a replayed batch id that a line names is
-    skipped, and one whose job died before its line runs again after
-    the purge deletes the dead job's directory, its metrics
-    overwriting their own ``bucket`` partition.
-
-    The stream's commit log, results and metrics live under their own
-    ``stream/`` namespace inside the run dir: a stream batch id and a
-    batch-mode doc bucket are DIFFERENT keyspaces, and sharing the
-    lineage file let a committed stream batch N silently mark doc
-    bucket N done for ``process``. One run dir may serve both modes
-    without the logs interfering."""
-
-    def __init__(self, base_dir: str, run_id: str, n_buckets: int = 64):
-        super().__init__(base_dir, run_id, n_buckets)
-        stream_base = os.path.join(base_dir, "stream")
-        self.results_dir = os.path.join(stream_base, "results")
-        self.metrics_dir = os.path.join(stream_base, "metrics")
-        self.lineage_path = os.path.join(stream_base, "lineage.jsonl")
-        os.makedirs(self.results_dir, exist_ok=True)
-        os.makedirs(self.metrics_dir, exist_ok=True)
-
-    def process_stream_batch(self, batch_df: DataFrame, batch_id: int,
-                             pipeline_fn, metrics_fn=None,
-                             log_month: str | None = None) -> dict:
-        if batch_id in self.committed_buckets():
-            return {"batch_id": batch_id, "skipped": True, "rows": 0}
-        rows = self._commit(pipeline_fn(batch_df), F.lit(batch_id),
-                            [batch_id], metrics_fn, log_month)
-        return {"batch_id": batch_id, "skipped": False, "rows": rows}
-
-    def foreach_batch(self, pipeline_fn, metrics_fn=None,
-                      log_month: str | None = None):
-        """The callable to hand to ``writeStream.foreachBatch``."""
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.process_stream_batch(batch_df, int(batch_id),
-                                      pipeline_fn, metrics_fn,
-                                      log_month=log_month)
-        return fn

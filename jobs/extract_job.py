@@ -24,8 +24,9 @@ resumable ``ExtractionRun`` over the input. Each job commits one
 naming it, every bucket it ran and the one row total observed on the
 write (the directory's ``bucket`` column holds the per-bucket split).
 Re-submitting the identical command after a crash resumes from that
-log: buckets a line names are skipped, and a crashed job's un-logged
-directory is deleted before the re-run (sinks/lineage.py).
+log: a committed run dir is skipped, and a crashed job's un-logged
+directory is deleted before the re-run (sinks/lineage.py). A run dir
+resumes only under the ``--n-buckets`` it was committed with.
 
 Prints exactly one JSON result line on stdout:
 ``{"run_id", "buckets_run", "buckets_skipped", "rows", "wall_s",
@@ -92,7 +93,8 @@ def parse_args(argv):
                    "(one line per job)")
     p.add_argument("--run-id", required=True)
     p.add_argument("--n-buckets", type=_positive_int, default=64,
-                   help="doc_id hash buckets, the unit of resume "
+                   help="doc_id hash buckets, the bucket column of the "
+                   "results; a resume must pass the committed count "
                    "(default 64)")
     p.add_argument("--log-month", default=None,
                    help="YYYY-MM metrics partition (default: current "

@@ -4,7 +4,8 @@ the benchmark, ``__spark_entry__.py`` and the bench scripts:
 - every module of the package must be imported by one of those files;
   a module only its own file imports is dead code and fails here;
 - every top-level function or class of the package outside ``oracle/``
-  must be referenced by name in one of those files. ``oracle/`` holds
+  must be referenced by name in one of those files; its own module's
+  ``__all__`` does not count as a reference. ``oracle/`` holds
   the reference implementations and keys the benchmark's cached
   universe, so it is left out;
 - no package module outside ``oracle/`` may import ``oracle/``."""
@@ -69,10 +70,25 @@ def _parse(path: str) -> ast.Module:
         return ast.parse(f.read(), path)
 
 
-def _referenced_names(tree: ast.Module) -> set[str]:
+def _own_all(tree: ast.Module) -> ast.AST | None:
+    """The module's own top-level ``__all__`` assignment, if any."""
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__"
+                for t in node.targets):
+            return node
+    return None
+
+
+def _referenced_names(tree: ast.Module) -> tuple[set[str], set[str]]:
     """Names a file uses: ``ast.Name`` ids, attribute names, imported
-    names and their aliases, and exact string constants."""
+    names and their aliases, and exact string constants. The strings of
+    the file's own ``__all__`` come back apart, as the second set: a
+    module listing its own name in ``__all__`` does not use it."""
+    own_all = _own_all(tree)
+    skip = {id(n) for n in ast.walk(own_all)} if own_all else set()
     found: set[str] = set()
+    exported: set[str] = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
             found.add(node.id)
@@ -83,8 +99,8 @@ def _referenced_names(tree: ast.Module) -> set[str]:
             if node.asname:
                 found.add(node.asname)
         elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-            found.add(node.value)
-    return found
+            (exported if id(node) in skip else found).add(node.value)
+    return found, exported
 
 
 def test_every_package_module_is_imported():
@@ -98,20 +114,28 @@ def test_every_package_module_is_imported():
 
 
 def test_every_package_function_is_referenced():
+    """A name counts as referenced when any scanned file uses it, or
+    when the ``__all__`` of a file other than its own lists it."""
     oracle = os.path.join(REPO, PKG, "oracle") + os.sep
-    defined: dict[str, str] = {}
+    defined: dict[str, tuple[str, str]] = {}
     for path in _package_files():
         if path.startswith(oracle):
             continue
         for node in _parse(path).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                                  ast.ClassDef)):
-                defined[f"{_module_name(path)}.{node.name}"] = node.name
+                defined[f"{_module_name(path)}.{node.name}"] = (
+                    path, node.name)
     referenced: set[str] = set()
+    exported: dict[str, set[str]] = {}
     for path in _scanned_files():
-        referenced |= _referenced_names(_parse(path))
-    dead = sorted(q for q, name in defined.items()
-                  if name not in referenced)
+        referenced_here, exported[path] = _referenced_names(_parse(path))
+        referenced |= referenced_here
+    dead = sorted(
+        q for q, (home, name) in defined.items()
+        if name not in referenced and not any(
+            name in names for path, names in exported.items()
+            if path != home))
     assert not dead, f"{len(dead)} functions nothing references: {dead}"
 
 

@@ -3,11 +3,12 @@
 A cold ``spark-submit`` job pays its driver's planning before the first
 task. Each py4j round trip is a socket exchange with the JVM, so the
 plan ``ExtractionRun.process`` builds must not make more of them as the
-bucket count grows: only the ``isin`` literals of the pending buckets
-may scale with it. The kernel's output schema is built as types, so
-planning it starts no SQL parser; it must stay the schema its DDL
-form describes. An AST guard keeps type strings out of the extraction
-path's ``.cast(...)`` and ``mapInArrow(schema=...)`` calls.
+bucket count grows: the source goes to the pipeline unfiltered, and the
+bucket is one ``% n_buckets`` expression whatever the count. The
+kernel's output schema is built as types, so planning it starts no SQL
+parser; it must stay the schema its DDL form describes. An AST guard
+keeps type strings out of the extraction path's ``.cast(...)`` and
+``mapInArrow(schema=...)`` calls.
 """
 
 from __future__ import annotations
@@ -22,8 +23,8 @@ from indonesian_id_ocr_service_spark.operators.unified_extract import (
 )
 from indonesian_id_ocr_service_spark.sinks.lineage import ExtractionRun
 
-#: round trips one extra pending bucket may add (its ``isin`` literal)
-MAX_TRIPS_PER_BUCKET = 5
+#: round trips one extra bucket may add: at most 30 from 4 to 64 buckets
+MAX_TRIPS_PER_BUCKET = 0.5
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

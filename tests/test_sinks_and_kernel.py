@@ -237,6 +237,32 @@ def test_torn_line_uncommits_its_whole_commit(spark, tmp_path):
     assert len(ids) == len(set(ids)) == 40
 
 
+def test_process_refuses_another_bucket_count(spark, tmp_path):
+    """A run dir committed under 4 buckets, resumed under 8: its
+    committed buckets 0-3 are not this run's 0-7, and running the
+    "pending" 4-7 would commit some documents twice. process() raises
+    instead, naming both counts, and leaves ``results/`` as it was."""
+    import pytest
+
+    from indonesian_id_ocr_service_spark.corpus.generator import (
+        SPAN_SCHEMA_DDL, doc_rows)
+
+    df = spark.createDataFrame(list(doc_rows(40, fractions=(1.0, 0, 0))),
+                               SPAN_SCHEMA_DDL)
+    base = str(tmp_path / "runb")
+
+    def pipe(part):
+        return part.select("doc_id")
+
+    assert ExtractionRun(base, "rb", n_buckets=4).process(
+        spark, df, pipe)["rows"] == 40
+    run8 = ExtractionRun(base, "rb", n_buckets=8)
+    with pytest.raises(ValueError, match=r"\b4\b.*\b8\b"):
+        run8.process(spark, df, pipe)
+    ids = [r.doc_id for r in spark.read.parquet(run8.results_dir).collect()]
+    assert len(ids) == len(set(ids)) == 40
+
+
 def test_extraction_metrics(spark):
     from indonesian_id_ocr_service_spark.sinks.lineage import (
         extraction_metrics,
