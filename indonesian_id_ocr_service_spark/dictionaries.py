@@ -334,7 +334,7 @@ KABUPATEN: frozenset[str] = frozenset({
 INDONESIAN_PLACES: list[str] = sorted(PROVINCES | KOTA | KABUPATEN)
 
 #: Per-field scoring weights (confidence_scorer.py:78-94 — used by the
-#: composite extraction-quality score written to the metrics table).
+#: V7 weighted composite of ``operators/scoring.score_fields``).
 FIELD_WEIGHTS: dict[str, float] = {
     "nomor": 3.0,
     "nama": 2.5,

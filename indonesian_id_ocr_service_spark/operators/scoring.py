@@ -3,7 +3,8 @@
 The reference's per-field scorers, weighted composite, NIK structural
 bonus, cross-check and A-F grade (confidence_scorer.py:102-493) over the
 flat output-field columns. Everything is when/regexp arithmetic — JVM,
-shuffle-free, feeding the metrics table (sinks.lineage).
+shuffle-free, checked against DuckDB by the ``confidence_scoring``
+query.
 """
 
 from __future__ import annotations

@@ -8,7 +8,8 @@ compute-bound media stage: task time follows the max partition WEIGHT
 (total media payload), not row count. ``salted_explode_media`` splits
 each document's media refs into weight-bounded chunks and spreads the
 chunks uniformly by (doc_id, salt) hash; the per-chunk results
-reduce back to one row per document. AQE's skew-join splitter does not
+reduce back to one row per document (``media_quality_metrics``,
+operators/media_metrics.py). AQE's skew-join splitter does not
 cover this case — the skew is inside a mapInPandas stage, not a join —
 so the salt must be explicit.
 """
@@ -18,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["salted_explode_media", "media_counts_salted"]
+__all__ = ["salted_explode_media"]
 
 
 def salted_explode_media(docs: DataFrame, spans_col: str = "spans",
@@ -41,20 +42,3 @@ def salted_explode_media(docs: DataFrame, spans_col: str = "spans",
         .repartition(F.col("doc_id"), F.col("salt"))
     )
 
-
-def media_counts_salted(docs: DataFrame, chunk: int = 8) -> DataFrame:
-    """Demo reduction over the salted explode: per-document media
-    count + total ref length computed on chunk rows, then reduced to
-    one row per doc — result is independent of the salting."""
-    chunks = salted_explode_media(docs, chunk=chunk)
-    per_chunk = chunks.select(
-        "doc_id",
-        F.size("media_refs").alias("n"),
-        F.aggregate(F.col("media_refs"), F.lit(0),
-                    lambda acc, r: acc + F.length(r)).alias("ref_len"),
-    )
-    return (
-        per_chunk.groupBy("doc_id")
-        .agg(F.sum("n").cast("int").alias("n_media"),
-             F.sum("ref_len").cast("int").alias("ref_len_total"))
-    )

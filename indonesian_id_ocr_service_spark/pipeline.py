@@ -99,12 +99,3 @@ def run_pipeline(df: DataFrame) -> DataFrame:
     DuckDB."""
     return _extract(df).select("doc_id", "out_spans")
 
-
-def run_pipeline_fields(df: DataFrame) -> DataFrame:
-    """The flat output-field columns of the KTP documents (for the
-    metrics table): the kernel's own wide frame without its spans, so a
-    doc is KTP here exactly when ``run_pipeline`` emits it as KTP
-    (including C3 retries resolved through the alternative view)."""
-    return (_extract(df).filter(F.col("doc_type") == "KTP")
-            .withColumn("document_type", F.col("doc_type"))
-            .drop("doc_type", "out_spans"))

@@ -23,9 +23,13 @@ resumable ``ExtractionRun`` over the input. Each job commits one
 ``{run_id, commit, buckets: [...], rows: n, started_at, finished_at}``
 naming it, every bucket it ran and the one row total observed on the
 write (the directory's ``bucket`` column holds the per-bucket split).
+With ``--media-metrics`` the job also writes its per-document media
+quality rows into ``metrics/commit=<id>/``, the same name, each row
+tagged with ``run_id`` and ``log_month`` (the UTC month the job
+started).
 Re-submitting the identical command after a crash resumes from that
 log: a committed run dir is skipped, and a crashed job's un-logged
-directory is deleted before the re-run (sinks/lineage.py). A run dir
+directories are deleted before the re-run (sinks/lineage.py). A run dir
 resumes only under the ``--n-buckets`` it was committed with.
 
 Prints exactly one JSON result line on stdout:
@@ -89,20 +93,19 @@ def parse_args(argv):
                    help="corpus seed for --synth")
     p.add_argument("--base-dir", required=True,
                    help="run output root: results/commit=<id>/ "
-                   "(one directory per job), metrics/, lineage.jsonl "
-                   "(one line per job)")
+                   "(one directory per job), metrics/commit=<id>/ "
+                   "(with --media-metrics), lineage.jsonl (one line "
+                   "per job)")
     p.add_argument("--run-id", required=True)
     p.add_argument("--n-buckets", type=_positive_int, default=64,
                    help="doc_id hash buckets, the bucket column of the "
                    "results; a resume must pass the committed count "
                    "(default 64)")
-    p.add_argument("--log-month", default=None,
-                   help="YYYY-MM metrics partition (default: current "
-                   "UTC month)")
     p.add_argument("--media-metrics", action="store_true",
                    help="also commit the salted media-quality metrics "
-                   "branch for the freshly processed buckets")
-    p.add_argument("--shuffle-partitions", type=int, default=None)
+                   "of the job's output into metrics/commit=<id>/")
+    p.add_argument("--shuffle-partitions", type=_positive_int,
+                   default=None)
     p.add_argument("--app-name", default="idocr-extract")
     return p.parse_args(argv)
 
@@ -135,8 +138,7 @@ def main(argv=None) -> int:
     run = ExtractionRun(args.base_dir, args.run_id,
                         n_buckets=args.n_buckets)
     t0 = time.time()
-    res = run.process(spark, src, run_pipeline, metrics_fn=metrics_fn,
-                      log_month=args.log_month)
+    res = run.process(spark, src, run_pipeline, metrics_fn=metrics_fn)
     wall = time.time() - t0
     out = {
         "run_id": args.run_id,

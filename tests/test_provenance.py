@@ -1,8 +1,11 @@
 """Per-field extraction provenance (the reference's trace_info method
 labels, ktp_extractor.py:344-347 / debug_ktp.py:127-133) must flow from
-the spatial extractor into the metrics table."""
+the spatial extractor into the kernel's wide frame (``pipeline._extract``),
+the ``field_methods`` column."""
 
 from __future__ import annotations
+
+from pyspark.sql import functions as F
 
 from indonesian_id_ocr_service_spark.corpus.generator import (
     SPAN_SCHEMA_DDL,
@@ -11,13 +14,7 @@ from indonesian_id_ocr_service_spark.corpus.generator import (
 from indonesian_id_ocr_service_spark.operators.classify import (
     document_type_py,
 )
-from indonesian_id_ocr_service_spark.pipeline import (
-    run_pipeline,
-    run_pipeline_fields,
-)
-from indonesian_id_ocr_service_spark.sinks.lineage import (
-    extraction_metrics,
-)
+from indonesian_id_ocr_service_spark.pipeline import _extract, run_pipeline
 
 _KNOWN_METHODS = {
     "header_strip", "inline_extraction", "geometric_match",
@@ -49,9 +46,13 @@ def _golden_df(spark):
         SPAN_SCHEMA_DDL)
 
 
+def _ktp_rows(df):
+    """The kernel's wide rows of the documents it extracts as KTP."""
+    return _extract(df).filter(F.col("doc_type") == "KTP")
+
+
 def test_methods_on_golden_doc(spark):
-    fields = run_pipeline_fields(_golden_df(spark))
-    m = extraction_metrics(fields).collect()[0]
+    [m] = _ktp_rows(_golden_df(spark)).select("field_methods").collect()
     fm = dict(m["field_methods"])
     assert fm["PROVINSI"] == "header_strip"
     assert fm["NIK"] == "inline_extraction"
@@ -61,8 +62,7 @@ def test_methods_on_golden_doc(spark):
 def test_methods_vocabulary_on_corpus(spark):
     rows = list(doc_rows(80, fractions=(1.0, 0, 0)))
     df = spark.createDataFrame(rows, SPAN_SCHEMA_DDL)
-    fields = run_pipeline_fields(df)
-    mets = extraction_metrics(fields).collect()
+    mets = _ktp_rows(df).select("doc_id", "field_methods").collect()
     assert len(mets) == 80
     seen = set()
     for r in mets:
@@ -75,9 +75,9 @@ def test_methods_vocabulary_on_corpus(spark):
 
 
 def test_fields_frame_matches_span_output(spark):
-    """The metrics frame holds exactly the docs the span output emits as
-    KTP — including C3 retries, whose primary view classifies UNKNOWN
-    and whose alternative view resolves to KTP."""
+    """The kernel frame's KTP rows are exactly the docs the span output
+    emits as KTP — including C3 retries, whose primary view classifies
+    UNKNOWN and whose alternative view resolves to KTP."""
     rows = list(doc_rows(120, fractions=(0.6, 0.3, 0.1)))
     c3 = {r[0] for r in rows
           if document_type_py([s["text"] for s in r[1]
@@ -90,6 +90,6 @@ def test_fields_frame_matches_span_output(spark):
     }
     assert ktp_spans & c3, "corpus exercises no C3 retry to KTP"
     fields = {r["doc_id"]
-              for r in run_pipeline_fields(df).select("doc_id").collect()}
+              for r in _ktp_rows(df).select("doc_id").collect()}
     assert fields == ktp_spans, (sorted(ktp_spans - fields),
                                  sorted(fields - ktp_spans))

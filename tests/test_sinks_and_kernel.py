@@ -263,32 +263,6 @@ def test_process_refuses_another_bucket_count(spark, tmp_path):
     assert len(ids) == len(set(ids)) == 40
 
 
-def test_extraction_metrics(spark):
-    from indonesian_id_ocr_service_spark.sinks.lineage import (
-        extraction_metrics,
-    )
-
-    df = spark.createDataFrame(
-        [("d1", "KTP", "3201070107920001", "BUDI", "BOGOR", "01-07-1992",
-          "LAKI-LAKI", "ISLAM", "KAWIN", "PETANI", "WNI",
-          "JL. X", "001/002", "SUKAMAJU", "SERPONG", "BOGOR",
-          "JAWA BARAT"),
-         ("d2", "KTP", None, None, None, None, None, None, None, None,
-          None, None, None, None, None, None, None)],
-        ["doc_id", "document_type", "nomor", "nama", "tempat_lahir",
-         "tgl_lahir", "jenis_kelamin", "agama", "status_perkawinan",
-         "pekerjaan", "kewarganegaraan", "alamat_name", "alamat_rt_rw",
-         "alamat_kel_desa", "alamat_kecamatan", "alamat_kabupaten",
-         "alamat_provinsi"])
-    rows = {r["doc_id"]: r for r in extraction_metrics(df).collect()}
-    assert rows["d1"]["fields_found"] == 15
-    assert not rows["d1"]["missing_critical"]
-    assert rows["d1"]["weighted_completeness"] == 1.0
-    assert abs(rows["d1"]["nik_structural_bonus"] - 0.08) < 1e-9
-    assert rows["d2"]["fields_found"] == 0
-    assert rows["d2"]["missing_critical"]
-
-
 def test_lineage_stale_partials_dropped(spark, tmp_path):
     """A crashed (un-logged) earlier run's partials in a pending bucket
     must NOT survive into that bucket's commit when the re-run produces
@@ -342,72 +316,38 @@ def test_lineage_stale_partials_dropped(spark, tmp_path):
     assert os.listdir(run.results_dir) == [rec["commit"]]
 
 
-def test_metrics_month_partition(spark, tmp_path):
-    """Metrics land under a log_month=YYYY-MM partition (the Spark
-    re-expression of the reference's ocr_logs/YYYY-MM layout,
-    app.py:56-67) and month reads prune to one directory. A metrics
-    frame carries its commit unit as ``bucket``."""
+def test_process_metrics_one_directory_per_commit(spark, tmp_path):
+    """A commit's metrics land in one ``metrics/`` directory named like
+    its results directory: one parquet file per write task, however
+    many buckets, and every row stamped with the UTC month of the
+    lineage line's ``started_at`` (the reference's ocr_logs/YYYY-MM
+    layout, app.py:56-67, as a column)."""
+    import glob
+    import json
     import os
+    import time
 
-    run = ExtractionRun(str(tmp_path / "runm"), run_id="r-1",
-                        n_buckets=4)
-    fields = spark.createDataFrame(
-        [("d1", "KTP", "3201070107920001", "BUDI", "BOGOR",
-          "01-07-1992", "LAKI-LAKI", "ISLAM", "KAWIN", "PETANI", "WNI",
-          "JL. X", "001/002", "SUKAMAJU", "SERPONG", "BOGOR",
-          "JAWA BARAT")],
-        ["doc_id", "document_type", "nomor", "nama", "tempat_lahir",
-         "tgl_lahir", "jenis_kelamin", "agama", "status_perkawinan",
-         "pekerjaan", "kewarganegaraan", "alamat_name", "alamat_rt_rw",
-         "alamat_kel_desa", "alamat_kecamatan", "alamat_kabupaten",
-         "alamat_provinsi"]).withColumn("bucket", F.lit(0))
-    m1 = run.write_metrics(fields, log_month="2026-07")
-    m2 = run.write_metrics(fields, log_month="2026-08")
-    assert (m1, m2) == ("2026-07", "2026-08")
-    assert os.path.isdir(
-        os.path.join(run.metrics_dir, "log_month=2026-07", "run_id=r-1",
-                     "bucket=0"))
-    back = spark.read.parquet(run.metrics_dir)
-    assert back.count() == 2
-    july = back.filter(back.log_month == "2026-07")
-    assert july.count() == 1
-    assert july.collect()[0]["fields_found"] == 15
-    # default month stamps the current UTC month
-    m3 = run.write_metrics(fields)
-    import re
-    assert re.fullmatch(r"\d{4}-\d{2}", m3)
-
-
-def test_process_with_metrics_hook(spark, tmp_path):
-    """One resumable process() call commits results + lineage AND the
-    month-partitioned metrics for exactly the fresh buckets (the
-    results/lineage/metrics triple of the north star)."""
-    import os
-
-    from indonesian_id_ocr_service_spark.corpus.generator import (
-        SPAN_SCHEMA_DDL, doc_rows)
-    from indonesian_id_ocr_service_spark.pipeline import (
-        run_pipeline_fields,
+    from indonesian_id_ocr_service_spark.corpus.generator import corpus_df
+    from indonesian_id_ocr_service_spark.operators.media_metrics import (
+        media_quality_metrics,
     )
+    from indonesian_id_ocr_service_spark.pipeline import run_pipeline
 
-    rows = list(doc_rows(30, fractions=(1.0, 0, 0)))
-    df = spark.createDataFrame(rows, SPAN_SCHEMA_DDL)
-    run = ExtractionRun(str(tmp_path / "runm2"), run_id="rm",
-                        n_buckets=4)
-    res = run.process(
-        spark, df, run_pipeline_fields,
-        metrics_fn=lambda out: out,   # fields frame IS the metrics input
-        log_month="2026-08")
-    assert res["buckets_run"] == 4
-    mdir = os.path.join(run.metrics_dir, "log_month=2026-08",
-                        "run_id=rm")
-    assert os.path.isdir(mdir)
-    mets = spark.read.parquet(run.metrics_dir)
-    assert mets.count() == res["rows"] > 0
-    assert {"doc_id", "fields_found", "weighted_completeness"} \
-        <= set(mets.columns)
-    # a resume with nothing pending writes no further metrics
-    res2 = run.process(spark, df, run_pipeline_fields,
-                       metrics_fn=lambda out: out, log_month="2026-08")
-    assert res2["buckets_run"] == 0
-    assert spark.read.parquet(run.metrics_dir).count() == res["rows"]
+    run = ExtractionRun(str(tmp_path / "runm"), run_id="rm", n_buckets=64)
+    res = run.process(spark, corpus_df(spark, 60), run_pipeline,
+                      metrics_fn=media_quality_metrics)
+    assert res["buckets_run"] == 64 and res["rows"] == 60
+    with open(run.lineage_path) as f:
+        [rec] = [json.loads(line) for line in f]
+
+    assert os.listdir(run.metrics_dir) == [rec["commit"]]
+    commit_dir = os.path.join(run.metrics_dir, rec["commit"])
+    n_files = len(glob.glob(os.path.join(commit_dir, "*.parquet")))
+    assert 1 <= n_files <= int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+    mets = spark.read.parquet(commit_dir)
+    month = time.strftime("%Y-%m", time.gmtime(rec["started_at"]))
+    assert mets.count() > 0
+    assert {(r.run_id, r.log_month)
+            for r in mets.select("run_id", "log_month").collect()} \
+        == {("rm", month)}

@@ -41,13 +41,18 @@ def test_salted_explode_splits_heavy_docs(spark):
 
 
 def test_salted_reduction_is_salt_invariant(spark):
-    docs = _mk_docs(spark)
+    """The production media reduction gives the same rows whatever the
+    chunk size, on a document that really fans out (200 refs)."""
+    from indonesian_id_ocr_service_spark.operators.media_metrics import (
+        media_quality_metrics,
+    )
+
+    docs = _mk_docs(spark).withColumnRenamed("spans", "out_spans")
     for chunk in (4, 8, 64):
-        out = {r.doc_id: (r.n_media, r.ref_len_total)
-               for r in skew.media_counts_salted(docs, chunk=chunk)
-               .collect()}
-        assert out["heavy"][0] == 200
-        assert all(out[f"light{d}"][0] == 1 for d in range(60))
+        out = {r.doc_id: r
+               for r in media_quality_metrics(docs, chunk=chunk).collect()}
+        assert out["heavy"].n_media == 200
+        assert all(out[f"light{d}"].n_media == 1 for d in range(60))
         if chunk == 4:
             base = out
     assert base == out
@@ -101,8 +106,7 @@ def test_media_metrics_branch_in_extraction_run(spark, tmp_path):
     run = ExtractionRun(str(tmp_path / "run"), "r1", n_buckets=4)
     stats = run.process(
         spark, src, run_pipeline,
-        metrics_fn=lambda out: media_quality_metrics(out, chunk=2),
-        log_month="2026-08")
+        metrics_fn=lambda out: media_quality_metrics(out, chunk=2))
     assert stats["buckets_run"] == 4
 
     metrics = spark.read.parquet(run.metrics_dir)
@@ -132,18 +136,17 @@ def test_media_metrics_branch_in_extraction_run(spark, tmp_path):
     # resume: nothing to do, metrics not duplicated
     stats2 = run.process(
         spark, src, run_pipeline,
-        metrics_fn=lambda out: media_quality_metrics(out, chunk=2),
-        log_month="2026-08")
+        metrics_fn=lambda out: media_quality_metrics(out, chunk=2))
     assert stats2["buckets_run"] == 0
     assert spark.read.parquet(run.metrics_dir).count() == len(rows)
 
 
 def test_media_metrics_not_duplicated_on_replay(spark, tmp_path):
     """A crash after the metrics write and before the lineage append
-    makes the next process() run the same buckets again. The media
-    metrics frame has no ``bucket`` column, so the commit tags it with
-    the doc's bucket and the replay overwrites those partitions: every
-    doc keeps one metrics row instead of one per run."""
+    makes the next process() run the same buckets again. Nothing names
+    the crashed commit, so the replay's purge deletes its metrics
+    directory with its results directory: every doc keeps one metrics
+    row instead of one per run."""
     import os
 
     from indonesian_id_ocr_service_spark.corpus.generator import corpus_df
@@ -159,8 +162,7 @@ def test_media_metrics_not_duplicated_on_replay(spark, tmp_path):
     def process():
         return run.process(
             spark, src, run_pipeline,
-            metrics_fn=lambda out: media_quality_metrics(out, chunk=2),
-            log_month="2026-08")
+            metrics_fn=lambda out: media_quality_metrics(out, chunk=2))
 
     process()
     first = spark.read.parquet(run.metrics_dir).count()

@@ -56,7 +56,6 @@ def _submit(workdir: str, base_dir: str) -> str:
         "--base-dir", base_dir,
         "--run-id", "submit-smoke",
         "--n-buckets", str(N_BUCKETS),
-        "--log-month", "2026-08",
     ]
     proc = subprocess.run(cmd, cwd=workdir, env=env, timeout=420,
                           capture_output=True, text=True)
@@ -127,11 +126,14 @@ def test_submit_output_matches_in_process_pipeline(spark, submitted_run):
     assert got == expected
 
 
-@pytest.mark.parametrize("flag", ["--n-buckets", "--synth"])
+@pytest.mark.parametrize("flag", ["--n-buckets", "--synth",
+                                  "--shuffle-partitions"])
 @pytest.mark.parametrize("value", ["0", "-1"])
 def test_parse_args_rejects_non_positive_counts(flag, value, capsys):
     """``--n-buckets 0`` would run no bucket and exit 0 with nothing
-    extracted; it is refused at the command line, as ``--synth 0`` is."""
+    extracted; it is refused at the command line, as ``--synth 0`` is,
+    and as ``--shuffle-partitions 0``, which would only fail later
+    inside Spark."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
