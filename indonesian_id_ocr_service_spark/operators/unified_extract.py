@@ -55,34 +55,27 @@ OUT_SPAN_TYPE = ArrayType(StructType([
     StructField("order", IntegerType()),
 ]))
 
-#: output field → flat column of the kernel's wide frame (``.`` → ``_``);
-#: ``document_type`` is the ``doc_type`` column
-OUT_COLS: dict[str, str] = {
-    f: f.replace(".", "_") for f in OUTPUT_FIELD_ORDER
-    if f != "document_type"
-}
-
 #: the kernel's output schema, built as types rather than a DDL string
 #: so that planning the kernel starts no SQL parser on the driver
-FULL_KERNEL_SCHEMA = StructType(
-    [StructField("doc_id", StringType()),
-     StructField("doc_type", StringType()),
-     StructField("media_refs", ArrayType(StringType()))]
-    + [StructField(col, StringType()) for col in OUT_COLS.values()]
-    + [StructField("field_methods", MapType(StringType(), StringType())),
-       StructField("out_spans", OUT_SPAN_TYPE)]
-)
+FULL_KERNEL_SCHEMA = StructType([
+    StructField("doc_id", StringType()),
+    StructField("doc_type", StringType()),
+    StructField("field_methods", MapType(StringType(), StringType())),
+    StructField("out_spans", OUT_SPAN_TYPE),
+])
 
-_OUT_FIELDS = list(OUT_COLS)
-_FIELD_KINDS = [f"field:{f}" for f in _OUT_FIELDS]
+#: (result key, span kind) of every output field after document_type,
+#: in output order
+_FIELD_KINDS = [(f, f"field:{f}") for f in OUTPUT_FIELD_ORDER
+                if f != "document_type"]
 
 
-def _out_spans(doc_types, field_vals, medias):
+def _out_spans(doc_types, results, medias):
     """The output span contract (format_to_target_json,
     ktp_extractor.py:750-805), columnar: per document the
-    ``field:document_type`` span and every non-null field in output
-    order — or, for UNKNOWN, the single ``error`` span — then its
-    ``media`` spans, ``order`` running from 0. Built as flat
+    ``field:document_type`` span and every non-null field of its result
+    dict in output order — or, for UNKNOWN, the single ``error`` span —
+    then its ``media`` spans, ``order`` running from 0. Built as flat
     kind/text/media_ref/order children plus list offsets, the way the
     kernel reads its input."""
     import pyarrow as pa
@@ -91,21 +84,21 @@ def _out_spans(doc_types, field_vals, medias):
     texts: list = []
     refs: list = []
     offsets = [0]
-    for i, doc_type in enumerate(doc_types):
+    for doc_type, result, media in zip(doc_types, results, medias):
         if doc_type == "UNKNOWN":
             kinds.append("error")
             texts.append("Unknown document type")
         else:
             kinds.append("field:document_type")
             texts.append(doc_type)
-            for kind, col in zip(_FIELD_KINDS, field_vals):
-                v = col[i]
-                if v is not None:
-                    kinds.append(kind)
-                    texts.append(v)
+            if result:
+                for f, kind in _FIELD_KINDS:
+                    v = result.get(f)
+                    if v is not None:
+                        kinds.append(kind)
+                        texts.append(v)
         n_fields = len(kinds) - offsets[-1]
         refs += [""] * n_fields
-        media = medias[i]
         kinds += ["media"] * len(media)
         texts += [""] * len(media)
         refs += media
@@ -169,8 +162,8 @@ class _View:
 
 def full_kernel_batch_arrow(batches):
     """(doc_id, spans, span_geom[, spans_alt, alt_geom, span_conf]) →
-    one row of FINAL output fields and output spans per document
-    (FULL_KERNEL_SCHEMA).
+    one row per document of its type, per-field provenance and output
+    spans (FULL_KERNEL_SCHEMA).
 
     The span/geometry columns are consumed as flattened child arrays +
     list offsets (``_View``), not per-span Python dicts: Arrow→pandas
@@ -182,10 +175,8 @@ def full_kernel_batch_arrow(batches):
     need anyway."""
     import pyarrow as pa
 
-    out_names = (["doc_id", "doc_type", "media_refs"]
-                 + list(OUT_COLS.values())
-                 + ["field_methods", "out_spans"])
-    out_type_sim = pa.map_(pa.string(), pa.string())
+    out_names = FULL_KERNEL_SCHEMA.names
+    methods_type = pa.map_(pa.string(), pa.string())
 
     for rb in batches:
         n = rb.num_rows
@@ -205,9 +196,9 @@ def full_kernel_batch_arrow(batches):
                 np.float64)
 
         doc_types: list = []
+        results: list = []
         medias_out: list = []
         methods_out: list = []
-        field_vals = [[None] * n for _ in _OUT_FIELDS]
 
         for i in range(n):
             view = prim
@@ -256,19 +247,15 @@ def full_kernel_batch_arrow(batches):
                 result = sim_core.process_sim_doc(
                     texts, view.sim_items(texts, idx),
                     ocr_conf=ocr_conf, alt_supplier=alt_supplier)
-            if result:
-                for col, f in zip(field_vals, _OUT_FIELDS):
-                    col[i] = result.get(f)
             doc_types.append(doc_type)
+            results.append(result)
             medias_out.append(media)
             methods_out.append(methods)
 
         yield pa.RecordBatch.from_arrays(
             [pa.array(doc_ids, pa.string()),
              pa.array(doc_types, pa.string()),
-             pa.array(medias_out, pa.list_(pa.string()))]
-            + [pa.array(v, pa.string()) for v in field_vals]
-            + [pa.array(methods_out, out_type_sim),
-               _out_spans(doc_types, field_vals, medias_out)],
+             pa.array(methods_out, methods_type),
+             _out_spans(doc_types, results, medias_out)],
             names=out_names,
         )

@@ -8,10 +8,9 @@ no Exchange:
         included as stored
       → ONE mapInArrow kernel (operators.unified_extract): per document
         classify (C1, incl. the C3 retry) → KTP spatial extraction +
-        the per-document finish, or the SIM state machines → one wide row
-        of final output fields + per-field provenance + the output
-        span sequence (``out_spans``, or the UNKNOWN error span + media
-        pass-through)
+        the per-document finish, or the SIM state machines → one row of
+        document type + per-field provenance + the output span sequence
+        (``out_spans``, or the UNKNOWN error span + media pass-through)
 
 The only per-row work is that kernel; around it the plan holds a scan
 and column projections, no JVM expression tree to build or analyse
@@ -68,8 +67,8 @@ def _kernel_input(src: DataFrame) -> DataFrame:
 
 
 def _extract(df: DataFrame) -> DataFrame:
-    """The kernel's wide frame: doc_id, doc_type, media_refs, the final
-    output-field columns, field_methods and out_spans."""
+    """The kernel's frame: doc_id, doc_type, field_methods and
+    out_spans."""
     from .operators.unified_extract import (
         FULL_KERNEL_SCHEMA,
         full_kernel_batch_arrow,

@@ -1,27 +1,24 @@
 """Commit log + per-document metrics sink (SURVEY §4 item 4 —
 resumability per the north rule).
 
-Resume is tracked per ``doc_id`` hash bucket; the unit of commit is the
-job. ``ExtractionRun.process`` runs every bucket in one job, writes its
-output once, unpartitioned, into a fresh ``results/commit=<id>/`` (one
-parquet file per task, ``bucket`` kept as a data column, ``<id>`` =
-``c`` + uuid4 hex so partition discovery reads it as a string), and
-then appends ONE lineage line ``{run_id, commit, buckets: [...], rows:
-n, started_at, finished_at}`` naming that directory, every bucket it
-holds and its total row count: one aggregate observed on the write,
-whatever the number of buckets (the directory's ``bucket`` column holds
-the per-bucket split). A run dir is therefore either committed whole or
-not at all, and a restart either skips or runs the whole job. The log
-is the only source of truth: a ``results/`` or ``metrics/`` entry that
-no line names is a crashed job's partial and is deleted before the next
-commit, and a committed directory is never read back or rewritten. (With an Iceberg
-catalog configured a commit becomes one ``writeTo(...).append()``
-snapshot; the directory layout is the catalog-free equivalent used
-here.)
+The unit of commit is the job. ``ExtractionRun.process`` runs the whole
+source in one job, writes its output once, unpartitioned, into a fresh
+``results/commit=<id>/`` (one parquet file per task, ``<id>`` = ``c`` +
+uuid4 hex so partition discovery reads it as a string), and then
+appends ONE lineage line ``{run_id, commit, rows: n, started_at,
+finished_at}`` naming that directory and its row count, observed on
+the write. A run dir is therefore either committed whole or not at
+all, and a restart either skips or runs the whole job. The log is the
+only source of truth: a ``results/`` or ``metrics/`` entry that no line
+names is a crashed job's partial and is deleted before the next
+commit, and a committed directory is never read back or rewritten.
+(With an Iceberg catalog configured a commit becomes one
+``writeTo(...).append()`` snapshot; the directory layout is the
+catalog-free equivalent used here.)
 
-The trade: a lost or torn line re-runs its whole commit, not one
-bucket. A torn line needs a crash inside one small append after the job
-has finished; a crash during the job re-runs every bucket either way.
+The trade: a lost or torn line re-runs its whole commit. A torn line
+needs a crash inside one small append after the job has finished; a
+crash during the job re-runs the job either way.
 
 Per-document metrics (``process(metrics_fn=...)``, e.g. the media
 quality rows of operators/media_metrics.py) follow the same rule: one
@@ -43,7 +40,6 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType
 
 __all__ = ["ExtractionRun"]
 
@@ -51,22 +47,18 @@ __all__ = ["ExtractionRun"]
 def _observed(df: DataFrame, write) -> int:
     """Run ``write`` on ``df`` and return the number of rows it wrote,
     one ``count`` observed on the write itself, not read back from its
-    output: one aggregate, so the observation costs the driver the same
-    whatever the number of buckets. Result-task accumulator
-    updates merge once per partition, so a retried or speculative task
-    does not count twice."""
+    output. Result-task accumulator updates merge once per partition,
+    so a retried or speculative task does not count twice."""
     obs = Observation()
     write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
     return int(obs.get["rows"])
 
 
 class ExtractionRun:
-    """Commit-log driven, resumable extraction over doc_id buckets."""
+    """Commit-log driven, resumable extraction: one job, one commit."""
 
-    def __init__(self, base_dir: str, run_id: str, n_buckets: int = 64):
-        self.base = base_dir
+    def __init__(self, base_dir: str, run_id: str):
         self.run_id = run_id
-        self.n_buckets = n_buckets
         self.results_dir = os.path.join(base_dir, "results")
         self.metrics_dir = os.path.join(base_dir, "metrics")
         self.lineage_path = os.path.join(base_dir, "lineage.jsonl")
@@ -74,39 +66,33 @@ class ExtractionRun:
         os.makedirs(self.metrics_dir, exist_ok=True)
 
     # -- lineage -----------------------------------------------------
-    def committed_buckets(self) -> dict[int, str]:
-        """Committed bucket → the ``results/`` directory whose lineage
-        line names it in its ``buckets`` list. A line commits nothing
-        when it does not parse, lacks a trailing newline (an append torn
-        by a crash) or has no ``buckets`` list (logs of the older
-        layouts: one row per bucket, or a ``rows`` map per commit), so
-        its buckets run again."""
-        done: dict[int, str] = {}
-        if os.path.exists(self.lineage_path):
-            with open(self.lineage_path) as f:
-                for line in f:
-                    if not line.endswith("\n"):
-                        continue
-                    try:
-                        rec = json.loads(line)
-                    except ValueError:
-                        continue
-                    if isinstance(rec.get("buckets"), list):
-                        done.update((int(b), rec["commit"])
-                                    for b in rec["buckets"])
-        return done
+    def committed(self) -> str | None:
+        """The ``results/`` directory a lineage line names, or ``None``
+        while the run dir is uncommitted. A line commits nothing when it
+        does not parse, lacks a trailing newline (an append torn by a
+        crash) or names no ``commit``."""
+        if not os.path.exists(self.lineage_path):
+            return None
+        with open(self.lineage_path) as f:
+            for line in f:
+                if not line.endswith("\n"):
+                    continue
+                try:
+                    rec = json.loads(line)
+                except ValueError:
+                    continue
+                if rec.get("commit"):
+                    return rec["commit"]
+        return None
 
-    def _log_commit(self, commit: str, buckets: list[int], rows: int,
-                    started: float) -> None:
-        """Append the one lineage line of ``commit``: its directory,
-        the buckets it holds and its total row count. If a torn append
-        left the log without a trailing newline, the write starts on a
-        fresh line, so the fragment stays a line of its own that
-        ``committed_buckets`` skips."""
+    def _log_commit(self, commit: str, rows: int, started: float) -> None:
+        """Append the one lineage line of ``commit``: its directory and
+        row count. If a torn append left the log without a trailing
+        newline, the write starts on a fresh line, so the fragment stays
+        a line of its own that ``committed`` skips."""
         line = json.dumps({
             "run_id": self.run_id,
             "commit": commit,
-            "buckets": buckets,
             "rows": rows,
             "started_at": round(started, 3),
             "finished_at": round(time.time(), 3),
@@ -119,19 +105,12 @@ class ExtractionRun:
             f.write(line.encode())
 
     # -- processing ---------------------------------------------------
-    def bucket_of(self) -> F.Column:
-        """Uniform doc bucket: md5-based (portable, skew-free)."""
-        return (
-            F.conv(F.substring(F.md5(F.col("doc_id")), 1, 6), 16, 10)
-            .cast(LongType()) % self.n_buckets
-        ).cast(IntegerType())
-
     def process(self, spark: SparkSession, src: DataFrame,
                 pipeline_fn, metrics_fn=None) -> dict:
         """Run pipeline_fn over ``src`` in ONE job and commit its output
         as one ``results/commit=<id>/`` directory and one lineage line,
-        unless the run dir is already committed. Returns {buckets_run,
-        buckets_skipped, rows}.
+        unless the run dir is already committed. Returns {skipped,
+        rows}: ``rows`` is the committed row count, 0 when skipped.
 
         ``metrics_fn``: optional ``output DataFrame → metrics DataFrame``
         hook; when given, the rows it returns, plus ``run_id`` and
@@ -143,31 +122,17 @@ class ExtractionRun:
         shuffle, so computing them during the results write would need
         the output cached instead.
 
-        A commit holds every bucket, so ``src`` goes to the pipeline
-        unfiltered: one source scan, and no bucket predicate to plan.
-        The bucket is computed on the output (it carries doc_id), so
-        the pipeline itself stays bucket-agnostic. Committed buckets
-        other than exactly ``range(n_buckets)`` mean the run dir was
-        committed under another bucket count; resuming it would run
-        documents twice, so it raises ``ValueError``.
-
         The commit: purge every ``results/`` and ``metrics/`` entry
         (with nothing committed, each is a crashed job's partial),
-        write the output into a fresh commit directory with its
-        ``bucket`` column, observing its total row count on the write
+        write the pipeline's output, as it is, into a fresh commit
+        directory, observing its row count on the write
         (``_observed``), write the metrics of the rows just written
         into the same-named metrics directory, then append the one
         lineage line. Metrics go BEFORE the line, so a crash in between
         re-runs the commit instead of losing its metrics; the re-run's
         purge deletes the crashed commit's metrics with its results."""
-        done = self.committed_buckets()
-        if done:
-            if sorted(done) != list(range(self.n_buckets)):
-                raise ValueError(
-                    f"{self.base} was committed with {len(done)} "
-                    f"buckets, not n_buckets={self.n_buckets}")
-            return {"buckets_run": 0, "buckets_skipped": self.n_buckets,
-                    "rows": 0}
+        if self.committed() is not None:
+            return {"skipped": True, "rows": 0}
         for parent in (self.results_dir, self.metrics_dir):
             for name in os.listdir(parent):
                 path = os.path.join(parent, name)
@@ -178,16 +143,13 @@ class ExtractionRun:
         started = round(time.time(), 3)
         commit = f"commit=c{uuid.uuid4().hex}"
         commit_dir = os.path.join(self.results_dir, commit)
-        rows = _observed(
-            pipeline_fn(src).withColumn("bucket", self.bucket_of()),
-            lambda df: df.write.parquet(commit_dir))
+        rows = _observed(pipeline_fn(src),
+                         lambda df: df.write.parquet(commit_dir))
         if metrics_fn is not None:
             month = time.strftime("%Y-%m", time.gmtime(started))
             (metrics_fn(spark.read.parquet(commit_dir))
              .withColumns({"run_id": F.lit(self.run_id),
                            "log_month": F.lit(month)})
              .write.parquet(os.path.join(self.metrics_dir, commit)))
-        self._log_commit(commit, list(range(self.n_buckets)), rows,
-                         started)
-        return {"buckets_run": self.n_buckets, "buckets_skipped": 0,
-                "rows": rows}
+        self._log_commit(commit, rows, started)
+        return {"skipped": False, "rows": rows}

@@ -20,27 +20,23 @@ session.py for why ParallelGC matters on this kernel); this script only
 applies the engine's SQL confs (``session.SQL_CONF``) and runs the
 resumable ``ExtractionRun`` over the input. Each job commits one
 ``results/commit=<id>/`` directory and appends one lineage line
-``{run_id, commit, buckets: [...], rows: n, started_at, finished_at}``
-naming it, every bucket it ran and the one row total observed on the
-write (the directory's ``bucket`` column holds the per-bucket split).
-With ``--media-metrics`` the job also writes its per-document media
-quality rows into ``metrics/commit=<id>/``, the same name, each row
-tagged with ``run_id`` and ``log_month`` (the UTC month the job
-started).
+``{run_id, commit, rows: n, started_at, finished_at}`` naming it and
+the row count observed on the write. With ``--media-metrics`` the job
+also writes its per-document media quality rows into
+``metrics/commit=<id>/``, the same name, each row tagged with
+``run_id`` and ``log_month`` (the UTC month the job started).
 Re-submitting the identical command after a crash resumes from that
 log: a committed run dir is skipped, and a crashed job's un-logged
-directories are deleted before the re-run (sinks/lineage.py). A run dir
-resumes only under the ``--n-buckets`` it was committed with.
+directories are deleted before the re-run (sinks/lineage.py).
 
 Prints exactly one JSON result line on stdout:
-``{"run_id", "buckets_run", "buckets_skipped", "rows", "wall_s",
-"docs_per_sec"}`` — Spark's own logging goes to stderr, so the line is
-machine-parseable from a scheduler.
+``{"run_id", "skipped", "rows", "wall_s", "docs_per_sec"}`` —
+Spark's own logging goes to stderr, so the line is machine-parseable
+from a scheduler.
 
 Reference parity note: this is the batch analog of the reference's
 service entry (app.py:92-98, one Waitress process, 4 threads); here a
-single submit processes an arbitrarily large corpus partitioned by
-hashed doc_id buckets.
+single submit processes an arbitrarily large corpus as one commit.
 """
 
 from __future__ import annotations
@@ -93,14 +89,10 @@ def parse_args(argv):
                    help="corpus seed for --synth")
     p.add_argument("--base-dir", required=True,
                    help="run output root: results/commit=<id>/ "
-                   "(one directory per job), metrics/commit=<id>/ "
-                   "(with --media-metrics), lineage.jsonl (one line "
-                   "per job)")
+                   "(doc_id, out_spans; one directory per committed "
+                   "job), metrics/commit=<id>/ (with --media-metrics), "
+                   "lineage.jsonl (one line per committed job)")
     p.add_argument("--run-id", required=True)
-    p.add_argument("--n-buckets", type=_positive_int, default=64,
-                   help="doc_id hash buckets, the bucket column of the "
-                   "results; a resume must pass the committed count "
-                   "(default 64)")
     p.add_argument("--media-metrics", action="store_true",
                    help="also commit the salted media-quality metrics "
                    "of the job's output into metrics/commit=<id>/")
@@ -135,15 +127,13 @@ def main(argv=None) -> int:
         )
         metrics_fn = media_quality_metrics
 
-    run = ExtractionRun(args.base_dir, args.run_id,
-                        n_buckets=args.n_buckets)
+    run = ExtractionRun(args.base_dir, args.run_id)
     t0 = time.time()
     res = run.process(spark, src, run_pipeline, metrics_fn=metrics_fn)
     wall = time.time() - t0
     out = {
         "run_id": args.run_id,
-        "buckets_run": res["buckets_run"],
-        "buckets_skipped": res["buckets_skipped"],
+        "skipped": res["skipped"],
         "rows": res["rows"],
         "wall_s": round(wall, 2),
         "docs_per_sec": round(res["rows"] / wall, 1) if wall > 0 else 0.0,

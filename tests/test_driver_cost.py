@@ -1,14 +1,14 @@
 """Driver-side planning cost of an extraction job.
 
 A cold ``spark-submit`` job pays its driver's planning before the first
-task. Each py4j round trip is a socket exchange with the JVM, so the
-plan ``ExtractionRun.process`` builds must not make more of them as the
-bucket count grows: the source goes to the pipeline unfiltered, and the
-bucket is one ``% n_buckets`` expression whatever the count. The
-kernel's output schema is built as types, so planning it starts no SQL
-parser; it must stay the schema its DDL form describes. An AST guard
-keeps type strings out of the extraction path's ``.cast(...)`` and
-``mapInArrow(schema=...)`` calls.
+task. Each py4j round trip is a socket exchange with the JVM, so one
+``ExtractionRun.process`` must stay within a fixed number of them: the
+source goes to the pipeline unfiltered and its output is written as it
+is, with no column added on the driver. The kernel's output schema is
+built as types, so planning it starts no SQL parser; it must stay the
+schema its DDL form describes. An AST guard keeps type strings out of
+the extraction path's ``.cast(...)`` and ``mapInArrow(schema=...)``
+calls.
 """
 
 from __future__ import annotations
@@ -19,12 +19,13 @@ import threading
 
 from indonesian_id_ocr_service_spark.operators.unified_extract import (
     FULL_KERNEL_SCHEMA,
-    OUT_COLS,
 )
 from indonesian_id_ocr_service_spark.sinks.lineage import ExtractionRun
 
-#: round trips one extra bucket may add: at most 30 from 4 to 64 buckets
-MAX_TRIPS_PER_BUCKET = 0.5
+#: py4j round trips one warm ``process()`` of 200 documents may send
+#: from the calling thread: 104 measured (PySpark 4.1, local[4]), 136
+#: when a ``bucket`` column was added to every result row
+MAX_PROCESS_TRIPS = 120
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -57,8 +58,7 @@ def _round_trips(spark, monkeypatch, fn) -> int:
     return n
 
 
-def test_process_round_trips_do_not_grow_with_buckets(spark, tmp_path,
-                                                      monkeypatch):
+def test_process_round_trips_stay_bounded(spark, tmp_path, monkeypatch):
     from indonesian_id_ocr_service_spark.corpus.generator import corpus_df
     from indonesian_id_ocr_service_spark.pipeline import run_pipeline
 
@@ -66,27 +66,22 @@ def test_process_round_trips_do_not_grow_with_buckets(spark, tmp_path,
     corpus_df(spark, 200, seed=7).write.parquet(src)
     df = spark.read.parquet(src)
 
-    def process(name, n_buckets):
-        run = ExtractionRun(str(tmp_path / name), run_id=name,
-                            n_buckets=n_buckets)
-        res = run.process(spark, df, run_pipeline)
-        assert res["buckets_run"] == n_buckets and res["rows"] == 200
+    def process(name):
+        res = ExtractionRun(str(tmp_path / name), run_id=name).process(
+            spark, df, run_pipeline)
+        assert res == {"skipped": False, "rows": 200}
 
-    process("warm", 4)
-    trips = {n: _round_trips(spark, monkeypatch,
-                             lambda n=n: process(f"b{n}", n))
-             for n in (4, 64)}
-    per_bucket = (trips[64] - trips[4]) / 60
-    assert per_bucket <= MAX_TRIPS_PER_BUCKET, trips
+    process("warm")
+    trips = _round_trips(spark, monkeypatch, lambda: process("run"))
+    assert trips <= MAX_PROCESS_TRIPS, trips
 
 
 def test_kernel_schema_matches_its_ddl(spark):
     from pyspark.sql.types import DataType
 
     ddl = (
-        "doc_id string, doc_type string, media_refs array<string>, "
-        + ", ".join(f"{col} string" for col in OUT_COLS.values())
-        + ", field_methods map<string,string>, out_spans "
+        "doc_id string, doc_type string, field_methods map<string,string>, "
+        "out_spans "
         "array<struct<kind:string,text:string,media_ref:string,order:int>>"
     )
     assert FULL_KERNEL_SCHEMA == DataType.fromDDL(ddl)

@@ -1,6 +1,6 @@
 """Per-field extraction provenance (the reference's trace_info method
 labels, ktp_extractor.py:344-347 / debug_ktp.py:127-133) must flow from
-the spatial extractor into the kernel's wide frame (``pipeline._extract``),
+the spatial extractor into the kernel's frame (``pipeline._extract``),
 the ``field_methods`` column."""
 
 from __future__ import annotations

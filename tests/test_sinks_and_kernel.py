@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import functions as F
-
 from indonesian_id_ocr_service_spark.operators import sim_core
 from indonesian_id_ocr_service_spark.sinks.lineage import ExtractionRun
 
@@ -104,26 +102,25 @@ def test_lineage_resume(spark, tmp_path):
         calls.append(1)
         return part.select("doc_id")
 
-    run = ExtractionRun(str(tmp_path / "run1"), run_id=str(uuid.uuid4()),
-                        n_buckets=4)
+    run = ExtractionRun(str(tmp_path / "run1"), run_id=str(uuid.uuid4()))
     r1 = run.process(spark, df, fake_pipeline)
-    assert r1["buckets_run"] == 4 and r1["rows"] == 40
-    # ALL pending buckets processed by ONE pipeline invocation (one
-    # source scan), not one per bucket
+    assert r1 == {"skipped": False, "rows": 40}
+    # the whole source goes through ONE pipeline invocation (one
+    # source scan)
     assert len(calls) == 1
 
-    # resume: everything committed → nothing re-runs
+    # resume: committed → nothing re-runs
     r2 = run.process(spark, df, fake_pipeline)
-    assert r2["buckets_run"] == 0 and r2["buckets_skipped"] == 4
+    assert r2 == {"skipped": True, "rows": 0}
     assert len(calls) == 1
 
-    # simulate a lost commit: drop its lineage line. The line named
-    # every bucket the job ran, so all 4 re-run in one new commit
+    # simulate a lost commit: drop its lineage line, so the whole job
+    # re-runs in one new commit
     first = os.listdir(run.results_dir)
     with open(run.lineage_path, "w"):
         pass
     r3 = run.process(spark, df, fake_pipeline)
-    assert r3["buckets_run"] == 4 and r3["rows"] == 40
+    assert r3 == {"skipped": False, "rows": 40}
     assert len(calls) == 2
     # the un-logged directory was deleted, not read back: every doc
     # once, one directory left, the one the new line names
@@ -143,34 +140,35 @@ def _commit_dirs(run):
 
 def test_process_writes_one_file_per_task(spark, tmp_path):
     """A job commits one unpartitioned results directory: one parquet
-    file per write task, not one per task per bucket; ``bucket`` is a
-    data column, and the job's one lineage line names that directory,
-    every bucket once and the row total."""
+    file per write task, holding exactly the pipeline's output columns,
+    and the job's one lineage line names that directory and its row
+    count."""
     import glob
     import json
     import os
 
     from indonesian_id_ocr_service_spark.corpus.generator import (
         SPAN_SCHEMA_DDL, doc_rows)
+    from indonesian_id_ocr_service_spark.pipeline import run_pipeline
 
     k = 3
     df = spark.createDataFrame(list(doc_rows(120, fractions=(1.0, 0, 0))),
                                SPAN_SCHEMA_DDL).repartition(k)
-    run = ExtractionRun(str(tmp_path / "run1f"), run_id="r1f",
-                        n_buckets=64)
-    res = run.process(spark, df, lambda part: part.select("doc_id"))
-    assert res["buckets_run"] == 64 and res["rows"] == 120
+    run = ExtractionRun(str(tmp_path / "run1f"), run_id="r1f")
+    res = run.process(spark, df, run_pipeline)
+    assert res == {"skipped": False, "rows": 120}
 
     [commit] = _commit_dirs(run)
     assert os.listdir(run.results_dir) == [commit]
     commit_dir = os.path.join(run.results_dir, commit)
     assert 1 <= len(glob.glob(os.path.join(commit_dir, "*.parquet"))) <= k
     out = spark.read.parquet(commit_dir)
+    assert out.columns == ["doc_id", "out_spans"]
     assert out.count() == 120
-    assert out.filter(F.col("bucket") != run.bucket_of()).count() == 0
     with open(run.lineage_path) as f:
         [rec] = [json.loads(line) for line in f]
-    assert sorted(rec["buckets"]) == list(range(64))
+    assert set(rec) == {"run_id", "commit", "rows", "started_at",
+                        "finished_at"}
     assert rec["rows"] == 120
     assert rec["commit"] == commit
 
@@ -186,14 +184,13 @@ def test_process_purges_unlogged_commit(spark, tmp_path):
 
     df = spark.createDataFrame(list(doc_rows(40, fractions=(1.0, 0, 0))),
                                SPAN_SCHEMA_DDL)
-    run = ExtractionRun(str(tmp_path / "runp"), run_id="rp", n_buckets=4)
+    run = ExtractionRun(str(tmp_path / "runp"), run_id="rp")
     # the crashed job's output: every doc, written, never logged
     stale = f"commit=c{uuid.uuid4().hex}"
-    (df.select("doc_id").withColumn("bucket", run.bucket_of())
-     .write.parquet(os.path.join(run.results_dir, stale)))
+    df.select("doc_id").write.parquet(os.path.join(run.results_dir, stale))
 
     res = run.process(spark, df, lambda part: part.select("doc_id"))
-    assert res["buckets_run"] == 4 and res["rows"] == 40
+    assert res == {"skipped": False, "rows": 40}
     assert stale not in os.listdir(run.results_dir)
     assert len(_commit_dirs(run)) == 1
     ids = [r.doc_id for r in spark.read.parquet(run.results_dir).collect()]
@@ -203,9 +200,9 @@ def test_process_purges_unlogged_commit(spark, tmp_path):
 def test_torn_line_uncommits_its_whole_commit(spark, tmp_path):
     """An append torn mid-line leaves half a line with no trailing
     newline: the whole commit it was logging counts as not committed.
-    The next run deletes that directory unread and re-runs all of its
-    buckets, starting its own line on a fresh line; the run after
-    skips everything, and every doc is in ``results/`` once."""
+    The next run deletes that directory unread and re-runs the job,
+    starting its own line on a fresh line; the run after skips, and
+    every doc is in ``results/`` once."""
     import os
 
     from indonesian_id_ocr_service_spark.corpus.generator import (
@@ -213,7 +210,7 @@ def test_torn_line_uncommits_its_whole_commit(spark, tmp_path):
 
     df = spark.createDataFrame(list(doc_rows(40, fractions=(1.0, 0, 0))),
                                SPAN_SCHEMA_DDL)
-    run = ExtractionRun(str(tmp_path / "runt"), run_id="rt", n_buckets=4)
+    run = ExtractionRun(str(tmp_path / "runt"), run_id="rt")
 
     def pipe(part):
         return part.select("doc_id")
@@ -223,51 +220,25 @@ def test_torn_line_uncommits_its_whole_commit(spark, tmp_path):
     text = open(run.lineage_path).read()
     with open(run.lineage_path, "w") as f:
         f.write(text[:len(text) // 2])
-    assert run.committed_buckets() == {}
+    assert run.committed() is None
 
     res = run.process(spark, df, pipe)
-    assert res["buckets_run"] == 4 and res["rows"] == 40
+    assert res == {"skipped": False, "rows": 40}
     assert torn not in os.listdir(run.results_dir)
-    assert run.process(spark, df, pipe)["buckets_run"] == 0
+    assert run.process(spark, df, pipe)["skipped"]
     [live] = _commit_dirs(run)
     assert os.listdir(run.results_dir) == [live]
-    assert run.committed_buckets() == {b: live for b in range(4)}
+    assert run.committed() == live
     assert len(open(run.lineage_path).read().splitlines()) == 2
     ids = [r.doc_id for r in spark.read.parquet(run.results_dir).collect()]
     assert len(ids) == len(set(ids)) == 40
 
 
-def test_process_refuses_another_bucket_count(spark, tmp_path):
-    """A run dir committed under 4 buckets, resumed under 8: its
-    committed buckets 0-3 are not this run's 0-7, and running the
-    "pending" 4-7 would commit some documents twice. process() raises
-    instead, naming both counts, and leaves ``results/`` as it was."""
-    import pytest
-
-    from indonesian_id_ocr_service_spark.corpus.generator import (
-        SPAN_SCHEMA_DDL, doc_rows)
-
-    df = spark.createDataFrame(list(doc_rows(40, fractions=(1.0, 0, 0))),
-                               SPAN_SCHEMA_DDL)
-    base = str(tmp_path / "runb")
-
-    def pipe(part):
-        return part.select("doc_id")
-
-    assert ExtractionRun(base, "rb", n_buckets=4).process(
-        spark, df, pipe)["rows"] == 40
-    run8 = ExtractionRun(base, "rb", n_buckets=8)
-    with pytest.raises(ValueError, match=r"\b4\b.*\b8\b"):
-        run8.process(spark, df, pipe)
-    ids = [r.doc_id for r in spark.read.parquet(run8.results_dir).collect()]
-    assert len(ids) == len(set(ids)) == 40
-
-
 def test_lineage_stale_partials_dropped(spark, tmp_path):
-    """A crashed (un-logged) earlier run's partials in a pending bucket
-    must NOT survive into that bucket's commit when the re-run produces
-    0 rows for it — dynamic partition overwrite alone would leave the
-    stale directory untouched (ADVICE r3)."""
+    """A crashed (un-logged) earlier run's partial must NOT survive into
+    the next commit, even when the re-run produces 0 rows for the
+    documents it held — dynamic partition overwrite alone would leave
+    the stale directory untouched (ADVICE r3)."""
     import os
 
     from pyspark.sql import functions as F
@@ -278,8 +249,7 @@ def test_lineage_stale_partials_dropped(spark, tmp_path):
     rows = list(doc_rows(40, fractions=(1.0, 0, 0)))
     df = spark.createDataFrame(rows, SPAN_SCHEMA_DDL)
 
-    run = ExtractionRun(str(tmp_path / "runx"), run_id=str(uuid.uuid4()),
-                        n_buckets=4)
+    run = ExtractionRun(str(tmp_path / "runx"), run_id=str(uuid.uuid4()))
     # stale partial left by a crashed, never-logged run
     stale_dir = os.path.join(run.results_dir, "bucket=2")
     spark.createDataFrame([("STALE-DOC",)], "doc_id string") \
@@ -298,28 +268,26 @@ def test_lineage_stale_partials_dropped(spark, tmp_path):
     assert n_b2 > 0  # the scenario is real: bucket 2 has input docs
 
     res = run.process(spark, df, pipeline_drops_bucket2)
-    assert res["buckets_run"] == 4
+    assert not res["skipped"]
     # the stale partial was neither counted nor kept
     assert res["rows"] == 40 - n_b2
     out_ids = {r["doc_id"]
                for r in spark.read.parquet(run.results_dir).collect()}
     assert "STALE-DOC" not in out_ids
-    # bucket 2 committed, with no rows, in the job's one lineage line:
-    # listed once, and the total is short by its input docs
+    # the job's one lineage line counts only the rows it wrote
     import json
 
     with open(run.lineage_path) as f:
         [rec] = [json.loads(line) for line in f]
-    assert sorted(rec["buckets"]) == [0, 1, 2, 3]
     assert rec["rows"] == res["rows"] == 40 - n_b2
-    assert run.committed_buckets() == {b: rec["commit"] for b in range(4)}
+    assert run.committed() == rec["commit"]
     assert os.listdir(run.results_dir) == [rec["commit"]]
 
 
 def test_process_metrics_one_directory_per_commit(spark, tmp_path):
     """A commit's metrics land in one ``metrics/`` directory named like
-    its results directory: one parquet file per write task, however
-    many buckets, and every row stamped with the UTC month of the
+    its results directory: one parquet file per write task, and every
+    row stamped with the UTC month of the
     lineage line's ``started_at`` (the reference's ocr_logs/YYYY-MM
     layout, app.py:56-67, as a column)."""
     import glob
@@ -333,10 +301,10 @@ def test_process_metrics_one_directory_per_commit(spark, tmp_path):
     )
     from indonesian_id_ocr_service_spark.pipeline import run_pipeline
 
-    run = ExtractionRun(str(tmp_path / "runm"), run_id="rm", n_buckets=64)
+    run = ExtractionRun(str(tmp_path / "runm"), run_id="rm")
     res = run.process(spark, corpus_df(spark, 60), run_pipeline,
                       metrics_fn=media_quality_metrics)
-    assert res["buckets_run"] == 64 and res["rows"] == 60
+    assert res == {"skipped": False, "rows": 60}
     with open(run.lineage_path) as f:
         [rec] = [json.loads(line) for line in f]
 

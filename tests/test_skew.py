@@ -93,7 +93,7 @@ def test_media_metrics_branch_in_extraction_run(spark, tmp_path):
     """The salted media stage wired into ExtractionRun (VERDICT r4 task
     #3): process(metrics_fn=media_quality_metrics) commits results +
     lineage + per-doc media-quality metrics in one call; the branch's
-    reduce is salt-invariant; resume skips committed buckets without
+    reduce is salt-invariant; resume skips the committed job without
     rewriting metrics."""
     from indonesian_id_ocr_service_spark.corpus.generator import corpus_df
     from indonesian_id_ocr_service_spark.operators.media_metrics import (
@@ -103,11 +103,11 @@ def test_media_metrics_branch_in_extraction_run(spark, tmp_path):
     from indonesian_id_ocr_service_spark.sinks.lineage import ExtractionRun
 
     src = corpus_df(spark, 60).cache()
-    run = ExtractionRun(str(tmp_path / "run"), "r1", n_buckets=4)
+    run = ExtractionRun(str(tmp_path / "run"), "r1")
     stats = run.process(
         spark, src, run_pipeline,
         metrics_fn=lambda out: media_quality_metrics(out, chunk=2))
-    assert stats["buckets_run"] == 4
+    assert stats == {"skipped": False, "rows": 60}
 
     metrics = spark.read.parquet(run.metrics_dir)
     rows = {r.doc_id: r for r in metrics.collect()}
@@ -137,13 +137,13 @@ def test_media_metrics_branch_in_extraction_run(spark, tmp_path):
     stats2 = run.process(
         spark, src, run_pipeline,
         metrics_fn=lambda out: media_quality_metrics(out, chunk=2))
-    assert stats2["buckets_run"] == 0
+    assert stats2 == {"skipped": True, "rows": 0}
     assert spark.read.parquet(run.metrics_dir).count() == len(rows)
 
 
 def test_media_metrics_not_duplicated_on_replay(spark, tmp_path):
     """A crash after the metrics write and before the lineage append
-    makes the next process() run the same buckets again. Nothing names
+    makes the next process() run the same job again. Nothing names
     the crashed commit, so the replay's purge deletes its metrics
     directory with its results directory: every doc keeps one metrics
     row instead of one per run."""
@@ -157,7 +157,7 @@ def test_media_metrics_not_duplicated_on_replay(spark, tmp_path):
     from indonesian_id_ocr_service_spark.sinks.lineage import ExtractionRun
 
     src = corpus_df(spark, 60).cache()
-    run = ExtractionRun(str(tmp_path / "run"), "r1", n_buckets=4)
+    run = ExtractionRun(str(tmp_path / "run"), "r1")
 
     def process():
         return run.process(
@@ -168,7 +168,7 @@ def test_media_metrics_not_duplicated_on_replay(spark, tmp_path):
     first = spark.read.parquet(run.metrics_dir).count()
     assert first > 0
     os.remove(run.lineage_path)          # the append never happened
-    assert process()["buckets_run"] == 4
+    assert process() == {"skipped": False, "rows": 60}
     ids = [r.doc_id for r in
            spark.read.parquet(run.metrics_dir).select("doc_id").collect()]
     assert len(ids) == len(set(ids)) == first

@@ -9,12 +9,12 @@ and executor sys.path, every `indonesian_id_ocr_service_spark` import
 (including the executor-side corpus generator + Arrow kernel) would
 fail. Asserts:
 
-1. the submitted run commits all buckets and prints the JSON line;
+1. the submitted run commits its one job and prints the JSON line;
 2. the results parquet is span-for-span identical to an in-process
    `run_pipeline` over the same deterministic corpus;
 3. re-submitting the identical command resumes from the lineage log
-   (0 buckets run) — crash-resume across PROCESS boundaries, not just
-   within a session.
+   (the committed job is skipped) — crash-resume across PROCESS
+   boundaries, not just within a session.
 
 One submit launch is a full JVM boot (~20-40 s); the corpus is kept
 small and both launches share one module-scoped run.
@@ -36,7 +36,6 @@ SPARK_SUBMIT = os.path.join(os.path.dirname(pyspark.__file__), "bin",
                             "spark-submit")
 N_DOCS = 240
 SEED = 42
-N_BUCKETS = 8
 
 
 def _submit(workdir: str, base_dir: str) -> str:
@@ -55,7 +54,6 @@ def _submit(workdir: str, base_dir: str) -> str:
         "--synth", str(N_DOCS), "--seed", str(SEED),
         "--base-dir", base_dir,
         "--run-id", "submit-smoke",
-        "--n-buckets", str(N_BUCKETS),
     ]
     proc = subprocess.run(cmd, cwd=workdir, env=env, timeout=420,
                           capture_output=True, text=True)
@@ -93,13 +91,13 @@ def submitted_run(tmp_path_factory):
 
 def test_submit_commits_all_buckets(submitted_run):
     _, base_dir, first = submitted_run
-    assert first["buckets_run"] == N_BUCKETS
-    assert first["buckets_skipped"] == 0
+    assert first["skipped"] is False
     assert first["rows"] == N_DOCS
     lineage = os.path.join(base_dir, "lineage.jsonl")
     with open(lineage) as f:
         [rec] = [json.loads(ln) for ln in f]
-    assert sorted(rec["buckets"]) == list(range(N_BUCKETS))
+    assert set(rec) == {"run_id", "commit", "rows", "started_at",
+                        "finished_at"}
     assert rec["rows"] == N_DOCS
     assert os.listdir(os.path.join(base_dir, "results")) == [rec["commit"]]
 
@@ -126,14 +124,12 @@ def test_submit_output_matches_in_process_pipeline(spark, submitted_run):
     assert got == expected
 
 
-@pytest.mark.parametrize("flag", ["--n-buckets", "--synth",
-                                  "--shuffle-partitions"])
+@pytest.mark.parametrize("flag", ["--synth", "--shuffle-partitions"])
 @pytest.mark.parametrize("value", ["0", "-1"])
 def test_parse_args_rejects_non_positive_counts(flag, value, capsys):
-    """``--n-buckets 0`` would run no bucket and exit 0 with nothing
-    extracted; it is refused at the command line, as ``--synth 0`` is,
-    and as ``--shuffle-partitions 0``, which would only fail later
-    inside Spark."""
+    """``--synth 0`` would extract nothing and exit 0; it is refused at
+    the command line, as ``--shuffle-partitions 0`` is, which would only
+    fail later inside Spark."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -152,6 +148,5 @@ def test_parse_args_rejects_non_positive_counts(flag, value, capsys):
 def test_resubmit_resumes_from_lineage(submitted_run):
     workdir, base_dir, _ = submitted_run
     second = _last_json_line(_submit(workdir, base_dir))
-    assert second["buckets_run"] == 0
-    assert second["buckets_skipped"] == N_BUCKETS
+    assert second["skipped"] is True
     assert second["rows"] == 0
