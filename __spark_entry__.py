@@ -24,13 +24,19 @@ from indonesian_id_ocr_service_spark import queries_scoring as QS  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the NIK generate-validate-rank engine + date
-    normalization over sf0.001 — repairs OCR-corrupted 15/16-digit NIKs
-    synthesized from the orders table and decodes them to demographics.
+    """Flagship: NIK repair + date normalization over sf0.001 — repairs
+    OCR-corrupted 15-digit NIKs synthesized from the orders table,
+    normalizes a corrupted birth date and decodes the gender.
+
+    The JVM builds ``nik_ocr``, ``date_raw`` and the gender
+    (``nik.nik_decode``). One ``mapInArrow`` (``queries.nik_date_batches``)
+    then runs the extraction kernel's NIK engine
+    (``pandas_ktp.nik_best_one``: value, confidence, source label) and
+    date chain (``pandas_ktp.normalize_date``) per row.
     """
     import pyspark.sql.functions as F
+    import pyspark.sql.types as T
 
-    from indonesian_id_ocr_service_spark.functions import dates as DT
     from indonesian_id_ocr_service_spark.functions import nik as NK
 
     Q.ensure_session_conf(spark)
@@ -38,22 +44,25 @@ def entry(spark: SparkSession) -> DataFrame:
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
 
     nik = Q._nik_col("o_orderkey")
-    noisy15 = F.substring(F.translate(nik, "018", "OIB"), 2, 15)
-    best = NK.best_candidate(noisy15)
-    date_raw = F.replace(
-        F.date_format(F.col("o_orderdate"), "dd-MM-yyyy"),
-        F.lit("-19"), F.lit("-13"))
-    d = DT.normalize_date(date_raw)
-    dec = NK.nik_decode(nik)
-    return orders.select(
+    pre = orders.select(
         F.col("o_orderkey").alias("k"),
         nik.alias("nik_true"),
-        noisy15.alias("nik_ocr"),
-        best["value"].alias("nik_repaired"),
-        F.round(best["confidence"], 4).alias("nik_conf"),
-        best["source"].alias("nik_source"),
-        d["normalized"].alias("tgl_lahir"),
-        dec["gender"].alias("jenis_kelamin"),
+        F.substring(F.translate(nik, "018", "OIB"), 2, 15).alias("nik_ocr"),
+        F.replace(F.date_format(F.col("o_orderdate"), "dd-MM-yyyy"),
+                  F.lit("-19"), F.lit("-13")).alias("date_raw"),
+        NK.nik_decode(nik)["gender"].alias("jenis_kelamin"),
+    )
+    out = pre.mapInArrow(Q.nik_date_batches, T.StructType(
+        pre.schema.fields + [
+            T.StructField("nik_repaired", T.StringType()),
+            T.StructField("nik_conf", T.DoubleType()),
+            T.StructField("nik_source", T.StringType()),
+            T.StructField("tgl_lahir", T.StringType()),
+        ]))
+    return out.select(
+        "k", "nik_true", "nik_ocr", "nik_repaired",
+        F.round("nik_conf", 4).alias("nik_conf"),
+        "nik_source", "tgl_lahir", "jenis_kelamin",
     )
 
 

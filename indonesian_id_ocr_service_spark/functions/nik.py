@@ -1,15 +1,9 @@
-"""NIK column expressions: cleaning, candidate generation, structural
-validation, ranking (SURVEY §2.5 N5-N13), decoding (V1) and DOB
-padding (V5).
+"""NIK column expressions: cleaning (SURVEY §2.5 N5), structural
+scoring (N10), decoding (V1) and DOB padding (V5).
 
-The reference's generate-validate-rank engine
-(/root/reference/nik_fuzzy.py:108-319, ktp_extractor.py:109-128) as pure
-JVM expressions. Candidate fan-out (≤ ~140 candidates/row) happens inside
-array higher-order functions with explicit priority order, so top-1
-selection is deterministic under any partitioning and needs no shuffle.
-
-Shared sub-expressions are let-bound (``core.let``) to keep the plan
-linear and evaluate each piece once per row.
+The generate-validate-rank repair (N6-N13, nik_fuzzy.py:108-166) is
+not here: its one engine is ``pandas_ktp.nik_best_one``, which the
+extraction kernel and ``__spark_entry__.entry()`` call.
 """
 
 from __future__ import annotations
@@ -17,27 +11,16 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..dictionaries import NIK_INSERT_POSITIONS, VALID_PROVINCE_CODES
+from ..dictionaries import VALID_PROVINCE_CODES
 from .chars import digits_only, sub_to_digit
-from .core import let, let2
+from .core import let2
 
 __all__ = [
     "clean_nik",
     "structural_score",
-    "candidate_array",
-    "rescored_candidates",
-    "best_candidate",
     "nik_decode",
     "pad_nik_with_dob",
 ]
-
-_CAND_TYPE = (
-    "struct<value:string,confidence:double,source:string,priority:int>"
-)
-_SCORED_TYPE = (
-    "struct<value:string,confidence:double,source:string,priority:int,"
-    "structural_score:double>"
-)
 
 
 def clean_nik(c: Column) -> Column:
@@ -50,7 +33,8 @@ def clean_nik(c: Column) -> Column:
     ``sub``/``d`` subtrees are deduplicated by codegen's common-
     subexpression elimination and the whole thing stays in one
     generated function. ``let`` remains the right tool for the DEEP
-    chains (candidate fan-out) where plan size would explode."""
+    chains (the date let-tree in dates.py) where plan size would
+    explode."""
     sub = sub_to_digit(c)
     d = digits_only(sub)
     window = F.regexp_extract(
@@ -91,187 +75,6 @@ def structural_score(v: Column) -> Column:
         v.isNotNull() & v.rlike(r"^\d{16}$"),
         prov_f * district_f * day_f * month_f * seq_f,
     ).otherwise(F.lit(0.0))
-
-
-def _cand(value: Column, conf: Column, source: Column,
-          priority: Column) -> Column:
-    return F.struct(
-        value.alias("value"),
-        conf.cast("double").alias("confidence"),
-        source.alias("source"),
-        priority.cast("int").alias("priority"),
-    )
-
-
-def candidate_array(raw: Column) -> Column:
-    """N6-N9: ordered array of NIK candidates before validation
-    (nik_fuzzy.py:108-151). The array index order IS the reference's
-    generation (priority) order.
-
-    Duplicate values from overlapping insertion positions are kept (the
-    reference dedups during generation) — harmless for first-max ranking
-    because duplicates carry equal-or-lower confidence at later priority;
-    full-list consumers dedup with a window (N11).
-    """
-
-    def body(exact: Column, sub_d: Column, run: Column) -> Column:
-        c_exact = F.when(
-            F.length(exact) == 16,
-            _cand(exact, F.lit(1.0), F.lit("exact"), F.lit(0)),
-        )
-        is_new_sub = (F.length(sub_d) == 16) & (sub_d != exact)
-        c_sub = F.when(
-            is_new_sub, _cand(sub_d, F.lit(0.88), F.lit("char_sub"),
-                              F.lit(1))
-        )
-        run_len = F.length(run)
-        padded = F.rpad(run, 16, "0")
-        run_conf = (
-            F.when(run_len == 14, F.lit(0.50))
-            .when(run_len == 15, F.lit(0.72))
-            .otherwise(F.lit(0.93))
-        )
-        prior_vals = F.array_compact(
-            F.array(
-                F.when(F.length(exact) == 16, exact),
-                F.when(is_new_sub, sub_d),
-            )
-        )
-        c_run = let(
-            padded,
-            lambda pv: F.when(
-                (run_len >= 14) & (run_len <= 16)
-                & ~F.array_contains(prior_vals, pv),
-                _cand(
-                    pv,
-                    run_conf,
-                    F.concat(F.lit("longest_run_"), run_len.cast("string")),
-                    F.lit(2),
-                ),
-            ),
-        )
-
-        working = F.when(F.length(sub_d) == 15, sub_d).when(
-            F.length(exact) == 15, exact
-        )
-
-        def fan_out(w: Column) -> Column:
-            positions = F.array(*[F.lit(p) for p in NIK_INSERT_POSITIONS])
-            inserts = F.flatten(
-                F.transform(
-                    positions,
-                    lambda pos, i: F.transform(
-                        F.sequence(F.lit(0), F.lit(9)),
-                        lambda d, j: _cand(
-                            F.concat(
-                                F.substring(w, F.lit(1), pos),
-                                d.cast("string"),
-                                F.substr(w, pos + 1),
-                            ),
-                            F.lit(0.62),
-                            F.concat(F.lit("padded_pos"),
-                                     pos.cast("string")),
-                            F.lit(10) + i * 10 + j,
-                        ),
-                    ),
-                )
-            )
-            edge = F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(9)),
-                    lambda d, j: F.array(
-                        _cand(
-                            F.concat(d.cast("string"), w),
-                            F.lit(0.58),
-                            F.lit("edge_pad"),
-                            F.lit(110) + j * 2,
-                        ),
-                        _cand(
-                            F.concat(w, d.cast("string")),
-                            F.lit(0.58),
-                            F.lit("edge_pad"),
-                            F.lit(111) + j * 2,
-                        ),
-                    ),
-                )
-            )
-            return F.concat(inserts, edge)
-
-        recon = F.when(working.isNotNull(), let(working, fan_out)).otherwise(
-            F.array().cast(f"array<{_CAND_TYPE}>")
-        )
-        head = F.array_compact(
-            F.array(c_exact, c_sub, c_run).cast(f"array<{_CAND_TYPE}>")
-        )
-        return F.concat(head, recon)
-
-    built = let(
-        digits_only(raw),
-        lambda exact: let(
-            digits_only(sub_to_digit(raw)),
-            lambda sub_d: let(
-                # longest digit run — aggregate keeps the FIRST maximal
-                # run, matching Python max(key=len) (nik_fuzzy.py:206-209)
-                F.aggregate(
-                    F.regexp_extract_all(sub_to_digit(raw), F.lit(r"\d+"),
-                                         0),
-                    F.lit(""),
-                    lambda acc, x: F.when(
-                        F.length(x) > F.length(acc), x
-                    ).otherwise(acc),
-                ),
-                lambda run: body(exact, sub_d, run),
-            ),
-        ),
-    )
-    return F.when(raw.isNotNull() & (raw != ""), built).otherwise(
-        F.array().cast(f"array<{_CAND_TYPE}>")
-    )
-
-
-def rescored_candidates(raw: Column) -> Column:
-    """N10+N11 rescoring over the candidate array: confidence ×=
-    (0.5 + 0.5·structural) or ×0.25 when structural < 0.2
-    (nik_fuzzy.py:153-159). Adds a ``structural_score`` field."""
-    return F.transform(
-        candidate_array(raw),
-        lambda c: let(
-            structural_score(c["value"]),
-            lambda s: F.struct(
-                c["value"].alias("value"),
-                (
-                    c["confidence"]
-                    * F.when(s < 0.2, F.lit(0.25)).otherwise(0.5 + 0.5 * s)
-                ).alias("confidence"),
-                c["source"].alias("source"),
-                c["priority"].alias("priority"),
-                s.alias("structural_score"),
-            ),
-        ),
-    )
-
-
-def best_candidate(raw: Column, min_confidence: float = 0.30) -> Column:
-    """N11+N13 scalar: highest-confidence candidate (ties → earliest
-    priority, matching the reference's stable sort), null when below
-    ``min_confidence`` (nik_fuzzy.py:96-106,161-166).
-
-    Pure array-aggregate — no explode, no shuffle.
-    """
-    zero = F.lit(None).cast(_SCORED_TYPE)
-    best = F.aggregate(
-        rescored_candidates(raw),
-        zero,
-        lambda acc, x: F.when(
-            acc.isNull() | (x["confidence"] > acc["confidence"]), x
-        ).otherwise(acc),
-    )
-    return let(
-        best,
-        lambda b: F.when(
-            b.isNotNull() & (b["confidence"] >= F.lit(min_confidence)), b
-        ),
-    )
 
 
 def nik_decode(nik: Column) -> Column:

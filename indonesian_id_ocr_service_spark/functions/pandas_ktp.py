@@ -28,16 +28,19 @@ distinct). The ``__spark_entry__`` queries' residue UDFs
 
 The date chain (N14-N24, date_normalizer.py) lives here too. It is
 the one Python date chain: the kernel's TTL repair, SIM's
-``normalize_date_robust`` and the ``__spark_entry__`` date queries'
-residue rows (``queries._date_query``) run it, and the oracle
-re-imports it. It is checked against the independent JVM expressions
-in ``dates.py`` on golden and seeded random inputs
-(tests/test_scalar_parity.py).
+``normalize_date_robust``, the ``__spark_entry__`` date queries'
+residue rows (``queries._date_query``) and ``entry()``
+(``queries.nik_date_batches``) run it, and the oracle re-imports it.
+It is checked against the independent JVM expressions in ``dates.py``
+on golden and seeded random inputs (tests/test_scalar_parity.py).
 
 The ``NIK`` field arrives resolved: the kernel runs NIK cleanup and
 the three repair tiers once per KTP document
 (``ktp_spatial.resolve_nik``) on the per-value candidate engine below
-(``clean_nik_one``/``nik_best_one``).
+(``clean_nik_one``/``nik_best_one``). ``nik_best_one`` is the one NIK
+generate-validate-rank engine: ``entry()`` runs it too, and
+tests/test_property_chain_parity.py checks it, source label included,
+against ``oracle.scalars.nik_best_candidate``.
 """
 
 from __future__ import annotations
@@ -252,16 +255,30 @@ def clean_nik_one(v: str | None) -> str | None:
     return None
 
 
-def nik_best_one(raw) -> Tuple[Optional[str], Optional[float]]:
+#: (run length, base confidence, source label) of the longest-run tier
+_RUN_TIERS = ((16, 0.93, "longest_run_16"), (15, 0.72, "longest_run_15"),
+              (14, 0.50, "longest_run_14"))
+#: (position, source label) of the insertion tier, in generation order
+_PAD_TIERS = tuple((pos, f"padded_pos{pos}") for pos in NIK_INSERT_POSITIONS)
+
+
+def nik_best_one(raw) -> Tuple[Optional[str], Optional[float],
+                               Optional[str]]:
     """Best NIK candidate ≥ 0.30 (nik_fuzzy.py:108-166) → (value,
-    confidence), or (None, None). Candidate families (exact / char-sub
-    / longest-run / 120 insertion variants) are generated in the
-    oracle's order and the best is a strict-greater scan in that order
-    — equivalent to the oracle's dedup-keep-max + stable confidence
-    sort (no later family carries a higher base confidence than an
-    earlier duplicate, so first-position ties resolve identically)."""
+    confidence, source), or (None, None, None). The source is the
+    oracle's label: ``exact``, ``char_sub``, ``longest_run_N``,
+    ``padded_posN`` or ``edge_pad``.
+
+    Candidate families (exact / char-sub / longest-run / 120 insertion
+    variants) are generated in the oracle's order and the best is a
+    strict-greater scan in that order. That equals the oracle's
+    dedup-keep-max + stable confidence sort, which keeps each value at
+    its first position with its best confidence and source. Only the
+    0.50 run-14 candidate can have a later duplicate of higher base (a
+    0.62 insertion, else a 0.58 edge pad); it takes that duplicate's
+    base and label, and the duplicate then ties and loses."""
     if raw is None:
-        return None, None
+        return None, None, None
     r = str(raw)
     exact = re.sub(r"\D", "", r)
     sub = r.translate(_TO_DIGIT)
@@ -271,32 +288,39 @@ def nik_best_one(raw) -> Tuple[Optional[str], Optional[float]]:
 
     cands: list = []
     if len(exact) == 16:
-        cands.append((exact, 1.0))
+        cands.append((exact, 1.0, "exact"))
     if len(subd) == 16 and subd != exact:
-        cands.append((subd, 0.88))
+        cands.append((subd, 0.88, "char_sub"))
     padded = run.ljust(16, "0")
-    for ln, base in ((16, 0.93), (15, 0.72), (14, 0.50)):
+    run_at = None
+    for ln, base, label in _RUN_TIERS:
         if len(run) == ln and padded != exact and padded != subd:
-            cands.append((padded, base))
+            run_at = len(cands)
+            cands.append((padded, base, label))
     working = subd if len(subd) == 15 else (
         exact if len(exact) == 15 else None)
     if working:
-        for pos in NIK_INSERT_POSITIONS:
+        for pos, label in _PAD_TIERS:
             pre, suf = working[:pos], working[pos:]
             for d in "0123456789":
-                cands.append((pre + d + suf, 0.62))
+                cands.append((pre + d + suf, 0.62, label))
         for d in "0123456789":
-            cands.append((d + working, 0.58))
-            cands.append((working + d, 0.58))
+            cands.append((d + working, 0.58, "edge_pad"))
+            cands.append((working + d, 0.58, "edge_pad"))
+        if run_at is not None and len(run) == 14:
+            for cand in cands[run_at + 1:]:
+                if cand[0] == padded:
+                    cands[run_at] = cand
+                    break
 
-    best_v, best_c = None, -1.0
-    for v, base in cands:
+    best_v, best_c, best_s = None, -1.0, None
+    for v, base, label in cands:
         c = _struct_conf_one(v, base)
         if c >= 0.30 and c > best_c:
-            best_v, best_c = v, c
+            best_v, best_c, best_s = v, c, label
     if best_v is not None:
-        return best_v, best_c
-    return None, None
+        return best_v, best_c, best_s
+    return None, None, None
 
 
 def _pad_nik_dob_one(d15: str, expected: str) -> Optional[str]:

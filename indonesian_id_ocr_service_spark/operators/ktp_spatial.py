@@ -362,7 +362,7 @@ def resolve_nik(texts: list[str], y0: np.ndarray, y1: np.ndarray,
         digits = re.sub(r"\D", "", v.translate(PK._TO_DIGIT))
         if len(digits) >= 12:
             residue = digits
-            best, _c = PK.nik_best_one(residue)
+            best, _c, _s = PK.nik_best_one(residue)
             if best is not None:
                 return best
     rescue, _c = _nik_rescue(texts, y0, y1)
@@ -387,7 +387,7 @@ def _nik_rescue(texts: list[str], y0: np.ndarray, y1: np.ndarray):
         # strict-greater scan ≡ argmax keeping the FIRST max
         best_v, best_c = None, -1.0
         for i in indices:
-            v, c = PK.nik_best_one(texts[i])
+            v, c, _s = PK.nik_best_one(texts[i])
             cc = -1.0 if c is None else c
             if cc > best_c:
                 best_v, best_c = v, cc

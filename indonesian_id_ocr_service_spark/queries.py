@@ -391,6 +391,34 @@ def _date_query(df: DataFrame, raw: F.Column,
     return out.select(*cols)
 
 
+def nik_date_batches(batches):
+    """``__spark_entry__.entry()``'s ``mapInArrow`` stage: each batch
+    comes back with ``nik_repaired``, ``nik_conf`` and ``nik_source``
+    (the kernel's NIK engine, ``pandas_ktp.nik_best_one``, over
+    ``nik_ocr``) and ``tgl_lahir`` (the kernel's date chain,
+    ``pandas_ktp.normalize_date``, over ``date_raw``) appended. A
+    module-level function, so workers import it by reference."""
+    import pyarrow as pa
+
+    from .functions.pandas_ktp import nik_best_one, normalize_date
+
+    for batch in batches:
+        value, conf, source = [], [], []
+        for raw in batch.column("nik_ocr").to_pylist():
+            v, c, s = nik_best_one(raw)
+            value.append(v)
+            conf.append(c)
+            source.append(s)
+        dates = [normalize_date(raw)["normalized"]
+                 for raw in batch.column("date_raw").to_pylist()]
+        yield pa.RecordBatch.from_arrays(
+            [*batch.columns, pa.array(value, pa.string()),
+             pa.array(conf, pa.float64()), pa.array(source, pa.string()),
+             pa.array(dates, pa.string())],
+            names=[*batch.schema.names, "nik_repaired", "nik_conf",
+                   "nik_source", "tgl_lahir"])
+
+
 def q_date_standard(spark, sf_dir):
     df = _read(spark, sf_dir, "orders", fanout=True)
     raw = F.replace(_date_str(), F.lit("-"), F.lit(" "))

@@ -34,6 +34,9 @@ SQL_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.ansi.enabled": "false",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # The bytes of a batch are bounded too: Spark 4.1's default
+    # spark.sql.execution.arrow.maxBytesPerBatch (64 MB) already caps
+    # each mapInArrow input batch (256 KB rows arrive 256 per batch).
     "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),

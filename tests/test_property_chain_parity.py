@@ -1,7 +1,7 @@
 """Property-based parity (hypothesis): the kernel's per-value NIK
-candidate engine and the DOB padding must match the pure-Python oracle
-on arbitrary noisy inputs — not just the generator's noise
-distribution. (The date chain's random-input check is
+candidate engine (value, confidence and source label) and the DOB
+padding must match the pure-Python oracle on arbitrary noisy inputs —
+not just the generator's noise distribution. (The date chain's random-input check is
 tests/test_scalar_parity.py::test_date_normalize_random_parity.)"""
 
 from __future__ import annotations
@@ -20,17 +20,33 @@ _OCRISH = st.text(
 
 @settings(max_examples=300, deadline=None)
 @given(_OCRISH)
+# one read per family that wins: exact, char_sub, and an insertion into
+# the 15 plain digits when the char-subbed read has 16
+@example("NIK: 1101024107950003")
+@example("11O1024107950003")
+@example("80L1123039200031")
 # a 15-digit NIK whose best candidate is an insertion (the trailing-pad
 # candidate loses on its zero sequence number)
 @example("317101450290000")
+# inserting 1 at position 0 or 1 gives the same best value: the first
+# position's label, padded_pos0, wins
+@example("171011205991234")
+# the longest_run_15 value is also the edge_pad value (a trailing 0):
+# the earlier, higher-based longest_run_15 wins
+@example("320101450290001")
+# the longest_run_14 value recurs as a 0.62 insertion at position 14:
+# it keeps the run's position but takes the insertion's confidence and
+# label, so it beats an equal-confidence insertion at an earlier position
+@example("32010669074391 0")
 def test_nik_candidate_engine_matches_oracle(raw):
-    v, c = PK.nik_best_one(raw)
+    v, c, source = PK.nik_best_one(raw)
     exp = O.nik_best_candidate(raw, 0.30) if raw else None
     if exp is None:
-        assert v is None, (raw, v)
+        assert (v, c, source) == (None, None, None), (raw, v)
     else:
         assert v == exp["value"], raw
         assert abs(c - exp["confidence"]) < 1e-12, raw
+        assert source == exp["source"], (raw, source, exp["source"])
 
 
 _DIGITS = "0123456789"

@@ -1,5 +1,7 @@
 """Spark column expressions ↔ pure-Python oracle parity on scalar
-normalizers (dates N14-N24, NIK N5-N13, char subs N1-N4).
+normalizers (dates N14-N24, NIK N5 and N10, char subs N1-N4). The NIK
+repair tiers (N6-N13) run in ``pandas_ktp.nik_best_one``, checked in
+tests/test_property_chain_parity.py and tests/test_entry.py.
 
 Inputs include every golden pair documented in the reference plus a
 grid of OCR-noise shapes (FIXTURES.md §3). The date chain is also
@@ -264,21 +266,6 @@ def test_structural_score_parity(spark):
     for s in vals:
         assert abs(got[s] - S.nik_structural_score(s)) < 1e-9, (
             s, got[s], S.nik_structural_score(s))
-
-
-def test_best_candidate_parity(spark):
-    got = _collect(spark, NIK_INPUTS, N.best_candidate)
-    for s in NIK_INPUTS:
-        exp = S.nik_best_candidate(s)
-        g = got[s]
-        if exp is None:
-            assert g is None, (s, g)
-        else:
-            assert g is not None, (s, exp)
-            assert g["value"] == exp["value"], (s, g, exp)
-            assert abs(g["confidence"] - exp["confidence"]) < 1e-9, (
-                s, g, exp)
-            assert g["source"] == exp["source"], (s, g, exp)
 
 
 def test_document_type_three_way_parity(spark):
