@@ -80,6 +80,16 @@ def _label_match(text: str) -> tuple[str, int]:
 
 
 @lru_cache(maxsize=262144)
+def _truncated_key_score(field: str, text: str) -> int:
+    """K4's inline probe for a key that ``TRUNCATED_KEY_MAP`` named:
+    partial_ratio of the canonical label against the span text. Label
+    texts repeat across documents, so it is memoized like
+    ``_label_match``."""
+    return fuzzy.partial_ratio(fuzzy.full_process(field),
+                               fuzzy.full_process(text))
+
+
+@lru_cache(maxsize=262144)
 def _classify_span(text_raw: str) -> tuple[str, int] | None:
     """K2: (canonical field, label score) when this span is a key
     label, else None. Score is -1 for truncated-map hits (no fuzzy
@@ -179,8 +189,7 @@ def _extract_one_doc(texts: list[str], y0: np.ndarray, y1: np.ndarray,
         # still need the probe.
         part_score = role_scores[ki]
         if part_score < 0:
-            part_score = fuzzy.partial_ratio(fuzzy.full_process(field),
-                                             fuzzy.full_process(text))
+            part_score = _truncated_key_score(field, text)
         inline = ""
         if part_score > 70:
             pieces = re.split(r"[:]", text, maxsplit=1)

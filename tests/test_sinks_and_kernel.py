@@ -173,6 +173,52 @@ def test_process_writes_one_file_per_task(spark, tmp_path):
     assert rec["commit"] == commit
 
 
+def _parquet_codecs(directory):
+    """The compression codec of every column chunk of every parquet
+    file under ``directory``, as pyarrow's metadata reports it."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    codecs = []
+    for path in glob.glob(os.path.join(directory, "**", "*.parquet"),
+                          recursive=True):
+        meta = pq.ParquetFile(path).metadata
+        codecs += [meta.row_group(g).column(c).compression
+                   for g in range(meta.num_row_groups)
+                   for c in range(meta.num_columns)]
+    return codecs
+
+
+def test_process_commits_zstd_parquet(spark, tmp_path):
+    """Every column chunk a commit writes is zstd, the codec an Iceberg
+    table writes by default, not Spark's snappy; and the committed
+    rows read back unchanged with a reader other than Spark."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from indonesian_id_ocr_service_spark.corpus.generator import (
+        SPAN_SCHEMA_DDL, doc_rows)
+
+    df = spark.createDataFrame(list(doc_rows(60)),
+                               SPAN_SCHEMA_DDL).repartition(2)
+    run = ExtractionRun(str(tmp_path / "runz"), run_id="rz")
+    res = run.process(spark, df, lambda part: part.select("doc_id", "spans"))
+    assert res == {"skipped": False, "rows": 60}
+
+    commit_dir = os.path.join(run.results_dir, run.committed())
+    codecs = _parquet_codecs(commit_dir)
+    assert codecs and set(codecs) == {"ZSTD"}, codecs
+    got = sorted(pq.read_table(commit_dir).to_pylist(),
+                 key=lambda r: r["doc_id"])
+    want = sorted((r.asDict(recursive=True)
+                   for r in df.select("doc_id", "spans").collect()),
+                  key=lambda r: r["doc_id"])
+    assert got == want
+
+
 def test_process_purges_unlogged_commit(spark, tmp_path):
     """A job that crashed after its write and before its lineage append
     leaves a full, un-logged commit directory; the next process() must
@@ -313,6 +359,7 @@ def test_process_metrics_one_directory_per_commit(spark, tmp_path):
     n_files = len(glob.glob(os.path.join(commit_dir, "*.parquet")))
     assert 1 <= n_files <= int(
         spark.conf.get("spark.sql.shuffle.partitions"))
+    assert set(_parquet_codecs(commit_dir)) == {"ZSTD"}
     mets = spark.read.parquet(commit_dir)
     month = time.strftime("%Y-%m", time.gmtime(rec["started_at"]))
     assert mets.count() > 0

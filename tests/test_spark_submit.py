@@ -9,7 +9,8 @@ and executor sys.path, every `indonesian_id_ocr_service_spark` import
 (including the executor-side corpus generator + Arrow kernel) would
 fail. Asserts:
 
-1. the submitted run commits its one job and prints the JSON line;
+1. the submitted run commits its one job as zstd parquet and prints
+   the JSON line;
 2. the results parquet is span-for-span identical to an in-process
    `run_pipeline` over the same deterministic corpus;
 3. re-submitting the identical command resumes from the lineage log
@@ -22,12 +23,14 @@ small and both launches share one module-scoped run.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import subprocess
 import sys
 
+import pyarrow.parquet as pq
 import pyspark
 import pytest
 
@@ -100,6 +103,14 @@ def test_submit_commits_all_buckets(submitted_run):
                         "finished_at"}
     assert rec["rows"] == N_DOCS
     assert os.listdir(os.path.join(base_dir, "results")) == [rec["commit"]]
+    # the codec is set on the write, so a session that build_session
+    # did not build commits zstd too
+    files = glob.glob(os.path.join(base_dir, "results", rec["commit"],
+                                   "*.parquet"))
+    metas = [pq.ParquetFile(f).metadata for f in files]
+    codecs = {m.row_group(g).column(c).compression for m in metas
+              for g in range(m.num_row_groups) for c in range(m.num_columns)}
+    assert files and codecs == {"ZSTD"}, codecs
 
 
 def test_submit_output_matches_in_process_pipeline(spark, submitted_run):
