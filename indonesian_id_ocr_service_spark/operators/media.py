@@ -1,8 +1,8 @@
 """Multimodal media-span operators (SURVEY §2.2, S2 decode).
 
 Media payloads are opaque ``binary`` columns with typed metadata. The
-Spark-side plumbing — schema, Arrow batching via mapInPandas,
-partitioning, salting hooks — is real and tested. ``decode_image``
+Spark-side plumbing — schema, Arrow batching via mapInPandas and
+partitioning — is real and tested. ``decode_image``
 decodes a payload to grayscale: cv2.imdecode when cv2 is installed,
 else the pure-numpy format chain in ``image_ops``, whose P1-P13
 preprocessing ops the media queries call directly. The feature
@@ -110,9 +110,8 @@ def media_feature_batch(batches):
 
 def extract_media_features(df, id_col: str = "doc_id",
                            payload_col: str = "payload"):
-    """Media feature extraction over a binary column. At scale, salt
-    media-heavy documents by (doc_id, chunk) BEFORE this stage and
-    reduce after — the stage itself is stateless per payload."""
+    """Media feature extraction over a binary column; the stage is
+    stateless per payload."""
     from pyspark.sql import functions as F
 
     src = df.select(F.col(id_col).cast("string").alias("doc_id"),

@@ -21,13 +21,18 @@ applies the engine's SQL confs (``session.SQL_CONF``) and runs the
 resumable ``ExtractionRun`` over the input. Each job commits one
 ``results/commit=<id>/`` directory and appends one lineage line
 ``{run_id, commit, rows: n, started_at, finished_at}`` naming it and
-the row count observed on the write. With ``--media-metrics`` the job
-also writes its per-document media quality rows into
-``metrics/commit=<id>/``, the same name, each row tagged with
-``run_id`` and ``log_month`` (the UTC month the job started).
+the row count observed on the write; nothing else is committed.
 Re-submitting the identical command after a crash resumes from that
 log: a committed run dir is skipped, and a crashed job's un-logged
 directories are deleted before the re-run (sinks/lineage.py).
+
+The job has no shuffle (``run_pipeline`` is one narrow chain, and
+``--synth`` is ``range`` + ``mapInPandas``), so it takes no shuffle
+option; a cluster that wants ``spark.sql.shuffle.partitions`` set
+passes ``--conf`` to spark-submit. The two flags that asked for
+media metrics and set the shuffle partition count were deleted on
+2026-10-19 with the media metrics branch; an old command line that
+still passes either exits 2 at argument parsing.
 
 Prints exactly one JSON result line on stdout:
 ``{"run_id", "skipped", "rows", "wall_s", "docs_per_sec"}`` —
@@ -47,7 +52,7 @@ import sys
 import time
 
 
-def _build_submitted_session(app_name: str, shuffle_partitions: int | None):
+def _build_submitted_session(app_name: str):
     """SparkSession for a spark-submit launch: NO ``.master()`` — the
     submit command owns master/deploy-mode — only the engine's SQL/
     Arrow confs (``session.SQL_CONF``, the table session.build_session
@@ -57,10 +62,7 @@ def _build_submitted_session(app_name: str, shuffle_partitions: int | None):
     from indonesian_id_ocr_service_spark.session import SQL_CONF
 
     b = SparkSession.builder.appName(app_name)
-    confs = dict(SQL_CONF)
-    if shuffle_partitions is not None:
-        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    for k, v in confs.items():
+    for k, v in SQL_CONF.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -90,22 +92,15 @@ def parse_args(argv):
     p.add_argument("--base-dir", required=True,
                    help="run output root: results/commit=<id>/ "
                    "(doc_id, out_spans; one directory per committed "
-                   "job), metrics/commit=<id>/ (with --media-metrics), "
-                   "lineage.jsonl (one line per committed job)")
+                   "job), lineage.jsonl (one line per committed job)")
     p.add_argument("--run-id", required=True)
-    p.add_argument("--media-metrics", action="store_true",
-                   help="also commit the salted media-quality metrics "
-                   "of the job's output into metrics/commit=<id>/")
-    p.add_argument("--shuffle-partitions", type=_positive_int,
-                   default=None)
     p.add_argument("--app-name", default="idocr-extract")
     return p.parse_args(argv)
 
 
 def main(argv=None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
-    spark = _build_submitted_session(args.app_name,
-                                     args.shuffle_partitions)
+    spark = _build_submitted_session(args.app_name)
 
     # Under spark-submit the zip from --py-files is on the driver's
     # sys.path from launch and is shipped to executors automatically.
@@ -120,16 +115,9 @@ def main(argv=None) -> int:
     else:
         src = spark.read.parquet(args.input)
 
-    metrics_fn = None
-    if args.media_metrics:
-        from indonesian_id_ocr_service_spark.operators.media_metrics import (
-            media_quality_metrics,
-        )
-        metrics_fn = media_quality_metrics
-
     run = ExtractionRun(args.base_dir, args.run_id)
     t0 = time.time()
-    res = run.process(spark, src, run_pipeline, metrics_fn=metrics_fn)
+    res = run.process(spark, src, run_pipeline)
     wall = time.time() - t0
     out = {
         "run_id": args.run_id,

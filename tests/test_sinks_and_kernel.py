@@ -281,10 +281,10 @@ def test_torn_line_uncommits_its_whole_commit(spark, tmp_path):
 
 
 def test_lineage_stale_partials_dropped(spark, tmp_path):
-    """A crashed (un-logged) earlier run's partial must NOT survive into
-    the next commit, even when the re-run produces 0 rows for the
-    documents it held — dynamic partition overwrite alone would leave
-    the stale directory untouched (ADVICE r3)."""
+    """A crashed (un-logged) earlier job's commit directory must NOT
+    survive into the next commit, even when the re-run produces 0 rows
+    for the documents it held (ADVICE r3)."""
+    import json
     import os
 
     from pyspark.sql import functions as F
@@ -296,73 +296,34 @@ def test_lineage_stale_partials_dropped(spark, tmp_path):
     df = spark.createDataFrame(rows, SPAN_SCHEMA_DDL)
 
     run = ExtractionRun(str(tmp_path / "runx"), run_id=str(uuid.uuid4()))
-    # stale partial left by a crashed, never-logged run
-    stale_dir = os.path.join(run.results_dir, "bucket=2")
+    # partial left by a crashed job: its commit directory, never logged
+    stale_dir = os.path.join(run.results_dir,
+                             f"commit=c{uuid.uuid4().hex}")
     spark.createDataFrame([("STALE-DOC",)], "doc_id string") \
         .coalesce(1).write.parquet(stale_dir)
 
-    bucket_expr = (
+    slice_expr = (
         F.conv(F.substring(F.md5(F.col("doc_id")), 1, 6), 16, 10)
         .cast("long") % 4
     ).cast("int")
 
-    def pipeline_drops_bucket2(part):
-        # produces 0 output rows for bucket 2, normal rows elsewhere
-        return part.select("doc_id").filter(bucket_expr != 2)
+    def pipeline_drops_slice2(part):
+        # produces 0 output rows for hash slice 2, normal rows elsewhere
+        return part.select("doc_id").filter(slice_expr != 2)
 
-    n_b2 = df.filter(bucket_expr == 2).count()
-    assert n_b2 > 0  # the scenario is real: bucket 2 has input docs
+    n_s2 = df.filter(slice_expr == 2).count()
+    assert n_s2 > 0  # the scenario is real: slice 2 has input docs
 
-    res = run.process(spark, df, pipeline_drops_bucket2)
+    res = run.process(spark, df, pipeline_drops_slice2)
     assert not res["skipped"]
     # the stale partial was neither counted nor kept
-    assert res["rows"] == 40 - n_b2
+    assert res["rows"] == 40 - n_s2
     out_ids = {r["doc_id"]
                for r in spark.read.parquet(run.results_dir).collect()}
     assert "STALE-DOC" not in out_ids
     # the job's one lineage line counts only the rows it wrote
-    import json
-
     with open(run.lineage_path) as f:
         [rec] = [json.loads(line) for line in f]
-    assert rec["rows"] == res["rows"] == 40 - n_b2
+    assert rec["rows"] == res["rows"] == 40 - n_s2
     assert run.committed() == rec["commit"]
     assert os.listdir(run.results_dir) == [rec["commit"]]
-
-
-def test_process_metrics_one_directory_per_commit(spark, tmp_path):
-    """A commit's metrics land in one ``metrics/`` directory named like
-    its results directory: one parquet file per write task, and every
-    row stamped with the UTC month of the
-    lineage line's ``started_at`` (the reference's ocr_logs/YYYY-MM
-    layout, app.py:56-67, as a column)."""
-    import glob
-    import json
-    import os
-    import time
-
-    from indonesian_id_ocr_service_spark.corpus.generator import corpus_df
-    from indonesian_id_ocr_service_spark.operators.media_metrics import (
-        media_quality_metrics,
-    )
-    from indonesian_id_ocr_service_spark.pipeline import run_pipeline
-
-    run = ExtractionRun(str(tmp_path / "runm"), run_id="rm")
-    res = run.process(spark, corpus_df(spark, 60), run_pipeline,
-                      metrics_fn=media_quality_metrics)
-    assert res == {"skipped": False, "rows": 60}
-    with open(run.lineage_path) as f:
-        [rec] = [json.loads(line) for line in f]
-
-    assert os.listdir(run.metrics_dir) == [rec["commit"]]
-    commit_dir = os.path.join(run.metrics_dir, rec["commit"])
-    n_files = len(glob.glob(os.path.join(commit_dir, "*.parquet")))
-    assert 1 <= n_files <= int(
-        spark.conf.get("spark.sql.shuffle.partitions"))
-    assert set(_parquet_codecs(commit_dir)) == {"ZSTD"}
-    mets = spark.read.parquet(commit_dir)
-    month = time.strftime("%Y-%m", time.gmtime(rec["started_at"]))
-    assert mets.count() > 0
-    assert {(r.run_id, r.log_month)
-            for r in mets.select("run_id", "log_month").collect()} \
-        == {("rm", month)}

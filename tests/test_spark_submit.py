@@ -92,7 +92,7 @@ def submitted_run(tmp_path_factory):
     return workdir, base_dir, first
 
 
-def test_submit_commits_all_buckets(submitted_run):
+def test_submit_commits_one_directory(submitted_run):
     _, base_dir, first = submitted_run
     assert first["skipped"] is False
     assert first["rows"] == N_DOCS
@@ -135,12 +135,11 @@ def test_submit_output_matches_in_process_pipeline(spark, submitted_run):
     assert got == expected
 
 
-@pytest.mark.parametrize("flag", ["--synth", "--shuffle-partitions"])
+@pytest.mark.parametrize("flag", ["--synth"])
 @pytest.mark.parametrize("value", ["0", "-1"])
 def test_parse_args_rejects_non_positive_counts(flag, value, capsys):
     """``--synth 0`` would extract nothing and exit 0; it is refused at
-    the command line, as ``--shuffle-partitions 0`` is, which would only
-    fail later inside Spark."""
+    the command line instead."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
