@@ -23,13 +23,13 @@ The fuzzy tiers match against vocabularies prepared once per process
 (functions/fuzzy.py), never through the oracle, and are memoized per
 value: the generator repeats tier values heavily (0.2-0.7% of a
 batch's agama, status, pekerjaan and kewarganegaraan values are
-distinct). The ``__spark_entry__`` queries' residue UDFs
-(pandas_tiers.py) call the same tiers.
+distinct). The ``__spark_entry__`` queries ``fuzzy_canonical`` and
+``enum_place_correction`` run the same tiers (``queries.tier_batches``).
 
 The date chain (N14-N24, date_normalizer.py) lives here too. It is
 the one Python date chain: the kernel's TTL repair, SIM's
-``normalize_date_robust``, the ``__spark_entry__`` date queries'
-residue rows (``queries._date_query``) and ``entry()``
+``normalize_date_robust``, every row of the ``__spark_entry__`` date
+queries (``queries.tier_batches``) and ``entry()``
 (``queries.nik_date_batches``) run it, and the oracle re-imports it.
 It is checked against the independent JVM expressions in ``dates.py``
 on golden and seeded random inputs (tests/test_scalar_parity.py).

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .dictionaries import (
     TO_DIGIT_DST,
@@ -235,155 +236,82 @@ def _date_str(col: str = "o_orderdate") -> F.Column:
     return F.date_format(F.col(col), "dd-MM-yyyy")
 
 
-_STRICT_SEP = r"^(\d{1,2})[-/. ](\d{1,2})[-/. ](\d{4})$"
+def tier_batches(batches):
+    """The scalar-tier queries' ``mapInArrow`` stage: each batch comes
+    back with ``value``, ``confidence`` and ``method`` appended, the
+    result of the extraction kernel's own tier (functions/pandas_ktp.py)
+    that a row's ``tier`` names, over its ``raw``:
+
+    - ``date``: the date chain ``normalize_date``; a raw it cannot date
+      gives all three null;
+    - ``canon:<field>``: the N25 canonical map of pekerjaan,
+      status_perkawinan or kewarganegaraan, or the agama WRatio tier
+      (``value`` only);
+    - ``enum:<field>``: the N34 enum correction, (null, null) when no
+      tier fires;
+    - ``place``: the N35 place correction.
+
+    A null raw gives all three null. The queries repeat raw values
+    heavily (a date query holds at most ~2,400 distinct raws) and every
+    tier is a pure function of its input, so rows go through a bounded
+    memo on (tier, raw) local to the call. A module-level function, so
+    workers import it by reference."""
+    from functools import lru_cache
+
+    import pyarrow as pa
+
+    from .functions import pandas_ktp as PK
+
+    canon = {"pekerjaan": PK.OCCUPATION.normalize,
+             "status_perkawinan": PK.MARITAL_STATUS.normalize,
+             "kewarganegaraan": PK.CITIZENSHIP.normalize,
+             "agama": PK._agama_one}
+
+    @lru_cache(maxsize=1 << 16)
+    def one(tier, raw):
+        if raw is None:
+            return None, None, None
+        if tier == "date":
+            r = PK.normalize_date(raw)
+            if r["normalized"] is None:
+                return None, None, None
+            return r["normalized"], r["confidence"], r["method"]
+        if tier == "place":
+            return (*PK._correct_place_one(raw), None)
+        kind, _, key = tier.partition(":")
+        if kind == "enum":
+            return (*(PK._correct_enum_one(key, raw) or (None, None)), None)
+        return canon[key](raw), None, None
+
+    for batch in batches:
+        rows = [one(t, r) for t, r in zip(batch.column("tier").to_pylist(),
+                                          batch.column("raw").to_pylist())]
+        value, conf, method = zip(*rows) if rows else ((), (), ())
+        yield pa.RecordBatch.from_arrays(
+            [*batch.columns, pa.array(value, pa.string()),
+             pa.array(conf, pa.float64()), pa.array(method, pa.string())],
+            names=[*batch.schema.names, "value", "confidence", "method"])
+
+
+def _run_tiers(df: DataFrame) -> DataFrame:
+    """``df`` (with string columns ``tier`` and ``raw``) through
+    ``tier_batches``."""
+    return df.mapInArrow(tier_batches, T.StructType([
+        *df.schema.fields, T.StructField("value", T.StringType()),
+        T.StructField("confidence", T.DoubleType()),
+        T.StructField("method", T.StringType())]))
 
 
 def _date_query(df: DataFrame, raw: F.Column,
                 with_method: bool = True) -> DataFrame:
-    """normalize_date over a raw column: JVM fast branches, and the
-    extraction kernel's scalar chain (``pandas_ktp.normalize_date``)
-    for the residue rows only. (The JVM let-tree in dates.py is the
-    parity-tested expression form, but its higher-order functions run
-    interpreted at ~10 core-ms/row here.)
-
-    JVM fast branches, computed per row before the Python stage:
-
-    - strict branch: trimmed single-separator dd-mm-yyyy, calendar-
-      valid, in-range year → conf 0.97, method strict_dd_mm_yyyy
-      (strategy 1; no swap / two-digit / repair can apply).
-    - year-repair branch (N21): strict rows whose 4-digit year is out
-      of range but closed-form repairable — digit p of y zeroed gives
-      base_p, candidates are monotone in the replacement digit, so the
-      first in-range one is d = max(0, ceil((MIN−base)/10^(4−p))),
-      priority p asc (the scalar chain's generate-and-test
-      _repair_year, in closed form).
-      Repaired year must itself be calendar-valid or the row stays
-      residue. conf 0.97·0.80, method year_repair_strict_dd_mm_yyyy.
-    - null branch: a strict 10-char dd-mm-yyyy whose month slot is
-      outside 1..12 fails every strategy → the all-null row.
-
-    One ``mapInPandas`` carries every row with its fast results as
-    extra columns; rows no branch handled (three-digit years, embedded
-    dates, char-subbed text, swaps, unrepairable years, nulls) run the
-    five-strategy chain through a bounded memo local to the UDF: the
-    date queries repeat raw values heavily (``date_3digit_year`` at
-    sf0.1 sends 91,420 residue rows holding 1,461 distinct raws), and
-    the chain is a pure function of its input. A failed row
-    (``empty_input``/``all_strategies_failed``) is the all-null
-    (normalized, confidence, method) of ``dates.normalize_date``'s null
-    struct.
-
-    Plan shape note: the branch split deliberately does NOT use
-    filter+union — PushDownPredicate substitutes aliases without a
-    cost guard, and a filter referencing the repair arithmetic was
-    pushed below the fan-out Exchange as a ~100x-expanded regex
-    expression running on the row-group-bound scan side (measured
-    201 s for the count alone). Instead the regex extraction is its
-    own projection (CollapseProject keeps a non-cheap alias referenced
-    more than once un-inlined, so each regex runs once per row) and
-    the fast results ride the Arrow batch."""
-    from .dictionaries import MIN_BIRTH_YEAR, REFERENCE_YEAR
-
-    def gen(batches):
-        from functools import lru_cache
-
-        import pandas as pd
-
-        from .functions.pandas_ktp import normalize_date
-
-        chain = lru_cache(maxsize=1 << 16)(normalize_date)
-        for pdf in batches:
-            raws = pdf["raw"].tolist()
-            norm = pdf["fast_norm"].tolist()
-            conf = pdf["fast_conf"].tolist()
-            meth = pdf["fast_meth"].tolist()
-            for i, done in enumerate(pdf["fast_done"].tolist()):
-                if done:
-                    continue
-                r = chain(raws[i])
-                if r["normalized"] is not None:
-                    norm[i] = r["normalized"]
-                    conf[i] = r["confidence"]
-                    meth[i] = r["method"]
-            yield pd.DataFrame({"raw": raws, "normalized": norm,
-                                "confidence": conf, "method": meth})
-
-    pre = df.select(raw.alias("raw"))
-    rtrim = F.trim(F.col("raw"))
-    p1 = pre.select(
-        "raw",
-        F.regexp_extract(rtrim, _STRICT_SEP, 1).cast("int").alias("_d"),
-        F.regexp_extract(rtrim, _STRICT_SEP, 2).cast("int").alias("_m"),
-        F.regexp_extract(rtrim, _STRICT_SEP, 3).cast("int").alias("_y"),
-        rtrim.rlike(_STRICT_SEP).alias("_strict"),
-    )
-    d, m, y = F.col("_d"), F.col("_m"), F.col("_y")
-    strict = F.col("_strict")
-    fast_ok = (
-        strict
-        & F.make_date(y, m, d).isNotNull()       # null on invalid dates
-        & y.between(MIN_BIRTH_YEAR, REFERENCE_YEAR)
-    )
-    rep_cands = []
-    for p in (1, 2, 3, 4):
-        step = 10 ** (4 - p)
-        digit = F.floor(y / step).cast("int") % 10
-        base = y - digit * F.lit(step)
-        dmin = F.greatest(
-            F.lit(0),
-            F.ceil((F.lit(MIN_BIRTH_YEAR) - base) / F.lit(float(step)))
-            .cast("int"),
-        )
-        cand = base + dmin * F.lit(step)
-        rep_cands.append(
-            F.when((dmin <= 9) & (cand <= REFERENCE_YEAR), cand))
-    yr_rep = F.coalesce(*rep_cands)
-    repair_ok = (
-        strict
-        & d.between(1, 31) & m.between(1, 12)
-        & (y >= 100)                       # <100 is the two-digit branch
-        & ~y.between(MIN_BIRTH_YEAR, REFERENCE_YEAR)
-        & yr_rep.isNotNull()
-        & F.make_date(yr_rep, m, d).isNotNull()
-    )
-    # fast-null branch: a 10-char strict dd-mm-yyyy (2-2-4 digits, so
-    # the text is digits+separators only — char-sub is identity, the
-    # 7-digit strategy can't fire, and no 3-digit-year tail exists)
-    # whose month slot is outside 1..12 fails strategy 1's hard month
-    # gate and every later strategy the same way (the swap rescue needs
-    # day_bad AND day<=12, i.e. day<1 — unreachable for \d{1,2});
-    # the chain provably returns the all-null row, so emit it in the
-    # JVM instead of paying the five-strategy chain per row.
-    null_ok = (
-        strict
-        & (F.length(rtrim) == 10)
-        & ~m.between(1, 12)
-    )
-    f1 = F.coalesce(fast_ok, F.lit(False))
-    f2 = F.coalesce(repair_ok, F.lit(False)) & ~f1
-    f3 = F.coalesce(null_ok, F.lit(False)) & ~f1 & ~f2
-
-    def _norm(yy: F.Column) -> F.Column:
-        return F.concat(
-            F.lpad(d.cast("string"), 2, "0"), F.lit("-"),
-            F.lpad(m.cast("string"), 2, "0"), F.lit("-"),
-            F.lpad(yy.cast("string"), 4, "0"))
-
-    p2 = p1.select(
-        "raw",
-        (f1 | f2 | f3).alias("fast_done"),
-        F.when(f1, _norm(y)).when(f2, _norm(yr_rep)).alias("fast_norm"),
-        F.when(f1, F.lit(0.97))
-        .when(f2, F.lit(0.97) * F.lit(0.80)).alias("fast_conf"),
-        F.when(f1, F.lit("strict_dd_mm_yyyy"))
-        .when(f2, F.lit("year_repair_strict_dd_mm_yyyy"))
-        .alias("fast_meth"),
-    )
-    out = p2.mapInPandas(gen, "raw string, normalized string, "
-                         "confidence double, method string")
+    """The kernel's date chain over a raw column, one row per input row:
+    raw, normalized, confidence rounded to 6 dp and (``with_method``)
+    method; a raw the chain cannot date gives all three null."""
+    out = _run_tiers(df.select(F.lit("date").alias("tier"),
+                               raw.alias("raw")))
     cols = [
         F.col("raw"),
-        F.col("normalized"),
+        F.col("value").alias("normalized"),
         F.round(F.col("confidence"), 6).alias("confidence"),
     ]
     if with_method:
@@ -1127,14 +1055,15 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
 # so the oracle uses the media_geometry fixture pattern: deterministic
 # noisy inputs chosen by construction, with the expected canonical
 # output pinned as a literal next to each input. The Spark side runs
-# the REAL production Arrow-batched UDFs (functions/pandas_tiers.py);
-# the oracle replays only the pinned literals — if the production
-# scorer drifts, the driver's value-hash gate fails.
+# the extraction kernel's own tiers (``tier_batches``); the oracle
+# replays only the pinned literals — if the production scorer drifts,
+# the driver's value-hash gate fails.
 #
 # Each case is (field, raw_input, expected_canonical); the expected
-# values were derived from the tier semantics at authoring time and
-# are cross-checked against the independent pure-Python twin by
-# tests/test_scalar_parity.py.
+# values were derived from the tier semantics at authoring time, and
+# tests/test_tier_cases.py checks each one against both
+# ``tier_batches`` and the independent pure-Python twin
+# (``oracle.scalars``).
 
 _FUZZY_CANON_CASES: list[tuple[str, str, str]] = [
     # pekerjaan — threshold 72 (exact-alias tier then token_set_ratio)
@@ -1193,30 +1122,17 @@ def _sql_list(vals) -> str:
 
 
 def q_fuzzy_canonical(spark, sf_dir):
-    """N25/Agama fuzzy tiers through the production pandas UDFs. Each
-    UDF receives only its own family's rows (the when-guard residue
-    pattern the production chain uses), so the coalesce picks exactly
-    the family output."""
-    from .functions import pandas_tiers as PT
-
-    PT._init_udfs()
+    """N25/Agama fuzzy tiers: each fixture row runs its field's
+    ``canon:<field>`` tier through ``tier_batches``."""
     # fanout=False: the fixture is 15-30 short strings cycled over
-    # customer; per-task pandas-UDF init + the extra exchange cost more
-    # than the fuzzy scoring saves (A/B at 1x and 10x: off wins ~0.4 s)
+    # customer; per-task Python worker init + the extra exchange cost
+    # more than the fuzzy scoring saves (A/B at 1x and 10x: off wins)
     df = _read(spark, sf_dir, "customer", fanout=False)
     field, raw = _case_arrays(_FUZZY_CANON_CASES)
-    df = df.select(field.alias("field"), raw.alias("raw"))
-    pek = PT.fuzzy_normalize_pekerjaan(
-        F.when(F.col("field") == "pekerjaan", F.col("raw")))
-    st = PT.fuzzy_normalize_status(
-        F.when(F.col("field") == "status_perkawinan", F.col("raw")))
-    kwn = PT.fuzzy_normalize_kewarganegaraan(
-        F.when(F.col("field") == "kewarganegaraan", F.col("raw")))
-    ag = PT.agama_extract_one_udf()(
-        F.when(F.col("field") == "agama", F.col("raw")))
-    return df.select(
-        "field", "raw",
-        F.coalesce(pek, st, kwn, ag).alias("canonical"))
+    out = _run_tiers(df.select(
+        field.alias("field"), raw.alias("raw"),
+        F.concat(F.lit("canon:"), field).alias("tier")))
+    return out.select("field", "raw", F.col("value").alias("canonical"))
 
 
 SQL_FUZZY_CANONICAL = f"""
@@ -1236,10 +1152,10 @@ FROM t
 # ---------------------------------------------------------------------------
 #
 # Same fixture pattern as fuzzy_canonical: the Spark side runs the
-# production struct-returning correction UDFs (correct_enum_udf /
-# correct_place_udf; ocr_corrector.py:368-477 semantics), the oracle
-# replays pinned (corrected, confidence) literals. Enum cases where no
-# tier fires yield NULL/NULL; place passthroughs keep the (possibly
+# kernel's correction tiers (``tier_batches``'s ``enum:<field>`` and
+# ``place``; ocr_corrector.py:368-477 semantics), the oracle replays
+# pinned (corrected, confidence) literals. Enum cases where no tier
+# fires yield NULL/NULL; place passthroughs keep the (possibly
 # char-substituted) input at confidence 0.35 / 0.0 per the tier table.
 
 _ENUM_PLACE_CASES: list[tuple[str, str, str, float]] = [
@@ -1274,33 +1190,20 @@ _ENUM_PLACE_CASES: list[tuple[str, str, str, float]] = [
     ("place", "DEPOX", "DEPOX", 0.35),
 ]
 
-_ENUM_FIELD_KEYS = ["jenis_kelamin", "agama", "golongan_darah",
-                    "status_perkawinan", "kewarganegaraan"]
-
-
 def q_enum_place_correction(spark, sf_dir):
-    """N34/N35 correction tiers through the production struct UDFs —
-    one per enum field plus the place corrector, dispatched by the
-    fixture's field column, one corrector per field."""
-    from .functions import pandas_tiers as PT
-
+    """N34/N35 correction tiers: each fixture row runs the ``place``
+    tier or its field's ``enum:<field>`` tier through
+    ``tier_batches``."""
     # fanout=False: same trade as fuzzy_canonical (measured)
     df = _read(spark, sf_dir, "customer", fanout=False)
     field, raw = _case_arrays(_ENUM_PLACE_CASES)
-    df = df.select(field.alias("field"), raw.alias("raw"))
-    corr = None
-    for key in _ENUM_FIELD_KEYS:
-        st = PT.correct_enum_udf(key)(
-            F.when(F.col("field") == key, F.col("raw")))
-        corr = st if corr is None else F.when(
-            F.col("field") == key, st).otherwise(corr)
-    place = PT.correct_place_udf()(
-        F.when(F.col("field") == "place", F.col("raw")))
-    corr = F.when(F.col("field") == "place", place).otherwise(corr)
-    return df.select(
-        "field", "raw",
-        corr["corrected"].alias("corrected"),
-        F.round(corr["confidence"].cast("double"), 2).alias("confidence"))
+    tier = F.when(field == "place", field).otherwise(
+        F.concat(F.lit("enum:"), field))
+    out = _run_tiers(df.select(field.alias("field"), raw.alias("raw"),
+                               tier.alias("tier")))
+    return out.select(
+        "field", "raw", F.col("value").alias("corrected"),
+        F.round(F.col("confidence"), 2).alias("confidence"))
 
 
 def _sql_num_list(vals) -> str:

@@ -1192,31 +1192,27 @@ def q_dedup_verified(spark, sf_dir):
     from .functions.text_analysis import word_shingles
 
     docs = _docs_with_dups(spark, sf_dir, fanout=True)
-    # persist the candidate pairs: they feed THREE consumers (both sides
-    # of the id union + the verify join), and without reuse the banding
-    # mapInPandas + band self-join — the expensive part at 100 TB —
-    # re-executes per consumer. The pair set itself is tiny (candidates
-    # only), so caching it is the cheap side of the trade.
-    pairs = DD.lsh_candidate_pairs(docs).persist()
-    # prune the shingle table to candidate ids BEFORE the verify joins:
-    # at 100 TB the candidate set is a tiny fraction of the corpus, and
-    # without the semi-join the full shingle table (every doc's 3-gram
-    # set) would shuffle into both join exchanges.
-    cand_ids = (
-        pairs.select(F.col("doc_a").alias("d"))
-        .unionByName(pairs.select(F.col("doc_b").alias("d")))
-        .distinct()
-    )
+    # the candidate pairs have one consumer, so nothing is cached: each
+    # pair explodes into its two ends, the ends inner-join the shingle
+    # sets on the end id (so only candidate docs' shingle arrays enter
+    # the verify shuffle, the 100-TB scale claim), and each pair
+    # regroups with both ends' sets
+    ends = DD.lsh_candidate_pairs(docs).select(
+        "doc_a", "doc_b",
+        F.explode(F.array("doc_a", "doc_b")).alias("d"))
     sh = docs.select(
         F.col("doc_id").alias("d"),
         F.array_distinct(word_shingles(F.col("text"), 3)).alias("sh"),
-    ).join(cand_ids, "d", "left_semi")
-    j = (
-        pairs.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.d"))
-        .join(sh.alias("sb"), F.col("doc_b") == F.col("sb.d"))
     )
-    inter = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
-    union = F.size(F.array_union(F.col("sa.sh"), F.col("sb.sh")))
+    d, sh_col = F.col("d"), F.col("sh")
+    j = ends.join(sh, "d").groupBy("doc_a", "doc_b").agg(
+        F.first(F.when(d == F.col("doc_a"), sh_col), ignorenulls=True)
+        .alias("sa"),
+        F.first(F.when(d == F.col("doc_b"), sh_col), ignorenulls=True)
+        .alias("sb"),
+    )
+    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
+    union = F.size(F.array_union(F.col("sa"), F.col("sb")))
     jac = inter / F.greatest(union, F.lit(1))
     return (
         j.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))

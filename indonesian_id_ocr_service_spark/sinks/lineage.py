@@ -28,11 +28,8 @@ The trade: a lost or torn line re-runs its whole commit. A torn line
 needs a crash inside one small append after the job has finished; a
 crash during the job re-runs the job either way.
 
-A commit writes results and the lineage line, nothing else. The
-per-document media metrics branch (``metrics/commit=<id>/``, filled
-from images synthesized out of media-ref hashes) was deleted
-2026-10-19; a ``metrics/`` directory an older run dir still holds is
-neither read nor purged.
+A commit writes results and the lineage line, nothing else; a
+``metrics/`` directory in an older run dir is neither read nor purged.
 """
 
 from __future__ import annotations
@@ -123,9 +120,9 @@ class ExtractionRun:
 
         ``spark`` is unused: the source DataFrame carries its session.
         It stays first so that callers passing ``(spark, src,
-        pipeline_fn)`` positionally keep working. The media metrics
-        hook is gone with its branch: passing a fourth argument raises
-        ``TypeError``."""
+        pipeline_fn)`` positionally keep working. The purge touches
+        ``results/`` only: a ``metrics/`` directory is neither read nor
+        purged."""
         if self.committed() is not None:
             return {"skipped": True, "rows": 0}
         for name in os.listdir(self.results_dir):

@@ -29,10 +29,9 @@ directories are deleted before the re-run (sinks/lineage.py).
 The job has no shuffle (``run_pipeline`` is one narrow chain, and
 ``--synth`` is ``range`` + ``mapInPandas``), so it takes no shuffle
 option; a cluster that wants ``spark.sql.shuffle.partitions`` set
-passes ``--conf`` to spark-submit. The two flags that asked for
-media metrics and set the shuffle partition count were deleted on
-2026-10-19 with the media metrics branch; an old command line that
-still passes either exits 2 at argument parsing.
+passes ``--conf`` to spark-submit. A command line that passes
+``--media-metrics`` or ``--shuffle-partitions`` exits 2 at argument
+parsing.
 
 Prints exactly one JSON result line on stdout:
 ``{"run_id", "skipped", "rows", "wall_s", "docs_per_sec"}`` —

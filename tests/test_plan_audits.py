@@ -63,34 +63,44 @@ def test_filter_pushdown_reaches_scan(spark):
     assert "o_totalprice" not in pushed  # column pruning
 
 
-def test_dedup_verified_semi_join_prunes_shingles(spark):
+def test_dedup_verified_inner_join_prunes_shingles(spark):
     """The verify stage of the composed dedup pipeline must NOT ship the
-    full shingle table into the pair joins: the shingle side carries a
-    LeftSemi against the candidate-id set, so only candidate docs'
-    shingle arrays enter the verify shuffle (the 100-TB scale claim)."""
+    full shingle table into the pair aggregation: the shingle
+    projection inner-joins the candidate pairs' ends on the end id
+    below the aggregation that regroups each pair, so only candidate
+    docs' shingle arrays reach the verify shuffle (the 100-TB scale
+    claim)."""
     df = QD.q_dedup_verified(spark, SF)
-    plan = audit.simple_plan(df)
-    assert "LeftSemi" in plan, plan[:3000]
+    lines = audit.simple_plan(df).splitlines()
+
+    def first(pred):
+        return next(i for i, ln in enumerate(lines) if pred(ln))
+
+    agg = first(lambda ln: "Aggregate" in ln and "first(" in ln)
+    join = first(lambda ln: "Join [d#" in ln and "Inner" in ln)
+    shingles = first(lambda ln: "array_distinct" in ln and " AS sh#" in ln)
+    assert agg < join < shingles, "\n".join(lines)[:3000]
 
 
-def test_dedup_verified_reuses_candidate_pairs(spark):
-    """The LSH banding stage (mapInPandas + band self-join) must
-    execute ONCE: `pairs` feeds three consumers and is persisted, so
-    the plan shows InMemoryRelation at every consumption site and the
-    banding kernel appears only inside the cached subtree."""
+def test_dedup_verified_single_banding_no_cache(spark):
+    """The LSH banding stage (mapInPandas + bucket grouping) executes
+    ONCE, and nothing is cached: the candidate pairs have one consumer,
+    so the plan holds exactly one MapInPandas and no in-memory
+    relation."""
     df = QD.q_dedup_verified(spark, SF)
     plan = audit.simple_plan(df)
-    assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan, \
-        plan[:3000]
-    # the banding mapInPandas must not appear outside the cached
-    # subtree: each InMemoryRelation block repeats the cached plan, so
-    # count occurrences per consumer-scan instead — every MapInPandas
-    # mention must be nested under an InMemoryRelation
-    lines = plan.splitlines()
-    for i, ln in enumerate(lines):
-        if "MapInPandas" in ln or "mapInPandas" in ln:
-            assert any("InMemory" in prev for prev in lines[:i]), \
-                "banding kernel executes outside the cached subtree"
+    assert plan.count("MapInPandas") == 1, plan[:3000]
+    assert "InMemoryRelation" not in plan, plan[:3000]
+    assert "InMemoryTableScan" not in plan, plan[:3000]
+
+
+def test_dedup_verified_leaves_no_cache(spark):
+    """Collecting the dedup query leaves the session's CacheManager
+    empty, so no later query in a shared session can match a cached
+    subtree of it."""
+    spark.catalog.clearCache()
+    QD.q_dedup_verified(spark, SF).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_minhash_lsh_single_kernel_no_join(spark):

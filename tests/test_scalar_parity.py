@@ -203,12 +203,13 @@ def test_date_normalize_random_parity(spark):
 
 
 def test_date_query_matches_scalar_chain(spark):
-    """The date queries' plan (JVM fast branches + the scalar chain on
-    residue rows) gives every row the scalar chain's result, and a
-    failed or null row the all-null (normalized, confidence, method).
-    Residue raws, a failing raw and a null repeat, interleaved with
-    other rows, so the residue UDF's per-value memo serves repeats: each
-    repeat must still get its own row with the chain's result."""
+    """The date queries' plan (every row through the scalar chain in
+    ``queries.tier_batches``) gives every row the scalar chain's
+    result, and a failed or null row the all-null (normalized,
+    confidence, method). Raws, a failing raw and a null repeat,
+    interleaved with other rows, so the stage's (tier, raw) memo serves
+    repeats: each repeat must still get its own row with the chain's
+    result."""
     from collections import Counter
 
     from indonesian_id_ocr_service_spark.queries import _date_query
