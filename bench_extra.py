@@ -9,7 +9,8 @@ Usage:
       [--noop] [query ...]
 
 With --noop, uses df.write.format("noop") instead of the xxhash sum
-(guide §1.4) to time computation without the collect.
+(guide §1.4) to time computation without the collect. With
+--explain DIR --passes 0 it only writes the plans.
 
 The session follows the host as perfbench sizes it: local[N] with N =
 SPARK_GRAFT_CPUS, else the cores this process may run on, and a driver
@@ -89,13 +90,14 @@ def main() -> None:
             sec = time.time() - t0
             results[name].append(sec)
             print(f"[pass{p}] {name}: {sec:.2f}s", flush=True)
-    print("--- best ---")
-    tot = 0.0
-    for name in names:
-        b = min(results[name])
-        tot += b
-        print(f"{name}: {b:.2f}")
-    print(f"TOTAL(best): {tot:.2f}")
+    if args.passes > 0:
+        print("--- best ---")
+        tot = 0.0
+        for name in names:
+            b = min(results[name])
+            tot += b
+            print(f"{name}: {b:.2f}")
+        print(f"TOTAL(best): {tot:.2f}")
     spark.stop()
 
 

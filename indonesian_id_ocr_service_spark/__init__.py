@@ -6,14 +6,18 @@ studied read-only at /root/reference). The reference is a single-process
 Flask app handling one image per request; this engine is a distributed
 batch pipeline over tables of interleaved text+media document spans
 (`doc_id:string, spans:array<struct<kind,text,media_ref,offset>>`),
-built entirely on the DataFrame API + Arrow-vectorized pandas UDFs.
+built on the DataFrame API plus Arrow-batched Python stages
+(``mapInArrow`` for the extraction kernel and the driver queries'
+scalar tiers, ``mapInPandas`` for the data queries' operator
+kernels).
 
 Layout
 ------
 - ``dictionaries``  : static lookup data (confusion tables, canonical maps,
                       region DB) — broadcast-join / closure-shipped dims
 - ``functions/``    : JVM column-expression libraries (NIK, dates, fields,
-                      text analysis) + pure-Python fuzzy scorers for PUDFs
+                      text analysis) + the kernel's Python tiers
+                      (``pandas_ktp``) and fuzzy scorers
 - ``operators/``    : classify / spatial extract / cross-validate / score /
                       dedup / similarity / media operators
 - ``corpus/``       : deterministic synthetic span-corpus generator (seed 42)

@@ -96,7 +96,7 @@ why the expected provinsi for ``DKI JAKARTA`` is ``JAKARTA``),
 nik_cross_validator.py:271-285 (V5 padding), document_processor.py
 (C1 classify routing).
 
-The same Python literals drive BOTH engines: `ktp_fixture_df` builds
+The same Python literals drive BOTH engines: `ktp_raw_doc` builds
 the raw spans, `ktp_expected_sql` interpolates the identical lists into
 DuckDB expressions. Nothing is learned from running the pipeline — the
 expected values are the designed canon per class.
@@ -397,50 +397,6 @@ def ktp_raw_doc(i: int):
     y += 30
     emit("Berlaku Hingga", "SEUMUR HIDUP", y)
     return spans, geom, alt_spans or None, alt_geom or None
-
-
-def _ids(spark: SparkSession, sf_dir: str,
-         repartition_ids: bool) -> DataFrame:
-    """doc_id source for the fixture builders. With ``repartition_ids``
-    the ids are hash-repartitioned on doc_id BEFORE the span
-    construction: the shuffle then carries 8-byte ids instead of built
-    span payloads, and the construction itself parallelizes even when
-    the ids file is row-group-bound (the driver testdata carries 1 row
-    group, so without this the whole fixture built on one core). At
-    100 TB the file splits provide the parallelism and the builders are
-    called without the flag."""
-    ids = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    if repartition_ids:
-        ids = ids.repartition(
-            spark.sparkContext.defaultParallelism, "doc_id")
-    return ids
-
-
-def ktp_fixture_df(spark: SparkSession, sf_dir: str,
-                   repartition_ids: bool = False) -> DataFrame:
-    """doc_ids from the driver's documents table → raw fixture corpus.
-    Built inside mapInPandas so only ids move; the span construction is
-    a stateless per-row map (at 100 TB each file split builds its own
-    rows — no shuffle, no driver-side materialization)."""
-    import pandas as pd
-
-    ids = _ids(spark, sf_dir, repartition_ids)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                spans, geom, alt, altg = ktp_raw_doc(i)
-                # doc_id as string: the corpus span contract
-                # (BASELINE input_hint / SPAN_SCHEMA_DDL)
-                rows.append((str(i), spans, geom, alt, altg))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "spans", "span_geom", "spans_alt", "alt_geom"])
-
-    return ids.mapInPandas(
-        gen, f"doc_id string, spans {SPAN_DDL}, span_geom {GEOM_DDL}, "
-             f"spans_alt {SPAN_DDL}, alt_geom {GEOM_DDL}")
 
 
 # --- DuckDB oracle: the same closed forms as SQL --------------------------
@@ -746,20 +702,31 @@ def sim_raw_doc(i: int):
     return spans, geom, alt_spans or None, alt_geom or None
 
 
-def sim_fixture_df(spark: SparkSession, sf_dir: str,
-                   repartition_ids: bool = False) -> DataFrame:
-    """doc_ids → SIM raw fixture corpus incl. the alternative OCR view
-    (the C3/C6 second pass)."""
+def fixture_df(spark: SparkSession, sf_dir: str, raw_doc) -> DataFrame:
+    """doc_ids from the driver's documents table → the raw fixture
+    corpus ``raw_doc`` (``ktp_raw_doc`` or ``sim_raw_doc``) builds per
+    id, alternative OCR view included. Built inside mapInPandas so only
+    ids move; the span construction is a stateless per-row map.
+
+    The ids are hash-repartitioned on doc_id BEFORE the span
+    construction: the one shuffle then carries 8-byte ids instead of
+    built span payloads, and the construction itself parallelizes even
+    when the ids file is row-group-bound (the driver testdata carries 1
+    row group, so without it the whole fixture built on one core)."""
     import pandas as pd
 
-    ids = _ids(spark, sf_dir, repartition_ids)
+    ids = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+           .select("doc_id")
+           .repartition(spark.sparkContext.defaultParallelism, "doc_id"))
 
     def gen(batches):
         for pdf in batches:
             rows = []
             for doc_id in pdf["doc_id"]:
                 i = int(doc_id)
-                spans, geom, alt, altg = sim_raw_doc(i)
+                spans, geom, alt, altg = raw_doc(i)
+                # doc_id as string: the corpus span contract
+                # (BASELINE input_hint / SPAN_SCHEMA_DDL)
                 rows.append((str(i), spans, geom, alt, altg))
             yield pd.DataFrame(rows, columns=[
                 "doc_id", "spans", "span_geom", "spans_alt", "alt_geom"])

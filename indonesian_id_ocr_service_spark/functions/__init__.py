@@ -1,1 +1,1 @@
-"""Column-expression and pandas-UDF function libraries."""
+"""Column-expression libraries and the extraction kernel's Python tiers."""

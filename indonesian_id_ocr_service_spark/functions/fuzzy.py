@@ -17,8 +17,9 @@ module provides a self-contained implementation of the same scorer family:
 Production code matches a query against a fixed vocabulary only through
 ``Vocabulary.best`` (and ``AliasMap``, the canonical-value tier built on
 it): the extraction kernel's KTP labels, K8 keywords, SIM job and region
-lists, and the agama/place/enum/alias tiers of the KTP finish and of
-the driver queries' pandas UDFs. Each vocabulary is prepared once per
+lists, and the agama/place/enum/alias tiers of the KTP finish, which
+the driver queries also run through ``queries.tier_batches``. Each
+vocabulary is prepared once per
 process when its module is imported, and two exact score bounds skip the
 choices that cannot win. ``extract_one`` is thefuzz's plain loop, with no
 bound and no cache; the oracle calls it, so the oracle checks those

@@ -30,12 +30,11 @@ __all__ = [
 ]
 
 
-def chunk_words(text: str, per_par: int = 10) -> list[str]:
-    """Split a text into fixed-size word groups — the paragraph
-    structure the fixture generators use (and the oracle reproduces)."""
+def chunk_words(text: str) -> list[str]:
+    """Split a text into 10-word groups — the paragraph structure the
+    fixture generators use (and the oracle reproduces)."""
     words = (text or "").split()
-    return [" ".join(words[i:i + per_par])
-            for i in range(0, len(words), per_par)]
+    return [" ".join(words[i:i + 10]) for i in range(0, len(words), 10)]
 
 
 # ---------------------------------------------------------------------------
@@ -130,10 +129,10 @@ class _BlockParser(HTMLParser):
         self._flush()
 
 
-def extract_main_html(html: str, min_len: int = 25,
-                      max_link_density: float = 0.33) -> str:
-    """Boilerplate strip: keep blocks that are long enough AND not
-    link-dominated; join with newlines. Deterministic, site-agnostic."""
+def extract_main_html(html: str) -> str:
+    """Boilerplate strip: keep blocks of at least 25 characters whose
+    link density is at most 0.33; join with newlines. Deterministic,
+    site-agnostic."""
     p = _BlockParser()
     try:
         p.feed(html or "")
@@ -142,29 +141,27 @@ def extract_main_html(html: str, min_len: int = 25,
         return ""
     kept = [
         txt for chars, link_chars, txt in p.blocks
-        if chars >= min_len and link_chars / chars <= max_link_density
+        if chars >= 25 and link_chars / chars <= 0.33
     ]
     return "\n".join(kept)
 
 
-def html_main_content(df: DataFrame, id_col: str = "doc_id",
-                      html_col: str = "html") -> DataFrame:
-    """(id, html) → (id, main_text) via the block/link-density
+def html_main_content(df: DataFrame) -> DataFrame:
+    """(doc_id, html) → (doc_id, main_text) via the block/link-density
     heuristic — Arrow-batched, stateless, trivially partitionable."""
     import pandas as pd
 
-    id_type = dict(df.dtypes)[id_col]
+    id_type = dict(df.dtypes)["doc_id"]
 
     def gen(batches):
         for pdf in batches:
             yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "main_text": [extract_main_html(h)
-                              for h in pdf[html_col]],
+                "doc_id": pdf["doc_id"],
+                "main_text": [extract_main_html(h) for h in pdf["html"]],
             })
 
-    return df.select(id_col, html_col).mapInPandas(
-        gen, f"{id_col} {id_type}, main_text string")
+    return df.select("doc_id", "html").mapInPandas(
+        gen, f"doc_id {id_type}, main_text string")
 
 
 # ---------------------------------------------------------------------------
@@ -218,8 +215,6 @@ def synth_pdf(doc_id: int, text: str) -> bytes:
     return bytes(out)
 
 
-_STREAM_RX = re.compile(
-    rb"<<(.*?)>>\s*stream\r?\n(.*?)\r?\nendstream", re.DOTALL)
 _STREAM_AT_RX = re.compile(rb"stream(\r\n|\n)")
 _LENGTH_RX = re.compile(rb"/Length\s+(\d+)\b")
 
@@ -319,22 +314,22 @@ def extract_pdf_text(payload: bytes) -> str | None:
     return "\n".join(lines)
 
 
-def pdf_text(df: DataFrame, id_col: str = "doc_id",
-             payload_col: str = "payload") -> DataFrame:
-    """(id, pdf payload) → (id, pdf_text); non-PDF payloads drop."""
+def pdf_text(df: DataFrame) -> DataFrame:
+    """(doc_id, pdf payload) → (doc_id, pdf_text); non-PDF payloads
+    drop."""
     import pandas as pd
 
-    id_type = dict(df.dtypes)[id_col]
+    id_type = dict(df.dtypes)["doc_id"]
 
     def gen(batches):
         for pdf in batches:
             rows = []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
+            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
                 t = extract_pdf_text(
                     bytes(payload) if payload is not None else b"")
                 if t is not None:
                     rows.append((did, t))
-            yield pd.DataFrame(rows, columns=[id_col, "pdf_text"])
+            yield pd.DataFrame(rows, columns=["doc_id", "pdf_text"])
 
-    return df.select(id_col, payload_col).mapInPandas(
-        gen, f"{id_col} {id_type}, pdf_text string")
+    return df.select("doc_id", "payload").mapInPandas(
+        gen, f"doc_id {id_type}, pdf_text string")

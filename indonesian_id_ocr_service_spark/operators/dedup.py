@@ -5,13 +5,13 @@ Jaccard.
 Scale design:
 - Exact dedup: hash-groupBy on a 16-byte fingerprint — one shuffle of
   (hash, doc_id) pairs only, never the text.
-- MinHash: signatures computed per row with array higher-order
-  functions (ZERO shuffle); only the banded LSH join shuffles, and it
-  shuffles just (band_key, doc_id). Band keys are md5-prefix strings →
-  uniformly distributed → no skew. At 10^12 docs you bucket the band
-  join by band_key and process bands independently.
-- SimHash: per-row 32-bit sketch via aggregate/zip_with (no shuffle);
-  near-dup candidates join on band substrings of the sketch.
+- MinHash: signatures and band keys computed per row in an Arrow
+  kernel (ZERO shuffle); only the (band, key) grouping shuffles, and it
+  shuffles just (band, key, doc). Band keys are md5 strings →
+  uniformly distributed → no skew.
+- SimHash: per-row 32-bit sketch in an Arrow kernel (no shuffle).
+  ``minhash_signature`` and ``simhash32`` are the JVM-expression forms
+  the tests check the kernels against.
 - All hashing is md5-based so DuckDB oracles reproduce values exactly.
 """
 
@@ -32,10 +32,16 @@ __all__ = [
     "ngram_jaccard_pairs",
 ]
 
+# MinHash-LSH design: 12 md5 hashes over word 3-shingles, banded in
+# pairs (6 bands); the DuckDB oracles restate these values.
+N_HASHES = 12
+BAND_SIZE = 2
+SHINGLE_K = 3
 
-def exact_dedup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+
+def exact_dedup_stats(df: DataFrame) -> DataFrame:
     """Exact-duplicate groups over the normalized-text fingerprint."""
-    fp = df.select(fingerprint(F.col(text_col)).alias("fp"))
+    fp = df.select(fingerprint(F.col("text")).alias("fp"))
     return (
         fp.groupBy("fp").count()
         .agg(
@@ -49,12 +55,11 @@ def exact_dedup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def minhash_signature(text: Column, n_hashes: int = 12,
-                      shingle_k: int = 3) -> Column:
+def minhash_signature(text: Column, n_hashes: int = N_HASHES) -> Column:
     """Array of n md5-min hashes over word shingles — per-row, no
     shuffle. Hash_j(s) = md5(j || ':' || s); the minimum is taken on the
     hex string (fixed length ⇒ lexicographic == numeric order)."""
-    shingles = word_shingles(text, shingle_k)
+    shingles = word_shingles(text, SHINGLE_K)
     return let(
         shingles,
         lambda sh: F.array(*[
@@ -69,19 +74,17 @@ def minhash_signature(text: Column, n_hashes: int = 12,
 
 
 def minhash_band_rows(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", n_hashes: int = 12,
-                      band_size: int = 2,
-                      shingle_k: int = 3) -> DataFrame:
+                      text_col: str = "text") -> DataFrame:
     """(id, text) → one (doc, band, key) row per LSH band — the Arrow-
     kernel form of minhash_signature + banding. Identical hashes/keys
     to the expression form (parity-tested): the JVM tree evaluates
-    n_hashes interpreted transform-over-shingles trees per row (~2,400
+    N_HASHES interpreted transform-over-shingles trees per row (~2,400
     md5 + type-walks per doc — the HOF dataType recursion pathology);
     here normalization stays JVM-side and the per-batch kernel
     memoizes the n-hash md5 vector per UNIQUE shingle."""
     import pandas as pd
 
-    n_bands = n_hashes // band_size
+    n_bands = N_HASHES // BAND_SIZE
 
     def gen(batches):
         import hashlib
@@ -93,7 +96,7 @@ def minhash_band_rows(df: DataFrame, id_col: str = "doc_id",
         # per-doc winners pay hexdigest (was: every hash of every
         # shingle).
         seeds = [hashlib.md5(f"{j}:".encode())
-                 for j in range(n_hashes)]
+                 for j in range(N_HASHES)]
         cache: dict = {}
         for pdf in batches:
             # bound the per-task memo: unique shingles grow with every
@@ -105,10 +108,10 @@ def minhash_band_rows(df: DataFrame, id_col: str = "doc_id",
             for doc, t in zip(pdf[id_col], pdf["_norm"]):
                 t = t or ""
                 ws = t.split(" ")
-                if len(ws) >= shingle_k:
+                if len(ws) >= SHINGLE_K:
                     shingles = [
-                        " ".join(ws[i:i + shingle_k])
-                        for i in range(len(ws) - shingle_k + 1)
+                        " ".join(ws[i:i + SHINGLE_K])
+                        for i in range(len(ws) - SHINGLE_K + 1)
                     ]
                 else:
                     shingles = [t]
@@ -125,13 +128,13 @@ def minhash_band_rows(df: DataFrame, id_col: str = "doc_id",
                         cache[s] = v
                     rows.append(v)
                 sig = [min(r[j] for r in rows).hex()
-                       for j in range(n_hashes)]
+                       for j in range(N_HASHES)]
                 for b in range(n_bands):
                     docs.append(doc)
                     bands.append(b)
                     keys.append("|".join(
-                        sig[b * band_size + r]
-                        for r in range(band_size)))
+                        sig[b * BAND_SIZE + r]
+                        for r in range(BAND_SIZE)))
             yield pd.DataFrame(
                 {"doc": docs, "band": bands, "key": keys})
 
@@ -141,9 +144,7 @@ def minhash_band_rows(df: DataFrame, id_col: str = "doc_id",
     return src.mapInPandas(gen, f"doc {id_type}, band int, key string")
 
 
-def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n_hashes: int = 12,
-                        band_size: int = 2) -> DataFrame:
+def lsh_candidate_pairs(df: DataFrame) -> DataFrame:
     """MinHash-LSH candidate pairs: docs sharing any band of the
     signature. Returns distinct (doc_a, doc_b), doc_a < doc_b.
 
@@ -155,8 +156,7 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     sizes are bounded by construction (md5-uniform keys), so the
     per-group pair explosion is the same quadratic-inside-buckets work
     the join did, minus the duplicate kernel pass."""
-    banded = minhash_band_rows(df, id_col, text_col, n_hashes,
-                               band_size)
+    banded = minhash_band_rows(df)
     groups = (
         banded.groupBy("band", "key")
         .agg(F.array_sort(F.collect_list("doc")).alias("ds"))
@@ -264,16 +264,14 @@ def simhash32_kernel(df: DataFrame, id_col: str = "doc_id",
     return src.mapInPandas(gen, f"{id_col} {id_type}, simhash string")
 
 
-def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        shingle_k: int = 3) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs of consecutive ids —
     the verification stage behind LSH candidates (kept linear here;
     at scale you feed it LSH pairs instead of consecutive ids)."""
     sh = df.select(
-        F.col(id_col).alias("doc"),
-        F.array_distinct(word_shingles(F.col(text_col),
-                                       shingle_k)).alias("sh"),
+        F.col("doc_id").alias("doc"),
+        F.array_distinct(word_shingles(F.col("text"),
+                                       SHINGLE_K)).alias("sh"),
     )
     a = sh.alias("a")
     b = sh.alias("b")

@@ -156,22 +156,22 @@ def _gaussian_blur(img: np.ndarray, sigma: float) -> np.ndarray:
     return f
 
 
-def unsharp_mask(img: np.ndarray, sigma: float = 1.0,
-                 strength: float = 1.5) -> np.ndarray:
-    """P4 (image_preprocessor.py:53-57): img·(1+s) − blur·s, clipped."""
-    blurred = _gaussian_blur(img, sigma)
+def unsharp_mask(img: np.ndarray, strength: float = 1.5) -> np.ndarray:
+    """P4 (image_preprocessor.py:53-57): img·(1+s) − blur·s, clipped,
+    with a σ = 0.8 Gaussian blur."""
+    blurred = _gaussian_blur(img, 0.8)
     sharp = img.astype(np.float64) * (1.0 + strength) - blurred * strength
     return np.clip(np.rint(sharp), 0, 255).astype(np.uint8)
 
 
-def clahe_gray(img: np.ndarray, clip_limit: float = 3.0,
-               grid: int = 8) -> np.ndarray:
+def clahe_gray(img: np.ndarray, clip_limit: float = 3.0) -> np.ndarray:
     """P5: contrast-limited adaptive histogram equalization on gray
-    (the reference applies it to LAB-L; single-channel here). Tile
-    histograms clipped at clip_limit×(tile_px/256), excess
-    redistributed, per-tile CDF mappings bilinearly interpolated."""
+    (the reference applies it to LAB-L; single-channel here) over an
+    8×8 tile grid. Tile histograms clipped at clip_limit×(tile_px/256),
+    excess redistributed, per-tile CDF mappings bilinearly
+    interpolated."""
     h, w = img.shape
-    gh = gw = grid
+    gh = gw = 8
     ys = np.linspace(0, h, gh + 1).astype(int)
     xs = np.linspace(0, w, gw + 1).astype(int)
     luts = np.zeros((gh, gw, 256), dtype=np.float64)
@@ -206,78 +206,6 @@ def clahe_gray(img: np.ndarray, clip_limit: float = 3.0,
     out = ((1 - fy) * ((1 - fx) * t00 + fx * t01)
            + fy * ((1 - fx) * t10 + fx * t11))
     return np.clip(np.rint(out), 0, 255).astype(np.uint8)
-
-
-# ---------------------------------------------------------------------------
-# P5 color path: sRGB ↔ CIELAB and LAB-L CLAHE
-# (the reference's enhance chain operates on the L channel of LAB,
-#  image_preprocessor.py:466-478; exercised when a corpus regime carries
-#  color payloads)
-# ---------------------------------------------------------------------------
-
-_SRGB_TO_XYZ = np.array([
-    [0.4124564, 0.3575761, 0.1804375],
-    [0.2126729, 0.7151522, 0.0721750],
-    [0.0193339, 0.1191920, 0.9503041],
-])
-_XYZ_TO_SRGB = np.linalg.inv(_SRGB_TO_XYZ)
-_D65 = np.array([0.95047, 1.0, 1.08883])
-
-
-def _srgb_linear(c: np.ndarray) -> np.ndarray:
-    return np.where(c <= 0.04045, c / 12.92,
-                    ((c + 0.055) / 1.055) ** 2.4)
-
-
-def _srgb_gamma(c: np.ndarray) -> np.ndarray:
-    return np.where(c <= 0.0031308, 12.92 * c,
-                    1.055 * np.clip(c, 0, None) ** (1 / 2.4) - 0.055)
-
-
-def _lab_f(t: np.ndarray) -> np.ndarray:
-    d = 6.0 / 29.0
-    return np.where(t > d ** 3, np.cbrt(t), t / (3 * d * d) + 4.0 / 29.0)
-
-
-def _lab_finv(t: np.ndarray) -> np.ndarray:
-    d = 6.0 / 29.0
-    return np.where(t > d, t ** 3, 3 * d * d * (t - 4.0 / 29.0))
-
-
-def rgb_to_lab(img: np.ndarray) -> np.ndarray:
-    """(h,w,3) uint8 sRGB → float CIELAB (D65). L in [0,100]."""
-    lin = _srgb_linear(img.astype(np.float64) / 255.0)
-    xyz = lin @ _SRGB_TO_XYZ.T
-    f = _lab_f(xyz / _D65)
-    lab = np.empty_like(xyz)
-    lab[..., 0] = 116.0 * f[..., 1] - 16.0
-    lab[..., 1] = 500.0 * (f[..., 0] - f[..., 1])
-    lab[..., 2] = 200.0 * (f[..., 1] - f[..., 2])
-    return lab
-
-
-def lab_to_rgb(lab: np.ndarray) -> np.ndarray:
-    """float CIELAB (D65) → (h,w,3) uint8 sRGB."""
-    fy = (lab[..., 0] + 16.0) / 116.0
-    fx = fy + lab[..., 1] / 500.0
-    fz = fy - lab[..., 2] / 200.0
-    xyz = np.stack([_lab_finv(fx), _lab_finv(fy), _lab_finv(fz)],
-                   axis=-1) * _D65
-    lin = xyz @ _XYZ_TO_SRGB.T
-    srgb = _srgb_gamma(np.clip(lin, 0.0, 1.0))
-    return np.clip(np.rint(srgb * 255.0), 0, 255).astype(np.uint8)
-
-
-def clahe_lab_l(img: np.ndarray, clip_limit: float = 2.0,
-                grid: int = 8) -> np.ndarray:
-    """P5 on color (image_preprocessor.py:466-475): CLAHE applied to
-    the L channel of LAB, a/b untouched, merged back to sRGB."""
-    lab = rgb_to_lab(img)
-    l8 = np.clip(np.rint(lab[..., 0] * 255.0 / 100.0), 0,
-                 255).astype(np.uint8)
-    lab[..., 0] = clahe_gray(l8, clip_limit=clip_limit,
-                             grid=grid).astype(np.float64) * 100.0 / 255.0
-    return lab_to_rgb(lab)
 
 
 # ---------------------------------------------------------------------------
@@ -1485,10 +1413,9 @@ def resize_keep_aspect(img: np.ndarray, target_width: int) -> np.ndarray:
     return np.clip(np.rint(out), 0, 255).astype(np.uint8)
 
 
-def pad_border(img: np.ndarray, px: int = 20, value: int = 255
-               ) -> np.ndarray:
+def pad_border(img: np.ndarray, px: int = 20) -> np.ndarray:
     """P7 (image_preprocessor.py:143-149): constant white border."""
-    return np.pad(img, px, mode="constant", constant_values=value)
+    return np.pad(img, px, mode="constant", constant_values=255)
 
 
 def rotate90(img: np.ndarray, angle: int) -> np.ndarray:
@@ -1592,13 +1519,13 @@ def rotate(img: np.ndarray, deg: float) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def estimate_skew(img: np.ndarray, max_deg: float = 15.0,
-                  step: float = 0.25) -> float:
+def estimate_skew(img: np.ndarray) -> float:
     """Dominant text-line angle via projection profiles: the reference
     (image_preprocessor.py:268-308) averages HoughP segment angles
     within ±15°; rotating the text-pixel coordinates and maximizing the
     variance of the row-projection finds the same dominant direction.
-    Works on the central 60% ROI like the reference."""
+    Angles are tried in 0.25° steps over ±15°, on the central 60% ROI
+    like the reference."""
     h, w = img.shape
     my, mx = int(h * 0.2), int(w * 0.2)
     roi = img[my:h - my, mx:w - mx]
@@ -1612,7 +1539,7 @@ def estimate_skew(img: np.ndarray, max_deg: float = 15.0,
     ysf = ys.astype(np.float64)
     xsf = xs.astype(np.float64) - (roi.shape[1] - 1) / 2.0
     best_a, best_v = 0.0, -1.0
-    for a in np.arange(-max_deg, max_deg + 1e-9, step):
+    for a in np.arange(-15.0, 15.0 + 1e-9, 0.25):
         rad = math.radians(a)
         ry = ysf * math.cos(rad) - xsf * math.sin(rad)
         rows = np.bincount(np.rint(ry - ry.min()).astype(int))
@@ -1637,22 +1564,21 @@ def deskew(img: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def denoise_bilateral(img: np.ndarray, d: int = 5,
-                      sigma_color: float = 25.0,
-                      sigma_space: float = 3.0) -> np.ndarray:
+def denoise_bilateral(img: np.ndarray) -> np.ndarray:
     """P13 denoise stage: edge-preserving bilateral smoothing — the
     numpy counterpart of the reference's fastNlMeansDenoisingColored
     h=3 pass (image_preprocessor.py:478): flat-region noise is averaged
     away under the range kernel while edges (large intensity deltas)
-    get near-zero weight and stay sharp. Vectorized as d² whole-image
-    shifted products (no per-pixel loop)."""
+    get near-zero weight and stay sharp. A 5×5 window with σ_space 3
+    and σ_color 25, vectorized as 25 whole-image shifted products (no
+    per-pixel loop)."""
     f = img.astype(np.float64)
-    r = d // 2
+    r = 2
     pad = np.pad(f, r, mode="reflect")
     num = np.zeros_like(f)
     den = np.zeros_like(f)
-    two_ss = 2.0 * sigma_space * sigma_space
-    two_sc = 2.0 * sigma_color * sigma_color
+    two_ss = 2.0 * 3.0 * 3.0
+    two_sc = 2.0 * 25.0 * 25.0
     h, w = f.shape
     for dy in range(-r, r + 1):
         for dx in range(-r, r + 1):
@@ -1685,8 +1611,7 @@ def smart_sim(img: np.ndarray) -> np.ndarray:
     x = clahe_gray(x, clip_limit=clip)
     x = denoise_bilateral(x)
     if q["is_blurry"]:
-        x = unsharp_mask(x, sigma=0.8,
-                         strength=2.0 if q["is_very_blurry"] else 1.5)
+        x = unsharp_mask(x, strength=2.0 if q["is_very_blurry"] else 1.5)
     if x.shape[1] > 1600:
         x = resize_keep_aspect(x, 1600)
     return pad_border(x, 20)
@@ -1697,19 +1622,20 @@ def smart_sim(img: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def find_card_quad(img: np.ndarray, min_area_ratio: float = 0.05):
+def find_card_quad(img: np.ndarray):
     """Locate the card's corner quad (image_preprocessor.py:212-242).
     The reference walks Canny+dilate contours for a 4-point polygon;
     here the card is segmented by intensity (documents are bright on a
     darker background) and the corners are the foreground points
     extremal in (x+y) and (x−y) — the classic order_points corners.
-    Returns 4×2 float array (TL, TR, BR, BL) or None (no quad, too
-    small, or already near-full-frame — the reference's ≥95% guard)."""
+    Returns 4×2 float array (TL, TR, BR, BL) or None (no quad, under 5%
+    of the frame, or already near-full-frame — the reference's ≥95%
+    guard)."""
     h, w = img.shape
     f = img.astype(np.float64)
     thr = f.mean() + 0.25 * f.std()
     ys, xs = np.nonzero(f > thr)
-    if ys.size < h * w * min_area_ratio:
+    if ys.size < h * w * 0.05:
         return None
     bw = xs.max() - xs.min() + 1
     bh = ys.max() - ys.min() + 1

@@ -134,21 +134,20 @@ def synth_audio(doc_id: int) -> bytes:
 # ---------------------------------------------------------------------------
 
 
-def frame_sample(df: DataFrame, id_col: str = "doc_id",
-                 payload_col: str = "payload",
-                 every_k: int = 2) -> DataFrame:
-    """(id, video payload) → one row per SAMPLED frame (idx % k == 0):
-    (id, frame_idx, h, w, mean_q = round(4·mean)). The explode happens
-    inside the Arrow batch — no intermediate array-of-binary column,
-    and a doc's frames never leave its partition."""
+def frame_sample(df: DataFrame, every_k: int = 2) -> DataFrame:
+    """(doc_id, video payload) → one row per SAMPLED frame
+    (idx % k == 0): (doc_id, frame_idx, h, w, mean_q = round(4·mean)).
+    The explode happens inside the Arrow batch — no intermediate
+    array-of-binary column, and a doc's frames never leave its
+    partition."""
     import pandas as pd
 
-    id_type = dict(df.dtypes)[id_col]
+    id_type = dict(df.dtypes)["doc_id"]
 
     def gen(batches):
         for pdf in batches:
             rows = []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
+            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
                 frames = decode_vid1(
                     bytes(payload) if payload is not None else b"")
                 if frames is None:
@@ -163,27 +162,26 @@ def frame_sample(df: DataFrame, id_col: str = "doc_id",
                                  int(np.floor(4.0 * float(frm.mean())
                                               + 0.5))))
             yield pd.DataFrame(rows, columns=[
-                id_col, "frame_idx", "h", "w", "mean_q"])
+                "doc_id", "frame_idx", "h", "w", "mean_q"])
 
-    return df.select(id_col, payload_col).mapInPandas(
-        gen, f"{id_col} {id_type}, frame_idx int, h int, w int, "
+    return df.select("doc_id", "payload").mapInPandas(
+        gen, f"doc_id {id_type}, frame_idx int, h int, w int, "
              f"mean_q int")
 
 
-def audio_features(df: DataFrame, id_col: str = "doc_id",
-                   payload_col: str = "payload") -> DataFrame:
-    """(id, audio payload) → per-clip features over the quantized PCM:
+def audio_features(df: DataFrame) -> DataFrame:
+    """(doc_id, audio payload) → per-clip features over the quantized PCM:
     duration, zero-crossing count, peak, integer-exact RMS. All
     integer arithmetic after quantization, so an oracle regenerating
     the same PCM matches bit-for-bit."""
     import pandas as pd
 
-    id_type = dict(df.dtypes)[id_col]
+    id_type = dict(df.dtypes)["doc_id"]
 
     def gen(batches):
         for pdf in batches:
             rows = []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
+            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
                 dec = decode_aud1(
                     bytes(payload) if payload is not None else b"")
                 if dec is None:
@@ -200,9 +198,9 @@ def audio_features(df: DataFrame, id_col: str = "doc_id",
                              zc, int(np.max(np.abs(q))) if n else 0,
                              rms))
             yield pd.DataFrame(rows, columns=[
-                id_col, "rate", "n_samples", "duration_ms",
+                "doc_id", "rate", "n_samples", "duration_ms",
                 "zero_crossings", "peak", "rms"])
 
-    return df.select(id_col, payload_col).mapInPandas(
-        gen, f"{id_col} {id_type}, rate int, n_samples int, "
+    return df.select("doc_id", "payload").mapInPandas(
+        gen, f"doc_id {id_type}, rate int, n_samples int, "
              f"duration_ms int, zero_crossings int, peak int, rms int")

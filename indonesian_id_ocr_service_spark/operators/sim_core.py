@@ -101,9 +101,10 @@ _ANCHOR_ROWS = _anchor_variants()
 
 
 @lru_cache(maxsize=131072)
-def identify_field(text: str, threshold: float = 0.65) -> str | None:
+def identify_field(text: str) -> str | None:
     """M2 anchor tagging via difflib SequenceMatcher + substring bonus
-    (sim_extractor.py:239-261).
+    (sim_extractor.py:239-261): the best anchor whose ratio reaches the
+    0.65 threshold, else None.
 
     Result-preserving pruning: difflib ratio = 2M/(la+lb) with
     M ≤ min(common-char multiset, la, lb), so a variant whose bound
@@ -130,7 +131,7 @@ def identify_field(text: str, threshold: float = 0.65) -> str | None:
                 common += m if m < n else n
         bound = 2.0 * min(common, la, lb) / (la + lb)
         cand_bound = 0.90 if (sub and bound < 0.90) else bound
-        if cand_bound <= best_ratio or cand_bound < threshold:
+        if cand_bound <= best_ratio or cand_bound < 0.65:
             continue
         if sub and bound <= 0.90:
             r = 0.90           # SequenceMatcher can't exceed the bonus
@@ -140,7 +141,7 @@ def identify_field(text: str, threshold: float = 0.65) -> str | None:
                 r = max(r, 0.90)
         if r > best_ratio:
             best_ratio, best_key = r, key
-    return best_key if best_ratio >= threshold else None
+    return best_key if best_ratio >= 0.65 else None
 
 
 @lru_cache(maxsize=131072)

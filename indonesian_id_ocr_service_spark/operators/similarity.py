@@ -5,7 +5,7 @@
   products via ``zip_with``/``aggregate`` (JVM, vectorizable), one
   window for the top-k cut. At 100 TB the corpus side stays partitioned
   and only (query_id, sim) pairs shuffle for the final top-k.
-- ``lsh_bucket_topk``: the scale path — random-hyperplane LSH buckets
+- ``lsh_topk``: the scale path — random-hyperplane LSH buckets
   (deterministic md5-seeded planes); candidates only within matching
   buckets, then exact re-rank. Bucket keys are uniform → no skew.
 """
@@ -20,6 +20,23 @@ from ..functions.core import let, let2
 
 __all__ = ["dot", "norm", "cosine", "cosine_topk", "lsh_topk",
            "ivf_centroids", "ivf_assign", "ivf_topk"]
+
+# Neighbours kept per query by every top-k search.
+K = 3
+# Hyperplane LSH: N_TABLES tables of N_PLANES bits over DIM-dim
+# embeddings (the DuckDB oracles restate these values).
+N_TABLES = 12
+N_PLANES = 4
+DIM = 64
+# IVF: N_CELLS centroid cells, N_PROBE probed per query. The testdata
+# embeddings are deliberately unclustered (max pairwise cosine 0.51), so
+# nearest neighbours are near-random and ANY coarse quantizer needs a
+# large probe fraction for recall (measured: 4 probes -> 0.47,
+# 8 -> 0.87); on real clustered embeddings cells align with clusters
+# and the probe count stays small relative to the cells. The oracle
+# gate checks the machinery exactly either way.
+N_CELLS = 16
+N_PROBE = 8
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -42,20 +59,18 @@ def cosine(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
-    """Exact top-k cosine neighbours per query (self-matches excluded).
+def cosine_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-K cosine neighbours per query (self-matches excluded).
     ``queries`` must be small — it is broadcast."""
     from pyspark.sql.window import Window
 
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cv"),
     )
     sims = (
         c.crossJoin(F.broadcast(q))
@@ -74,29 +89,27 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
         F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= K)
         .select("query_id", "neighbor_id", "sim", "rn")
     )
 
 
-def _plane_signs(n_tables: int, n_planes: int, dim: int):
-    """The md5-derived ±1 plane matrix, shape (dim, n_tables·n_planes) —
+def _plane_signs():
+    """The md5-derived ±1 plane matrix, shape (DIM, N_TABLES·N_PLANES) —
     sign(t, j, i) = +1 iff md5(f"{t}:{j}:{i}")[0] ∈ [8-f], identical to
     the DuckDB oracle's planes."""
     import hashlib
 
-    s = np.empty((dim, n_tables * n_planes), dtype=np.float64)
-    for t in range(n_tables):
-        for j in range(n_planes):
-            for i in range(dim):
+    s = np.empty((DIM, N_TABLES * N_PLANES), dtype=np.float64)
+    for t in range(N_TABLES):
+        for j in range(N_PLANES):
+            for i in range(DIM):
                 h = hashlib.md5(f"{t}:{j}:{i}".encode()).hexdigest()
-                s[i, t * n_planes + j] = 1.0 if h[0] in "89abcdef" else -1.0
+                s[i, t * N_PLANES + j] = 1.0 if h[0] in "89abcdef" else -1.0
     return s
 
 
-def bucket_keys(df: DataFrame, idc: str, vc: str,
-                n_tables: int = 12, n_planes: int = 4,
-                dim: int = 64) -> DataFrame:
+def bucket_keys(df: DataFrame, idc: str, vc: str) -> DataFrame:
     """(id, vec) → one row per (table, key), IDS ONLY: bucket keys via
     a numpy kernel — all L·b projections are ONE ±1 matrix product per
     batch (BLAS), vs 48 interpreted HOF trees per row in the
@@ -108,7 +121,7 @@ def bucket_keys(df: DataFrame, idc: str, vc: str,
     exchanges."""
     import pandas as pd
 
-    signs = _plane_signs(n_tables, n_planes, dim)
+    signs = _plane_signs()
 
     def gen(batches):
         for pdf in batches:
@@ -119,16 +132,16 @@ def bucket_keys(df: DataFrame, idc: str, vc: str,
             if n == 0 or vecs.size == 0:
                 yield pd.DataFrame(columns=[idc, "tbl", "key"])
                 continue
-            acc = np.zeros((n, n_tables * n_planes))
-            for i in range(dim):          # exact left-fold order
+            acc = np.zeros((n, N_TABLES * N_PLANES))
+            for i in range(DIM):          # exact left-fold order
                 acc += np.outer(vecs[:, i], signs[i])
             bits = acc > 0
             rows = []
             for r in range(n):
-                for t in range(n_tables):
+                for t in range(N_TABLES):
                     key = "".join(
-                        "1" if bits[r, t * n_planes + j] else "0"
-                        for j in range(n_planes))
+                        "1" if bits[r, t * N_PLANES + j] else "0"
+                        for j in range(N_PLANES))
                     rows.append((ids.iloc[r], t, key))
             yield pd.DataFrame(rows, columns=[idc, "tbl", "key"])
 
@@ -139,22 +152,19 @@ def bucket_keys(df: DataFrame, idc: str, vc: str,
         gen, f"{idc} {id_type}, tbl int, key string")
 
 
-def embedding_near_dup(corpus: DataFrame, threshold: float = 0.9,
-                       n_tables: int = 12, n_planes: int = 4,
-                       dim: int = 64, id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
+def embedding_near_dup(corpus: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the dedup flavour of the
     ANN machinery: multi-table hyperplane-LSH buckets → candidate pairs
     (id < id, ids-only self-join on (tbl, key)) → id-level dedup →
-    vectors re-joined → exact cosine ≥ threshold.
+    vectors re-joined → exact cosine ≥ 0.9.
 
     100-TB shape: the quadratic step happens only inside buckets
     (md5-uniform keys, no skew); the only all-rows shuffle carries
     (id, tbl, key) — never the vectors, which join back against the
     tiny candidate set."""
-    base = corpus.select(F.col(id_col).alias("id"),
-                         F.col(vec_col).alias("v"))
-    k = bucket_keys(base, "id", "v", n_tables, n_planes, dim)
+    base = corpus.select(F.col("vec_id").alias("id"),
+                         F.col("embedding").alias("v"))
+    k = bucket_keys(base, "id", "v")
     a, b = k.alias("a"), k.alias("b")
     pair_ids = (
         a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
@@ -172,13 +182,10 @@ def embedding_near_dup(corpus: DataFrame, threshold: float = 0.9,
                                F.col("vb").cast("array<double>")),
                         5).alias("sim"))
     )
-    return sims.filter(F.col("sim") >= threshold)
+    return sims.filter(F.col("sim") >= 0.9)
 
 
-def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
-             n_tables: int = 12, n_planes: int = 4, dim: int = 64,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+def lsh_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """ANN scale path: multi-table hyperplane LSH (OR-construction) →
     candidate pairs → exact cosine re-rank.
 
@@ -192,13 +199,12 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     computed once."""
     from pyspark.sql.window import Window
 
-    qv_df = queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("qv"))
-    cv_df = corpus.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(vec_col).alias("cv"))
-    qk = bucket_keys(qv_df, "query_id", "qv", n_tables, n_planes, dim)
-    ck = bucket_keys(cv_df, "neighbor_id", "cv", n_tables, n_planes,
-                     dim)
+    qv_df = queries.select(F.col("vec_id").alias("query_id"),
+                           F.col("embedding").alias("qv"))
+    cv_df = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                          F.col("embedding").alias("cv"))
+    qk = bucket_keys(qv_df, "query_id", "qv")
+    ck = bucket_keys(cv_df, "neighbor_id", "cv")
     pair_ids = (
         ck.join(F.broadcast(qk),
                 (ck["tbl"] == qk["tbl"]) & (ck["key"] == qk["key"])
@@ -222,7 +228,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
         F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= K)
         .select("query_id", "neighbor_id", "sim", "rn")
     )
 
@@ -233,28 +239,28 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
 # probe the top-n cells per query, exact cosine re-rank inside probed
 # cells. At 100 TB the cell id is the partition/bucket key: the corpus
 # shuffles once into cells (ids-only downstream, vectors re-join), a
-# query touches n_probe cells instead of the whole corpus, and
+# query touches N_PROBE cells instead of the whole corpus, and
 # centroids are deterministic literals shared with the DuckDB oracle —
 # no training step, no stored model.
 # ---------------------------------------------------------------------------
 
 
-def ivf_centroids(n_cells: int = 16, dim: int = 64) -> np.ndarray:
-    """Deterministic pseudo-random centroids in [-1, 1)^dim, derived
+def ivf_centroids(n_cells: int) -> np.ndarray:
+    """Deterministic pseudo-random centroids in [-1, 1)^DIM, derived
     from md5 so every engine regenerates the identical float64 matrix
     (the oracle SQL inlines these exact values as literals)."""
     import hashlib
 
-    c = np.empty((n_cells, dim), dtype=np.float64)
+    c = np.empty((n_cells, DIM), dtype=np.float64)
     for j in range(n_cells):
-        for i in range(dim):
+        for i in range(DIM):
             h = hashlib.md5(f"ivf:{j}:{i}".encode()).hexdigest()
             c[j, i] = int(h[:8], 16) / float(1 << 31) - 1.0
     return c
 
 
-def ivf_assign(df: DataFrame, idc: str, vc: str, n_cells: int = 16,
-               n_probe: int = 1, dim: int = 64) -> DataFrame:
+def ivf_assign(df: DataFrame, idc: str, vc: str, n_cells: int = N_CELLS,
+               n_probe: int = 1) -> DataFrame:
     """(id, vec) → (id, cell, probe) rows, IDS ONLY: the ``probe``-th
     best cell per vector (probe 0 = argmax dot). The dot products fold
     sequentially over dimensions (vectorized over rows) so they equal
@@ -262,7 +268,7 @@ def ivf_assign(df: DataFrame, idc: str, vc: str, n_cells: int = 16,
     cell id on both engines."""
     import pandas as pd
 
-    cents = ivf_centroids(n_cells, dim)
+    cents = ivf_centroids(n_cells)
 
     def gen(batches):
         for pdf in batches:
@@ -274,7 +280,7 @@ def ivf_assign(df: DataFrame, idc: str, vc: str, n_cells: int = 16,
                 yield pd.DataFrame(columns=[idc, "cell", "probe"])
                 continue
             acc = np.zeros((n, n_cells))
-            for i in range(dim):          # exact left-fold order
+            for i in range(DIM):          # exact left-fold order
                 acc += np.outer(vecs[:, i], cents[:, i])
             rows = []
             for r in range(n):
@@ -289,22 +295,19 @@ def ivf_assign(df: DataFrame, idc: str, vc: str, n_cells: int = 16,
         gen, f"{idc} {id_type}, cell int, probe int")
 
 
-def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
-             n_cells: int = 16, n_probe: int = 4, dim: int = 64,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+def ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """ANN via IVF cells: corpus assigned to 1 cell each, queries probe
-    their top ``n_probe`` cells, exact cosine re-rank on the matched
+    their top ``N_PROBE`` cells, exact cosine re-rank on the matched
     candidates. Same output contract as cosine_topk/lsh_topk."""
     from pyspark.sql.window import Window
 
-    qv_df = queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("qv"))
-    cv_df = corpus.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(vec_col).alias("cv"))
-    ca = ivf_assign(cv_df, "neighbor_id", "cv", n_cells, 1, dim) \
+    qv_df = queries.select(F.col("vec_id").alias("query_id"),
+                           F.col("embedding").alias("qv"))
+    cv_df = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                          F.col("embedding").alias("cv"))
+    ca = ivf_assign(cv_df, "neighbor_id", "cv", N_CELLS, 1) \
         .select("neighbor_id", "cell")
-    qa = ivf_assign(qv_df, "query_id", "qv", n_cells, n_probe, dim) \
+    qa = ivf_assign(qv_df, "query_id", "qv", N_CELLS, N_PROBE) \
         .select("query_id", "cell")
     pair_ids = (
         ca.join(F.broadcast(qa), "cell")
@@ -327,6 +330,6 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
         F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= K)
         .select("query_id", "neighbor_id", "sim", "rn")
     )

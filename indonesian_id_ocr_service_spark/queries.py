@@ -78,7 +78,7 @@ def _footer_meta(path: str) -> tuple[int, int]:
     return meta
 
 
-def scan_fanout(df: DataFrame, path: str, min_rows: int = 4096) -> DataFrame:
+def scan_fanout(df: DataFrame, path: str) -> DataFrame:
     """Scan-parallelism guard for per-row-compute-dominant queries
     (guide §2.5/§6): parquet ROW GROUPS are the unit of scan
     parallelism — splits beyond the row-group count come back empty, so
@@ -86,7 +86,8 @@ def scan_fanout(df: DataFrame, path: str, min_rows: int = 4096) -> DataFrame:
     expression/kernel on 2 of N cores no matter how splits are sized
     (measured: 32 splits, 2 non-empty, at sf1.0). When the footer says
     the scan cannot fill the cores AND the table is big enough for the
-    shuffle to pay for itself, round-robin repartition to 2x cores
+    shuffle to pay for itself (4,096 rows), round-robin repartition to
+    2x cores
     (deterministic: sort-before-repartition is on by default).
 
     Scale-adaptive by construction: at warehouse scale inputs carry
@@ -95,7 +96,7 @@ def scan_fanout(df: DataFrame, path: str, min_rows: int = 4096) -> DataFrame:
     """
     rows, rgs = _footer_meta(path)
     sc = df.sparkSession.sparkContext
-    if rgs < sc.defaultParallelism and rows >= min_rows:
+    if rgs < sc.defaultParallelism and rows >= 4096:
         return df.repartition(sc.defaultParallelism * 2)
     return df
 
@@ -232,8 +233,8 @@ FROM s
 # ---------------------------------------------------------------------------
 
 
-def _date_str(col: str = "o_orderdate") -> F.Column:
-    return F.date_format(F.col(col), "dd-MM-yyyy")
+def _date_str() -> F.Column:
+    return F.date_format(F.col("o_orderdate"), "dd-MM-yyyy")
 
 
 def tier_batches(batches):
@@ -1107,10 +1108,11 @@ _FUZZY_CANON_CASES: list[tuple[str, str, str]] = [
 ]
 
 
-def _case_arrays(cases, key="c_custkey"):
-    """(field, raw) columns selected from literal arrays by key mod."""
+def _case_arrays(cases):
+    """(field, raw) columns selected from literal arrays by
+    c_custkey mod."""
     n = len(cases)
-    idx = (F.col(key) % n).cast("int") + 1
+    idx = (F.col("c_custkey") % n).cast("int") + 1
     field = F.element_at(F.array(*[F.lit(c[0]) for c in cases]), idx)
     raw = F.element_at(F.array(*[F.lit(c[1]) for c in cases]), idx)
     return field, raw

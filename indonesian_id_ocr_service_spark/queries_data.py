@@ -214,7 +214,7 @@ FROM bits GROUP BY doc_id
 def q_ann_cosine_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir, fanout=True)
     queries = emb.filter(F.col("vec_id") < 5)
-    return SIM.cosine_topk(emb, queries, k=3).orderBy("query_id", "rn")
+    return SIM.cosine_topk(emb, queries).orderBy("query_id", "rn")
 
 
 SQL_ANN_COSINE = """
@@ -967,7 +967,7 @@ FROM documents ORDER BY doc_id
 def q_ann_lsh_bucket(spark, sf_dir):
     emb = _emb(spark, sf_dir, fanout=True)
     queries = emb.filter(F.col("vec_id") < 5)
-    return SIM.lsh_topk(emb, queries, k=3).orderBy("query_id", "rn")
+    return SIM.lsh_topk(emb, queries).orderBy("query_id", "rn")
 
 
 _PLANE_SIGN = ("CASE WHEN substr(md5('{t}:{j}:' || (i - 1)), 1, 1) IN "
@@ -981,9 +981,8 @@ _BUCKET_BIT = (
 )
 
 
-def _key_sql(t: int, n_planes: int = 4) -> str:
-    return " || ".join(
-        _BUCKET_BIT.format(t=t, j=j) for j in range(n_planes))
+def _key_sql(t: int) -> str:
+    return " || ".join(_BUCKET_BIT.format(t=t, j=j) for j in range(4))
 
 
 _KEYS_SQL = " UNION ALL ".join(
@@ -1030,7 +1029,7 @@ WHERE rn <= 3 ORDER BY query_id, rn
 # ---------------------------------------------------------------------------
 # ANN scale path #2: IVF coarse quantization — corpus assigned to its
 # argmax-dot centroid cell (the 100-TB partition key), queries probe
-# their top-4 cells, exact cosine re-rank inside probed cells. The
+# their top-8 cells, exact cosine re-rank inside probed cells. The
 # centroids are deterministic md5-derived float64 literals shared with
 # the oracle (inlined below), so both engines compute the identical
 # assignment (sequential-fold dot = list_dot_product, ties → lowest
@@ -1044,21 +1043,13 @@ def q_ann_ivf(spark, sf_dir):
     # slower at 10x (2.40 vs 2.01 s) and tied at 1x (0.97 on vs 1.04 off)
     emb = _emb(spark, sf_dir, fanout=False)
     queries = emb.filter(F.col("vec_id") < 5)
-    # n_probe=8 of 16 cells: the testdata embeddings are deliberately
-    # unclustered (max pairwise cosine 0.51), so nearest neighbours are
-    # near-random and ANY coarse quantizer needs a large probe fraction
-    # for recall (measured: 4 probes -> 0.47, 8 -> 0.87); on real
-    # clustered embeddings cells align with clusters and n_probe stays
-    # small relative to n_cells. The oracle gate checks the machinery
-    # exactly either way.
-    return SIM.ivf_topk(emb, queries, k=3, n_cells=16, n_probe=8) \
-        .orderBy("query_id", "rn")
+    return SIM.ivf_topk(emb, queries).orderBy("query_id", "rn")
 
 
 def _ivf_cent_values() -> str:
     from .operators.similarity import ivf_centroids
 
-    cents = ivf_centroids(16, 64)
+    cents = ivf_centroids(16)
     rows = []
     for j in range(16):
         vals = ", ".join(repr(float(x)) for x in cents[j])
@@ -1143,7 +1134,7 @@ def q_dedup_embedding(spark, sf_dir):
 
     ensure_session_conf(spark)
     corpus = _emb_with_dups(spark, sf_dir)
-    return SIM.embedding_near_dup(corpus, threshold=0.9).orderBy(
+    return SIM.embedding_near_dup(corpus).orderBy(
         "id_a", "id_b")
 
 

@@ -14,7 +14,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .corpus.e2e_fixture import ktp_expected_sql, ktp_fixture_df
+from .corpus.e2e_fixture import (
+    fixture_df,
+    ktp_expected_sql,
+    ktp_raw_doc,
+    sim_expected_sql,
+    sim_raw_doc,
+)
 
 
 def q_ktp_extraction_e2e(spark, sf_dir):
@@ -22,14 +28,11 @@ def q_ktp_extraction_e2e(spark, sf_dir):
     from .queries import ensure_session_conf
 
     ensure_session_conf(spark)
-    # ids-only repartition BEFORE the fixture build: the one intentional
-    # Exchange ships 8-byte ids, the span construction and the kernel
-    # both run fully parallel, and the built spans never shuffle (the
-    # old post-build repartition moved the span payloads AND left the
-    # build on the ids file's single row group). At 100 TB the corpus
-    # file splits provide the parallelism; the pipeline itself stays a
-    # zero-shuffle narrow chain.
-    raw = ktp_fixture_df(spark, sf_dir, repartition_ids=True)
+    # the fixture build's ids-only repartition is the one intentional
+    # Exchange: the span construction and the kernel both run fully
+    # parallel, and the built spans never shuffle. The pipeline itself
+    # stays a zero-shuffle narrow chain.
+    raw = fixture_df(spark, sf_dir, ktp_raw_doc)
     out = run_pipeline(raw)
     return out.select(
         "doc_id", F.explode("out_spans").alias("s")
@@ -46,13 +49,11 @@ SQL_KTP_EXTRACTION_E2E = ktp_expected_sql()
 
 
 def q_sim_extraction_e2e(spark, sf_dir):
-    from .corpus.e2e_fixture import sim_fixture_df
     from .pipeline import run_pipeline
     from .queries import ensure_session_conf
 
     ensure_session_conf(spark)
-    # same ids-only pre-build repartition as the KTP e2e query
-    raw = sim_fixture_df(spark, sf_dir, repartition_ids=True)
+    raw = fixture_df(spark, sf_dir, sim_raw_doc)
     out = run_pipeline(raw)
     return out.select(
         "doc_id", F.explode("out_spans").alias("s")
@@ -65,9 +66,4 @@ def q_sim_extraction_e2e(spark, sf_dir):
     )
 
 
-def _sim_sql():
-    from .corpus.e2e_fixture import sim_expected_sql
-    return sim_expected_sql()
-
-
-SQL_SIM_EXTRACTION_E2E = _sim_sql()
+SQL_SIM_EXTRACTION_E2E = sim_expected_sql()

@@ -6,8 +6,9 @@ local[N] here):
 - AQE on: runtime coalescing + skew-join splitting.
 - ``spark.sql.shuffle.partitions`` sized to cores locally; on a real
   cluster this is set to 2-3× total executor cores via spark-submit conf.
-- Arrow enabled for every pandas-UDF boundary; batch size capped so a
-  media-heavy batch can't blow executor memory.
+- Arrow on for ``toPandas``/``createDataFrame`` (``mapInArrow`` and
+  ``mapInPandas`` always move batches through Arrow); records per batch
+  capped so a media-heavy batch can't blow executor memory.
 - ANSI off: OCR data is noisy by design — the pipeline uses permissive
   try-cast semantics everywhere (mirrors the reference's never-raise
   contract, e.g. /root/reference/date_normalizer.py:71-77).
@@ -40,7 +41,7 @@ SQL_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
-    # Per-document work is compute-heavy (pandas UDF extraction), so
+    # Per-document work is compute-heavy (the mapInArrow kernel), so
     # input splits must target CORES, not IO: the defaults
     # (128 MB splits, 4 MB file-open cost) bin-pack a small corpus
     # into 2-3 partitions and starve the executors. At warehouse

@@ -26,10 +26,9 @@ Re-submitting the identical command after a crash resumes from that
 log: a committed run dir is skipped, and a crashed job's un-logged
 directories are deleted before the re-run (sinks/lineage.py).
 
-The job has no shuffle (``run_pipeline`` is one narrow chain, and
-``--synth`` is ``range`` + ``mapInPandas``), so it takes no shuffle
-option; a cluster that wants ``spark.sql.shuffle.partitions`` set
-passes ``--conf`` to spark-submit. A command line that passes
+The job has no shuffle (``run_pipeline`` is one narrow chain over the
+parquet scan), so it takes no shuffle option; a cluster that wants
+``spark.sql.shuffle.partitions`` set passes ``--conf`` to spark-submit. A command line that passes
 ``--media-metrics`` or ``--shuffle-partitions`` exits 2 at argument
 parsing.
 
@@ -68,26 +67,11 @@ def _build_submitted_session(app_name: str):
     return spark
 
 
-def _positive_int(v: str) -> int:
-    """argparse type: an integer >= 1 (argparse names the flag)."""
-    n = int(v)
-    if n < 1:
-        raise argparse.ArgumentTypeError(f"needs an integer >= 1, got {n}")
-    return n
-
-
 def parse_args(argv):
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    src = p.add_mutually_exclusive_group(required=True)
-    src.add_argument("--input", help="parquet dir of the span corpus "
-                     "(doc_id, spans, span_geom, span_conf, spans_alt, "
-                     "alt_geom)")
-    src.add_argument("--synth", type=_positive_int, metavar="N",
-                     help="generate an N-doc deterministic corpus on "
-                     "the executors instead of reading parquet "
-                     "(tests/bench; no external data)")
-    p.add_argument("--seed", type=int, default=42,
-                   help="corpus seed for --synth")
+    p.add_argument("--input", required=True,
+                   help="parquet dir of the span corpus (doc_id, spans, "
+                   "span_geom, span_conf, spans_alt, alt_geom)")
     p.add_argument("--base-dir", required=True,
                    help="run output root: results/commit=<id>/ "
                    "(doc_id, out_spans; one directory per committed "
@@ -108,15 +92,9 @@ def main(argv=None) -> int:
     from indonesian_id_ocr_service_spark.sinks.lineage import ExtractionRun
 
     ensure_session_conf(spark)
-    if args.synth is not None:
-        from indonesian_id_ocr_service_spark.corpus.generator import corpus_df
-        src = corpus_df(spark, args.synth, seed=args.seed)
-    else:
-        src = spark.read.parquet(args.input)
-
     run = ExtractionRun(args.base_dir, args.run_id)
     t0 = time.time()
-    res = run.process(spark, src, run_pipeline)
+    res = run.process(spark, spark.read.parquet(args.input), run_pipeline)
     wall = time.time() - t0
     out = {
         "run_id": args.run_id,

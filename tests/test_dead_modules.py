@@ -4,11 +4,14 @@ the benchmark, ``__spark_entry__.py`` and the bench scripts:
 - every module of the package must be imported by one of those files;
   a module only its own file imports is dead code and fails here;
 - every top-level function or class of the package outside ``oracle/``
-  must be referenced by name in one of those files; its own module's
-  ``__all__`` does not count as a reference. ``oracle/`` holds
-  the reference implementations and keys the benchmark's cached
-  universe, so it is left out;
-- no package module outside ``oracle/`` may import ``oracle/``."""
+  must be referenced by name in one of those files other than the
+  tests; its own module's ``__all__`` does not count as a reference.
+  ``oracle/`` holds the reference implementations and keys the
+  benchmark's cached universe, so it is left out;
+- no package module outside ``oracle/`` may import ``oracle/``;
+- no defaulted parameter of the package outside ``oracle/`` and the
+  corpus generator (which also keys that universe) may have one value
+  in use: such a setting is a constant."""
 
 from __future__ import annotations
 
@@ -113,9 +116,17 @@ def test_every_package_module_is_imported():
     assert not dead, f"modules nothing imports: {dead}"
 
 
+# The verification twins the tests compare the Arrow kernels against:
+# production runs the kernels, so only tests name these.
+TEST_REFERENCES = {f"{PKG}.operators.dedup.minhash_signature",
+                   f"{PKG}.operators.dedup.simhash32"}
+
+
 def test_every_package_function_is_referenced():
-    """A name counts as referenced when any scanned file uses it, or
-    when the ``__all__`` of a file other than its own lists it."""
+    """A name counts as referenced when a scanned file outside
+    ``tests/`` uses it, or when the ``__all__`` of a file other than its
+    own lists it: code that only tests run is not part of the program.
+    ``TEST_REFERENCES`` names the only exceptions."""
     oracle = os.path.join(REPO, PKG, "oracle") + os.sep
     defined: dict[str, tuple[str, str]] = {}
     for path in _package_files():
@@ -128,12 +139,15 @@ def test_every_package_function_is_referenced():
                     path, node.name)
     referenced: set[str] = set()
     exported: dict[str, set[str]] = {}
+    tests_dir = os.path.join(REPO, "tests") + os.sep
     for path in _scanned_files():
+        if path.startswith(tests_dir):
+            continue
         referenced_here, exported[path] = _referenced_names(_parse(path))
         referenced |= referenced_here
     dead = sorted(
         q for q, (home, name) in defined.items()
-        if name not in referenced and not any(
+        if q not in TEST_REFERENCES and name not in referenced and not any(
             name in names for path, names in exported.items()
             if path != home))
     assert not dead, f"{len(dead)} functions nothing references: {dead}"
@@ -168,3 +182,131 @@ def test_only_the_oracle_imports_the_oracle():
             m == f"{PKG}.oracle" or m.startswith(f"{PKG}.oracle.")
             for m in _imports(path, modules)))
     assert not importers, f"modules outside oracle/ importing it: {importers}"
+
+
+def _literal(node: ast.AST) -> str | object:
+    """The ``repr`` of a literal expression's value; any other
+    expression is a fresh ``object()``, unequal to every value."""
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError):
+        return object()
+
+
+def _value(default: ast.AST) -> str:
+    """A default's value: a literal's ``repr``, or the source of a name
+    or other expression, which every call that omits it shares."""
+    value = _literal(default)
+    return value if isinstance(value, str) else ast.unparse(default)
+
+
+def _defaulted_params(fn: ast.FunctionDef | ast.AsyncFunctionDef,
+                      method: bool):
+    """``(name, positional index or None, default)`` per defaulted
+    parameter; the index counts from the first argument a call passes
+    (``self``/``cls`` dropped for methods)."""
+    pos = fn.args.posonlyargs + fn.args.args
+    skip = 1 if method else 0
+    first_default = len(pos) - len(fn.args.defaults)
+    out = [(a.arg, i - skip if i >= skip else None,
+            fn.args.defaults[i - first_default])
+           for i, a in enumerate(pos) if i >= first_default]
+    out += [(a.arg, None, d)
+            for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+            if d is not None]
+    return out
+
+
+def _package_callables():
+    """``{call name: [(qualified name, defaulted params)]}`` for every
+    function and method of the package outside ``oracle/`` and the
+    generator; a class's ``__init__`` is called by the class name."""
+    oracle = os.path.join(REPO, PKG, "oracle") + os.sep
+    generator = os.path.join(REPO, PKG, "corpus", "generator.py")
+    out: dict[str, list] = {}
+
+    def add(call_name, qual, fn, method):
+        params = _defaulted_params(fn, method)
+        if params:
+            out.setdefault(call_name, []).append((qual, params))
+
+    for path in _package_files():
+        if path.startswith(oracle) or path == generator:
+            continue
+        mod = _module_name(path)
+        for node in _parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                add(node.name, f"{mod}.{node.name}", node, False)
+            elif isinstance(node, ast.ClassDef):
+                for item in node.body:
+                    if not isinstance(item, (ast.FunctionDef,
+                                             ast.AsyncFunctionDef)):
+                        continue
+                    static = any(isinstance(d, ast.Name)
+                                 and d.id == "staticmethod"
+                                 for d in item.decorator_list)
+                    call = node.name if item.name == "__init__" else item.name
+                    add(call, f"{mod}.{node.name}.{item.name}", item,
+                        not static)
+    return out
+
+
+def _calls(path: str):
+    for node in ast.walk(_parse(path)):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = (f.id if isinstance(f, ast.Name)
+                    else f.attr if isinstance(f, ast.Attribute) else None)
+            if name:
+                yield name, node
+
+
+def _passed(call: ast.Call, name: str, index: int | None):
+    """The expression ``call`` passes for the parameter, ``None`` when it
+    omits it, or ``...`` when a ``*``/``**`` argument may carry it."""
+    for kw in call.keywords:
+        if kw.arg == name:
+            return kw.value
+    if any(kw.arg is None for kw in call.keywords):
+        return ...
+    if index is not None:
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred):
+                return ...
+            if i == index:
+                return arg
+    return None
+
+
+def test_no_parameter_has_one_value():
+    """A defaulted parameter of a package function (outside ``oracle/``
+    and the generator, as above) that receives one literal at every
+    call site outside ``tests/`` (the default where a call omits it),
+    and that no test passes, is a constant and must be written as one.
+    A call matches every package function of its name; any argument
+    that is not a literal, or a ``*``/``**`` argument, counts as a
+    second value."""
+    tests_dir = os.path.join(REPO, "tests") + os.sep
+    callables = _package_callables()
+    values: dict[tuple[str, str], set] = {}
+    by_tests: set[tuple[str, str]] = set()
+    for path in _scanned_files():
+        in_tests = path.startswith(tests_dir)
+        for call_name, call in _calls(path):
+            for qual, params in callables.get(call_name, ()):
+                for name, index, default in params:
+                    key = (qual, name)
+                    expr = _passed(call, name, index)
+                    if in_tests:
+                        if expr is not None:
+                            by_tests.add(key)
+                        continue
+                    values.setdefault(key, set()).add(
+                        _value(default) if expr is None
+                        else object() if expr is ... else
+                        _literal(expr))
+    constant = sorted(f"{q}.{n}" for (q, n), vs in values.items()
+                      if len(vs) == 1 and isinstance(next(iter(vs)), str)
+                      and (q, n) not in by_tests)
+    assert not constant, (
+        f"{len(constant)} parameters with one value in use: {constant}")

@@ -2,10 +2,14 @@
 verify, each run on Spark and against its DuckDB oracle
 (``__spark_entry__.oracle_sql()``) at sf0.001: the column names, the
 row count and ``tools/check_oracle.py``'s canonical row hash must
-agree, as that tool checks every query at larger scales.
+agree, as that tool checks every query at larger scales. The 50
+oracle SQL strings themselves are pinned by digest.
 """
 
 from __future__ import annotations
+
+import hashlib
+import json
 
 import duckdb
 import pytest
@@ -49,3 +53,18 @@ def test_query_matches_oracle(spark, duck, name):
         next(((a, b) for a, b in zip(_lines(s_cols, s_rows),
                                      _lines(d_cols, d_rows)) if a != b),
              None)
+
+
+# sha256 of json.dumps(oracle_sql(), sort_keys=True): the oracle is the
+# fixed reference every query is checked against, so its text never
+# changes with the code that builds the Spark side.
+ORACLE_SQL_SHA256 = (
+    "cdbfc8561b9a22f99d1bafc6982f5904e0fea389f93894668a69dfbb345791ba")
+
+
+def test_oracle_sql_is_unchanged():
+    sql = E.oracle_sql()
+    assert len(sql) == 50
+    digest = hashlib.sha256(
+        json.dumps(sql, sort_keys=True).encode()).hexdigest()
+    assert digest == ORACLE_SQL_SHA256

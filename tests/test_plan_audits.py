@@ -1,13 +1,46 @@
-"""Physical-plan assertions: the scale claims hold in the actual plans.
+"""Physical-plan assertions: the scale claims hold in the actual plans
+(SURVEY §4) — broadcast joins broadcast, filters and column pruning
+reach the parquet scan, the extraction path has no Exchange, and the
+dedup and ANN queries shuffle only what their designs say.
 """
 
 from __future__ import annotations
 
-from indonesian_id_ocr_service_spark.plans import audit
+from pyspark.sql import DataFrame
+
 from indonesian_id_ocr_service_spark import queries as Q
 from indonesian_id_ocr_service_spark import queries_data as QD
 
 SF = "/root/testdata/sf0.001"
+
+
+def formatted_plan(df: DataFrame) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore
+        df._jdf.queryExecution(), "formatted")
+
+
+def simple_plan(df: DataFrame) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def count_exchanges(df: DataFrame) -> int:
+    return simple_plan(df).count("Exchange")
+
+
+def has_broadcast_join(df: DataFrame) -> bool:
+    return "BroadcastHashJoin" in simple_plan(df)
+
+
+def has_sort_merge_join(df: DataFrame) -> bool:
+    return "SortMergeJoin" in simple_plan(df)
+
+
+def pushed_filters(df: DataFrame) -> str:
+    plan = formatted_plan(df)
+    return "\n".join(
+        ln.strip() for ln in plan.splitlines()
+        if "PushedFilters" in ln or "ReadSchema" in ln
+    )
 
 
 def test_extraction_path_is_shuffle_free(spark):
@@ -26,8 +59,8 @@ def test_extraction_path_is_shuffle_free(spark):
     rows = list(doc_rows(10, fractions=(0.6, 0.3, 0.1)))
     df = spark.createDataFrame(rows, SPAN_SCHEMA_DDL)
     out = run_pipeline(df)
-    plan = audit.simple_plan(out)
-    assert audit.count_exchanges(out) == 0, plan[:2000]
+    plan = simple_plan(out)
+    assert count_exchanges(out) == 0, plan[:2000]
     assert plan.count("MapInArrow") == 1, plan[:2000]
     assert "lambdafunction" not in plan.lower(), plan[:2000]
 
@@ -42,20 +75,20 @@ def test_e2e_query_single_intentional_exchange(spark):
 
     for q in (QE.q_ktp_extraction_e2e, QE.q_sim_extraction_e2e):
         df = q(spark, SF)
-        plan = audit.simple_plan(df)
-        assert audit.count_exchanges(df) == 1, plan[:2000]
+        plan = simple_plan(df)
+        assert count_exchanges(df) == 1, plan[:2000]
         assert "hashpartitioning(doc_id" in plan, plan[:2000]
 
 
 def test_dim_join_broadcasts(spark):
     df = Q.q_broadcast_dim_join(spark, SF)
-    assert audit.has_broadcast_join(df)
-    assert not audit.has_sort_merge_join(df)
+    assert has_broadcast_join(df)
+    assert not has_sort_merge_join(df)
 
 
 def test_filter_pushdown_reaches_scan(spark):
     df = Q.q_date_3digit_year(spark, SF)
-    pushed = audit.pushed_filters(df)
+    pushed = pushed_filters(df)
     # the year(o_orderdate) < 1999 predicate must reach the scan and the
     # scan must read only o_orderdate
     assert "PushedFilters" in pushed
@@ -71,7 +104,7 @@ def test_dedup_verified_inner_join_prunes_shingles(spark):
     docs' shingle arrays reach the verify shuffle (the 100-TB scale
     claim)."""
     df = QD.q_dedup_verified(spark, SF)
-    lines = audit.simple_plan(df).splitlines()
+    lines = simple_plan(df).splitlines()
 
     def first(pred):
         return next(i for i, ln in enumerate(lines) if pred(ln))
@@ -88,7 +121,7 @@ def test_dedup_verified_single_banding_no_cache(spark):
     so the plan holds exactly one MapInPandas and no in-memory
     relation."""
     df = QD.q_dedup_verified(spark, SF)
-    plan = audit.simple_plan(df)
+    plan = simple_plan(df)
     assert plan.count("MapInPandas") == 1, plan[:3000]
     assert "InMemoryRelation" not in plan, plan[:3000]
     assert "InMemoryTableScan" not in plan, plan[:3000]
@@ -110,7 +143,7 @@ def test_minhash_lsh_single_kernel_no_join(spark):
     remains, and the band rows shuffle through the grouping + the final
     distinct only."""
     df = QD.q_minhash_lsh(spark, SF)
-    plan = audit.simple_plan(df)
+    plan = simple_plan(df)
     assert plan.count("MapInPandas") == 1, plan[:2000]
     assert "Join" not in plan, plan[:2000]
     assert "HashAggregate" in plan and "Generate" in plan, plan[:2000]
@@ -120,7 +153,7 @@ def test_rollup_single_expand_pass(spark):
     """ROLLUP must be one Expand + hash aggregate — not a union of
     per-level scans."""
     df = Q.q_rollup_pricing(spark, SF)
-    plan = audit.simple_plan(df)
+    plan = simple_plan(df)
     assert plan.count("Expand") >= 1
     assert plan.count("Scan parquet") == 1, plan[:2000]
 
@@ -129,7 +162,7 @@ def test_ann_ivf_ids_only_candidate_shuffle(spark):
     """The IVF candidate join must carry ids/cells only — vectors join
     back after the candidate cut, query side broadcast."""
     df = QD.q_ann_ivf(spark, SF)
-    plan = audit.simple_plan(df)
+    plan = simple_plan(df)
     assert "BroadcastHashJoin" in plan
     # the cell join's build side is the probe assignment (query_id,
     # cell) — no embedding column may appear in the bucket kernels

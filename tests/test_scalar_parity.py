@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from indonesian_id_ocr_service_spark.functions import chars as C
 from indonesian_id_ocr_service_spark.functions import dates as D
 from indonesian_id_ocr_service_spark.functions import nik as N
+from indonesian_id_ocr_service_spark.functions import pandas_ktp as PK
 from indonesian_id_ocr_service_spark.oracle import scalars as S
 
 DATE_INPUTS = [
@@ -98,15 +99,12 @@ def test_char_subs_parity(spark):
     got = _collect(spark, inputs, C.sub_to_digit)
     for s in inputs:
         assert got[s] == S.sub_to_digit(s), s
-    got = _collect(spark, inputs, C.sub_to_text)
-    for s in inputs:
-        assert got[s] == S.sub_to_text(s), s
     got = _collect(spark, inputs, C.sub_date_chars)
     for s in inputs:
         assert got[s] == S.sub_date_chars(s), s
-    got = _collect(spark, inputs, C.sub_context_aware)
+    # N2 runs in the extraction kernel only
     for s in inputs:
-        assert got[s] == S.sub_context_aware(s), s
+        assert PK._sub_text_one(s) == S.sub_to_text(s), s
 
 
 def _assert_date_parity(got, inputs):

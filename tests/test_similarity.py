@@ -28,10 +28,10 @@ def test_lsh_topk_recall_vs_exact(spark):
 
 
 def test_ivf_topk_recall_vs_exact(spark):
-    """IVF scale path (16 cells, 8 probes — see q_ann_ivf for why the
-    probe fraction is large on this unclustered testdata): candidate
-    recall vs the exact cosine baseline, and exact sim agreement on
-    shared pairs."""
+    """IVF scale path (16 cells, 8 probes — see similarity.N_PROBE for
+    why the probe fraction is large on this unclustered testdata):
+    candidate recall vs the exact cosine baseline, and exact sim
+    agreement on shared pairs."""
     exact = {(r.query_id, r.neighbor_id): r.sim
              for r in QD.q_ann_cosine_topk(spark, SF).collect()}
     ivf_rows = QD.q_ann_ivf(spark, SF).collect()

@@ -6,13 +6,13 @@ package delivered ONLY through the --py-files zip: the job script is
 copied into a bare temp directory, cwd is that directory, and
 PYTHONPATH is stripped — if the zip were not wired through to driver
 and executor sys.path, every `indonesian_id_ocr_service_spark` import
-(including the executor-side corpus generator + Arrow kernel) would
-fail. Asserts:
+(including the executor-side Arrow kernel) would fail. The input is a
+deterministic generator corpus written as parquet. Asserts:
 
 1. the submitted run commits its one job as zstd parquet and prints
    the JSON line;
 2. the results parquet is span-for-span identical to an in-process
-   `run_pipeline` over the same deterministic corpus;
+   `run_pipeline` over the same parquet corpus;
 3. re-submitting the identical command resumes from the lineage log
    (the committed job is skipped) — crash-resume across PROCESS
    boundaries, not just within a session.
@@ -41,7 +41,7 @@ N_DOCS = 240
 SEED = 42
 
 
-def _submit(workdir: str, base_dir: str) -> str:
+def _submit(workdir: str, input_dir: str, base_dir: str) -> str:
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["PYSPARK_PYTHON"] = sys.executable
     env["PYSPARK_DRIVER_PYTHON"] = sys.executable
@@ -54,7 +54,7 @@ def _submit(workdir: str, base_dir: str) -> str:
         "--conf", "spark.sql.shuffle.partitions=8",
         "--py-files", os.path.join(workdir, "pkg.zip"),
         os.path.join(workdir, "extract_job.py"),
-        "--synth", str(N_DOCS), "--seed", str(SEED),
+        "--input", input_dir,
         "--base-dir", base_dir,
         "--run-id", "submit-smoke",
     ]
@@ -75,9 +75,13 @@ def _last_json_line(stdout: str) -> dict:
 
 
 @pytest.fixture(scope="module")
-def submitted_run(tmp_path_factory):
+def submitted_run(spark, tmp_path_factory):
+    from indonesian_id_ocr_service_spark.corpus.generator import corpus_df
+
     workdir = str(tmp_path_factory.mktemp("submit"))
+    input_dir = os.path.join(workdir, "corpus")
     base_dir = os.path.join(workdir, "run_out")
+    corpus_df(spark, N_DOCS, seed=SEED).write.parquet(input_dir)
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -88,12 +92,12 @@ def submitted_run(tmp_path_factory):
     assert os.path.getsize(zip_path) > 50_000
     shutil.copy(os.path.join(REPO, "jobs", "extract_job.py"),
                 os.path.join(workdir, "extract_job.py"))
-    first = _last_json_line(_submit(workdir, base_dir))
-    return workdir, base_dir, first
+    first = _last_json_line(_submit(workdir, input_dir, base_dir))
+    return workdir, input_dir, base_dir, first
 
 
 def test_submit_commits_one_directory(submitted_run):
-    _, base_dir, first = submitted_run
+    _, _, base_dir, first = submitted_run
     assert first["skipped"] is False
     assert first["rows"] == N_DOCS
     lineage = os.path.join(base_dir, "lineage.jsonl")
@@ -114,8 +118,7 @@ def test_submit_commits_one_directory(submitted_run):
 
 
 def test_submit_output_matches_in_process_pipeline(spark, submitted_run):
-    _, base_dir, _ = submitted_run
-    from indonesian_id_ocr_service_spark.corpus.generator import corpus_df
+    _, input_dir, base_dir, _ = submitted_run
     from indonesian_id_ocr_service_spark.pipeline import run_pipeline
 
     def spans_of(df):
@@ -127,7 +130,7 @@ def test_submit_output_matches_in_process_pipeline(spark, submitted_run):
             ]
         return out
 
-    expected = spans_of(run_pipeline(corpus_df(spark, N_DOCS, seed=SEED)))
+    expected = spans_of(run_pipeline(spark.read.parquet(input_dir)))
     got = spans_of(
         spark.read.parquet(os.path.join(base_dir, "results"))
         .select("doc_id", "out_spans"))
@@ -135,28 +138,8 @@ def test_submit_output_matches_in_process_pipeline(spark, submitted_run):
     assert got == expected
 
 
-@pytest.mark.parametrize("flag", ["--synth"])
-@pytest.mark.parametrize("value", ["0", "-1"])
-def test_parse_args_rejects_non_positive_counts(flag, value, capsys):
-    """``--synth 0`` would extract nothing and exit 0; it is refused at
-    the command line instead."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "extract_job", os.path.join(REPO, "jobs", "extract_job.py"))
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
-    argv = ["--synth", "10", "--base-dir", "out", "--run-id", "r"]
-    assert job.parse_args(argv + [flag, "3"]).__dict__[
-        flag[2:].replace("-", "_")] == 3
-    with pytest.raises(SystemExit) as exc:
-        job.parse_args(argv + [flag, value])
-    assert exc.value.code == 2
-    assert flag in capsys.readouterr().err
-
-
 def test_resubmit_resumes_from_lineage(submitted_run):
-    workdir, base_dir, _ = submitted_run
-    second = _last_json_line(_submit(workdir, base_dir))
+    workdir, input_dir, base_dir, _ = submitted_run
+    second = _last_json_line(_submit(workdir, input_dir, base_dir))
     assert second["skipped"] is True
     assert second["rows"] == 0
