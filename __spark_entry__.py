@@ -39,9 +39,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
     from indonesian_id_ocr_service_spark.functions import nik as NK
 
-    Q.ensure_session_conf(spark)
     sf_dir = "/root/testdata/sf0.001"
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = Q._read(spark, sf_dir, "orders", fanout=False)
 
     nik = Q._nik_col("o_orderkey")
     pre = orders.select(

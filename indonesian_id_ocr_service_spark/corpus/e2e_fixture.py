@@ -104,8 +104,6 @@ expected values are the designed canon per class.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 # --- shared closed-form value dictionaries (both engines) -----------------
 
 FIRST = ["BUDI", "SITI", "AGUS", "DEWI"]
@@ -702,38 +700,18 @@ def sim_raw_doc(i: int):
     return spans, geom, alt_spans or None, alt_geom or None
 
 
-def fixture_df(spark: SparkSession, sf_dir: str, raw_doc) -> DataFrame:
-    """doc_ids from the driver's documents table → the raw fixture
-    corpus ``raw_doc`` (``ktp_raw_doc`` or ``sim_raw_doc``) builds per
-    id, alternative OCR view included. Built inside mapInPandas so only
-    ids move; the span construction is a stateless per-row map.
+#: the raw fixture corpus ``fixture_row`` builds: doc_id as string (the
+#: corpus span contract, BASELINE input_hint / SPAN_SCHEMA_DDL), then
+#: the spans and geometry of the main and the alternative OCR view
+FIXTURE_DDL = (f"doc_id string, spans {SPAN_DDL}, span_geom {GEOM_DDL}, "
+               f"spans_alt {SPAN_DDL}, alt_geom {GEOM_DDL}")
 
-    The ids are hash-repartitioned on doc_id BEFORE the span
-    construction: the one shuffle then carries 8-byte ids instead of
-    built span payloads, and the construction itself parallelizes even
-    when the ids file is row-group-bound (the driver testdata carries 1
-    row group, so without it the whole fixture built on one core)."""
-    import pandas as pd
 
-    ids = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-           .select("doc_id")
-           .repartition(spark.sparkContext.defaultParallelism, "doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                spans, geom, alt, altg = raw_doc(i)
-                # doc_id as string: the corpus span contract
-                # (BASELINE input_hint / SPAN_SCHEMA_DDL)
-                rows.append((str(i), spans, geom, alt, altg))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "spans", "span_geom", "spans_alt", "alt_geom"])
-
-    return ids.mapInPandas(
-        gen, f"doc_id string, spans {SPAN_DDL}, span_geom {GEOM_DDL}, "
-             f"spans_alt {SPAN_DDL}, alt_geom {GEOM_DDL}")
+def fixture_row(raw_doc, doc_id: int) -> tuple:
+    """One ``FIXTURE_DDL`` row: the raw fixture document ``raw_doc``
+    (``ktp_raw_doc`` or ``sim_raw_doc``) builds for ``doc_id``,
+    alternative OCR view included."""
+    return (str(doc_id), *raw_doc(doc_id))
 
 
 def sim_expected_sql() -> str:

@@ -124,13 +124,17 @@ class _View:
     """One OCR view of a batch — a (spans, geometry) column pair, the
     primary ``spans``/``span_geom`` or the alternative
     ``spans_alt``/``alt_geom`` — read once as flattened child arrays
-    plus list offsets."""
+    plus list offsets. A null span text reads as "", an empty OCR
+    read; only a batch that holds one pays for the fill."""
 
     def __init__(self, spans, geom):
         self.valid = np.asarray(spans.is_valid())
         self.off, sv = _list_parts(spans)
         self.kind = sv.field("kind").to_pylist()
-        self.text = sv.field("text").to_pylist()
+        text = sv.field("text")
+        if text.null_count:
+            text = text.fill_null("")
+        self.text = text.to_pylist()
         self.media = sv.field("media_ref").to_pylist()
         self.g_off, gv = _list_parts(geom)
         self.y, self.x0, self.x1, self.h = (

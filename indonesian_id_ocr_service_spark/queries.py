@@ -78,35 +78,52 @@ def _footer_meta(path: str) -> tuple[int, int]:
     return meta
 
 
-def scan_fanout(df: DataFrame, path: str) -> DataFrame:
-    """Scan-parallelism guard for per-row-compute-dominant queries
-    (guide §2.5/§6): parquet ROW GROUPS are the unit of scan
-    parallelism — splits beyond the row-group count come back empty, so
-    a 1.5M-row file with 2 row groups runs every downstream narrow
-    expression/kernel on 2 of N cores no matter how splits are sized
-    (measured: 32 splits, 2 non-empty, at sf1.0). When the footer says
-    the scan cannot fill the cores AND the table is big enough for the
-    shuffle to pay for itself (4,096 rows), round-robin repartition to
-    2x cores
-    (deterministic: sort-before-repartition is on by default).
+def _read(spark: SparkSession, sf_dir: str, name: str, *,
+          fanout: bool) -> DataFrame:
+    """The one way a driver query reaches a testdata table: applies the
+    session conf, reads ``<sf_dir>/<name>.parquet`` and, with
+    ``fanout``, applies the scan-parallelism gate.
+
+    The gate is for per-row-compute-dominant queries (guide §2.5/§6):
+    parquet ROW GROUPS are the unit of scan parallelism — splits beyond
+    the row-group count come back empty, so a 1.5M-row file with 2 row
+    groups runs every downstream narrow expression/kernel on 2 of N
+    cores no matter how splits are sized (measured: 32 splits, 2
+    non-empty, at sf1.0). When the footer says the scan cannot fill the
+    cores AND the table is big enough for the shuffle to pay for itself
+    (4,096 rows), round-robin repartition to 2x cores (deterministic:
+    sort-before-repartition is on by default).
 
     Scale-adaptive by construction: at warehouse scale inputs carry
     row groups >> cores, the gate never fires, and the plan is
     unchanged — this is a data-layout probe, not a local[N] constant.
     """
+    ensure_session_conf(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.parquet(path)
+    if not fanout:
+        return df
     rows, rgs = _footer_meta(path)
-    sc = df.sparkSession.sparkContext
+    sc = spark.sparkContext
     if rgs < sc.defaultParallelism and rows >= 4096:
         return df.repartition(sc.defaultParallelism * 2)
     return df
 
 
-def _read(spark: SparkSession, sf_dir: str, name: str, *,
-          fanout: bool) -> DataFrame:
-    ensure_session_conf(spark)
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    return scan_fanout(df, path) if fanout else df
+def _map_rows(df: DataFrame, row_fn, schema: str) -> DataFrame:
+    """``row_fn(*values)`` over each row of ``df`` → one output row
+    tuple, in the columns of the DDL ``schema`` by position. One
+    ``mapInPandas``, one pandas frame per Arrow batch, never a per-row
+    UDF; the values are plain Python scalars."""
+
+    def rows(frames):
+        import pandas as pd
+
+        for pdf in frames:
+            yield pd.DataFrame([row_fn(*vals) for vals in
+                                pdf.itertuples(index=False, name=None)])
+
+    return df.mapInPandas(rows, schema)
 
 
 #: deterministic 16-digit NIK synthesized from an integer key — written

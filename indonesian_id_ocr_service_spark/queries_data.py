@@ -15,39 +15,18 @@ from .functions import text_analysis as TA
 from .operators import dedup as DD
 from .operators import media as MD
 from .operators import similarity as SIM
+from .queries import _map_rows, _read
 
-
-def _docs(spark: SparkSession, sf_dir: str,
-          *, fanout: bool) -> DataFrame:
-    from .queries import ensure_session_conf, scan_fanout
-
-    ensure_session_conf(spark)
-    path = f"{sf_dir}/documents.parquet"
-    # per-row text work (shingling/regex/token kernels) dominates most
-    # consumers; fan out when the file's row groups can't fill the
-    # cores. Consumers whose per-row work is lighter than the text
-    # shuffle (exact dedup: normalize+md5 only) opt out.
-    df = spark.read.parquet(path)
-    return scan_fanout(df, path) if fanout else df
-
-
-def _emb(spark: SparkSession, sf_dir: str,
-         *, fanout: bool) -> DataFrame:
-    from .queries import ensure_session_conf, scan_fanout
-
-    ensure_session_conf(spark)
-    path = f"{sf_dir}/embeddings.parquet"
-    # 64-dim dot products / hyperplane projections per row dominate
-    # most consumers; IVF (already shuffle-bound by its cell joins)
-    # opts out — the extra exchange measured slower at 10x (2.40 vs
-    # 2.01 s) and tied at 1x (0.97 on vs 1.04 off; OPTIMIZATION_r06.md)
-    df = spark.read.parquet(path)
-    return scan_fanout(df, path) if fanout else df
+# Per-row text work (shingling/regex/token kernels) and 64-dim dot
+# products / hyperplane projections dominate most consumers of
+# documents and embeddings, so they read with fanout=True; each
+# fanout=False site says why it opts out.
 
 
 def _docs_with_dups(spark: SparkSession, sf_dir: str,
                     *, fanout: bool) -> DataFrame:
-    base = _docs(spark, sf_dir, fanout=fanout).select("doc_id", "text")
+    base = _read(spark, sf_dir, "documents", fanout=fanout).select(
+        "doc_id", "text")
     exact = (
         base.filter(F.col("doc_id") % 7 == 0)
         .select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
@@ -158,7 +137,8 @@ ORDER BY doc_a, doc_b
 
 
 def q_ngram_jaccard(spark, sf_dir):
-    return DD.ngram_jaccard_pairs(_docs(spark, sf_dir, fanout=True)) \
+    return DD.ngram_jaccard_pairs(
+        _read(spark, sf_dir, "documents", fanout=True)) \
         .orderBy("doc_a")
 
 
@@ -181,7 +161,7 @@ ORDER BY doc_a
 
 
 def q_simhash(spark, sf_dir):
-    df = _docs(spark, sf_dir, fanout=True)
+    df = _read(spark, sf_dir, "documents", fanout=True)
     # Arrow kernel (scale path); the JVM expression form simhash32 is
     # the verification twin (tests/test_properties.py asserts equal
     # bits on the same corpus)
@@ -212,7 +192,7 @@ FROM bits GROUP BY doc_id
 
 
 def q_ann_cosine_topk(spark, sf_dir):
-    emb = _emb(spark, sf_dir, fanout=True)
+    emb = _read(spark, sf_dir, "embeddings", fanout=True)
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.cosine_topk(emb, queries).orderBy("query_id", "rn")
 
@@ -253,7 +233,7 @@ WHERE rn <= 3 ORDER BY query_id, rn
 
 
 def q_lang_id(spark, sf_dir):
-    df = _docs(spark, sf_dir, fanout=True)
+    df = _read(spark, sf_dir, "documents", fanout=True)
     return df.select("doc_id", TA.lang_guess(F.col("text")).alias("guess"))
 
 
@@ -276,7 +256,7 @@ FROM t
 
 
 def q_quality_score(spark, sf_dir):
-    df = _docs(spark, sf_dir, fanout=True)
+    df = _read(spark, sf_dir, "documents", fanout=True)
     return df.select("doc_id",
                      TA.quality_score(F.col("text")).alias("quality"))
 
@@ -308,7 +288,7 @@ FROM t
 
 
 def q_token_counts(spark, sf_dir):
-    df = _docs(spark, sf_dir, fanout=True)
+    df = _read(spark, sf_dir, "documents", fanout=True)
     tc = TA.token_counts(F.col("text"))
     return df.select(
         "doc_id",
@@ -326,7 +306,7 @@ FROM documents
 
 
 def q_fingerprint(spark, sf_dir):
-    df = _docs(spark, sf_dir, fanout=True)
+    df = _read(spark, sf_dir, "documents", fanout=True)
     return df.select("doc_id",
                      TA.fingerprint(F.col("text")).alias("fp16"))
 
@@ -437,7 +417,7 @@ def q_media_features(spark, sf_dir):
     # fanout=False: header sniff + byte stats per payload are cheaper
     # than the round-robin text shuffle (order-alternating A/B, 1x and
     # 10x: off wins ~0.3-0.4 s at both)
-    df = _docs(spark, sf_dir, fanout=False).select(
+    df = _read(spark, sf_dir, "documents", fanout=False).select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("payload"))
     return MD.extract_media_features(df).select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -464,10 +444,9 @@ FROM t ORDER BY doc_id
 
 
 def q_embedding_norms(spark, sf_dir):
-    from .queries import ensure_session_conf
-
-    ensure_session_conf(spark)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    # fanout=False: the gate was never measured on this query, so its
+    # plan stays scan → project → aggregate
+    emb = _read(spark, sf_dir, "embeddings", fanout=False)
     v = F.col("embedding").cast("array<double>")
     return (
         emb.select("label", SIM.norm(v).alias("nrm"))
@@ -500,11 +479,6 @@ FROM embeddings GROUP BY label ORDER BY label
 
 
 def q_media_quality(spark, sf_dir):
-    import pandas as pd
-
-    from .queries import ensure_session_conf
-
-    ensure_session_conf(spark)
     # Every per-doc output (codec roundtrip, quality flags, orientation
     # vote) is a pure function of a SMALL parameter tuple derived from
     # doc_id — ≤ ~1.2k distinct tuples regardless of corpus size. Same
@@ -521,8 +495,10 @@ def q_media_quality(spark, sf_dir):
     # the orientation/polarity regimes (sharp cards only); polk the
     # extra i%6 residue only the pol==2 card uses. Irrelevant
     # components are pinned to -1 so the tuple space stays minimal.
+    # fanout=False: the doc stream only computes small ints and never
+    # shuffles; the combos repartition spreads the codec work.
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        _read(spark, sf_dir, "documents", fanout=False)
         .select("doc_id")
         .withColumn("m", (F.col("doc_id") % 8).cast("int"))
         .withColumn(
@@ -554,83 +530,67 @@ def q_media_quality(spark, sf_dir):
     combos = (docs.select(*keys).distinct()
               .repartition(2 * spark.sparkContext.defaultParallelism))
 
-    def gen(batches):
+    def quality(m, bgk, r3k, rot, pol, polk):
         from .operators import image_ops as I
 
-        for pdf in batches:
-            rows = []
-            for m, bgk, r3k, rot, pol, polk in zip(
-                    pdf["m"], pdf["bgk"], pdf["r3k"], pdf["rot"],
-                    pdf["pol"], pdf["polk"]):
-                m, bgk, r3k = int(m), int(bgk), int(r3k)
-                rot, pol, polk = int(rot), int(pol), int(polk)
-                if m <= 1:
-                    img = I.synth_card(bg=35 + bgk, n_stripes=0)
-                elif m == 2:
-                    img = I.synth_card(bg=225 + bgk, n_stripes=0)
-                elif m <= 4:
-                    img = I.synth_card(bg=115 + bgk, n_stripes=8,
-                                       blur_k=7)
-                else:
-                    img = I.synth_card(bg=115 + bgk, n_stripes=8)
-                # container regime: flat cards rotate between the IMG1
-                # wire format, a REAL baseline JPEG, and a REAL
-                # progressive JPEG (SOF2 — spectral selection + DC/AC
-                # successive approximation). Quality 100 → all-ones
-                # tables → a constant image is DC-only and round-trips
-                # bit-exactly in BOTH JPEG processes, so the
-                # closed-form flat_mean oracle still holds on the
-                # decoded pixels.
-                if m <= 2 and r3k == 1:
-                    fmt = "jpeg"
-                    payload = I.encode_jpeg(img, quality=100)
-                elif m <= 2 and r3k == 2:
-                    fmt = "jpeg_prog"
-                    payload = I.encode_jpeg_progressive(img, quality=100)
-                else:
-                    fmt = "img1"
-                    payload = I.encode_img1(img)
-                dec = I.decode_any(payload)
-                lap = I.laplacian_variance(dec)
-                mean, std = I.brightness_contrast(dec)
-                fl = I.quality_flags(lap, mean, std)
-                # P8 orientation regime on the sharp cards: rotate an
-                # asymmetric (header) card by a doc-determined angle and
-                # report the angle the upright vote picks to undo it
-                detected = None
-                if m >= 5:
-                    applied = 90 * rot
-                    # polarity regimes (P8 hardening): normal dark-on-
-                    # light, inverted-contrast, and low-ink cards must
-                    # all vote the same undo angle. bg=40+i%8 on the
-                    # inverted card: i%8 == m on this branch.
-                    if pol == 1:
-                        card = I.synth_card(bg=40 + m, n_stripes=5,
-                                            fg=230, header=True)
-                    elif pol == 2:
-                        bg2 = 121 + polk
-                        card = I.synth_card(bg=bg2, n_stripes=5,
-                                            fg=bg2 - 12, header=True)
-                    else:
-                        card = I.synth_card(bg=115 + bgk, n_stripes=5,
-                                            header=True)
-                    detected = I.orient_vote(I.rotate90(card, applied))
-                rows.append((
-                    m, bgk, r3k, rot, pol, polk,
-                    fmt, dec.shape[0], dec.shape[1],
-                    fl["is_blurry"], fl["is_very_blurry"], fl["is_dark"],
-                    fl["is_overexposed"], fl["is_low_contrast"],
-                    int(round(mean)) if m <= 2 else None,
-                    detected,
-                ))
-            yield pd.DataFrame(rows, columns=[
-                "m", "bgk", "r3k", "rot", "pol", "polk",
-                "fmt", "h", "w", "is_blurry", "is_very_blurry",
-                "is_dark", "is_overexposed", "is_low_contrast",
-                "flat_mean", "detected_rot"])
+        if m <= 1:
+            img = I.synth_card(bg=35 + bgk, n_stripes=0)
+        elif m == 2:
+            img = I.synth_card(bg=225 + bgk, n_stripes=0)
+        elif m <= 4:
+            img = I.synth_card(bg=115 + bgk, n_stripes=8, blur_k=7)
+        else:
+            img = I.synth_card(bg=115 + bgk, n_stripes=8)
+        # container regime: flat cards rotate between the IMG1 wire
+        # format, a REAL baseline JPEG, and a REAL progressive JPEG
+        # (SOF2 — spectral selection + DC/AC successive approximation).
+        # Quality 100 → all-ones tables → a constant image is DC-only
+        # and round-trips bit-exactly in BOTH JPEG processes, so the
+        # closed-form flat_mean oracle still holds on the decoded
+        # pixels.
+        if m <= 2 and r3k == 1:
+            fmt = "jpeg"
+            payload = I.encode_jpeg(img, quality=100)
+        elif m <= 2 and r3k == 2:
+            fmt = "jpeg_prog"
+            payload = I.encode_jpeg_progressive(img, quality=100)
+        else:
+            fmt = "img1"
+            payload = I.encode_img1(img)
+        dec = I.decode_any(payload)
+        lap = I.laplacian_variance(dec)
+        mean, std = I.brightness_contrast(dec)
+        fl = I.quality_flags(lap, mean, std)
+        # P8 orientation regime on the sharp cards: rotate an asymmetric
+        # (header) card by a doc-determined angle and report the angle
+        # the upright vote picks to undo it
+        detected = None
+        if m >= 5:
+            applied = 90 * rot
+            # polarity regimes (P8 hardening): normal dark-on-light,
+            # inverted-contrast, and low-ink cards must all vote the
+            # same undo angle. bg=40+i%8 on the inverted card: i%8 == m
+            # on this branch.
+            if pol == 1:
+                card = I.synth_card(bg=40 + m, n_stripes=5, fg=230,
+                                    header=True)
+            elif pol == 2:
+                bg2 = 121 + polk
+                card = I.synth_card(bg=bg2, n_stripes=5, fg=bg2 - 12,
+                                    header=True)
+            else:
+                card = I.synth_card(bg=115 + bgk, n_stripes=5,
+                                    header=True)
+            detected = I.orient_vote(I.rotate90(card, applied))
+        return (m, bgk, r3k, rot, pol, polk,
+                fmt, dec.shape[0], dec.shape[1],
+                fl["is_blurry"], fl["is_very_blurry"], fl["is_dark"],
+                fl["is_overexposed"], fl["is_low_contrast"],
+                int(round(mean)) if m <= 2 else None,
+                detected)
 
-    feat = combos.mapInPandas(
-        gen,
+    feat = _map_rows(
+        combos, quality,
         "m int, bgk int, r3k int, rot int, pol int, polk int, "
         "fmt string, h int, w int, is_blurry boolean, "
         "is_very_blurry boolean, is_dark boolean, "
@@ -670,30 +630,24 @@ _CHUNKS_SQL = """
 """
 
 
-def _docs_text_parallel(spark, sf_dir):
-    from .queries import ensure_session_conf
-
-    ensure_session_conf(spark)
-    return (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id", "text")
-            .repartition(spark.sparkContext.defaultParallelism))
+def _payloads(spark, sf_dir, cols, synth, column):
+    """``(doc_id, synth(doc_id, *cols))`` per document, the second
+    column declared by the DDL ``column``. fanout=False and an explicit
+    round-robin repartition: at sf0.001 and sf0.01 documents.parquet is
+    one 500-row row group, below the footer gate's 4,096-row floor, so
+    the gate would leave the payload synthesis on one core."""
+    ids = (_read(spark, sf_dir, "documents", fanout=False)
+           .select("doc_id", *cols)
+           .repartition(spark.sparkContext.defaultParallelism))
+    return _map_rows(ids, lambda i, *vals: (i, synth(i, *vals)),
+                     f"doc_id long, {column}")
 
 
 def q_html_main_content(spark, sf_dir):
-    import pandas as pd
-
     from .operators import content_extract as CE
 
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "html": [CE.synth_html(int(i), t) for i, t in
-                         zip(pdf["doc_id"], pdf["text"])],
-            })
-
-    pages = _docs_text_parallel(spark, sf_dir).mapInPandas(
-        synth, "doc_id long, html string")
+    pages = _payloads(spark, sf_dir, ["text"], CE.synth_html,
+                      "html string")
     return CE.html_main_content(pages).orderBy("doc_id")
 
 
@@ -707,20 +661,10 @@ FROM documents ORDER BY doc_id
 
 
 def q_pdf_text(spark, sf_dir):
-    import pandas as pd
-
     from .operators import content_extract as CE
 
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [CE.synth_pdf(int(i), t) for i, t in
-                            zip(pdf["doc_id"], pdf["text"])],
-            })
-
-    pdfs = _docs_text_parallel(spark, sf_dir).mapInPandas(
-        synth, "doc_id long, payload binary")
+    pdfs = _payloads(spark, sf_dir, ["text"], CE.synth_pdf,
+                     "payload binary")
     return CE.pdf_text(pdfs).orderBy("doc_id")
 
 
@@ -742,30 +686,10 @@ FROM documents ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 
-def _docs_ids_parallel(spark, sf_dir):
-    from .queries import ensure_session_conf
-
-    ensure_session_conf(spark)
-    return (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id")
-            .repartition(spark.sparkContext.defaultParallelism))
-
-
 def q_video_frames(spark, sf_dir):
-    import pandas as pd
-
     from .operators import media_av as AV
 
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [AV.synth_video(int(i))
-                            for i in pdf["doc_id"]],
-            })
-
-    vids = _docs_ids_parallel(spark, sf_dir).mapInPandas(
-        synth, "doc_id long, payload binary")
+    vids = _payloads(spark, sf_dir, [], AV.synth_video, "payload binary")
     return AV.frame_sample(vids, every_k=2) \
         .orderBy("doc_id", "frame_idx")
 
@@ -779,20 +703,9 @@ WHERE u.j % 2 = 0 ORDER BY doc_id, frame_idx
 
 
 def q_audio_features(spark, sf_dir):
-    import pandas as pd
-
     from .operators import media_av as AV
 
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [AV.synth_audio(int(i))
-                            for i in pdf["doc_id"]],
-            })
-
-    auds = _docs_ids_parallel(spark, sf_dir).mapInPandas(
-        synth, "doc_id long, payload binary")
+    auds = _payloads(spark, sf_dir, [], AV.synth_audio, "payload binary")
     return AV.audio_features(auds).orderBy("doc_id")
 
 
@@ -831,11 +744,6 @@ FROM pcm ORDER BY doc_id
 
 
 def q_media_geometry(spark, sf_dir):
-    import pandas as pd
-
-    from .queries import ensure_session_conf
-
-    ensure_session_conf(spark)
     # The per-doc work is a pure function of the (applied, bg,
     # portrait) combo — ≤55 distinct inputs regardless of corpus size.
     # Group-identical-work-before-expensive-compute, made GLOBAL:
@@ -845,9 +753,10 @@ def q_media_geometry(spark, sf_dir):
     # back onto the doc stream — the doc side never shuffles. The r4
     # version memoized per worker, recomputing every combo on each of
     # the 32 workers; this is the same dedup promoted to the plan
-    # level, exactly what a 100 TB run would do.
+    # level, exactly what a 100 TB run would do. fanout=False for the
+    # same reason as media_quality: the doc stream never shuffles.
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        _read(spark, sf_dir, "documents", fanout=False)
         .select("doc_id")
         .withColumn(
             "applied",
@@ -871,38 +780,30 @@ def q_media_geometry(spark, sf_dir):
     combos = (docs.select("applied", "bg", "portrait").distinct()
               .repartition(2 * spark.sparkContext.defaultParallelism))
 
-    def gen(batches):
+    def geometry(applied, bg, portrait):
         from .operators import image_ops as I
 
-        for pdf in batches:
-            rows = []
-            for applied, bg, portrait in zip(
-                    pdf["applied"], pdf["bg"], pdf["portrait"]):
-                applied, bg, portrait = int(applied), int(bg), int(portrait)
-                card = I.synth_card(bg=bg, n_stripes=8, skew_deg=applied)
-                skew_q = int(round(I.estimate_skew(card) * 4))
-                p12_h = p12_w = p13_h = p13_w = None
-                p10_identity = None
-                if portrait >= 0:
-                    base = I.synth_card(bg=bg, n_stripes=8)
-                    # portrait: the P12 orient stage must undo it —
-                    # output dims are orientation-invariant
-                    inp = I.rotate90(base, 90) if portrait else base
-                    p12 = I.minimal_ktp(inp)
-                    p13 = I.smart_sim(base)
-                    # P10 gate: flat full-frame card passes through
-                    p12_h, p12_w = int(p12.shape[0]), int(p12.shape[1])
-                    p13_h, p13_w = int(p13.shape[0]), int(p13.shape[1])
-                    p10_identity = bool(
-                        I.perspective_correct(base).shape == base.shape)
-                rows.append((applied, bg, portrait, skew_q, p12_h,
-                             p12_w, p13_h, p13_w, p10_identity))
-            yield pd.DataFrame(rows, columns=[
-                "applied", "bg", "portrait", "skew_q", "p12_h",
-                "p12_w", "p13_h", "p13_w", "p10_identity"])
+        card = I.synth_card(bg=bg, n_stripes=8, skew_deg=applied)
+        skew_q = int(round(I.estimate_skew(card) * 4))
+        p12_h = p12_w = p13_h = p13_w = None
+        p10_identity = None
+        if portrait >= 0:
+            base = I.synth_card(bg=bg, n_stripes=8)
+            # portrait: the P12 orient stage must undo it — output dims
+            # are orientation-invariant
+            inp = I.rotate90(base, 90) if portrait else base
+            p12 = I.minimal_ktp(inp)
+            p13 = I.smart_sim(base)
+            # P10 gate: flat full-frame card passes through
+            p12_h, p12_w = int(p12.shape[0]), int(p12.shape[1])
+            p13_h, p13_w = int(p13.shape[0]), int(p13.shape[1])
+            p10_identity = bool(
+                I.perspective_correct(base).shape == base.shape)
+        return (applied, bg, portrait, skew_q, p12_h, p12_w, p13_h,
+                p13_w, p10_identity)
 
-    feat = combos.mapInPandas(
-        gen,
+    feat = _map_rows(
+        combos, geometry,
         "applied int, bg int, portrait int, skew_q int, p12_h int, "
         "p12_w int, p13_h int, p13_w int, p10_identity boolean",
     )
@@ -965,7 +866,7 @@ FROM documents ORDER BY doc_id
 
 
 def q_ann_lsh_bucket(spark, sf_dir):
-    emb = _emb(spark, sf_dir, fanout=True)
+    emb = _read(spark, sf_dir, "embeddings", fanout=True)
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.lsh_topk(emb, queries).orderBy("query_id", "rn")
 
@@ -1040,8 +941,9 @@ WHERE rn <= 3 ORDER BY query_id, rn
 def q_ann_ivf(spark, sf_dir):
     # fanout=False: IVF is bounded by its cell-assignment shuffle and
     # probe joins, not the per-row kernel; the extra exchange measured
-    # slower at 10x (2.40 vs 2.01 s) and tied at 1x (0.97 on vs 1.04 off)
-    emb = _emb(spark, sf_dir, fanout=False)
+    # slower at 10x (2.40 vs 2.01 s) and tied at 1x (0.97 on vs 1.04 off;
+    # OPTIMIZATION_r06.md)
+    emb = _read(spark, sf_dir, "embeddings", fanout=False)
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.ivf_topk(emb, queries).orderBy("query_id", "rn")
 
@@ -1116,7 +1018,7 @@ WHERE rn <= 3 ORDER BY query_id, rn
 
 
 def _emb_with_dups(spark, sf_dir):
-    emb = _emb(spark, sf_dir, fanout=True).select(
+    emb = _read(spark, sf_dir, "embeddings", fanout=True).select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("embedding"))
     dup = emb.filter(F.col("vec_id") < 40).select(
@@ -1130,9 +1032,6 @@ def _emb_with_dups(spark, sf_dir):
 
 
 def q_dedup_embedding(spark, sf_dir):
-    from .queries import ensure_session_conf
-
-    ensure_session_conf(spark)
     corpus = _emb_with_dups(spark, sf_dir)
     return SIM.embedding_near_dup(corpus).orderBy(
         "id_a", "id_b")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators.scoring import score_fields
+from .queries import _read
 
 _COL_MAP = {
     "nomor": "nomor",
@@ -39,10 +40,9 @@ def _pick(k, options):
 
 
 def q_confidence_scoring(spark, sf_dir):
-    from .queries import ensure_session_conf
-
-    ensure_session_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    # fanout=False: the gate was never measured on this query, so its
+    # plan stays scan → project
+    df = _read(spark, sf_dir, "customer", fanout=False)
     k = F.col("c_custkey")
     nik_valid = F.format_string(
         "%02d%02d%02d%02d%02d%02d%04d",
@@ -322,14 +322,8 @@ SQL_CONFIDENCE_SCORING = _build_sql()
 
 
 def q_ocr_confidence(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from .queries import ensure_session_conf, scan_fanout
-
-    ensure_session_conf(spark)
-    path = f"{sf_dir}/documents.parquet"
     # per-token md5 HOF dominates — fan out row-group-bound scans
-    df = scan_fanout(spark.read.parquet(path), path)
+    df = _read(spark, sf_dir, "documents", fanout=True)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     confs = F.transform(
         toks,

@@ -28,9 +28,7 @@ directories are deleted before the re-run (sinks/lineage.py).
 
 The job has no shuffle (``run_pipeline`` is one narrow chain over the
 parquet scan), so it takes no shuffle option; a cluster that wants
-``spark.sql.shuffle.partitions`` set passes ``--conf`` to spark-submit. A command line that passes
-``--media-metrics`` or ``--shuffle-partitions`` exits 2 at argument
-parsing.
+``spark.sql.shuffle.partitions`` set passes ``--conf`` to spark-submit.
 
 Prints exactly one JSON result line on stdout:
 ``{"run_id", "skipped", "rows", "wall_s", "docs_per_sec"}`` —

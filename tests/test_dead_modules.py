@@ -11,7 +11,9 @@ the benchmark, ``__spark_entry__.py`` and the bench scripts:
 - no package module outside ``oracle/`` may import ``oracle/``;
 - no defaulted parameter of the package outside ``oracle/`` and the
   corpus generator (which also keys that universe) may have one value
-  in use: such a setting is a constant."""
+  in use: such a setting is a constant;
+- a driver query reaches its table only through ``queries._read``, and
+  its own Python stage only through ``queries._map_rows``."""
 
 from __future__ import annotations
 
@@ -310,3 +312,46 @@ def test_no_parameter_has_one_value():
                       and (q, n) not in by_tests)
     assert not constant, (
         f"{len(constant)} parameters with one value in use: {constant}")
+
+
+def _sites(paths, match) -> set[str]:
+    """``module.function`` (``module`` at top level) of every node in
+    ``paths`` that ``match`` accepts, named by its top-level
+    enclosing definition."""
+    found: set[str] = set()
+    for path in paths:
+        mod = _module_name(path)
+        for top in _parse(path).body:
+            where = (f"{mod}.{top.name}" if isinstance(
+                top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                else mod)
+            found |= {where for node in ast.walk(top) if match(node)}
+    return found
+
+
+def test_driver_queries_reach_tables_only_through_read():
+    """``queries._read`` is the one place that applies the session conf,
+    reads a testdata table and applies the footer fan-out gate; the
+    pipeline's ``_extract`` applies the conf for the sessions it is
+    handed. A second reader or conf call in the package is a second
+    way in."""
+    reads = _sites(_package_files(), lambda n: (
+        isinstance(n, ast.Attribute) and n.attr == "parquet"
+        and isinstance(n.value, ast.Attribute) and n.value.attr == "read"))
+    assert reads == {f"{PKG}.queries._read"}, sorted(reads)
+    confs = _sites(_package_files(), lambda n: (
+        isinstance(n, ast.Call) and "ensure_session_conf" in (
+            getattr(n.func, "id", None), getattr(n.func, "attr", None))))
+    assert confs == {f"{PKG}.queries._read", f"{PKG}.pipeline._extract"}, \
+        sorted(confs)
+
+
+def test_query_stages_map_only_through_the_row_helper():
+    """A driver query's Python stage is a row function passed to
+    ``queries._map_rows``, the one ``mapInPandas`` of the query modules
+    and the e2e fixture."""
+    paths = glob.glob(os.path.join(REPO, PKG, "queries*.py")) + [
+        os.path.join(REPO, PKG, "corpus", "e2e_fixture.py")]
+    maps = _sites(paths, lambda n: (
+        isinstance(n, ast.Attribute) and n.attr == "mapInPandas"))
+    assert maps == {f"{PKG}.queries._map_rows"}, sorted(maps)

@@ -5,7 +5,7 @@ batch of all of them — including a batch with no KTP document and a
 KTP document whose only field is its NIK (every other output field of
 that batch's KTP documents is missing) — and whether its batch is a
 fresh array or a zero-copy slice of a larger table, which the kernel
-reads only within the slice."""
+reads only within the slice. A null span text reads as ""."""
 
 from __future__ import annotations
 
@@ -110,3 +110,30 @@ def test_kernel_output_is_batch_independent():
     sliced = _run([whole.slice(1 + i, min(64, n - i))
                    for i in range(0, n, 64)])
     assert sliced == expected
+
+
+def _oracle(row):
+    doc_id, spans, geom, conf, alt, alt_geom = row
+    return ktp_oracle.process_document(doc_id, spans, geom, alt, alt_geom,
+                                       conf)
+
+
+def _with_text(row, j, text):
+    """``row`` with its ``j``-th span's text replaced."""
+    spans = [dict(s) for s in row[1]]
+    spans[j]["text"] = text
+    return (row[0], spans, *row[2:])
+
+
+def test_a_null_span_text_reads_as_empty():
+    """One null span text (the second text span) in a KTP and in a SIM
+    document: the kernel reads it as "", so the document's spans equal
+    the oracle's with "" there, alone and inside a larger batch."""
+    rows = list(doc_rows(40))
+    for doc_type in ("KTP", "SIM"):
+        row = next(r for r in rows if _oracle(r)[0]["text"] == doc_type)
+        j = [k for k, s in enumerate(row[1]) if s["kind"] == "text"][1]
+        want = _oracle(_with_text(row, j, ""))
+        nulled = _with_text(row, j, None)
+        assert _run([_batch([nulled])]) == {row[0]: want}
+        assert _run([_batch(rows[:5] + [nulled])])[row[0]] == want

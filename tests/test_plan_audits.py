@@ -66,11 +66,11 @@ def test_extraction_path_is_shuffle_free(spark):
 
 
 def test_e2e_query_single_intentional_exchange(spark):
-    """The e2e oracle query is: ids scan → mapInPandas fixture build →
-    ONE hash repartition on doc_id (test-scale parallelism; at 100 TB
-    the file splits provide it) → the zero-shuffle extraction chain →
-    explode. Anything beyond that one Exchange means the pipeline grew
-    a shuffle."""
+    """The e2e oracle query is: ids scan → ONE hash repartition on
+    doc_id (test-scale parallelism; at 100 TB the file splits provide
+    it) → mapInPandas fixture build → the zero-shuffle extraction chain
+    → explode. Anything beyond that one Exchange means the pipeline
+    grew a shuffle."""
     from indonesian_id_ocr_service_spark import queries_e2e as QE
 
     for q in (QE.q_ktp_extraction_e2e, QE.q_sim_extraction_e2e):
